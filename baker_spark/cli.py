@@ -47,14 +47,14 @@ def _io_registry() -> dict[str, dict[str, type]]:
     from baker_spark.sources.structured import JsonLinesSource, ParquetSource
     from baker_spark.streaming.connectors import KinesisPythonSource, KinesisStandinSource
     from baker_spark.streaming.daemon import FileStreamSource, RateSource
-    from baker_spark.streaming.sqs import SQSFileSource
+    from baker_spark.streaming.sqs_datasource import SQSSource
     from baker_spark.streaming.tcp import TCPFileSource
 
     input_cls = {
         "List": ListSource,
         "JsonLines": JsonLinesSource,
         "Parquet": ParquetSource,
-        "SQS": SQSFileSource,
+        "SQS": SQSSource,
         "Kinesis": KinesisPythonSource,
         "KCL": KinesisPythonSource,
         "TCP": TCPFileSource,
@@ -107,7 +107,7 @@ def cmd_list() -> int:
 def _camel(snake: str) -> str:
     """snake_case -> CamelCase: the TOML spelling of an operator config
     key (the compiler snake-cases on the way in, base.py:_snake)."""
-    return "".join(w.capitalize() for w in snake.split("_"))
+    return "".join("AWS" if w == "aws" else w.capitalize() for w in snake.split("_"))
 
 
 def _field_comments(cls: type) -> dict[str, str]:
@@ -149,7 +149,9 @@ def _config_rows(cls: type) -> list[tuple[str, str, str, bool, str]]:
     genConfigKeysMarkdown renders exactly these five columns)."""
     import dataclasses
 
-    docs = _field_comments(cls)
+    docs: dict[str, str] = {}
+    for klass in reversed(cls.__mro__):  # inherited keys keep their docs
+        docs.update(_field_comments(klass))
     rows = []
     if dataclasses.is_dataclass(cls):
         for f in dataclasses.fields(cls):
@@ -182,6 +184,9 @@ def _print_component(title: str, cls: type, kind: str = "Filter", section: str =
     print(inspect.getdoc(cls) or "(no help)")
     print("\n### Configuration")
     rows = _config_rows(cls)
+    if section == "input":
+        # an input's fields and separator come from [fields] and [csv]
+        rows = [r for r in rows if r[0] not in ("Fields", "Separator")]
     if not rows:
         print("No configuration available")
         return

@@ -125,27 +125,41 @@ SINK_NAMES = (
 STREAMING_INPUTS = {n.lower() for n in STREAMING_INPUT_NAMES}
 
 
+#: [input.config] keys a streaming input no longer reads, with what
+#: replaced them — rejected so an old topology fails loudly instead of
+#: silently running without its setting
+_RETIRED_KEYS = {
+    "sqs": {
+        "path": "Path was the watched directory of a file source that "
+        "never read the queue; set QueueNames or QueuePrefixes "
+        "(FakeDir for a local directory queue)",
+        "max_files_per_trigger": "MaxFilesPerTrigger has no replacement: "
+        "a micro-batch takes what one receive per queue returns",
+    },
+    "kinesis": {
+        "connector": "Connector has no replacement: the bakerkinesis "
+        "source is the only Kinesis reader",
+    },
+}
+_RETIRED_KEYS["kcl"] = _RETIRED_KEYS["kinesis"]
+
+
 def _build_streaming_input(section: dict, fields: list[str], separator: str):
-    from baker_spark.streaming.connectors import KinesisSource, SocketSource
-    from baker_spark.streaming.daemon import FileStreamSource
+    from baker_spark.streaming.connectors import SocketSource
 
     name = section.get("name", "").lower()
     cfg = _snake_keys(section.get("config", {}))
+    for key, why in _RETIRED_KEYS.get(name, {}).items():
+        if key in cfg:
+            raise ValueError(f"{section.get('name')} input: {why}")
     if name == "sqs":
         # input/sqs.go:25-39 polls queues for S3-path notifications and
-        # streams those files. Split Spark-first: the driver-side
-        # SQSPoller (streaming/sqs.py) parses plain/SNS/S3-ObjectCreated/
-        # JMESPath messages into file paths and manifests them into
-        # `path`, and Structured Streaming's file source does the
-        # ingesting (discover-new-files, process-once, checkpoint).
-        from baker_spark.streaming.sqs import SQSConfig, SQSFileSource
+        # streams those files: the bakersqs streaming source, which
+        # journals each batch's file list in the offset WAL before it
+        # deletes the messages
+        from baker_spark.streaming.sqs_datasource import SQSSource
 
-        if "path" not in cfg:
-            raise ValueError(
-                "SQS input needs config Path (the watched directory/bucket "
-                "prefix the poller manifests notified files into)"
-            )
-        sqs_cfg = SQSConfig(
+        src = SQSSource(
             queue_names=cfg.get("queue_names", []),
             queue_prefixes=cfg.get("queue_prefixes", []),
             message_format=cfg.get("message_format", "sns"),
@@ -153,30 +167,31 @@ def _build_streaming_input(section: dict, fields: list[str], separator: str):
             bucket=cfg.get("bucket", ""),
             file_path_filter=cfg.get("file_path_filter", ""),
             aws_region=cfg.get("aws_region", "us-west-2"),
-        )
-        # fail at compile time on a bad MessageFormat/MessageExpression
-        # or an invalid FilePathFilter, like the reference's config load
-        # (sqs.go:105-131). Queue presence is NOT enforced here: a
-        # Path-only config is the documented file-arrival stand-in mode
-        # (no poller); constructing .poller() still requires queues.
-        sqs_cfg.parse_function()
-        if sqs_cfg.file_path_filter:
-            try:
-                re.compile(sqs_cfg.file_path_filter)
-            except re.error as exc:
-                raise ValueError(f"SQS: invalid FilePathFilter: {exc}") from exc
-        return SQSFileSource(
-            path=cfg["path"],
+            fake_dir=cfg.get("fake_dir"),
             fields=fields,
             separator=separator,
-            max_files_per_trigger=cfg.get("max_files_per_trigger"),
-            sqs=sqs_cfg,
         )
+        # fail at compile time like the reference's config load
+        # (sqs.go:105-131): no queue, a bad MessageFormat or
+        # MessageExpression, an invalid FilePathFilter
+        if not (src.queue_names or src.queue_prefixes or src.fake_dir):
+            raise ValueError("SQS: QueuePrefixes or QueueNames must be set")
+        src.parse_function()
+        if src.file_path_filter:
+            try:
+                re.compile(src.file_path_filter)
+            except re.error as exc:
+                raise ValueError(f"SQS: invalid FilePathFilter: {exc}") from exc
+        return src
     if name in ("kinesis", "kcl"):
         # input/kinesis.go:20-26 / input/kcl.go:27-49: StreamName +
-        # AWSRegion; KCL's InitialPosition maps to startingposition, its
-        # DynamoDB lease/checkpoint table to the query checkpoint dir
-        from baker_spark.streaming.connectors import KinesisRecordsSource
+        # AWSRegion; the jar-free bakerkinesis source (boto3 in prod,
+        # FakeDir in tests); KCL's DynamoDB lease/checkpoint table maps
+        # to the query checkpoint dir
+        from baker_spark.streaming.connectors import (
+            KinesisPythonSource,
+            KinesisRecordsSource,
+        )
 
         stream = cfg.get("stream") or cfg.get("stream_name")  # ref key: Stream
         if not stream:
@@ -195,32 +210,16 @@ def _build_streaming_input(section: dict, fields: list[str], separator: str):
                     f"invalid 'InitialPosition' {position!r}, accepts only "
                     "'LATEST' or 'TRIM_HORIZON'"
                 )
-        if cfg.get("connector") == "jar":
-            # explicit opt-in to the spark-sql-kinesis jar connector
-            from baker_spark.streaming.connectors import KinesisSource
-
-            src = KinesisSource(
-                stream_name=stream,
-                region=cfg.get("aws_region", "us-west-2"),
-                starting_position=position,
-                app_name=app_name,
-            )
-        else:
-            # default: the jar-free bakerkinesis Python data source —
-            # executable everywhere (boto3 in prod, fake_dir in tests),
-            # same record layout either way
-            from baker_spark.streaming.connectors import KinesisPythonSource
-
-            src = KinesisPythonSource(
-                stream_name=stream,
-                region=cfg.get("aws_region", "us-west-2"),
-                initial_position=position,
-                app_name=app_name,
-                fake_dir=cfg.get("fake_dir"),
-                max_records_per_trigger=cfg.get("max_records_per_trigger"),
-                lease_dir=cfg.get("lease_dir"),
-                shard_filter=cfg.get("shard_filter"),
-            )
+        src = KinesisPythonSource(
+            stream_name=stream,
+            region=cfg.get("aws_region", "us-west-2"),
+            initial_position=position,
+            app_name=app_name,
+            fake_dir=cfg.get("fake_dir"),
+            max_records_per_trigger=cfg.get("max_records_per_trigger"),
+            lease_dir=cfg.get("lease_dir"),
+            shard_filter=cfg.get("shard_filter"),
+        )
         if not fields:
             return src  # no [fields]: hand the raw connector layout through
         # with [fields] the chain sees record columns: the connector's

@@ -34,13 +34,24 @@ import sys
 import tempfile
 import urllib.request
 
-from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F, types as T
 
 from baker_spark.operators.metadata import LASTMOD_COL, URL_COL
 
 
 def string_schema(fields: list[str]) -> T.StructType:
     return T.StructType([T.StructField(f, T.StringType(), True) for f in fields])
+
+
+def split_fields(line: Column, fields: list[str], separator: str) -> list[Column]:
+    """baker's positional, no-quote LogLine split (logline.go:21-31) of a
+    string column into one column per name: missing trailing fields ->
+    NULL (as the CSV reader's PERMISSIVE mode gives), empty fields ->
+    "", extra separators dropped. ``try_element_at``, not
+    ``element_at``: on a session with ANSI mode on, plain element_at
+    throws INVALID_ARRAY_INDEX for a short line instead."""
+    parts = F.split(line, re.escape(separator), -1)
+    return [F.try_element_at(parts, F.lit(i + 1)).alias(name) for i, name in enumerate(fields)]
 
 
 class ListSource:
@@ -236,10 +247,8 @@ class ListSource:
 
     def _http_dataframe(self, spark: SparkSession) -> DataFrame:
         """http(s) URLs through the bakerhttp data source: executor-side
-        fetch, then the same no-quote single-separator split the CSV
-        branch applies — ``split`` + positional ``element_at`` matches
-        PERMISSIVE exactly (missing trailing fields -> NULL, empty
-        fields -> "", extra separators dropped)."""
+        fetch, then :func:`split_fields`, the same no-quote split the
+        CSV branch applies."""
         from baker_spark.sources import http_datasource
 
         http_datasource.register(spark)
@@ -248,15 +257,7 @@ class ListSource:
             .option(http_datasource.URLS_OPTION, "\n".join(self._http_urls))
             .load()
         )
-        parts = F.split(F.col("value"), re.escape(self.separator))
-        # try_element_at, not element_at: a short line must yield NULL
-        # for its missing trailing fields (the CSV branch's PERMISSIVE
-        # behavior) even on a session with ANSI mode on, where plain
-        # element_at throws INVALID_ARRAY_INDEX instead
-        cols = [
-            F.try_element_at(parts, F.lit(i + 1)).alias(name)
-            for i, name in enumerate(self.fields)
-        ]
+        cols = split_fields(F.col("value"), self.fields, self.separator)
         if self.attach_metadata:
             cols += [F.col(URL_COL), F.col(LASTMOD_COL)]
         return raw.select(*cols)

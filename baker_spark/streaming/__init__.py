@@ -1,39 +1,31 @@
 from baker_spark.streaming.connectors import (
     KINESIS_RECORD_SCHEMA,
-    KafkaSource,
+    KinesisPythonSource,
     KinesisRecordsSource,
-    KinesisSource,
     KinesisStandinSource,
     SocketSource,
     kinesis_records,
 )
 from baker_spark.streaming.daemon import FileStreamSource, RateSource, StreamingPipeline
 from baker_spark.streaming.tcp import TCPFileSource, TCPGzipListener, send_gzip_records
-from baker_spark.streaming.sqs import (
-    FakeSQSClient,
-    SQSConfig,
-    SQSFileSource,
-    SQSPoller,
-    manifest_sink,
-)
+from baker_spark.streaming.sqs import SQSConfig, SQSPoller
+from baker_spark.streaming.sqs_datasource import DirQueueClient, SQSSource
 
 __all__ = [
     "KINESIS_RECORD_SCHEMA",
-    "FakeSQSClient",
+    "DirQueueClient",
     "FileStreamSource",
-    "KafkaSource",
+    "KinesisPythonSource",
     "KinesisRecordsSource",
-    "KinesisSource",
     "KinesisStandinSource",
     "kinesis_records",
     "RateSource",
     "SQSConfig",
-    "SQSFileSource",
     "SQSPoller",
+    "SQSSource",
     "SocketSource",
     "StreamingPipeline",
     "TCPFileSource",
     "TCPGzipListener",
-    "manifest_sink",
     "send_gzip_records",
 ]

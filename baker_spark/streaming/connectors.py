@@ -1,16 +1,15 @@
-"""Queue connectors — the format-swap points for the reference's Kinesis,
-KCL, SQS and TCP daemon inputs (SURVEY.md §2.1).
+"""Queue connectors for the reference's Kinesis, KCL and TCP daemon
+inputs (SURVEY.md §2.1).
 
-The corresponding connector jars (spark-sql-kinesis, spark-sql-kafka)
-are not bundled in this environment; each factory builds the exact
-reader configuration and fails with a clear error if the format is
-unavailable, so topology code stays identical between this sandbox and a
-real cluster.
+Kinesis and KCL read through the jar-free ``bakerkinesis`` Python data
+source (streaming/kinesis_datasource.py), which emits the
+``aws-kinesis`` connector's column layout; :func:`kinesis_records`
+parses that layout into record columns. The TCP input without a
+``SpoolDir`` is Spark's plaintext socket source.
 """
 
 from __future__ import annotations
 
-import re
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -21,6 +20,8 @@ from pyspark.sql.types import (
     StructType,
     TimestampType,
 )
+
+from baker_spark.sources.list_source import split_fields
 
 #: The column layout the spark-sql-kinesis connector emits — one row per
 #: Kinesis record. The reference consumes the same record stream through
@@ -49,10 +50,10 @@ def kinesis_records(
     parse loop over GetRecords payloads (input/kinesis.go:145-150): each
     ``data`` blob is split on newlines (one blob may carry many log
     lines, trailing newline tolerated), then each line is split
-    positionally on ``separator`` with baker's no-quoting LogLine rules
-    (logline.go:21-31). Works identically on the real ``aws-kinesis``
-    stream and on any stand-in emitting :data:`KINESIS_RECORD_SCHEMA` —
-    batch or streaming, all JVM-side expressions.
+    with :func:`~baker_spark.sources.list_source.split_fields`, baker's
+    no-quoting LogLine rules (logline.go:21-31). Works identically on
+    any source emitting :data:`KINESIS_RECORD_SCHEMA` — batch or
+    streaming, all JVM-side expressions.
 
     ``arrival_ts`` optionally carries ``approximateArrivalTimestamp``
     through under that name — the event-time column a watermarked
@@ -63,8 +64,7 @@ def kinesis_records(
     # parse path (see PERFORMANCE.md "Codegen vs interpreted")
     lines = F.explode(F.split(F.decode(F.col("data"), "UTF-8"), "\n", -1)).alias("_bk_line")
     keep = [F.col("approximateArrivalTimestamp").alias(arrival_ts)] if arrival_ts else []
-    parts = F.split(F.col("_bk_line"), re.escape(separator), -1)
-    cols = [F.element_at(parts, i + 1).alias(name) for i, name in enumerate(fields)]
+    cols = split_fields(F.col("_bk_line"), fields, separator)
     return (
         df.select(lines, *keep)
         .filter(F.col("_bk_line") != "")
@@ -72,60 +72,9 @@ def kinesis_records(
     )
 
 
-def _require_format(spark: SparkSession, reader, fmt: str) -> DataFrame:
-    try:
-        return reader.load()
-    except Exception as e:
-        raise RuntimeError(
-            f"streaming format {fmt!r} is not on the classpath; add the "
-            f"connector jar (e.g. --packages) to use this source"
-        ) from e
-
-
-@dataclass
-class KinesisSource:
-    """Kinesis tail (input/kinesis.go:20-26: all shards from LATEST).
-    Structured Streaming's checkpointing replaces KCL's DynamoDB lease
-    table (input/kcl.go:27-49) — resume position comes from the query's
-    checkpoint dir, not a sidecar table."""
-
-    stream_name: str
-    region: str = "us-west-2"
-    starting_position: str = "LATEST"  # or TRIM_HORIZON (kcl.go InitialPosition)
-    #: KCL AppName (kcl.go:43): two apps consuming one stream keep
-    #: independent positions. The KCL lease/checkpoint table is keyed by
-    #: AppName; here the same isolation comes from the checkpoint dir —
-    #: derive it with :meth:`checkpoint_dir`.
-    app_name: str | None = None
-
-    def checkpoint_dir(self, base: str) -> str:
-        """AppName-scoped checkpoint location — the Spark analog of
-        KCL's per-app DynamoDB lease table. MaxShards/ShardSync/
-        LeaseDuration (kcl.go:44-46) have no knob here: Spark's own
-        task scheduling replaces lease balancing."""
-        return f"{base.rstrip('/')}/{self.app_name or self.stream_name}"
-
-    def dataframe(self, spark: SparkSession) -> DataFrame:
-        reader = (
-            spark.readStream.format("aws-kinesis")
-            .option("kinesis.streamName", self.stream_name)
-            .option("kinesis.region", self.region)
-            .option("kinesis.startingposition", self.starting_position)
-        )
-        return _require_format(spark, reader, "aws-kinesis")
-
-    __call__ = dataframe
-
-    def records(
-        self, spark: SparkSession, fields: list[str], separator: str = ","
-    ) -> DataFrame:
-        """The parsed record stream (KINESIS_RECORD_SCHEMA -> fields)."""
-        return kinesis_records(self.dataframe(spark), fields, separator)
-
-
 @dataclass
 class KinesisRecordsSource:
-    """A connector-layout source (:class:`KinesisSource` or
+    """A connector-layout source (:class:`KinesisPythonSource` or
     :class:`KinesisStandinSource`) composed with :func:`kinesis_records`
     — what a TOML ``[input] name="Kinesis"`` with ``[fields]`` compiles
     to, so the operator chain sees record columns, not raw blobs."""
@@ -147,12 +96,14 @@ class KinesisRecordsSource:
 class KinesisPythonSource:
     """The jar-free Kinesis reader: ``readStream.format("bakerkinesis")``
     (streaming/kinesis_datasource.py — shard -> partition, sequence
-    numbers in the checkpoint WAL, boto3 on executors, same
-    :data:`KINESIS_RECORD_SCHEMA` out). This is what the TOML compiler
-    emits by default, because it is executable code everywhere: real
-    AWS via boto3, or the observable ``fake_dir`` spool in tests —
-    where :class:`KinesisSource` needs the spark-sql-kinesis jar on the
-    classpath."""
+    numbers in the checkpoint WAL, boto3 on executors,
+    :data:`KINESIS_RECORD_SCHEMA` out). This is what a TOML Kinesis or
+    KCL section compiles to: real AWS via boto3, or the observable
+    ``fake_dir`` spool in tests.
+
+    Structured Streaming's checkpointing replaces KCL's DynamoDB lease
+    table (input/kcl.go:27-49): resume position comes from the query's
+    checkpoint dir, scoped by AppName with :meth:`checkpoint_dir`."""
 
     stream_name: str
     region: str = "us-west-2"
@@ -175,7 +126,9 @@ class KinesisPythonSource:
     shard_filter: str | None = None
 
     def checkpoint_dir(self, base: str) -> str:
-        """AppName-scoped checkpoint location (kcl.go:43 isolation)."""
+        """AppName-scoped checkpoint location (kcl.go:43 isolation).
+        MaxShards/ShardSync/LeaseDuration (kcl.go:44-46) have no knob
+        here: Spark's own task scheduling replaces lease balancing."""
         return f"{base.rstrip('/')}/{self.app_name or self.stream_name}"
 
     def dataframe(self, spark: SparkSession) -> DataFrame:
@@ -247,27 +200,6 @@ class KinesisStandinSource:
 
 
 @dataclass
-class KafkaSource:
-    """Kafka — the conventional stand-in for Kinesis in OSS deployments
-    (SURVEY.md §2.1 suggests it for tests)."""
-
-    bootstrap_servers: str
-    topics: str
-    starting_offsets: str = "latest"
-
-    def dataframe(self, spark: SparkSession) -> DataFrame:
-        reader = (
-            spark.readStream.format("kafka")
-            .option("kafka.bootstrap.servers", self.bootstrap_servers)
-            .option("subscribe", self.topics)
-            .option("startingOffsets", self.starting_offsets)
-        )
-        return _require_format(spark, reader, "kafka")
-
-    __call__ = dataframe
-
-
-@dataclass
 class SocketSource:
     """TCP line source (dev-only, like the reference's :6000 listener,
     input/tcp.go:20-28 — minus the nonstandard gzip framing)."""
@@ -276,11 +208,11 @@ class SocketSource:
     port: int = 6000
 
     def dataframe(self, spark: SparkSession) -> DataFrame:
-        reader = (
+        return (
             spark.readStream.format("socket")
             .option("host", self.host)
             .option("port", self.port)
+            .load()
         )
-        return _require_format(spark, reader, "socket")
 
     __call__ = dataframe

@@ -8,12 +8,12 @@ gzip listener (/root/reference/input/tcp.go:20-28).
 
 Structured Streaming replaces all of that machinery:
 
-- file-arrival sources (``readStream`` on a directory) are the
-  SQS-notification pattern: new files are discovered and processed once
-- a Kinesis/Kafka connector slots in by changing ``format`` — not bundled
-  in this environment, so the file/rate sources stand in (same topology
-  code; the reference's own tests substitute in-memory inputs the same
-  way, input/inputtest/records.go)
+- SQS and Kinesis/KCL are Python streaming data sources
+  (``bakersqs``, streaming/sqs_datasource.py; ``bakerkinesis``,
+  streaming/kinesis_datasource.py) whose offsets live in the
+  checkpoint's offset WAL
+- file-arrival sources (``readStream`` on a directory) ingest the TCP
+  listener's spool: new files are discovered and processed once
 - KCL's lease table + checkpoints == the streaming checkpoint dir
 - graceful SIGINT drain (topology.go:282-314) == ``query.stop()`` +
   checkpoint recovery
@@ -36,8 +36,9 @@ from baker_spark.sources.list_source import string_schema
 
 @dataclass
 class FileStreamSource:
-    """Tail a directory for newline-record CSV files (the SQS/List daemon
-    pattern). gzip/zstd decompress by extension, like the batch source."""
+    """Tail a directory for newline-record CSV files (the List input's
+    daemon form). gzip/zstd decompress by extension, like the batch
+    source."""
 
     path: str
     fields: list[str]

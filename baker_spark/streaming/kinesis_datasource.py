@@ -15,18 +15,19 @@ kcl.go:27-49). This source expresses both contracts Spark-first:
 - **sequence numbers -> offsets**: the per-shard last-read sequence
   number lives in the checkpoint's offset WAL — the KCL lease table's
   checkpoint column without the DynamoDB sidecar. ``AppName`` isolation
-  (kcl.go:43) maps to the checkpoint dir, as in
-  :class:`baker_spark.streaming.connectors.KinesisSource`;
+  (kcl.go:43) maps to the checkpoint dir
+  (:meth:`baker_spark.streaming.connectors.KinesisPythonSource.checkpoint_dir`);
 - **InitialPosition LATEST | TRIM_HORIZON** (kcl.go InitialPosition,
   kinesis.go's hardcoded LATEST): LATEST snapshots each shard's current
   tip at first planning and starts after it; TRIM_HORIZON starts at 0;
 - **resharding**: every ``latestOffset`` re-describes the stream
   (kinesis.go refreshShards); a shard that appears later starts at its
   initial position — the KCL shard-sync behavior;
-- rows carry the exact layout the ``aws-kinesis`` connector emits
-  (:data:`baker_spark.streaming.connectors.KINESIS_RECORD_SCHEMA`), so
-  :func:`baker_spark.streaming.connectors.kinesis_records` parses this
-  source and the jar-backed one identically.
+- rows carry the exact layout the ``aws-kinesis`` connector jar emits
+  (:data:`baker_spark.streaming.connectors.KINESIS_RECORD_SCHEMA`), and
+  :func:`baker_spark.streaming.connectors.kinesis_records` parses them
+  into record columns. The jar itself is not used: this source is the
+  engine's one Kinesis path.
 
 **What is deliberately NOT ported: KCL's COMPETING-worker lease
 protocol.** KCL exists because N independent daemon processes must
@@ -157,7 +158,7 @@ class DirStreamClient:
 
 
 def _make_client(options):
-    fake_dir = options.get("fake_dir") or options.get("fakedir")
+    fake_dir = options.get("fake_dir")
     if fake_dir:
         return DirStreamClient(fake_dir)
     import boto3
@@ -165,7 +166,7 @@ def _make_client(options):
     kw = {"region_name": options.get("aws_region", "us-west-2")}
     # endpoint_url: LocalStack/moto wire-level testing and private
     # VPC endpoints (covered by tests/test_moto_aws.py)
-    ep = options.get("endpoint_url") or options.get("endpointurl")
+    ep = options.get("endpoint_url")
     if ep:
         kw["endpoint_url"] = ep
     return boto3.client("kinesis", **kw)
@@ -192,8 +193,7 @@ class KinesisStreamReader(DataSourceStreamReader):
     def __init__(self, options):
         self._options = dict(options)
         self._stream = options.get("stream") or options.get("stream_name") or ""
-        pos = (options.get("initial_position")
-               or options.get("initialposition") or "LATEST").upper()
+        pos = (options.get("initial_position") or "LATEST").upper()
         if pos not in ("LATEST", "TRIM_HORIZON"):
             # kcl.go validate(): accepts only LATEST or TRIM_HORIZON
             raise ValueError(
@@ -234,7 +234,7 @@ class KinesisStreamReader(DataSourceStreamReader):
         #: journals the committed per-shard positions into
         #: <lease_dir>/tips.json and a restarted reader seeds its tips
         #: from it — exactly-once resume independent of probe budgets.
-        lease_dir = options.get("lease_dir") or options.get("leasedir")
+        lease_dir = options.get("lease_dir")
         self._lease_path = (
             os.path.join(lease_dir, "tips.json") if lease_dir else None
         )
@@ -243,7 +243,7 @@ class KinesisStreamReader(DataSourceStreamReader):
         #: DISJOINT subset so several daemons can split one stream with
         #: deterministic ownership and separate checkpoints — the
         #: Spark-native replacement for KCL's lease rebalancing.
-        raw = options.get("shard_filter") or options.get("shardfilter") or ""
+        raw = options.get("shard_filter") or ""
         self._shard_filter = {s.strip() for s in raw.split(",") if s.strip()} or None
         for shard, tip in self._read_lease().items():
             self._tips[shard] = tip
@@ -546,8 +546,8 @@ class KinesisStreamReader(DataSourceStreamReader):
 
 class KinesisStreamDataSource(DataSource):
     """``spark.readStream.format("bakerkinesis")`` — rows in the exact
-    ``aws-kinesis`` connector layout, so downstream parsing
-    (:func:`connectors.kinesis_records`) is connector-agnostic."""
+    ``aws-kinesis`` connector layout, parsed downstream by
+    :func:`connectors.kinesis_records`."""
 
     @classmethod
     def name(cls) -> str:

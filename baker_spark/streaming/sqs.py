@@ -11,41 +11,31 @@ topology. Message payloads come in four formats
 - ``json``             — arbitrary JSON; path extracted by a user
                          JMESPath ``MessageExpression``
 
-Spark-first split of responsibilities:
-
-- **parsing** (this module, pure functions) turns a message body into a
-  file path — same rules as sqs.go:143-189 including the bucket-relative
-  rewrite and URL unescaping (sqs.go:222-226)
-- **polling** (:class:`SQSPoller`) is a small driver-side loop over an
-  *injectable* client (tests inject :class:`FakeSQSClient`; production
-  injects a boto3 ``sqs`` client — boto3 is not bundled in this
-  environment). Only the driver talks to SQS; executors never do.
-- **ingestion** is Structured Streaming's job, not a hand-rolled reader:
-  discovered local paths are materialized (symlink, copy fallback) into
-  the directory watched by
-  :class:`baker_spark.streaming.daemon.FileStreamSource`, so micro-batch
-  scheduling, exactly-once file tracking, and checkpoint recovery all
-  come from Spark's file source. On a cluster whose executors can read
-  the notified store directly (s3a://), point the watched directory at
-  the notified prefix instead and skip the manifest hop.
-
-The reference deletes each SQS message only after the file is handed to
-the S3 reader (sqs.go:235-238); :meth:`SQSPoller.poll_once` mirrors
-that — parse failures leave the message undeleted for redelivery.
+This module holds the driver-side half: **parsing** (pure functions)
+turns a message body into a file path — same rules as sqs.go:143-189
+including the bucket-relative rewrite and URL unescaping
+(sqs.go:222-226) — and **polling** (:class:`SQSPoller`) runs over an
+*injectable* boto3-shaped client. Only the driver talks to SQS.
+Ingestion is the ``bakersqs`` streaming data source
+(streaming/sqs_datasource.py), which journals each batch's file list in
+the offset WAL, fetches the files on executors, and deletes the
+messages only after that journal write.
 """
 
 from __future__ import annotations
 
 import json
-import os
+import logging
 import re
-import shutil
-import threading
 import urllib.parse
 from dataclasses import dataclass, field
 from typing import Callable
 
-from baker_spark.streaming.daemon import FileStreamSource
+log = logging.getLogger(__name__)
+
+#: messages taken per queue per poll — SQS's per-receive maximum
+#: (ReceiveMessage MaxNumberOfMessages)
+MAX_MESSAGES = 10
 
 #: sqs.go:68 — the jmespath expression the reference compiles for
 #: MessageFormat="s3::ObjectCreated".
@@ -58,13 +48,18 @@ S3_OBJECT_CREATED_EXPR = (
 class SQSConfig:
     """Mirror of SQSConfig (sqs.go:41-51)."""
 
+    #: queues to poll, by name
     queue_names: list[str] = field(default_factory=list)
+    #: poll every queue whose name starts with one of these
     queue_prefixes: list[str] = field(default_factory=list)
+    #: plain, sns, s3::ObjectCreated or json
     message_format: str = "sns"
+    #: JMESPath to the file path (MessageFormat json only)
     message_expression: str = ""
+    #: when set, notified paths become keys in this S3 bucket
     bucket: str = ""
+    #: regex a notified path must match; misses are deleted unread
     file_path_filter: str = ""
-    aws_region: str = "us-west-2"
 
     def parse_function(self) -> Callable[[str], str]:
         """Message-body -> file-path function (sqsParseFunction,
@@ -108,78 +103,28 @@ class SQSConfig:
         return parse
 
 
-class FakeSQSClient:
-    """In-memory stand-in for the boto3 SQS client subset the poller
-    uses. Mirrors boto3 response shapes so swapping in the real client
-    is a constructor change only."""
-
-    def __init__(self, queues: dict[str, list[str]] | None = None):
-        # queue name -> pending message bodies
-        self.queues = {name: list(bodies) for name, bodies in (queues or {}).items()}
-        self.deleted: list[tuple[str, str]] = []
-        self._handles: dict[str, tuple[str, str]] = {}  # receipt handle -> (queue, body)
-        self._rh = 0
-
-    def _url(self, name: str) -> str:
-        return f"https://sqs.local/000000000000/{name}"
-
-    def _name(self, url: str) -> str:
-        return url.rsplit("/", 1)[-1]
-
-    def get_queue_url(self, QueueName: str) -> dict:
-        if QueueName not in self.queues:
-            raise KeyError(f"no such queue: {QueueName}")
-        return {"QueueUrl": self._url(QueueName)}
-
-    def list_queues(self, QueueNamePrefix: str = "") -> dict:
-        return {
-            "QueueUrls": [
-                self._url(n) for n in sorted(self.queues) if n.startswith(QueueNamePrefix)
-            ]
-        }
-
-    def receive_message(self, QueueUrl: str, MaxNumberOfMessages: int = 1, **_) -> dict:
-        name = self._name(QueueUrl)
-        messages = []
-        for body in self.queues.get(name, [])[:MaxNumberOfMessages]:
-            self._rh += 1
-            handle = f"rh-{self._rh}"
-            self._handles[handle] = (name, body)
-            messages.append({"Body": body, "ReceiptHandle": handle})
-        return {"Messages": messages}
-
-    def delete_message(self, QueueUrl: str, ReceiptHandle: str) -> None:
-        # idempotent like the real service: deleting via a superseded or
-        # already-actioned handle is a no-op, not a ValueError — callers
-        # legitimately delete every handle they ever held for a message
-        entry = self._handles.pop(ReceiptHandle, None)
-        if entry is not None:
-            name, body = entry
-            if body in self.queues.get(name, []):
-                self.queues[name].remove(body)
-        self.deleted.append((QueueUrl, ReceiptHandle))
+def _log_error(body: str, exc: Exception) -> None:
+    log.warning("SQS: message left for redelivery: %s (body %.200r)", exc, body)
 
 
 class SQSPoller:
-    """Driver-side poll loop: queues -> parsed file paths -> ``on_file``.
+    """Driver-side poll step: queues -> parsed, filtered file paths.
 
     Mirrors SQS.pollQueue/Run (sqs.go:192-287): resolve queue URLs from
-    names and prefixes, long-poll one message at a time, parse, URL
-    unescape, apply FilePathFilter, hand off, THEN delete. A message
-    whose body fails to parse is logged and left for redelivery, exactly
-    like the reference's continue-without-delete."""
+    names and prefixes, receive, parse, URL unescape, apply
+    FilePathFilter. A message whose body fails to parse is logged (a
+    warning, unless ``on_error`` says otherwise) and left for
+    redelivery, exactly like the reference's continue-without-delete."""
 
     def __init__(
         self,
         cfg: SQSConfig,
         client,
-        on_file: Callable[[str], None],
-        on_error: Callable[[str, Exception], None] | None = None,
+        on_error: Callable[[str, Exception], None] = _log_error,
     ):
         self.cfg = cfg
         self.client = client
-        self.on_file = on_file
-        self.on_error = on_error or (lambda body, exc: None)
+        self.on_error = on_error
         self.parse = cfg.parse_function()
         self.filepath_rx = re.compile(cfg.file_path_filter) if cfg.file_path_filter else None
         if not cfg.queue_names and not cfg.queue_prefixes:
@@ -202,58 +147,19 @@ class SQSPoller:
             self._urls = list(dict.fromkeys(urls))
         return self._urls
 
-    def poll_once(self, max_messages: int = 1) -> list[str]:
-        """One receive per queue; returns the file paths handed off."""
-        out: list[str] = []
-        for url in self.queue_urls():
-            resp = self.client.receive_message(
-                QueueUrl=url, MaxNumberOfMessages=max_messages, WaitTimeSeconds=0
-            )
-            for msg in resp.get("Messages", []):
-                body = msg["Body"]
-                try:
-                    path = self.parse(body)
-                except ValueError as exc:
-                    self.on_error(body, exc)
-                    continue  # no delete: redelivered, like sqs.go:221-226
-                # sqs.go:222-226 unescapes before filtering
-                path = urllib.parse.unquote_plus(path)
-                if self.filepath_rx is None or self.filepath_rx.search(path):
-                    try:
-                        self.on_file(path)
-                    except Exception as exc:
-                        # a failing handler (unfetchable path, IO error)
-                        # must not kill the daemon thread; the message
-                        # stays undeleted -> redelivered, like a parse
-                        # failure (sqs.go:221-226)
-                        self.on_error(body, exc)
-                        continue
-                    out.append(path)
-                try:
-                    self.client.delete_message(QueueUrl=url, ReceiptHandle=msg["ReceiptHandle"])
-                except Exception as exc:  # sqs.go:242-244: log, keep polling
-                    self.on_error(body, exc)
-        return out
-
-    def run(self, stop: threading.Event, interval: float = 1.0) -> None:
-        """Blocking daemon loop (call from a thread); the reference's
-        never-exits contract with a cooperative stop."""
-        while not stop.wait(interval):
-            self.poll_once()
-
-    def poll_pending(self, max_messages: int = 10) -> list[tuple[str, str, str]]:
+    def poll_pending(self) -> list[tuple[str, str, str]]:
         """One receive per queue deferring the ADMITTED deletes: returns
         ``(path, queue_url, receipt_handle)`` per admitted message. The
-        streaming data source uses this to move the delete to checkpoint
-        COMMIT time (delete-after-handoff upgraded to
-        delete-after-commit). Same per-message contract as ``poll_once``
-        otherwise: a parse failure is left undeleted for redelivery, a
-        FilePathFilter miss is deleted right here — the reference
-        deletes every parsed message, filtered-out included."""
+        streaming data source moves the delete to after the offset WAL
+        write (the reference's delete-after-handoff, sqs.go:235-238,
+        upgraded to delete-after-journal). A parse failure is left
+        undeleted for redelivery (sqs.go:221-226); a FilePathFilter
+        miss is deleted right here — the reference deletes every parsed
+        message, filtered-out included."""
         out: list[tuple[str, str, str]] = []
         for url in self.queue_urls():
             resp = self.client.receive_message(
-                QueueUrl=url, MaxNumberOfMessages=max_messages, WaitTimeSeconds=0
+                QueueUrl=url, MaxNumberOfMessages=MAX_MESSAGES, WaitTimeSeconds=0
             )
             for msg in resp.get("Messages", []):
                 body = msg["Body"]
@@ -262,6 +168,7 @@ class SQSPoller:
                 except ValueError as exc:
                     self.on_error(body, exc)
                     continue
+                # sqs.go:222-226 unescapes before filtering
                 path = urllib.parse.unquote_plus(path)
                 if self.filepath_rx is None or self.filepath_rx.search(path):
                     out.append((path, url, msg["ReceiptHandle"]))
@@ -273,66 +180,3 @@ class SQSPoller:
                     except Exception as exc:  # noqa: BLE001 — sqs.go:242-244
                         self.on_error(body, exc)
         return out
-
-
-@dataclass
-class SQSFileSource(FileStreamSource):
-    """The compiled form of a ``[input] name="SQS"`` TOML section: a
-    Structured Streaming file source on the watched ``path`` plus the
-    queue configuration needed to build the driver-side poller that
-    feeds it. ``poller(client)`` wires the poll loop to the same watch
-    directory via :func:`manifest_sink`, so
-
-        src.poller(boto3.client("sqs")).run(stop_event)   # driver thread
-        StreamingPipeline(source=src, ...).start(...)     # Spark query
-
-    is the full queue-driven daemon: the reference's SQS.Run
-    (sqs.go:249-287) split into its two natural halves."""
-
-    sqs: SQSConfig = field(default_factory=SQSConfig)
-
-    def poller(self, client, on_file: Callable[[str], None] | None = None) -> SQSPoller:
-        return SQSPoller(self.sqs, client, on_file or manifest_sink(self.path))
-
-
-def manifest_sink(watch_dir: str) -> Callable[[str], None]:
-    """``on_file`` callback that materializes each discovered LOCAL file
-    into ``watch_dir`` so the Structured Streaming file source
-    (FileStreamSource) picks it up as a new file: symlink when possible,
-    copy as fallback. Names are flattened (path separators -> ``__``) so
-    two files with the same basename in different prefixes don't
-    collide, and carry a ``size-mtime`` version tag before the extension
-    chain: an overwritten source re-notified under the same path (a
-    normal S3 re-put -> second ObjectCreated event) gets a NEW manifest
-    name, so Spark's file source — which never reprocesses a seen path —
-    still ingests the new content, while byte-identical redelivery
-    (same size+mtime) keeps deduplicating. The extension chain stays
-    LAST so gz/zstd decompress-by-extension keeps working. s3:// paths
-    raise — on a real cluster, watch the s3a:// prefix directly instead
-    of manifesting."""
-
-    os.makedirs(watch_dir, exist_ok=True)
-
-    def on_file(path: str) -> None:
-        if path.startswith(("s3://", "s3a://")):
-            raise ValueError(
-                "manifest_sink handles local paths only; for S3, point "
-                "FileStreamSource at the s3a:// prefix the notifications cover"
-            )
-        src = os.path.abspath(path)
-        flat = src.lstrip("/").replace(os.sep, "__")
-        base = os.path.basename(src)
-        ext_at = base.find(".")
-        ext = base[ext_at:] if ext_at > 0 else ""
-        st = os.stat(src)
-        ver = f".{st.st_size:x}-{st.st_mtime_ns // 1_000_000:x}"
-        stem = flat[: len(flat) - len(ext)] if ext else flat
-        dst = os.path.join(watch_dir, stem + ver + ext)
-        if os.path.exists(dst):
-            return  # at-least-once delivery: identical file notified twice
-        try:
-            os.symlink(src, dst)
-        except OSError:
-            shutil.copy2(src, dst)
-
-    return on_file

@@ -3,10 +3,10 @@ contract as a Spark 4 Python streaming data source.
 
 The reference's SQS input (/root/reference/input/sqs.go:192-246) polls
 queues whose messages name files, streams each named file, and deletes
-the message after handoff. :class:`baker_spark.streaming.sqs.SQSPoller`
-+ the manifest directory already express that as a Spark file source;
-this module is the direct ``readStream`` form with Spark-managed
-offsets:
+the message after handoff. This module is that input's one Spark form,
+a ``readStream`` source with Spark-managed offsets over the driver-side
+:class:`baker_spark.streaming.sqs.SQSPoller`; a TOML
+``[input] name="SQS"`` section compiles to :class:`SQSSource`:
 
 - ``latestOffset`` polls WITHOUT deleting (``SQSPoller.poll_pending``)
   and records the batch's file list INSIDE the offset, so a checkpoint
@@ -28,16 +28,18 @@ offsets:
 Clients: production passes queue names and builds a boto3 client
 (import-guarded — boto3 is not bundled here); tests and local demos
 use the observable ``fake_dir`` backdoor, a directory where every
-``*.msg`` file is one pending message body and delete = unlink.
+``*.msg`` file is one pending message body and delete = unlink (a
+named queue is the sub-directory of that name).
 """
 
 from __future__ import annotations
 
-import json
 import os
 import uuid
+from dataclasses import dataclass, field
 from datetime import datetime, timezone
 
+from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceStreamReader,
@@ -45,7 +47,17 @@ from pyspark.sql.datasource import (
 )
 
 from baker_spark.sources.http_datasource import SCHEMA, fetch_lines
+from baker_spark.sources.list_source import split_fields
 from baker_spark.streaming.sqs import SQSConfig, SQSPoller
+
+#: how long a key replayed from the WAL suppresses redeliveries. If no
+#: redelivery arrives within the window, the pre-crash delete evidently
+#: SUCCEEDED and the entry must expire — a permanent entry would swallow
+#: a future legitimate re-notification of the same path (producer
+#: re-puts new content at the same key) forever. 900 s is past any sane
+#: SQS visibility timeout, so a genuine straggler redelivers well inside
+#: it.
+REPLAY_SUPPRESS_SECS = 900.0
 
 
 class DirQueueClient:
@@ -77,9 +89,13 @@ class DirQueueClient:
         for n in names[:MaxNumberOfMessages]:
             try:
                 with open(os.path.join(QueueUrl, n)) as fh:
-                    messages.append({"Body": fh.read(), "ReceiptHandle": n})
+                    body = fh.read()
             except FileNotFoundError:
                 continue  # deleted between list and read
+            # an SQS body is never empty: an empty file is a message
+            # whose writer has opened but not yet written it
+            if body:
+                messages.append({"Body": body, "ReceiptHandle": n})
         return {"Messages": messages}
 
     def delete_message(self, QueueUrl: str, ReceiptHandle: str) -> None:
@@ -155,22 +171,18 @@ class _FilePartition(InputPartition):
 class SQSStreamReader(DataSourceStreamReader):
     def __init__(self, options):
         cfg = SQSConfig(
-            queue_names=_split(options.get("queue_names") or options.get("queuenames")),
-            queue_prefixes=_split(
-                options.get("queue_prefixes") or options.get("queueprefixes")
-            ),
-            message_format=options.get("message_format")
-            or options.get("messageformat")
-            or "plain",
-            message_expression=options.get("message_expression")
-            or options.get("messageexpression")
-            or "",
+            queue_names=_split(options.get("queue_names")),
+            queue_prefixes=_split(options.get("queue_prefixes")),
+            message_format=options.get("message_format") or "plain",
+            message_expression=options.get("message_expression") or "",
             bucket=options.get("bucket") or "",
-            file_path_filter=options.get("file_path_filter")
-            or options.get("filepathfilter")
-            or "",
+            file_path_filter=options.get("file_path_filter") or "",
         )
-        fake_dir = options.get("fake_dir") or options.get("fakedir")
+        # read()'s executor-side S3 fetches hit the same regional
+        # endpoint as the driver's queue client
+        self._region = options.get("aws_region") or "us-west-2"
+        self._endpoint = options.get("endpoint_url") or ""
+        fake_dir = options.get("fake_dir")
         if fake_dir:
             client = DirQueueClient(fake_dir)
             if not cfg.queue_names and not cfg.queue_prefixes:
@@ -178,20 +190,13 @@ class SQSStreamReader(DataSourceStreamReader):
         else:
             import boto3
 
-            kw = {"region_name": options.get("aws_region") or cfg.aws_region}
-            ep = options.get("endpoint_url") or options.get("endpointurl")
-            if ep:
-                kw["endpoint_url"] = ep
+            kw = {"region_name": self._region}
+            if self._endpoint:
+                kw["endpoint_url"] = self._endpoint
             client = boto3.client("sqs", **kw)
-        self._poller = SQSPoller(cfg, client, on_file=lambda p: None)
+        self._poller = SQSPoller(cfg, client)
         self._client = client
         self._bucket = cfg.bucket
-        # the option, not the dataclass default: cfg.aws_region is never
-        # populated from options, and read()'s executor-side S3 fetches
-        # must hit the same regional endpoint the user configured
-        self._region = options.get("aws_region") or cfg.aws_region
-        self._endpoint = options.get("endpoint_url") or options.get("endpointurl") or ""
-        self._max_messages = int(options.get("max_messages", "10"))
         self._seq = 0
         #: per-run nonce stamped into every offset this reader emits.
         #: _seq restarts at 0 after a checkpoint restore; without the
@@ -207,16 +212,8 @@ class SQSStreamReader(DataSourceStreamReader):
         #: keys replayed from the WAL whose delete never ran (crash
         #: between journal and delete): the next poll deletes them
         #: instead of re-admitting — their rows are already in a batch.
-        #: Value = suppression deadline (monotonic): if no redelivery
-        #: arrives within the window, the pre-crash delete evidently
-        #: SUCCEEDED and the entry must expire — a permanent entry would
-        #: swallow a future legitimate re-notification of the same path
-        #: (producer re-puts new content at the same key) forever.
-        #: Window default 900s: past any sane SQS visibility timeout, so
-        #: a genuine straggler redelivers well inside it.
-        self._replay_suppress_secs = float(
-            options.get("replay_suppress_secs", "900")
-        )
+        #: Value = suppression deadline (monotonic, see
+        #: REPLAY_SUPPRESS_SECS).
         self._replayed: dict[tuple[str, str], float] = {}
         #: last offset handed to Spark — re-returned VERBATIM while no
         #: new files arrive (a changed-but-equal-seq offset would plan
@@ -233,7 +230,7 @@ class SQSStreamReader(DataSourceStreamReader):
         now = _time.monotonic()
         for k in [k for k, dl in self._replayed.items() if dl < now]:
             del self._replayed[k]
-        pending = self._poller.poll_pending(self._max_messages)
+        pending = self._poller.poll_pending()
         new = []
         for path, queue_url, handle in pending:
             if self._bucket and "://" not in path:
@@ -292,7 +289,7 @@ class SQSStreamReader(DataSourceStreamReader):
                 # re-admitting rows that are already in this batch
                 import time as _time
 
-                self._replayed[key] = _time.monotonic() + self._replay_suppress_secs
+                self._replayed[key] = _time.monotonic() + REPLAY_SUPPRESS_SECS
                 continue
             try:
                 self._client.delete_message(QueueUrl=queue_url, ReceiptHandle=handle)
@@ -347,3 +344,43 @@ class SQSStreamDataSource(DataSource):
 
 def register(spark) -> None:
     spark.dataSource.register(SQSStreamDataSource)
+
+
+@dataclass
+class SQSSource(SQSConfig):
+    """The SQS input: queues whose messages name files, streamed
+    through ``readStream.format("bakersqs")`` — each batch's file list
+    is journaled in the offset WAL before its messages are deleted, and
+    the files are fetched on executors (input/sqs.go:192-287). Rows are
+    the notified files' lines, split into the ``[fields]`` columns.
+    QueueNames or QueuePrefixes is required (FakeDir stands in for
+    both)."""
+
+    #: AWS region of the queues and of the notified S3 objects
+    aws_region: str = "us-west-2"
+    #: test backdoor: a directory queue, one ``*.msg`` file per message
+    #: (QueueNames name its sub-directories); no AWS client is built
+    fake_dir: str | None = None
+    #: the ``[fields]`` names and ``[csv]`` separator lines split into
+    fields: list[str] = field(default_factory=list)
+    separator: str = ","
+
+    def dataframe(self, spark: SparkSession) -> DataFrame:
+        register(spark)
+        # every key is passed, the format too: the TOML default
+        # MessageFormat is "sns", the bakersqs option default "plain"
+        raw = (
+            spark.readStream.format("bakersqs")
+            .option("queue_names", ",".join(self.queue_names))
+            .option("queue_prefixes", ",".join(self.queue_prefixes))
+            .option("message_format", self.message_format)
+            .option("message_expression", self.message_expression)
+            .option("bucket", self.bucket)
+            .option("file_path_filter", self.file_path_filter)
+            .option("aws_region", self.aws_region)
+            .option("fake_dir", self.fake_dir or "")
+            .load()
+        )
+        return raw.select(*split_fields(F.col("value"), self.fields, self.separator))
+
+    __call__ = dataframe

@@ -6,7 +6,9 @@ chunks the decompressed stream (128 KiB) and only ever hands over
 complete lines — a chunk is extended to the next newline so no record
 is split (tcp.go:162-207).
 
-Spark-first split, same shape as the SQS input (streaming/sqs.py):
+Spark-first split: a driver-side listener feeds a Spark file source.
+(The SQS input needs no spool: its notified files already exist, so
+the ``bakersqs`` source journals their paths and reads them directly.)
 
 - :class:`TCPGzipListener` is a small driver-side accept loop that
   spools each connection's stream as files (written atomically: temp

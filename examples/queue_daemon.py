@@ -3,17 +3,17 @@ and TCP input shapes on Structured Streaming.
 
     python examples/queue_daemon.py
 
-Two driver-side feeders run against ONE streaming query:
+Two inputs feed ONE streaming query:
 
-- an SQS poller (fake client here; pass ``boto3.client("sqs")`` in
-  production) parses S3-ObjectCreated-style notifications and manifests
-  the named files into a watched directory
+- the SQS input (``bakersqs``) reads SNS notifications from a queue —
+  a directory queue here (``fake_dir``); drop ``fake_dir`` and set
+  ``queue_names`` to poll real SQS — and streams the files they name
 - a TCP gzip listener accepts the reference's wire format (one gzip
-  stream per connection) and spools complete-line chunks into a second
-  watched directory
+  stream per connection) and spools complete-line chunks into a
+  watched directory read by a FileStreamSource
 
-Both feed FileStreamSources merged into one operator chain, so Spark
-owns micro-batching, exactly-once file tracking and checkpointing.
+Both are merged into one operator chain, so Spark owns micro-batching,
+offset journaling and checkpointing.
 """
 
 import json
@@ -26,12 +26,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from baker_spark import operators as ops  # noqa: E402
 from baker_spark.session import get_spark  # noqa: E402
 from baker_spark.streaming.daemon import FileStreamSource, StreamingPipeline  # noqa: E402
-from baker_spark.streaming.sqs import (  # noqa: E402
-    FakeSQSClient,
-    SQSConfig,
-    SQSPoller,
-    manifest_sink,
-)
+from baker_spark.streaming.sqs_datasource import SQSSource  # noqa: E402
 from baker_spark.streaming.tcp import TCPGzipListener, send_gzip_records  # noqa: E402
 
 FIELDS = ["id", "etype", "user"]
@@ -40,24 +35,15 @@ FIELDS = ["id", "etype", "user"]
 def main() -> None:
     spark = get_spark("queue_daemon_example", cpus=4)
     data_dir = tempfile.mkdtemp(prefix="qd_data_")
-    sqs_watch = tempfile.mkdtemp(prefix="qd_sqs_")
+    sqs_queue = tempfile.mkdtemp(prefix="qd_sqs_")
     tcp_spool = tempfile.mkdtemp(prefix="qd_tcp_")
 
-    # --- SQS side: a notification names a file; the poller manifests it
+    # --- SQS side: an SNS notification (one *.msg file) names a file
     notified = os.path.join(data_dir, "notified.csv")
     with open(notified, "w") as fh:
         fh.write("1,click,alice\n2,view,bob\n")
-    message = json.dumps(
-        {"Records": [{"s3": {"bucket": {"name": "b"}, "object": {"key": notified[1:]}}}]}
-    )
-    client = FakeSQSClient({"notify-queue": [message]})
-    sink = manifest_sink(sqs_watch)
-    poller = SQSPoller(
-        SQSConfig(message_format="s3::ObjectCreated", queue_names=["notify-queue"], bucket="b"),
-        client,
-        on_file=lambda p: sink("/" + p),  # bucket-relative key -> local path
-    )
-    poller.poll_once()
+    with open(os.path.join(sqs_queue, "m1.msg"), "w") as fh:
+        fh.write(json.dumps({"Type": "Notification", "Message": notified}))
 
     # --- TCP side: a producer pushes a gzip stream of records
     listener = TCPGzipListener(tcp_spool, port=0)
@@ -76,7 +62,7 @@ def main() -> None:
 
     # --- one streaming query over both sources
     def merged(s):
-        a = FileStreamSource(sqs_watch, fields=FIELDS)(s)
+        a = SQSSource(fake_dir=sqs_queue, fields=FIELDS)(s)
         b = FileStreamSource(tcp_spool, fields=FIELDS)(s)
         return a.unionByName(b)
 

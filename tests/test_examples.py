@@ -108,6 +108,22 @@ def test_cli_help_config_key_table_fidelity(capsys):
     assert "ZstdCompressionLevel" in out
     assert "| DiscardEmptyFiles| bool| False| false|" in out
 
+    # help SQS lists exactly the [input.config] keys the compiler reads
+    assert cli.cmd_help("SQS") == 0
+    out = capsys.readouterr().out
+    keys = [ln.split("|")[1].strip() for ln in out.splitlines() if ln.startswith("| ")]
+    assert keys == [
+        "QueueNames",
+        "QueuePrefixes",
+        "MessageFormat",
+        "MessageExpression",
+        "Bucket",
+        "FilePathFilter",
+        "AWSRegion",
+        "FakeDir",
+    ]
+    assert "| MessageFormat| str| 'sns'| false|" in out
+
     assert cli.cmd_help("ClauseFilter") == 0
     out = capsys.readouterr().out
     assert "## Filter *ClauseFilter*" in out
@@ -150,7 +166,7 @@ def test_cli_toml_surface_matches_compiler_dispatch():
     for n in BATCH_INPUT_NAMES:
         _build_input({"name": n, "config": {}}, ["a"], ",")
     stream_cfg = {
-        "SQS": {"Path": "/tmp/watch"},
+        "SQS": {"FakeDir": "/tmp/queue"},
         "Kinesis": {"Stream": "s"},
         "KCL": {"Stream": "s", "AppName": "app"},
         "TCP": {},

@@ -147,15 +147,25 @@ def test_ann_guard_trips_even_when_query_id_missing(spark):
     assert vectors.ann_topk(df, query_id=-999, max_rows=10_000_000).collect() == []
 
 
-def test_sqs_input_requires_path():
-    """The SQS daemon input needs the watched Path; the compiler fails at
-    compile time with a clear message, not at stream start."""
+def test_sqs_input_requires_a_queue(tmp_path):
+    """The SQS daemon input needs a queue (QueueNames, QueuePrefixes or a
+    FakeDir directory queue); the compiler fails at compile time with a
+    clear message, not at stream start, like sqs.go. Each retired key
+    fails with an error naming what replaced it. A FakeDir queue
+    compiles."""
     import pytest
 
     from baker_spark.plans import compile_toml
 
-    with pytest.raises(ValueError, match="watched directory"):
-        compile_toml('[fields]\nnames=["a"]\n[input]\nname="SQS"\n')
+    toml = '[fields]\nnames=["a"]\n[input]\nname="SQS"\n[input.config]\n'
+    with pytest.raises(ValueError, match="QueuePrefixes or QueueNames must be set"):
+        compile_toml(toml)
+    with pytest.raises(ValueError, match="QueueNames or QueuePrefixes.*FakeDir"):
+        compile_toml(toml + f'Path="{tmp_path}"\n')
+    with pytest.raises(ValueError, match="MaxFilesPerTrigger has no replacement"):
+        compile_toml(toml + 'QueueNames=["q"]\nMaxFilesPerTrigger=2\n')
+    src = compile_toml(toml + f'FakeDir="{tmp_path}"\n').source
+    assert src.fake_dir == str(tmp_path) and src.fields == ["a"]
 
 
 def test_incremental_dedup_is_key_anti_join(plans):

@@ -182,7 +182,7 @@ def test_crash_between_wal_and_delete_does_not_duplicate(tmp_path):
     assert b.latestOffset() is off2
 
 
-def test_file_path_filter_leaves_filtered_pending(spark, stream):
+def test_file_path_filter_deletes_filtered_message(spark, stream):
     qdir, data, start = stream
     keep = data / "keep.csv"
     keep.write_text("kept\n")

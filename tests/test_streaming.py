@@ -3,6 +3,7 @@ operator chain, streaming dedup with watermark, windowed counts.
 ``processAllAvailable`` drives the stream to completion synchronously."""
 
 import gzip
+import json
 import os
 
 from pyspark.sql import functions as F
@@ -19,6 +20,16 @@ from baker_spark.streaming.daemon import (
 def _write_csv(path, rows):
     with open(path, "w") as fh:
         fh.write("\n".join(rows) + "\n")
+
+
+def _notify(queue, path):
+    """Queue an SNS notification naming ``path`` in a FakeDir queue
+    (one ``*.msg`` file per message)."""
+    (queue / f"{path.name}.msg").write_text(json.dumps({"Message": str(path)}))
+
+
+def _pending(queue):
+    return sorted(p.name for p in queue.glob("*.msg"))
 
 
 def test_file_stream_with_operator_chain(spark, tmp_path):
@@ -117,18 +128,6 @@ def test_foreach_batch_reuses_batch_sink(spark, tmp_path):
     assert isinstance(Nop(), object)  # batch sinks importable for streaming reuse
 
 
-def test_queue_connectors_fail_with_clear_error(spark):
-    from baker_spark.streaming import KafkaSource, KinesisSource
-
-    for src in (KafkaSource("localhost:9092", "t"), KinesisSource("stream")):
-        try:
-            src.dataframe(spark)
-        except RuntimeError as e:
-            assert "connector jar" in str(e)
-        else:  # pragma: no cover - jar actually present
-            pass
-
-
 def test_interval_join(spark, tmp_path):
     """Stream-stream interval join: purchase matches click within 60 s."""
     from pyspark.sql import functions as F
@@ -169,14 +168,18 @@ def test_interval_join(spark, tmp_path):
 
 def test_toml_daemon_topology(spark, tmp_path):
     """The reference's daemon TOML (SQS file-notification input) compiles
-    to a StreamingPipeline and runs end-to-end: incremental file pickup,
-    operator chain, foreachBatch into the compiled batch sink."""
+    to a StreamingPipeline and runs end-to-end: incremental pickup of
+    notified files, operator chain, foreachBatch into the compiled batch
+    sink."""
     from baker_spark.plans import compile_toml
     from baker_spark.sinks.simple import Recorder
 
     src_dir = tmp_path / "notified"
     src_dir.mkdir()
+    queue = tmp_path / "queue"
+    queue.mkdir()
     _write_csv(src_dir / "a.csv", ["1,click,u1", "2,view,u2"])
+    _notify(queue, src_dir / "a.csv")
 
     toml = f"""
 [fields]
@@ -184,7 +187,7 @@ names=["id","etype","user"]
 [input]
 name="SQS"
 [input.config]
-Path="{src_dir}"
+FakeDir="{queue}"
 [[filter]]
 name="ClauseFilter"
 [filter.config]
@@ -202,24 +205,20 @@ fields=["id","etype"]
     try:
         q.processAllAvailable()
         _write_csv(src_dir / "b.csv", ["3,click,u3"])
+        _notify(queue, src_dir / "b.csv")
         q.processAllAvailable()
     finally:
         q.stop()
     got = {(r["id"], r["etype"]) for r in pipe.sink.records}
     assert got == {("1", "click"), ("3", "click")}
+    assert _pending(queue) == []
 
 
 def test_toml_daemon_kinesis_compiles(spark):
-    """Kinesis/KCL/TCP daemon TOMLs compile. The default Kinesis source
-    is the jar-free ``bakerkinesis`` Python data source; the
-    spark-sql-kinesis jar connector stays behind Connector="jar"
-    (absent here; .dataframe raises the documented classpath error)."""
+    """Kinesis/KCL/TCP daemon TOMLs compile. Kinesis and KCL compile to
+    the jar-free ``bakerkinesis`` Python data source."""
     from baker_spark.plans import compile_toml
-    from baker_spark.streaming.connectors import (
-        KinesisPythonSource,
-        KinesisSource,
-        SocketSource,
-    )
+    from baker_spark.streaming.connectors import KinesisPythonSource, SocketSource
     from baker_spark.streaming.daemon import StreamingPipeline
 
     kcl_toml = """
@@ -235,10 +234,6 @@ InitialPosition="TRIM_HORIZON"
     assert isinstance(pipe, StreamingPipeline)
     assert isinstance(pipe.source, KinesisPythonSource)
     assert pipe.source.initial_position == "TRIM_HORIZON"
-
-    jar = compile_toml(kcl_toml.replace('[input.config]', '[input.config]\nConnector="jar"'))
-    assert isinstance(jar.source, KinesisSource)
-    assert jar.source.starting_position == "TRIM_HORIZON"
 
     tcp = compile_toml('[input]\nname="TCP"\n[input.config]\nListenAddress=":7100"\n')
     assert isinstance(tcp.source, SocketSource)
@@ -341,14 +336,17 @@ def test_daemon_filewriter_appends_across_batches(spark, tmp_path):
 
     src_dir = tmp_path / "fw_in"
     src_dir.mkdir()
+    queue = tmp_path / "queue"
+    queue.mkdir()
     _write_csv(src_dir / "a.csv", ["1,click,u1"])
+    _notify(queue, src_dir / "a.csv")
     toml = f"""
 [fields]
 names=["id","etype","user"]
 [input]
 name="SQS"
 [input.config]
-Path="{src_dir}"
+FakeDir="{queue}"
 [output]
 name="FileWriter"
 [output.config]
@@ -360,6 +358,7 @@ PathString="{tmp_path}/fw_out/out.csv.gz"
     try:
         q.processAllAvailable()
         _write_csv(src_dir / "b.csv", ["2,view,u2"])
+        _notify(queue, src_dir / "b.csv")
         q.processAllAvailable()
     finally:
         q.stop()
@@ -410,7 +409,7 @@ names=["id","v"]
 [input]
 name="SQS"
 [input.config]
-Path="{tmp_path}"
+FakeDir="{tmp_path}"
 [output]
 name="FileWriter"
 [output.config]
@@ -428,14 +427,17 @@ def test_daemon_upload_stage_runs_per_batch(spark, tmp_path):
 
     src_dir = tmp_path / "up_in"
     src_dir.mkdir()
+    queue = tmp_path / "queue"
+    queue.mkdir()
     _write_csv(src_dir / "a.csv", ["1,click,u1"])
+    _notify(queue, src_dir / "a.csv")
     toml = f"""
 [fields]
 names=["id","etype","user"]
 [input]
 name="SQS"
 [input.config]
-Path="{src_dir}"
+FakeDir="{queue}"
 [output]
 name="FileWriter"
 [output.config]
@@ -456,6 +458,7 @@ Prefix="pre"
         q.processAllAvailable()
         n_first = len(sent)
         _write_csv(src_dir / "b.csv", ["2,view,u2"])
+        _notify(queue, src_dir / "b.csv")
         q.processAllAvailable()
     finally:
         q.stop()

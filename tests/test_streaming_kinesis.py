@@ -50,6 +50,23 @@ def test_kinesis_records_keeps_arrival_timestamp_when_asked(spark):
     assert out[0].id == "1"
 
 
+def test_kinesis_records_short_line_gives_null_fields_under_ansi(spark):
+    """A line with fewer fields than [fields] gets NULL trailing fields,
+    as the List input gives — also with ANSI mode on, where element_at
+    would raise INVALID_ARRAY_INDEX_IN_ELEMENT_AT instead."""
+    df = spark.createDataFrame([_record(b"1,click\n2,view,u2,extra")], KINESIS_RECORD_SCHEMA)
+    before = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try:
+        out = kinesis_records(df, fields=["id", "etype", "user"]).collect()
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", before)
+    assert [(r.id, r.etype, r.user) for r in out] == [
+        ("1", "click", None),
+        ("2", "view", "u2"),
+    ]
+
+
 def test_standin_emits_exact_connector_schema(spark):
     """The stand-in's contract IS the connector layout — if this schema
     drifts from KINESIS_RECORD_SCHEMA, topology code tested against the
@@ -297,11 +314,11 @@ def test_kinesis_source_rejects_bad_initial_position(spark, kstream):
 
 
 def test_toml_kinesis_defaults_to_python_source_and_runs(spark, tmp_path):
-    """[input] name='Kinesis' now compiles to the jar-free bakerkinesis
-    source by default — and actually RUNS a micro-batch end to end via
-    the fake_dir spool (the jar contract stays behind connector='jar')."""
+    """[input] name='Kinesis' compiles to the jar-free bakerkinesis
+    source — and actually RUNS a micro-batch end to end via the
+    fake_dir spool. The retired Connector key fails at compile time."""
     from baker_spark.plans import compile_toml
-    from baker_spark.streaming.connectors import KinesisPythonSource, KinesisSource
+    from baker_spark.streaming.connectors import KinesisPythonSource
     from baker_spark.streaming.kinesis_datasource import DirStreamClient
 
     root = tmp_path / "kin"
@@ -339,9 +356,10 @@ name = "Nop"
     finally:
         q.stop()
 
-    # jar opt-in still compiles to the connector contract
-    plan = compile_toml(
-        """
+    # the jar connector is gone: its opt-in key fails loudly
+    with pytest.raises(ValueError, match="Connector has no replacement"):
+        compile_toml(
+            """
 [fields]
 names = ["id"]
 
@@ -354,8 +372,7 @@ name = "Kinesis"
 [output]
 name = "Nop"
 """
-    )
-    assert isinstance(plan.source.inner, KinesisSource)
+        )
 
 
 def test_kinesis_restart_with_backlog_past_budget_resumes_exact_with_lease(

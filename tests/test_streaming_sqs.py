@@ -1,22 +1,19 @@
 """SQS file-notification input: message parsing for all four reference
 formats (/root/reference/input/sqs.go:53-77,143-189), the poller's
-filter/delete/redeliver contract (sqs.go:192-246), and an end-to-end
-micro-batch where fake messages of three formats drive files through a
-Structured Streaming topology."""
+filter/delete/redeliver contract (sqs.go:192-246), and TOML SQS
+topologies whose notifications drive micro-batches through the
+``bakersqs`` source. Queues are ``DirQueueClient`` directories: one
+``*.msg`` file is one pending message, delete = unlink."""
 
 import json
+import logging
 
 import pytest
 
 from baker_spark import operators as ops
 from baker_spark.streaming.daemon import StreamingPipeline
-from baker_spark.streaming.sqs import (
-    FakeSQSClient,
-    SQSConfig,
-    SQSFileSource,
-    SQSPoller,
-    manifest_sink,
-)
+from baker_spark.streaming.sqs import SQSConfig, SQSPoller
+from baker_spark.streaming.sqs_datasource import DirQueueClient, SQSSource, SQSStreamReader
 
 
 def _sns(path):
@@ -92,85 +89,97 @@ def test_parse_errors_name_the_failure():
 # ---------------------------------------------------------------- poller
 
 
-def test_poller_parses_filters_unescapes_and_deletes():
-    client = FakeSQSClient(
-        {
-            "logs-a": ["s3://b/keep/x+y.csv", "s3://b/skip/z.csv"],
-            "logs-b": ["s3://b/keep/w.csv"],
-        }
-    )
-    seen = []
+def _queue(root, name, *bodies):
+    """A DirQueueClient queue ``root/name`` holding ``bodies`` in order."""
+    q = root / name
+    q.mkdir(parents=True, exist_ok=True)
+    for i, body in enumerate(bodies):
+        (q / f"m{i:03d}.msg").write_text(body)
+    return q
+
+
+def _pending(q):
+    return sorted(p.name for p in q.glob("*.msg"))
+
+
+def test_poller_parses_filters_unescapes_and_deletes(tmp_path):
+    a = _queue(tmp_path, "logs-a", "s3://b/keep/x+y.csv", "s3://b/skip/z.csv")
+    b = _queue(tmp_path, "logs-b", "s3://b/keep/w.csv")
     poller = SQSPoller(
         SQSConfig(
             message_format="plain",
             queue_prefixes=["logs-"],
             file_path_filter=r"/keep/",
         ),
-        client,
-        on_file=seen.append,
+        DirQueueClient(str(tmp_path)),
     )
-    # drain: one message per queue per poll, like the reference's
-    # MaxNumberOfMessages=1 (sqs.go:199-205)
-    while poller.poll_once():
-        pass
+    got = poller.poll_pending()
     # unescape happened before the filter ('+' -> space, sqs.go:222-226)
-    assert seen == ["s3://b/keep/x y.csv", "s3://b/keep/w.csv"]
-    # ALL received messages are deleted, filtered-out ones included
-    assert all(not msgs for msgs in client.queues.values())
-    assert len(client.deleted) == 3
+    assert [(path, handle) for path, _url, handle in got] == [
+        ("s3://b/keep/x y.csv", "m000.msg"),
+        ("s3://b/keep/w.csv", "m000.msg"),
+    ]
+    assert [url for _path, url, _handle in got] == [str(a), str(b)]
+    # the filtered-out message is deleted at once; admitted ones wait
+    # for the caller's delete (bakersqs: after the offset WAL write)
+    assert _pending(a) == ["m000.msg"] and _pending(b) == ["m000.msg"]
+    for _path, url, handle in got:
+        poller.client.delete_message(QueueUrl=url, ReceiptHandle=handle)
+    assert poller.poll_pending() == []
 
 
-def test_poller_leaves_unparsable_messages_for_redelivery():
-    client = FakeSQSClient({"q": ["definitely not json"]})
+def test_poller_leaves_unparsable_messages_for_redelivery(tmp_path):
+    q = _queue(tmp_path, "q", "definitely not json")
     errors = []
     poller = SQSPoller(
         SQSConfig(message_format="sns", queue_names=["q"]),
-        client,
-        on_file=lambda p: None,
+        DirQueueClient(str(tmp_path)),
         on_error=lambda body, exc: errors.append(body),
     )
-    assert poller.poll_once() == []
-    assert client.queues["q"] == ["definitely not json"]  # not deleted
+    assert poller.poll_pending() == []
+    assert _pending(q) == ["m000.msg"]  # not deleted
     assert errors == ["definitely not json"]
 
 
-def test_poller_requires_queue_names_or_prefixes():
+def test_bakersqs_logs_unparsable_message(tmp_path, caplog):
+    """The bakersqs reader passes no on_error: the poller's default
+    logs each parse failure as a warning naming the error, and the
+    message stays for redelivery."""
+    q = _queue(tmp_path, "q", "definitely not json")
+    reader = SQSStreamReader({"fake_dir": str(q), "message_format": "sns"})
+    with caplog.at_level(logging.WARNING, logger="baker_spark.streaming.sqs"):
+        assert reader.latestOffset()["files"] == []
+    assert "can't decode json from SQS message" in caplog.text
+    assert "definitely not json" in caplog.text
+    assert _pending(q) == ["m000.msg"]
+
+
+def test_poller_requires_queue_names_or_prefixes(tmp_path):
     with pytest.raises(ValueError, match="QueuePrefixes or QueueNames"):
-        SQSPoller(SQSConfig(message_format="plain"), FakeSQSClient(), on_file=print)
+        SQSPoller(SQSConfig(message_format="plain"), DirQueueClient(str(tmp_path)))
 
 
-def test_queue_urls_deduplicated():
-    client = FakeSQSClient({"logs-a": [], "logs-b": []})
+def test_dir_queue_skips_message_still_being_written(tmp_path):
+    """An empty ``*.msg`` file is a message whose writer has not written
+    it yet (SQS bodies are never empty): receiving it would admit an
+    empty path."""
+    q = _queue(tmp_path, "q", "")
+    client = DirQueueClient(str(tmp_path))
+    url = client.get_queue_url(QueueName="q")["QueueUrl"]
+    assert client.receive_message(QueueUrl=url)["Messages"] == []
+    (q / "m000.msg").write_text("s3://b/k.csv")
+    got = client.receive_message(QueueUrl=url)["Messages"]
+    assert [m["Body"] for m in got] == ["s3://b/k.csv"]
+
+
+def test_queue_urls_deduplicated(tmp_path):
+    _queue(tmp_path, "logs-a")
+    _queue(tmp_path, "logs-b")
     poller = SQSPoller(
         SQSConfig(message_format="plain", queue_names=["logs-a"], queue_prefixes=["logs-"]),
-        client,
-        on_file=print,
+        DirQueueClient(str(tmp_path)),
     )
     assert len(poller.queue_urls()) == 2  # logs-a named AND prefix-matched: once
-
-
-def test_manifest_reingests_changed_file_dedups_identical(tmp_path):
-    """An S3 re-put delivers a second ObjectCreated for the SAME path;
-    the manifest name carries a size-mtime version so changed content is
-    re-ingested (new name -> new file for Spark's source) while a
-    byte-identical redelivery still dedups. Extensions stay last so
-    decompress-by-extension keeps working."""
-    import os as _os
-
-    watch = tmp_path / "watch"
-    src = tmp_path / "data.csv.gz"
-    src.write_bytes(b"v1")
-    sink = manifest_sink(str(watch))
-    sink(str(src))
-    assert len(list(watch.iterdir())) == 1
-    sink(str(src))  # identical redelivery: deduped
-    assert len(list(watch.iterdir())) == 1
-    src.write_bytes(b"v2-longer")  # re-put with new content
-    _os.utime(src, ns=(1_700_000_000_000_000_000, 1_700_000_000_000_000_000))
-    sink(str(src))
-    names = sorted(f.name for f in watch.iterdir())
-    assert len(names) == 2  # both versions manifested
-    assert all(n.endswith(".csv.gz") for n in names)
 
 
 # ------------------------------------------------------------------- e2e
@@ -182,126 +191,118 @@ def _write_csv(path, rows):
 
 
 def test_sqs_messages_drive_micro_batch_end_to_end(spark, tmp_path):
-    """Fake messages in three formats (plain, SNS, S3-ObjectCreated) name
-    three local files; pollers manifest them into the watch dir; ONE
-    Structured Streaming query ingests them through an operator chain."""
+    """SNS notifications in a named queue name three local files (one
+    with a URL-encoded space); ONE Structured Streaming query reads them
+    through bakersqs and an operator chain, and a later notification is
+    picked up by the running query."""
     data_dir = tmp_path / "data"
-    watch_dir = tmp_path / "watch"
     data_dir.mkdir()
     _write_csv(data_dir / "a.csv", ["1,click,u1", "2,view,u2"])
     _write_csv(data_dir / "b.csv", ["3,click,u3"])
-    _write_csv(data_dir / "c c.csv", ["4,click,u4"])  # space: URL-encoded key
-
-    sink = manifest_sink(str(watch_dir))
-    # bucket-relative keys come back without the leading slash; a real
-    # deployment fetches them from S3 — locally we re-root them
-    rooted = lambda p: sink(p if p.startswith("/") else "/" + p)
-
-    plain = FakeSQSClient({"q-plain": [str(data_dir / "a.csv")]})
-    sns = FakeSQSClient({"q-sns": [_sns(str(data_dir / "b.csv"))]})
-    s3c = FakeSQSClient(
-        {"q-s3": [_s3_created("localbucket", str(data_dir)[1:] + "/c+c.csv")]}
+    _write_csv(data_dir / "c c.csv", ["4,click,u4"])
+    q = _queue(
+        tmp_path / "queues",
+        "notify",
+        _sns(str(data_dir / "a.csv")),
+        _sns(str(data_dir / "b.csv")),
+        _sns(str(data_dir / "c+c.csv")),  # unescaped to 'c c.csv'
     )
-    pollers = [
-        SQSPoller(SQSConfig(message_format="plain", queue_names=["q-plain"]), plain, rooted),
-        SQSPoller(SQSConfig(message_format="sns", queue_names=["q-sns"]), sns, rooted),
-        SQSPoller(
-            SQSConfig(message_format="s3::ObjectCreated", queue_names=["q-s3"], bucket="localbucket"),
-            s3c,
-            rooted,
-        ),
-    ]
-    for p in pollers:
-        p.poll_once()
 
     pipe = StreamingPipeline(
-        source=SQSFileSource(str(watch_dir), fields=["id", "etype", "user"]),
+        source=SQSSource(
+            queue_names=["notify"],
+            fake_dir=str(tmp_path / "queues"),
+            fields=["id", "etype", "user"],
+        ),
         ops=[ops.ClauseFilter("(etype click)")],
         fields=["id", "etype"],
     )
-    q = pipe.start_memory(spark, "sqs_out")
+    query = pipe.start_memory(spark, "sqs_out")
     try:
-        q.processAllAvailable()
+        query.processAllAvailable()
         got = {r.id for r in spark.sql("SELECT id FROM sqs_out").collect()}
         assert got == {"1", "3", "4"}
+        assert _pending(q) == []
 
         # daemon contract: a NEW notification arrives, the running query
         # picks the file up incrementally
         _write_csv(data_dir / "d.csv", ["5,click,u5"])
-        plain.queues["q-plain"].append(str(data_dir / "d.csv"))
-        pollers[0].poll_once()
-        q.processAllAvailable()
+        (q / "m100.msg").write_text(_sns(str(data_dir / "d.csv")))
+        query.processAllAvailable()
         got = {r.id for r in spark.sql("SELECT id FROM sqs_out").collect()}
         assert got == {"1", "3", "4", "5"}
+        assert _pending(q) == []
     finally:
-        q.stop()
+        query.stop()
 
 
-def test_toml_compiles_sqs_section_with_message_config(tmp_path):
-    from baker_spark.plans import compile_toml
-
-    toml_text = f"""
+def _sqs_toml(config: str, output: str = 'name = "Nop"') -> str:
+    return f"""
 [fields]
 names = ["id", "etype", "user"]
 
 [input]
 name = "SQS"
   [input.config]
-  Path = "{tmp_path}/watch"
-  QueueNames = ["notify-queue"]
+{config}
+
+[output]
+{output}
+"""
+
+
+def test_toml_compiles_sqs_section_with_message_config(tmp_path):
+    from baker_spark.plans import compile_toml
+
+    toml_text = _sqs_toml(
+        """  QueueNames = ["notify-queue"]
   MessageFormat = "s3::ObjectCreated"
   Bucket = "mybucket"
   FilePathFilter = "\\\\.csv$"
-
-[output]
-name = "Nop"
+  AWSRegion = "eu-west-1"
 """
-    plan = compile_toml(toml_text)
-    src = plan.source
-    assert isinstance(src, SQSFileSource)
-    assert src.sqs.queue_names == ["notify-queue"]
-    assert src.sqs.bucket == "mybucket"
-    # the compiled source can build a live poller against any client
-    poller = src.poller(FakeSQSClient({"notify-queue": []}))
-    assert poller.queue_urls() == ["https://sqs.local/000000000000/notify-queue"]
-    # and a bad format fails at compile time, like fillDefaults
+    )
+    src = compile_toml(toml_text).source
+    assert isinstance(src, SQSSource)
+    assert src.queue_names == ["notify-queue"]
+    assert src.message_format == "s3::ObjectCreated"
+    assert src.bucket == "mybucket"
+    assert src.file_path_filter == r"\.csv$"
+    assert src.aws_region == "eu-west-1"
+    assert src.fields == ["id", "etype", "user"]
+    # the TOML default format is sns (sqs.go:53), not bakersqs's plain
+    assert compile_toml(_sqs_toml('  QueuePrefixes = ["q-"]')).source.message_format == "sns"
+    # a bad format or filter fails at compile time, like fillDefaults
     with pytest.raises(ValueError, match="unknown MessageFormat"):
         compile_toml(toml_text.replace("s3::ObjectCreated", "bogus"))
+    with pytest.raises(ValueError, match="invalid FilePathFilter"):
+        compile_toml(_sqs_toml('  QueueNames = ["q"]\n  FilePathFilter = "("'))
 
 
-def test_failing_on_file_does_not_kill_poller():
-    """An exception from the file handler must be recorded and leave the
-    message undeleted (redelivery), not propagate out of poll_once and
-    kill the daemon thread."""
-    from baker_spark.streaming.sqs import SQSConfig, SQSPoller
+def test_toml_sqs_topology_consumes_its_queue(spark, tmp_path):
+    """A TOML SQS topology started with compile_toml(...).start() reads
+    its queue: the notified file's rows reach the sink and the queue
+    drains (the messages are deleted after the offset WAL write)."""
+    from baker_spark.plans import compile_toml
 
-    deleted, errors, seen = [], [], []
-
-    class FakeClient:
-        def get_queue_url(self, QueueName):
-            return {"QueueUrl": QueueName}
-
-        def receive_message(self, QueueUrl, **kw):
-            return {"Messages": [
-                {"Body": "s3://bkt/boom.csv", "ReceiptHandle": "r1"},
-                {"Body": "s3://bkt/ok.csv", "ReceiptHandle": "r2"},
-            ]}
-
-        def delete_message(self, QueueUrl, ReceiptHandle):
-            deleted.append(ReceiptHandle)
-
-    def on_file(path):
-        if "boom" in path:
-            raise IOError("unfetchable")
-        seen.append(path)
-
-    poller = SQSPoller(
-        SQSConfig(queue_names=["q1"], message_format="plain"),
-        client=FakeClient(),
-        on_file=on_file,
-        on_error=lambda body, exc: errors.append(str(exc)),
+    data = tmp_path / "data.csv"
+    _write_csv(data, ["1,click,u1", "2,view,u2"])
+    q = _queue(tmp_path / "queues", "notify-queue", _sns(str(data)))
+    pipe = compile_toml(
+        _sqs_toml(
+            f"""  QueueNames = ["notify-queue"]
+  FakeDir = "{tmp_path / 'queues'}"
+""",
+            'name = "Recorder"\nfields = ["id", "user"]',
+        )
     )
-    out = poller.poll_once()
-    assert seen == ["s3://bkt/ok.csv"] and out == ["s3://bkt/ok.csv"]
-    assert errors == ["unfetchable"]
-    assert deleted == ["r2"]  # the failed message stays for redelivery
+    query = pipe.start(spark, str(tmp_path / "ckpt"))
+    try:
+        query.processAllAvailable()
+    finally:
+        query.stop()
+    assert sorted((r["id"], r["user"]) for r in pipe.sink.records) == [
+        ("1", "u1"),
+        ("2", "u2"),
+    ]
+    assert _pending(q) == []

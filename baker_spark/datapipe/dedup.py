@@ -25,7 +25,7 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window, functions as F
+from pyspark.sql import Column, DataFrame, Observation, Window, functions as F
 
 from baker_spark.datapipe.text import duck_word_shingles, word_shingles, words
 from baker_spark.functions.hashing import (
@@ -1198,6 +1198,20 @@ WHERE floor(shared * 1000000 / (na.n + nb.n - shared)) >= {threshold_c6}
 
 # ------------------------------------------------------------- clusters ----
 
+def _checkpoint(frame: DataFrame, reliable: bool) -> DataFrame:
+    return frame.checkpoint(eager=True) if reliable else frame.localCheckpoint(eager=True)
+
+
+def _checkpoint_label_sum(frame: DataFrame, reliable: bool) -> tuple[DataFrame, int | None]:
+    """Checkpoint ``frame`` and return sum(label) alongside it (None when
+    empty). The sum is observed on the plan being checkpointed, so it is
+    computed in the checkpoint job's result stage: a separate agg +
+    collect costs two more jobs every round."""
+    obs = Observation()
+    done = _checkpoint(frame.observe(obs, F.sum("label").alias("s")), reliable)
+    return done, obs.get["s"]
+
+
 def dedup_clusters(
     df: DataFrame,
     pairs: DataFrame,
@@ -1215,14 +1229,16 @@ def dedup_clusters(
     per-round state is |nodes in pairs|, not |docs|; the untouched
     majority joins back at the end as singleton clusters via one
     anti-join. Labels only ever decrease, so sum(label) is a monotone
-    convergence witness — one cheap agg action per round instead of a
-    change-count join. Each round is one neighbor hop PLUS one pointer
-    jump (label <- label-of-label), so rounds needed = O(log diameter),
-    not diameter — a long drift chain costs a handful of
-    driver-synchronous actions, not one per link. Per round the moving
-    data is (id, label) longs — never the text — and localCheckpoint
-    truncates the growing lineage so round N's plan does not replay
-    rounds 1..N-1.
+    convergence witness — observed inside each round's checkpoint job
+    (no extra action) instead of a change-count join. Each round is one
+    neighbor hop PLUS one pointer jump (label <- label-of-label), so
+    rounds needed = O(log diameter), not diameter — a long drift chain
+    costs a handful of driver-synchronous actions, not one per link.
+    Round 1's hop needs no label table: every node starts labelled
+    with its own id, so it is one aggregation over the edges. Per round
+    the moving data is (id, label) longs — never the text — and
+    localCheckpoint truncates the growing lineage so round N's plan
+    does not replay rounds 1..N-1.
 
     ``reliable=True`` swaps localCheckpoint for RELIABLE checkpoints
     (``DataFrame.checkpoint`` into the session's configured checkpoint
@@ -1244,9 +1260,6 @@ def dedup_clusters(
             "directory: call spark.sparkContext.setCheckpointDir(<hdfs/s3 path>) first"
         )
 
-    def ckpt(frame: DataFrame) -> DataFrame:
-        return frame.checkpoint(eager=True) if reliable else frame.localCheckpoint(eager=True)
-
     # one scan, both directions: a union of two selects would evaluate
     # the caller's pair-generation subplan twice at materialization
     # (exchange reuse dedups only the shuffle, not the join/filter work
@@ -1263,31 +1276,25 @@ def dedup_clusters(
         .select("e.src", "e.dst")
         .persist()
     )
-    labels = (
-        ckpt(
-            edges.select(F.col("src").alias("id"))
-            .distinct()
-            .withColumn("label", F.col("id"))
-        )
+    # round 1's hop: a node's label is the least of its own id and its
+    # neighbours' ids (the edges are symmetric). Checkpoint BEFORE the
+    # jump's self-join: joining an un-checkpointed plan with itself trips
+    # attribute deduplication; a LogicalRDD base self-joins cleanly, and
+    # the checkpoint doubles as the usual lineage truncation.
+    prop = _checkpoint(
+        edges.groupBy(F.col("src").alias("id")).agg(
+            F.least(F.col("id"), F.min("dst")).alias("label")
+        ),
+        reliable,
     )
-    prev_sum = labels.agg(F.sum("label")).collect()[0][0]
+    # None: with any edge, round 1 lowers some label, so no round-1 sum
+    # equals it; with none, round 1's empty sum (None) does, at once
+    prev_sum = None
     # max_iters + 1: convergence is only WITNESSED by a round that
     # changes nothing, so a component of diameter exactly max_iters —
     # whose last label change lands on round max_iters — needs one
     # extra confirming round or a correct result would raise below
     for _ in range(max_iters + 1):
-        msgs = edges.join(labels, edges.src == labels.id).select(
-            F.col("dst").alias("id"), F.col("label")
-        )
-        # checkpoint BEFORE the jump's self-join: joining an
-        # un-checkpointed plan with itself trips attribute
-        # deduplication; a LogicalRDD base self-joins cleanly, and the
-        # checkpoint doubles as the usual lineage truncation
-        prop = ckpt(
-            labels.union(msgs)
-            .groupBy("id")
-            .agg(F.min("label").alias("label"))
-        )
         # pointer jump (label <- label-of-label): treats the label map
         # as a pointer forest and halves every path through it, so a
         # diameter-d chain converges in O(log d) rounds instead of d —
@@ -1301,17 +1308,27 @@ def dedup_clusters(
         ptr = prop.select(
             F.col("id").alias("_pid"), F.col("label").alias("_plabel")
         )
-        labels = ckpt(
+        labels, cur_sum = _checkpoint_label_sum(
             prop.join(ptr, F.col("label") == F.col("_pid"))
-            .select("id", F.col("_plabel").alias("label"))
-            # checkpoint the JUMP RESULT too: it feeds three consumers
-            # (the sum witness, next round's msgs join, next round's
-            # union) — uncached, the jump join would run 3x per round
+            .select("id", F.col("_plabel").alias("label")),
+            # checkpoint the JUMP RESULT too: it feeds the next hop's
+            # msgs join and union — uncached, the jump join would run
+            # twice per round
+            reliable,
         )
-        cur_sum = labels.agg(F.sum("label")).collect()[0][0]
         if cur_sum == prev_sum:
             break
         prev_sum = cur_sum
+        # next round's neighbour hop
+        msgs = edges.join(labels, edges.src == labels.id).select(
+            F.col("dst").alias("id"), F.col("label")
+        )
+        prop = _checkpoint(
+            labels.union(msgs)
+            .groupBy("id")
+            .agg(F.min("label").alias("label")),
+            reliable,
+        )
     else:
         # silent non-convergence would return labels that are not
         # component minima: a diameter > max_iters chain splits into

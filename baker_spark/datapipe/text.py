@@ -144,29 +144,50 @@ def duck_langid(expr: str, stopwords: list[str] | None = None, threshold_pct: in
     )
 
 
+def _bound_once(e: str, body) -> str:
+    """``body(var)`` evaluated with ``e`` bound to a lambda variable, so
+    ``e`` appears ONCE in the expression however often ``body`` names it.
+
+    Why: a filter over an aliased column (``scrubbed(...).filter(ok)``)
+    gets the alias's defining expression substituted for every
+    reference by predicate pushdown, and FilterExec does no common-
+    subexpression elimination. A predicate naming its column a dozen
+    times over scrub's regexp_replace chain ran that chain a dozen
+    times per row; bound through ``transform(array(e), doc -> ...)[0]``
+    it runs once. NULL input binds NULL, so every result is unchanged."""
+    return f"transform(array({e}), doc -> {body('doc')})[0]"
+
+
 def quality_flags(col_name: str) -> dict[str, Column]:
     """Quality-score components: word count, punctuation density, mean
-    word length (fixed-point), all integers -> deterministic."""
+    word length (fixed-point), all integers -> deterministic.
+
+    ``quality_ok`` reads its column through one lambda binding
+    (``_bound_once``): it is the one meant for ``filter``, where no
+    common-subexpression elimination runs, so a column that is an
+    expensive alias (scrubbed text) is computed once per row instead of
+    once per reference. The three score columns are plain expressions:
+    projections do eliminate common subexpressions."""
     # long casts up front: size/length/regexp_count are INT, and the
     # fixed-point multiplies below wrap at 2^31 under ansi=false for
     # mega-documents (>~21M chars) while the DuckDB oracle's BIGINT
     # arithmetic stays exact. Expr strings (round 13): identical
     # expressions, a handful of py4j calls per build instead of ~50.
+    def flags(e: str) -> dict[str, str]:
+        nw = f"cast(nullif(size(split({e}, ' ', -1)), -1) as bigint)"
+        n_punct = f"cast(regexp_count({e}, '[.!?,;:]') as bigint)"
+        n_chars = f"cast(length({e}) as bigint)"
+        mean = f"cast(floor(({n_chars} - ({nw} - 1)) * 100 / {nw}) as bigint)"
+        ok = (
+            f"({nw} >= 20 AND {n_punct} * 5 <= {nw} "
+            f"AND {mean} BETWEEN 150 AND 1200)"
+        )
+        return {"n_words": nw, "n_punct": n_punct, "mean_word_len_c2": mean, "quality_ok": ok}
+
     e = f"`{col_name}`"
-    nw = f"cast(nullif(size(split({e}, ' ', -1)), -1) as bigint)"
-    n_punct = f"cast(regexp_count({e}, '[.!?,;:]') as bigint)"
-    n_chars = f"cast(length({e}) as bigint)"
-    mean = f"cast(floor(({n_chars} - ({nw} - 1)) * 100 / {nw}) as bigint)"
-    ok = (
-        f"({nw} >= 20 AND {n_punct} * 5 <= {nw} "
-        f"AND {mean} BETWEEN 150 AND 1200)"
-    )
-    return {
-        "n_words": F.expr(nw),
-        "n_punct": F.expr(n_punct),
-        "mean_word_len_c2": F.expr(mean),
-        "quality_ok": F.expr(ok),
-    }
+    exprs = flags(e)
+    exprs["quality_ok"] = _bound_once(e, lambda v: flags(v)["quality_ok"])
+    return {k: F.expr(v) for k, v in exprs.items()}
 
 
 def duck_quality_sql(expr: str) -> dict[str, str]:

@@ -373,9 +373,12 @@ def lsh_buckets(
     # the old form built n_planes * dim lit().cast() Columns plus a
     # lambda-fold dot per plane — ~1.8 s of py4j round trips per build
     # (12x this form, measured; bit-identical output pinned by
-    # test_r14_optimizations). CAST('0.123456' AS DOUBLE) parses the
-    # 6-dp decimal to the nearest double exactly like F.lit(float) and
-    # the DuckDB twin's ::DOUBLE[] literals — same bucket bits.
+    # test_r14_optimizations). Each coefficient is written as its
+    # float repr: a 6-dp decimal literal (CAST(0.123456 AS DOUBLE)) or,
+    # for tiny values, an exponent double literal (CAST(1e-06 AS
+    # DOUBLE)); either casts to the nearest double exactly like
+    # F.lit(float) and the DuckDB twin's ::DOUBLE[] literals — same
+    # bucket bits.
     v = f"cast({_q(vec_col)} as array<double>)"
     terms = ["CAST(0 AS BIGINT)"]
     for j, plane in enumerate(planes):

@@ -1451,14 +1451,17 @@ def dp_corpus_pipeline(spark, sf_dir):
     The cleaned text is persisted deliberately: every downstream
     expression (quality predicate, langid, token count, fingerprint)
     reads ``clean_text``, and without a materialization boundary
-    Catalyst substitutes the 3-pass scrub regex chain into EACH
-    reference — the quality filter alone re-runs it ~4x per row (once
-    per `between` bound per conjunct) and predicate pushdown then drags
-    all of it below the fan-out exchange onto the serial scan task.
-    The persist computes scrub exactly once per row, in parallel
-    (measured 4x: 1.98s -> 0.48s at sf0.1). At 100 TB the same
-    tradeoff holds per-partition — one cached pass (spilling to disk)
-    vs ~6 recomputed regex passes over every document."""
+    Catalyst substitutes the 3-pass scrub regex chain for it. The
+    quality predicate binds its column once (``text._bound_once``), so
+    the filter runs the chain once per row rather than once per
+    reference; but predicate pushdown still drags that filter below
+    the fan-out exchange onto the serial scan task, and the projection
+    above the exchange runs the chain a second time. The persist
+    computes scrub exactly once per row, in parallel (measured before
+    the binding, when the filter ran the chain ~15x per row: 1.98s ->
+    0.48s at sf0.1). At 100 TB the same tradeoff holds per-partition —
+    one cached pass (spilling to disk) vs two recomputed regex passes
+    over every document, one of them at scan parallelism."""
     docs = fan_out(load_table(spark, sf_dir, "documents"), by="doc_id")
     # engine auto-pick: JVM regex chain below the measured crossover,
     # Arrow/RE2 (~4.7x/core) above it — identical output either way,

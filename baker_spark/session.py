@@ -110,6 +110,10 @@ def _ship_package(spark: SparkSession) -> None:
     _SHIPPED_SESSIONS.add(key)
 
 
+#: pinned confs configure() re-checks on every call (see there)
+_SENTINEL_CONFS = ("spark.sql.ansi.enabled", "spark.sql.parser.escapedStringLiterals")
+
+
 def configure(spark: SparkSession) -> SparkSession:
     """Apply runtime-settable confs to an existing session (e.g. one the
     correctness driver created). Never raises on read-only confs.
@@ -118,20 +122,20 @@ def configure(spark: SparkSession) -> SparkSession:
     load_table calls through here, so an unguarded configure re-issued 9
     conf.set py4j round trips per table load (~25ms; a 6-table join paid
     ~0.15s per build). The confs are only ever set to the same pinned
-    values, so first-application semantics are identical. ONE sentinel
-    conf (ansi mode — the conf test fixtures actually flip) is
-    re-checked on the fast path (round 14, ADVICE r13): an ansi drift
-    re-pins the whole set at the cost of one conf.get per call instead
-    of nine conf.sets. The contract is deliberately narrow: a flip of
-    a DIFFERENT pinned conf that leaves ansi untouched is NOT sensed —
-    sensing all nine would cost what the guard saves. Code that
-    mutates other RUNTIME_CONFS mid-session must call configure() with
-    a cleared ``_baker_configured`` flag itself."""
+    values, so first-application semantics are identical. The
+    ``_SENTINEL_CONFS`` are re-checked on the fast path: a drift in
+    either re-pins the whole set at the cost of two conf.gets per call
+    instead of every conf.set. They are ansi mode (the conf test
+    fixtures actually flip) and the string-literal parser mode (its
+    drift silently doubles the backslashes of every compiled regex and
+    clause literal, corrupting results instead of raising). A flip of
+    any OTHER pinned conf is NOT sensed — sensing all of them would
+    cost what the guard saves. Code that mutates other RUNTIME_CONFS
+    mid-session must call configure() with a cleared
+    ``_baker_configured`` flag itself."""
     if getattr(spark, "_baker_configured", False):
         try:
-            if spark.conf.get("spark.sql.ansi.enabled") == RUNTIME_CONFS[
-                "spark.sql.ansi.enabled"
-            ]:
+            if all(spark.conf.get(k) == RUNTIME_CONFS[k] for k in _SENTINEL_CONFS):
                 return spark
             spark._baker_configured = False  # drifted: re-pin everything
         except Exception:

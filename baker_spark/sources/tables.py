@@ -65,17 +65,25 @@ _SCHEMA_CACHE: dict = {}
 
 
 def _schema_key(path: str) -> tuple:
-    """(mtime_ns, size) of the path; for a directory table the stats
-    fold over the direct children too (a part file overwritten in
+    """(inode, mtime_ns, size) of the path; for a directory table the
+    stats fold over the direct children too (a part file overwritten in
     place changes its own mtime even when the dir inode keeps its
-    timestamp)."""
+    timestamp).
+
+    The inode catches a rewrite by write-then-rename (every atomic
+    writer's shape), whatever the clock says. What stays unsensed is an
+    IN-PLACE rewrite to the same size within one mtime tick: on a
+    filesystem with coarse timestamps (1 s on ext3/HFS+, 2 s on FAT,
+    whatever a network mount reports) such a rewrite keeps inode, mtime
+    and size, and is served the stale schema until the cache is
+    cleared."""
     try:
         st = os.stat(path)
-        key = [st.st_mtime_ns, st.st_size]
+        key = [st.st_ino, st.st_mtime_ns, st.st_size]
         if os.path.isdir(path):
             for name in sorted(os.listdir(path)):
                 cst = os.stat(os.path.join(path, name))
-                key += [name, cst.st_mtime_ns, cst.st_size]
+                key += [name, cst.st_ino, cst.st_mtime_ns, cst.st_size]
         return tuple(key)
     except OSError:
         # unreadable/remote path: fall back to a constant key (the

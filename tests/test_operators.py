@@ -365,6 +365,54 @@ def test_dedup_clusters_reliable_checkpoint(spark, tmp_path):
     assert ckpt_files  # rounds really landed on the reliable store
 
 
+def _jobs_run_by(spark, build) -> int:
+    """Spark jobs started while ``build()`` runs."""
+    sc = spark.sparkContext
+    group = "jobs_run_by"
+    sc.setJobGroup(group, group)
+    try:
+        build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_dedup_clusters_job_count(spark):
+    """The sum(label) witness rides on each label table's checkpoint
+    job as an observed metric instead of an agg + collect of its own,
+    and round 1 is one aggregation over the edges instead of a
+    checkpointed table of initial labels joined back. On the
+    test_dedup_clusters fixture the build ran 21 jobs with the separate
+    collects and the initial table; it runs 10 now."""
+    from baker_spark.datapipe.dedup import dedup_clusters
+
+    docs = make_df(spark, [(i,) for i in range(1, 8)], ["doc_id"])
+    pairs = make_df(spark, [(1, 2), (2, 3), (4, 5)], ["doc_a", "doc_b"])
+    assert _jobs_run_by(spark, lambda: dedup_clusters(docs, pairs)) <= 10
+
+
+@pytest.mark.parametrize("reliable", [False, True])
+def test_dedup_clusters_observed_witness_matches_agg(spark, tmp_path, reliable):
+    """The observed witness is the exact sum(label) of the checkpointed
+    table, None for an empty one, on both checkpoint kinds; and a
+    component too long for max_iters still fails loudly."""
+    from baker_spark.datapipe.dedup import _checkpoint_label_sum, dedup_clusters
+
+    sc = spark.sparkContext
+    if reliable and sc.getCheckpointDir() is None:
+        sc.setCheckpointDir(str(tmp_path / "ckpt"))
+    frame = spark.range(1, 200).selectExpr("id", "id * 7919 % 101 AS label")
+    for f in (frame, frame.limit(0)):
+        done, witness = _checkpoint_label_sum(f, reliable)
+        assert witness == done.agg(F.sum("label")).collect()[0][0]
+    assert witness is None
+
+    docs = make_df(spark, [(i,) for i in range(1, 101)], ["doc_id"])
+    chain = make_df(spark, [(i, i + 1) for i in range(1, 100)], ["doc_a", "doc_b"])
+    with pytest.raises(RuntimeError, match="did not converge"):
+        dedup_clusters(docs, chain, max_iters=2, reliable=reliable)
+
+
 def test_scrub(spark):
     from baker_spark.datapipe.text import scrub
 

@@ -278,3 +278,26 @@ def test_gopher_repetition_matches_duckdb_bit_for_bit(spark):
         + " FROM d ORDER BY doc_id"
     ).fetchall()
     assert sp == [tuple(r) for r in dk]
+
+
+def test_quality_ok_scrubs_each_document_once(spark):
+    """The corpus composition scrubbed -> select -> filter(quality_ok):
+    predicate pushdown substitutes scrub's regexp_replace chain for each
+    reference to clean_text, and FilterExec eliminates no common
+    subexpressions, so the predicate must name its column once. Naming
+    it per reference put the chain in the executed plan 16 times.
+    The binding changes no value: NULL, '' and a short document keep
+    the flags they had, and match the DuckDB oracle."""
+    docs = [(0, GOOD, None), (1, "the of short doc", None), (2, "", None), (3, None, None)]
+    df = spark.createDataFrame([(i, t) for i, t, _ in docs], "doc_id long, text string")
+    cleaned = text.scrubbed(df, "text").select("doc_id", "clean_text")
+    flagged = cleaned.filter(text.quality_flags("clean_text")["quality_ok"])
+    plan = flagged._jdf.queryExecution().executedPlan().toString()
+    assert 1 <= plan.count("regexp_replace(regexp_replace(regexp_replace") <= 2
+    assert [r.doc_id for r in flagged.collect()] == [0]
+
+    ok = {"quality_ok": text.quality_flags("text")["quality_ok"]}
+    spark_ok = _spark_rows(spark, docs, ok)
+    assert spark_ok == [(0, True), (1, False), (2, False), (3, None)]
+    duck_ok = _duck_rows(docs, {"quality_ok": text.duck_quality_sql("text")["quality_ok"]})
+    assert spark_ok == [(i, v) for i, v in duck_ok]

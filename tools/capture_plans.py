@@ -34,12 +34,17 @@ def main() -> None:
     tag = sys.argv[1] if len(sys.argv) > 1 else "r13"
     suffix = sys.argv[2] if len(sys.argv) > 2 else "before"
     only = set(sys.argv[3:])
+    queries = all_queries()
+    # a typo must fail before any session starts or file is written,
+    # naming every unknown name, not as a KeyError halfway through
+    unknown = sorted(only - set(queries) - {"baker_filter_chain"})
+    if unknown:
+        sys.exit(f"unknown query name(s): {', '.join(unknown)}")
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     out_dir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
                            "plans", tag)
     os.makedirs(out_dir, exist_ok=True)
     spark = get_spark("baker_spark_plan_capture")
-    queries = all_queries()
     # default: the bench rows. With explicit names, ANY catalog query can
     # be captured (round 14 touches rows outside BENCH_QUERIES, e.g.
     # dp_bigram_surprisal).

@@ -53,15 +53,16 @@ from baker_spark.datapipe.vectors import (
     PQ_M,
     Q_SCALE,
     as_double,
-    cosine_c4,
-    dot_long,
     hyperplanes,
     ivfpq_encode,
     kmeans_train,
     lsh_buckets,
     pq_train_encode,
-    quantize,
+    spark_cosine_c4_sql,
+    spark_d2_sql,
+    spark_quantize_sql,
 )
+from baker_spark.functions import sql_ident
 
 from baker_spark.datapipe.artifacts import writer_fence
 
@@ -81,7 +82,7 @@ ANN_INDEX_METHODS = ("lsh", "ivf", "pq", "ivfpq")
 
 
 def _quantize_py(vec) -> list[int]:
-    """Python mirror of :func:`vectors.quantize`: floor(x * 2^20) per
+    """Python mirror of :func:`vectors.spark_quantize_sql`: floor(x * 2^20) per
     coordinate. float32->float64 is exact and scaling by a power of two
     is exact, so this matches the Spark/DuckDB quantization bit-for-bit
     — the query vector quantized on the driver equals the same vector
@@ -379,7 +380,7 @@ class AnnIndex:
                 .crossJoin(F.broadcast(qdf))
                 .select(
                     F.col("id").alias(id_col),
-                    cosine_c4(F.col("v"), F.col("qv")).alias("cosine_c4"),
+                    F.expr(spark_cosine_c4_sql("v", "qv")).alias("cosine_c4"),
                 )
                 .orderBy(F.desc("cosine_c4"), F.col(id_col))
                 .limit(k)
@@ -395,7 +396,7 @@ class AnnIndex:
                 .crossJoin(F.broadcast(qdf))
                 .select(
                     F.col("id").alias(id_col),
-                    cosine_c4(F.col("v"), F.col("qv")).alias("cosine_c4"),
+                    F.expr(spark_cosine_c4_sql("v", "qv")).alias("cosine_c4"),
                 )
                 .orderBy(F.desc("cosine_c4"), F.col(id_col))
                 .limit(k)
@@ -481,11 +482,12 @@ class AnnIndex:
         # persisted: the projected/quantized query frame feeds the probe
         # assignment AND the per-subspace slices (pq/ivfpq) — without a
         # boundary the caller's query lineage re-runs per consumer
+        qv = f"cast({sql_ident(qvec_col)} as array<double>)"
         q = managed_persist(
             queries.select(
                 F.col(qid_col).alias("_qid"),
                 as_double(qvec_col).alias("_qv"),
-                quantize(as_double(qvec_col)).alias("_qq"),
+                F.expr(spark_quantize_sql(qv)).alias("_qq"),
             )
         )
 
@@ -527,22 +529,20 @@ class AnnIndex:
             scored = cands.select(
                 "_qid",
                 F.col("id").alias(id_col),
-                cosine_c4(F.col("v"), F.col("_qv")).alias("cosine_c4"),
+                F.expr(spark_cosine_c4_sql("v", "_qv")).alias("cosine_c4"),
             )
             return topk(scored, "cosine_c4", False), "cosine_c4", False
 
         # trained methods: per-query probe cells = queries x broadcast
         # centroid table, exact int64 d2, (d2, cid) tie-break via window
         def probe_cells(qframe: DataFrame) -> DataFrame:
-            d2 = (
-                dot_long(F.col("_qq"), F.col("_qq"))
-                - 2 * dot_long(F.col("_qq"), F.col("_cv"))
-                + dot_long(F.col("_cv"), F.col("_cv"))
-            )
             w = Window.partitionBy("_qid").orderBy(F.col("_d2").asc(), F.col("_cid").asc())
             return (
                 qframe.crossJoin(F.broadcast(self._coarse_df()))
-                .select("_qid", "_qv", "_qq", "_cid", d2.alias("_d2"))
+                .select(
+                    "_qid", "_qv", "_qq", "_cid",
+                    F.expr(spark_d2_sql("_qq", "_cv")).alias("_d2"),
+                )
                 .withColumn("_rn", F.row_number().over(w))
                 .filter(F.col("_rn") <= nprobe)
                 .select("_qid", "_qv", "_qq", "_cid")
@@ -561,7 +561,7 @@ class AnnIndex:
             scored = cands.select(
                 "_qid",
                 F.col("id").alias(id_col),
-                cosine_c4(F.col("v"), F.col("_qv")).alias("cosine_c4"),
+                F.expr(spark_cosine_c4_sql("v", "_qv")).alias("cosine_c4"),
             )
             return topk(scored, "cosine_c4", False), "cosine_c4", False
 
@@ -579,13 +579,8 @@ class AnnIndex:
             "sub",
             F.expr(f"slice(_qq, sub * {d} + 1, {d})").alias("_qs"),
         )
-        d2q = (
-            dot_long(F.col("_qs"), F.col("_qs"))
-            - 2 * dot_long(F.col("_qs"), F.col("_cv"))
-            + dot_long(F.col("_cv"), F.col("_cv"))
-        )
         tbl = qs.join(F.broadcast(self._codebook_df()), "sub").select(
-            "_qid", "sub", "cid", d2q.alias("_d2q")
+            "_qid", "sub", "cid", F.expr(spark_d2_sql("_qs", "_cv")).alias("_d2q")
         )
         codes = spark.read.parquet(f"{self.path}/codes")
         if self.method == "ivfpq":
@@ -759,10 +754,11 @@ def _append_codes(df_new: DataFrame, path: str, idx: "AnnIndex | None" = None) -
         )
         return
 
+    v = f"cast({sql_ident(vec_col)} as array<double>)"
     q = df_new.select(
         F.col(id_col).alias("_id"),
         as_double(vec_col).alias("v"),
-        quantize(as_double(vec_col)).alias("q"),
+        F.expr(spark_quantize_sql(v)).alias("q"),
     )
 
     if idx.method == "ivf":
@@ -838,15 +834,10 @@ def _ivf_qerr(spark: SparkSession, path: str) -> float:
     buffer would wrap past ~130k rows)."""
     codes = spark.read.parquet(f"{path}/codes")
     coarse = spark.read.parquet(f"{path}/coarse")
-    q = quantize(F.col("v"))
-    d2 = (
-        dot_long(q, q)
-        - 2 * dot_long(q, F.col("cv"))
-        + dot_long(F.col("cv"), F.col("cv"))
-    )
+    d2 = spark_d2_sql(spark_quantize_sql("v"), "cv")
     row = (
         codes.join(F.broadcast(coarse), "centroid_id")
-        .agg(F.avg(d2.cast("double")).alias("qerr"))
+        .agg(F.avg(F.expr(f"cast({d2} as double)")).alias("qerr"))
         .first()
     )
     return float(row["qerr"]) if row["qerr"] is not None else 0.0
@@ -1056,22 +1047,17 @@ def ann_index_recall_probe(
         # approximates — quantized-int64 L2 for the trained methods
         # (the trainers' arithmetic), cosine_c4 for lsh — top-k per
         # query within the sample, self-hit excluded
+        v = f"cast({sql_ident(vec_col)} as array<double>)"
         if idx.method == "lsh":
-            score, asc = cosine_c4(as_double(vec_col), F.col("qv")), False
+            score, asc = spark_cosine_c4_sql(v, "qv"), False
         else:
-            cq = quantize(as_double(vec_col))
-            score = (
-                dot_long(cq, cq)
-                - 2 * dot_long(cq, F.col("qq"))
-                + dot_long(F.col("qq"), F.col("qq"))
-            )
-            asc = True
-            q = q.withColumn("qq", quantize(F.col("qv")))
+            score, asc = spark_d2_sql(spark_quantize_sql(v), "qq"), True
+            q = q.withColumn("qq", F.expr(spark_quantize_sql("qv")))
         order = [F.col("_s").asc() if asc else F.col("_s").desc(), F.col(id_col).asc()]
         w = Window.partitionBy("qid").orderBy(*order)
         truth_rows = (
             sample.crossJoin(F.broadcast(q))
-            .select("qid", id_col, score.alias("_s"))
+            .select("qid", id_col, F.expr(score).alias("_s"))
             .filter(F.col(id_col) != F.col("qid"))
             .withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") <= k)

@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Observation, Window, functions as F
 
 from baker_spark.datapipe.text import duck_word_shingles, word_shingles, words
+from baker_spark.functions import sql_ident
 from baker_spark.functions.hashing import (
     MINHASH_P,
     duck_affine_hash,
@@ -433,13 +434,13 @@ def _explode_hash_bands(
     banding arithmetic."""
     structs = ", ".join(
         f"named_struct('band', {b}, '{key_name}', "
-        f"shiftright(`{hash_col}`, {b * SIMHASH_BAND_BITS}) & {SIMHASH_BAND_MASK}L)"
+        f"shiftright({sql_ident(hash_col)}, {b * SIMHASH_BAND_BITS}) & {SIMHASH_BAND_MASK}L)"
         for b in range(4)
     )
     return sig.selectExpr(
-        f"`{id_col}`", f"`{hash_col}`", f"explode(array({structs})) AS bk"
+        sql_ident(id_col), sql_ident(hash_col), f"explode(array({structs})) AS bk"
     ).selectExpr(
-        f"`{id_col}`", f"`{hash_col}`", "bk.band AS band",
+        sql_ident(id_col), sql_ident(hash_col), "bk.band AS band",
         f"bk.{key_name} AS {key_name}",
     )
 
@@ -763,7 +764,7 @@ def minhash_signature(
     # driver-side build cost this removes (bit-identical, asserted)
     n = int(shingle_n)
     base = fan_out(df, by=id_col).selectExpr(
-        f"`{id_col}`", f"split(`{text_col}`, ' ', -1) AS _w"
+        sql_ident(id_col), f"split({sql_ident(text_col)}, ' ', -1) AS _w"
     )
     shingles = (
         f"CASE WHEN size(_w) - {n - 1} >= 1 THEN "
@@ -771,8 +772,8 @@ def minhash_signature(
         f"i -> concat_ws(' ', slice(_w, i, {n}))) "
         "ELSE cast(array() as array<string>) END"
     )
-    h = base.selectExpr(f"`{id_col}`", f"explode({shingles}) AS _s").selectExpr(
-        f"`{id_col}`", "cast(conv(substring(md5(_s), 1, 8), 16, 10) as bigint) AS _h"
+    h = base.selectExpr(sql_ident(id_col), f"explode({shingles}) AS _s").selectExpr(
+        sql_ident(id_col), "cast(conv(substring(md5(_s), 1, 8), 16, 10) as bigint) AS _h"
     )
     return h.groupBy(id_col).agg(
         *[
@@ -813,8 +814,8 @@ def lsh_bands(
         for b in range(bands)
     )
     return sig.selectExpr(
-        f"`{id_col}`", f"explode(array({band_structs})) AS bh"
-    ).selectExpr(f"`{id_col}`", "bh.band AS band", "bh.h AS h")
+        sql_ident(id_col), f"explode(array({band_structs})) AS bh"
+    ).selectExpr(sql_ident(id_col), "bh.band AS band", "bh.h AS h")
 
 
 def lsh_pairs(
@@ -866,7 +867,7 @@ def lsh_pairs(
             bands_df.withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") <= bucket_cap + 1)
             .groupBy("band", "h")
-            .agg(F.expr(f"sort_array(collect_list(`{id_col}`))").alias("_ids"))
+            .agg(F.expr(f"sort_array(collect_list({sql_ident(id_col)}))").alias("_ids"))
             .filter(F.size("_ids") <= bucket_cap)
         )
         return (
@@ -1444,10 +1445,10 @@ def simhash(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> Da
     # expression tree in a single call (bit-identical output, asserted
     # at sf0.1 and by the oracle parity sweep).
     wh = fan_out(df, by=id_col).selectExpr(
-        f"`{id_col}`",
-        f"explode(array_distinct(split(`{text_col}`, ' ', -1))) AS _word",
+        sql_ident(id_col),
+        f"explode(array_distinct(split({sql_ident(text_col)}, ' ', -1))) AS _word",
     ).selectExpr(
-        f"`{id_col}`",
+        sql_ident(id_col),
         "cast(conv(substring(md5(_word), 1, 15), 16, 10) as bigint) AS _h",
     )
     lane_sums = wh.groupBy(id_col).agg(
@@ -1581,7 +1582,7 @@ def banded_hamming_pairs(
             .agg(
                 F.expr(
                     "sort_array(collect_list("
-                    f"named_struct('i', `{id_col}`, 's', `{hash_col}`)))"
+                    f"named_struct('i', {sql_ident(id_col)}, 's', {sql_ident(hash_col)})))"
                 ).alias("_m")
             )
             .filter(F.size("_m") <= band_cap)
@@ -1936,7 +1937,7 @@ def exact_substring_dedup(
     # round trips; these strings hand the JVM the identical trees in a
     # handful of calls (value-exact parity re-swept at 3 SFs)
     df = fan_out(df, by=id_col)
-    w_sql = f"split(`{text_col}`, ' ', -1)"
+    w_sql = f"split({sql_ident(text_col)}, ' ', -1)"
     # the under-k filter sits BEFORE the gram explode on purpose:
     # Catalyst pushes it below the fan_out repartition, so short docs
     # never cross this branch's exchange at all. (A CASE-guarded empty
@@ -1947,11 +1948,11 @@ def exact_substring_dedup(
     hashed = (
         df.where(f"size({w_sql}) - {k - 1} >= 1")
         .selectExpr(
-            f"`{id_col}`",
+            sql_ident(id_col),
             f"posexplode(transform(sequence(1, size({w_sql}) - {k - 1}), "
             f"i -> xxhash64(concat_ws(' ', slice({w_sql}, i, {k}))))) AS (_p0, h)",
         )
-        .selectExpr(f"`{id_col}`", "cast(_p0 + 1 as bigint) AS pos", "h")
+        .selectExpr(sql_ident(id_col), "cast(_p0 + 1 as bigint) AS pos", "h")
     )
     dup = hashed.withColumn(
         "_c", F.count(F.lit(1)).over(Window.partitionBy("h"))
@@ -1987,12 +1988,12 @@ def exact_substring_dedup(
     # scan for every clean doc (the oracle twin has the same
     # CASE WHEN iv IS NULL branch)
     clean_sql = (
-        f"CASE WHEN _iv IS NULL THEN `{text_col}` ELSE array_join("
+        f"CASE WHEN _iv IS NULL THEN {sql_ident(text_col)} ELSE array_join("
         f"filter({w_sql}, (x, j) -> NOT coalesce("
         "exists(_iv, iv -> iv.s <= j + 1 AND j + 1 <= iv.e), false)), ' ') END"
     )
     return out.selectExpr(
-        f"`{id_col}`",
+        sql_ident(id_col),
         f"{n_tokens_sql} AS n_tokens",
         f"{n_removed_sql} AS n_removed_tokens",
         f"{frac_sql} AS removed_frac_c6",

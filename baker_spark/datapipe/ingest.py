@@ -31,6 +31,7 @@ from baker_spark.datapipe.dedup import (
     incremental_dedup_against_keys,
     write_seen_ledger,
 )
+from baker_spark.functions import sql_ident, sql_str
 
 LEDGER_SCHEMA = StructType([StructField("fp", StringType())])
 
@@ -44,17 +45,17 @@ def _ledger_ddl_parts(table: str, location: str) -> tuple[str, str]:
     segment must be a bare identifier — quotes, hyphens, or empty
     segments would re-scope or break the statement; segments are
     backtick-quoted in the emitted DDL so reserved words stay inert.
-    Single quotes in ``location`` are doubled per SQL string-literal
-    rules (tempfile paths with quotes are legal on POSIX and must not
-    silently re-scope the LOCATION clause)."""
+    ``location`` comes back as a complete string literal (``sql_str``):
+    quotes and backslashes are escaped, so a POSIX-legal path holding
+    either neither re-scopes the LOCATION clause nor has ``\\b`` read
+    as a backspace."""
     segments = table.split(".")
     if not all(_IDENT_RX.match(s) for s in segments):
         raise ValueError(
             "ledger_table segments must be bare SQL identifiers, "
             f"got {table!r}"
         )
-    quoted = ".".join(f"`{s}`" for s in segments)
-    return quoted, location.replace("'", "''")
+    return ".".join(sql_ident(s) for s in segments), sql_str(location)
 
 
 @dataclass
@@ -101,7 +102,7 @@ class CorpusIngest:
                 f"CREATE TABLE IF NOT EXISTS {table} (fp STRING) "
                 f"USING PARQUET CLUSTERED BY (fp) SORTED BY (fp) "
                 f"INTO {int(self.ledger_buckets)} BUCKETS "
-                f"LOCATION '{loc}'"
+                f"LOCATION {loc}"
             )
             # shuffle_hash: without it the bucketed side falls into a
             # sort-merge join that re-sorts the whole ledger per batch
@@ -244,7 +245,7 @@ class MediaIngest:
             f"(fp STRING, phash BIGINT) "
             f"USING PARQUET CLUSTERED BY (fp) SORTED BY (fp) "
             f"INTO {int(self.ledger_buckets)} BUCKETS "
-            f"LOCATION '{loc}'"
+            f"LOCATION {loc}"
         )
         self._check_decoder_stamp(spark)
 

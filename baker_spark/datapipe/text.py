@@ -15,15 +15,10 @@ from functools import reduce
 
 from pyspark.sql import Column, functions as F
 
+from baker_spark.functions import sql_ident, sql_str
+
 #: tiny English stopword list shared by langid & quality scoring.
 EN_STOPWORDS = ["the", "a", "of", "to", "and", "in", "is", "for", "on", "that"]
-
-
-def sql_str(s: str) -> str:
-    """A Spark-SQL single-quoted string literal for ``s``: backslashes
-    and quotes escaped so regex patterns survive the SQL parser's
-    unescaping byte-identical."""
-    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
 def words(col: Column | str) -> Column:
@@ -123,7 +118,7 @@ def langid(col_name: str, stopwords: list[str] | None = None, threshold_pct: int
     # long casts: same int32-wrap class as the other fixed-point sites
     # (a ~100 MB doc of stopwords would wrap n_stop * 100).
     # One expr string (round 13): identical expression, ~4 py4j calls.
-    e = f"`{col_name}`"
+    e = sql_ident(col_name)
     n_stop = f"cast(regexp_count({e}, {sql_str(rx)}) as bigint)"
     nw = f"cast(nullif(size(split({e}, ' ', -1)), -1) as bigint)"
     return F.expr(
@@ -184,7 +179,7 @@ def quality_flags(col_name: str) -> dict[str, Column]:
         )
         return {"n_words": nw, "n_punct": n_punct, "mean_word_len_c2": mean, "quality_ok": ok}
 
-    e = f"`{col_name}`"
+    e = sql_ident(col_name)
     exprs = flags(e)
     exprs["quality_ok"] = _bound_once(e, lambda v: flags(v)["quality_ok"])
     return {k: F.expr(v) for k, v in exprs.items()}
@@ -516,7 +511,7 @@ def scrub(col_name: str) -> dict[str, Column]:
     # expr strings (round 13): the chained replace inlines identically
     # either way; this hands it to the JVM in 4 py4j calls instead of ~30
     out: dict[str, Column] = {}
-    e = f"`{col_name}`"
+    e = sql_ident(col_name)
     for name, pat, repl in SCRUB_PATTERNS:
         out[f"n_{name}"] = F.expr(f"cast(regexp_count({e}, {sql_str(pat)}) as bigint)")
         e = f"regexp_replace({e}, {sql_str(pat)}, {sql_str(repl)})"
@@ -1070,7 +1065,7 @@ def fingerprint(col_name: str) -> Column:
     # rebuilds the string through a Matcher per row; split is one pass)
     return F.expr(
         f"md5(array_join(array_sort(array_distinct(filter("
-        f"split(lower(`{col_name}`), '[^a-z0-9]+', -1), x -> x != ''))), ' '))"
+        f"split(lower({sql_ident(col_name)}), '[^a-z0-9]+', -1), x -> x != ''))), ' '))"
     )
 
 

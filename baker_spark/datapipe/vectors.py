@@ -1,6 +1,13 @@
 """Embedding similarity: cosine math, near-dup pairs, ANN top-k
 (brute-force baseline + LSH-bucketed scale path).
 
+Each kernel has one Spark spelling and one DuckDB spelling. The Spark
+kernels are SQL expr strings (``spark_dot_sql``, ``spark_dot_long_sql``,
+``spark_cosine_c4_sql``, ``spark_quantize_sql``, ``spark_d2_sql``) that
+callers hand to ``F.expr``/``selectExpr``: one parse per builder instead
+of the dozens of py4j round trips a Column/lambda chain costs (~75 per
+cosine). The ``duck_*`` functions are their DuckDB oracle twins.
+
 Dot products are computed as a *sequential* fold over the array
 (zip_with + aggregate) in both engines, and cosine is emitted as
 floor(x*1e4) fixed-point, so Spark and the DuckDB oracle agree exactly.
@@ -16,19 +23,19 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import Column, DataFrame, functions as F
 
+from baker_spark.functions import sql_ident
 from baker_spark.session import fan_out
 
 EMBED_DIM = 64
 N_PLANES = 8
 
-
-def dot(a: Column, b: Column) -> Column:
-    """Sequential-fold dot product of two array<double> columns."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0).cast("double"),
-        lambda acc, x: acc + x,
-    )
+#: fixed-point quantization scale for the all-pairs kernel: v * 2^20,
+#: floored. float32 -> float64 is exact, scaling by a power of two is
+#: exact, so the quantized BIGINT is identical in every engine — and an
+#: INTEGER dot product is order-independent, which legalizes vectorized
+#: (numpy/BLAS-order) evaluation that a float fold forbids (float sums
+#: depend on association order; the driver's oracle hashes values).
+Q_SCALE = 1 << 20
 
 
 def as_double(col: Column | str) -> Column:
@@ -36,21 +43,21 @@ def as_double(col: Column | str) -> Column:
     return c.cast("array<double>")
 
 
-def _q(name: str) -> str:
-    """Backtick-quote a column name for an expr string (a name holding
-    a backtick must not break the parse — same rule as transforms._q)."""
-    return "`" + name.replace("`", "``") + "`"
-
-
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (F.sqrt(dot(a, a)) * F.sqrt(dot(b, b)))
+def spark_dot_sql(a: str, b: str) -> str:
+    """Sequential-fold dot product of two array<double> expressions
+    (left-to-right, ``acc + x*y``); a NULL element makes the result
+    NULL. Twin of :func:`duck_dot`."""
+    return (
+        f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), "
+        "cast(0.0 as double), (acc, x) -> acc + x)"
+    )
 
 
 def duck_dot(a: str, b: str) -> str:
-    """DuckDB sequential dot product matching ``dot`` op-for-op
-    (1-based list indexing, left-to-right sum). NULL ELEMENTS propagate
-    to a NULL result like Spark's fold (acc + NULL = NULL) — bare
-    list_sum SKIPS nulls and would return the partial sum, silently
+    """DuckDB sequential dot product matching :func:`spark_dot_sql`
+    op-for-op (1-based list indexing, left-to-right sum). NULL ELEMENTS
+    propagate to a NULL result like Spark's fold (acc + NULL = NULL) —
+    bare list_sum SKIPS nulls and would return the partial sum, silently
     landing a malformed vector in a different LSH bucket / cosine score
     per engine. (The quantized twin duck_dot_int needs no guard:
     list_dot_product fails loud on NULL elements.)"""
@@ -60,6 +67,16 @@ def duck_dot(a: str, b: str) -> str:
     )
     s = f"list_sum([({a})[i] * ({b})[i] for i in range(1, len({a}) + 1)])"
     return f"(CASE WHEN {guard} THEN NULL ELSE {s} END)"
+
+
+def spark_dot_long_sql(a: str, b: str) -> str:
+    """Sequential-fold dot product of two array<bigint> expressions —
+    exact int64, so the result is independent of evaluation order.
+    Twin of :func:`duck_dot_int`."""
+    return (
+        f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), "
+        "cast(0 as bigint), (acc, x) -> acc + x)"
+    )
 
 
 def duck_dot_int(a: str, b: str) -> str:
@@ -79,20 +96,15 @@ def duck_cosine(a: str, b: str) -> str:
     return f"({duck_dot(a, b)} / (sqrt({duck_dot(a, a)}) * sqrt({duck_dot(b, b)})))"
 
 
-def spark_dot_sql(a: str, b: str) -> str:
-    """Spark-SQL string twin of :func:`dot` (round 13): hot query
-    builders hand the identical fold to the JVM as one expr string —
-    the Column/lambda construction cost ~15 py4j round trips per dot,
-    and cosine_c4 evaluates five of them."""
-    return (
-        f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), "
-        "cast(0.0 as double), (acc, x) -> acc + x)"
-    )
-
-
 def spark_cosine_c4_sql(a: str, b: str) -> str:
-    """Spark-SQL string twin of :func:`cosine_c4` — same zero-norm pin,
-    same floor(cosine * 1e4) BIGINT."""
+    """floor(cosine * 1e4) as bigint over two array<double> expressions,
+    with the zero-norm pin: an all-zero vector's cosine is undefined, and
+    the engines disagree on what the raw expression does (Spark ansi=off
+    division by zero -> NULL, which sorts LAST under desc; DuckDB 0/0 ->
+    NaN, which sorts FIRST and then crashes the BIGINT cast). Pinning the
+    score to 0 ("not similar") keeps every consumer engine-independent —
+    same rule as the int64 pair kernels (cosine_pairs_bucketed,
+    semdedup). Twin of :func:`duck_cosine_c4`."""
     daa, dbb, dab = spark_dot_sql(a, a), spark_dot_sql(b, b), spark_dot_sql(a, b)
     return (
         f"cast(CASE WHEN {daa} = 0 OR {dbb} = 0 THEN 0 "
@@ -100,39 +112,8 @@ def spark_cosine_c4_sql(a: str, b: str) -> str:
     )
 
 
-def spark_dot_long_sql(a: str, b: str) -> str:
-    """Spark-SQL string twin of :func:`dot_long` (round 14): identical
-    sequential int64 fold, handed to the JVM as one expr string instead
-    of ~15 py4j Column round trips per dot."""
-    return (
-        f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), "
-        "cast(0 as bigint), (acc, x) -> acc + x)"
-    )
-
-
-def spark_quantize_sql(expr: str) -> str:
-    """Spark-SQL string twin of :func:`quantize`. ``1048576.0D`` is the
-    double literal 2^20 — exact, so the scaled floor is bit-identical to
-    the Column form's ``F.lit(float(Q_SCALE))``."""
-    return (
-        f"transform({expr}, x -> cast(floor(x * {float(Q_SCALE)!r}D) as bigint))"
-    )
-
-
-def cosine_c4(a: Column, b: Column) -> Column:
-    """floor(cosine * 1e4) as long, with the zero-norm pin: an all-zero
-    vector's cosine is undefined, and the engines disagree on what the
-    raw expression does (Spark ansi=off division by zero -> NULL, which
-    sorts LAST under desc; DuckDB 0/0 -> NaN, which sorts FIRST and then
-    crashes the BIGINT cast). Pinning the score to 0 ("not similar")
-    keeps every consumer engine-independent — same rule as the int64
-    pair kernels (cosine_pairs_bucketed, semdedup)."""
-    zero = (dot(a, a) == 0) | (dot(b, b) == 0)
-    return F.when(zero, F.lit(0)).otherwise(F.floor(cosine(a, b) * 10000)).cast("long")
-
-
 def duck_cosine_c4(a: str, b: str) -> str:
-    """The DuckDB mirror of :func:`cosine_c4` (float arrays)."""
+    """The DuckDB mirror of :func:`spark_cosine_c4_sql` (float arrays)."""
     return (
         f"CASE WHEN {duck_dot(a, a)} = 0 OR {duck_dot(b, b)} = 0 THEN 0 "
         f"ELSE floor(({duck_cosine(a, b)}) * 10000) END"
@@ -153,31 +134,18 @@ def duck_c4_quant(a: str, b: str) -> str:
     )
 
 
-#: fixed-point quantization scale for the all-pairs kernel: v * 2^20,
-#: floored. float32 -> float64 is exact, scaling by a power of two is
-#: exact, so the quantized BIGINT is identical in every engine — and an
-#: INTEGER dot product is order-independent, which legalizes vectorized
-#: (numpy/BLAS-order) evaluation that a float fold forbids (float sums
-#: depend on association order; the driver's oracle hashes values).
-Q_SCALE = 1 << 20
-
-
-def quantize(col: Column) -> Column:
-    return F.transform(col, lambda x: F.floor(x * F.lit(float(Q_SCALE))).cast("long"))
+def spark_quantize_sql(expr: str) -> str:
+    """array<double> -> array<bigint> at :data:`Q_SCALE`, floored.
+    ``1048576.0D`` is the double literal 2^20 — exact, so the scaled
+    floor is bit-identical in both engines. Twin of
+    :func:`duck_quantize`."""
+    return (
+        f"transform({expr}, x -> cast(floor(x * {float(Q_SCALE)!r}D) as bigint))"
+    )
 
 
 def duck_quantize(expr: str) -> str:
     return f"[CAST(floor(x * {float(Q_SCALE)!r}) AS BIGINT) for x in {expr}]"
-
-
-def dot_long(a: Column, b: Column) -> Column:
-    """Sequential-fold dot product of two array<long> columns — exact
-    int64, so the result is independent of evaluation order."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
 
 
 def row_guard(
@@ -246,12 +214,9 @@ def cosine_pairs(
     floor(dot*1e4 / (sqrt(na)*sqrt(nb))) runs the same IEEE float64
     operation sequence in both engines. A lazy ``row_guard`` fails the
     job (not the build) past ``max_rows``."""
-    # expr-string projections (round 14): quantize + self-norm + the
-    # pair c4 were Column/lambda chains (~40 py4j round trips per
-    # build); identical expressions as SQL strings
     q = df.selectExpr(
-        _q(id_col) + " AS id",
-        spark_quantize_sql(f"cast({_q(vec_col)} as array<double>)") + " AS q",
+        sql_ident(id_col) + " AS id",
+        spark_quantize_sql(f"cast({sql_ident(vec_col)} as array<double>)") + " AS q",
     )
     # self-norm once per ROW, before the join — recomputing a 64-element
     # fold per candidate PAIR would cost O(n^2) folds instead of O(n)
@@ -320,8 +285,8 @@ def ann_topk(
     if max_rows is not None:
         q = row_guard(q, max_rows, "ann_topk_bucketed", count_of=df)
     scored = fan_out(df, by=id_col).crossJoin(F.broadcast(q)).selectExpr(
-        _q(id_col),
-        spark_cosine_c4_sql(f"cast({_q(vec_col)} as array<double>)", "qv")
+        sql_ident(id_col),
+        spark_cosine_c4_sql(f"cast({sql_ident(vec_col)} as array<double>)", "qv")
         + " AS cosine_c4",
     )
     return scored.orderBy(F.desc("cosine_c4"), F.col(id_col)).limit(k)
@@ -369,17 +334,17 @@ def lsh_buckets(
     already held."""
     planes = planes or hyperplanes()
     df = fan_out(df, by=id_col)  # 8 plane-dots per row: split the scan across cores
-    # One expr string instead of the per-plane Column chain (round 14):
-    # the old form built n_planes * dim lit().cast() Columns plus a
-    # lambda-fold dot per plane — ~1.8 s of py4j round trips per build
-    # (12x this form, measured; bit-identical output pinned by
-    # test_r14_optimizations). Each coefficient is written as its
-    # float repr: a 6-dp decimal literal (CAST(0.123456 AS DOUBLE)) or,
+    # One expr string, not a per-plane Column chain: that built
+    # n_planes * dim lit().cast() Columns plus a lambda-fold dot per
+    # plane, ~1.8 s of py4j round trips per build (12x this form,
+    # measured). Bucket bits are oracle-pinned by dp_ann_lsh_buckets;
+    # the dot kernel by test_operators::test_vector_kernel_parity.
+    # Each coefficient is written as its float repr: a 6-dp decimal literal (CAST(0.123456 AS DOUBLE)) or,
     # for tiny values, an exponent double literal (CAST(1e-06 AS
     # DOUBLE)); either casts to the nearest double exactly like
     # F.lit(float) and the DuckDB twin's ::DOUBLE[] literals — same
     # bucket bits.
-    v = f"cast({_q(vec_col)} as array<double>)"
+    v = f"cast({sql_ident(vec_col)} as array<double>)"
     terms = ["CAST(0 AS BIGINT)"]
     for j, plane in enumerate(planes):
         arr = "array(" + ", ".join(f"CAST({x!r} AS DOUBLE)" for x in plane) + ")"
@@ -389,7 +354,7 @@ def lsh_buckets(
         )
     bucket = " + ".join(terms)
     return df.selectExpr(
-        _q(id_col), *[_q(c) for c in keep], f"({bucket}) AS bucket"
+        sql_ident(id_col), *[sql_ident(c) for c in keep], f"({bucket}) AS bucket"
     )
 
 
@@ -457,11 +422,9 @@ def ann_topk_bucketed(
             "(qbucket ^ mask) AS qbucket", "qv"
         )
     cands = with_b.join(F.broadcast(qb), F.col("bucket") == F.col("qbucket"))
-    # expr-string c4 twin (round 14): the Column cosine_c4 costs ~75
-    # py4j round trips per build (5 lambda-fold dots); same expression
     scored = cands.selectExpr(
-        _q(id_col),
-        spark_cosine_c4_sql(f"cast({_q(vec_col)} as array<double>)", "qv")
+        sql_ident(id_col),
+        spark_cosine_c4_sql(f"cast({sql_ident(vec_col)} as array<double>)", "qv")
         + " AS cosine_c4",
     )
     return scored.orderBy(F.desc("cosine_c4"), F.col(id_col)).limit(k)
@@ -537,9 +500,9 @@ def cosine_pairs_bucketed(
         # the contract — buckets may come from anywhere
         with_b = df.join(buckets, id_col)
     q = with_b.selectExpr(
-        _q(id_col),
+        sql_ident(id_col),
         "bucket",
-        spark_quantize_sql(f"cast({_q(vec_col)} as array<double>)") + " AS q",
+        spark_quantize_sql(f"cast({sql_ident(vec_col)} as array<double>)") + " AS q",
     )
 
     def block(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -566,6 +529,17 @@ def cosine_pairs_bucketed(
 #: with mathematical floor. 1<<24 leaves 100x coordinate headroom and
 #: n * OFFSET stays < 2^63 up to n ~ 2^38 vectors per cluster.
 KM_OFFSET = 1 << 24
+
+
+def spark_d2_sql(a: str, b: str) -> str:
+    """Squared L2 distance between two quantized array<bigint>
+    expressions, |a|^2 - 2ab + |b|^2 over exact int64 dots — the k-means
+    assignment and IVF/PQ probe metric. Twin of :func:`duck_d2`; the
+    factor 2 is written on the right, the same int64 either way."""
+    return (
+        f"({spark_dot_long_sql(a, a)} - {spark_dot_long_sql(a, b)} * 2 "
+        f"+ {spark_dot_long_sql(b, b)})"
+    )
 
 
 def duck_d2(a: str, b: str) -> str:
@@ -610,8 +584,8 @@ def kmeans_train(
     import pandas as pd
 
     q = df.selectExpr(
-        _q(id_col) + " AS _id",
-        spark_quantize_sql(f"cast({_q(vec_col)} as array<double>)") + " AS q",
+        sql_ident(id_col) + " AS _id",
+        spark_quantize_sql(f"cast({sql_ident(vec_col)} as array<double>)") + " AS q",
     )
     from baker_spark.session import managed_persist
 
@@ -971,8 +945,8 @@ def pq_train_encode(
 
     d = dim // m
     q = df.selectExpr(
-        _q(id_col) + " AS _id",
-        spark_quantize_sql(f"cast({_q(vec_col)} as array<double>)") + " AS q",
+        sql_ident(id_col) + " AS _id",
+        spark_quantize_sql(f"cast({sql_ident(vec_col)} as array<double>)") + " AS q",
     )
     sub = managed_persist(fan_out(_pq_subspaces(q, m, dim), by="_id"))
 
@@ -1084,7 +1058,7 @@ def pq_adc_topk(
     qrow = (
         df.filter(F.col(id_col) == query_id)
         .selectExpr(
-            spark_quantize_sql(f"cast({_q(vec_col)} as array<double>)") + " AS q"
+            spark_quantize_sql(f"cast({sql_ident(vec_col)} as array<double>)") + " AS q"
         )
         .collect()
     )
@@ -1286,7 +1260,7 @@ def ivfpq_topk(
     qrow = (
         df.filter(F.col(id_col) == query_id)
         .selectExpr(
-            spark_quantize_sql(f"cast({_q(vec_col)} as array<double>)") + " AS q"
+            spark_quantize_sql(f"cast({sql_ident(vec_col)} as array<double>)") + " AS q"
         )
         .collect()
     )
@@ -1434,8 +1408,8 @@ def ivf_topk(
     )
     return (
         cands.selectExpr(
-            _q(id_col),
-            spark_cosine_c4_sql(f"cast({_q(vec_col)} as array<double>)", "qv")
+            sql_ident(id_col),
+            spark_cosine_c4_sql(f"cast({sql_ident(vec_col)} as array<double>)", "qv")
             + " AS cosine_c4",
         )
         .orderBy(F.desc("cosine_c4"), F.col(id_col))

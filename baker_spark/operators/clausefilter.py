@@ -19,6 +19,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from baker_spark.functions import sql_ident, sql_str
 from baker_spark.operators.base import Operator, register
 
 
@@ -82,11 +83,10 @@ def compile_clause_sql(node, columns: list[str] | None = None) -> str:
     field, value = head, node[1]
     if columns is not None and field not in columns:
         raise KeyError(f"no such field: {field}")
-    col = f"cast(`{field.replace('`', '``')}` as string)"
+    col = f"cast({sql_ident(field)} as string)"
     if value == "":
         return f"({col} IS NULL OR {col} = '')"
-    lit = "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
-    return f"(coalesce({col}, '') = {lit})"
+    return f"(coalesce({col}, '') = {sql_str(value)})"
 
 
 def compile_clause(node, columns: list[str] | None = None) -> Column:

@@ -14,6 +14,7 @@ from datetime import datetime, timezone
 import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
 
+from baker_spark.functions import sql_ident, sql_str
 from baker_spark.operators.base import Operator, is_empty, register
 
 
@@ -21,14 +22,9 @@ def _s(col: Column) -> Column:
     return col.cast("string")
 
 
-def _q(name: str) -> str:
-    """Backtick-quote a field name for an expr string."""
-    return "`" + name.replace("`", "``") + "`"
-
-
 def _sq(name: str) -> str:
     """cast(`name` as string) — the expr-string twin of ``_s(F.col(name))``."""
-    return f"cast({_q(name)} as string)"
+    return f"cast({sql_ident(name)} as string)"
 
 
 @register
@@ -68,8 +64,7 @@ class Concatenate(Operator):
             return df.withColumn(self.target, F.expr("''"))
         cols = ", ".join(f"coalesce({_sq(f)}, '')" for f in self.fields)
         if self.separator:
-            sep = self.separator.replace("\\", "\\\\").replace("'", "\\'")
-            out = f"concat_ws('{sep}', {cols})"
+            out = f"concat_ws({sql_str(self.separator)}, {cols})"
         else:
             out = f"concat({cols})"
         return df.withColumn(self.target, F.expr(out))
@@ -535,8 +530,7 @@ class RegexMatch(Operator):
             match = "true"
         else:
             match = "(" + " AND ".join(
-                f"(coalesce({_sq(f)}, '') rlike "
-                "'" + rx.replace("\\", "\\\\").replace("'", "\\'") + "')"
+                f"(coalesce({_sq(f)}, '') rlike {sql_str(rx)})"
                 for f, rx in self.pairs
             ) + ")"
         return F.expr(f"(NOT {match})" if self.invert else match)

@@ -6,21 +6,11 @@ and ``ORACLES: dict[name, sql]``; this package aggregates them for
 ``__spark_entry__``.
 
 The driver's correctness gate checks the FIRST 50 queries in catalog
-order, so ``GATE_ORDER`` pins exactly which 50 get a hard driver oracle
-row THIS round. The window ROTATES per the pinned contract
-(COVERAGE.md §gate-rotation): new queries enter on arrival, rows green
-for >=3 consecutive driver rounds may rotate out while a sibling gates
-their machinery, and benched rows rotate back in when they lack a
-recent receipt. As of round 13 the window holds: every BENCH_QUERIES
-row except the two lightest (dp_token_counts, whose arithmetic
-underlies several still-gated dp rows, and dp_scrub — both four-SF
-CI-swept), the quirk-bearing §2.2 filters + §2.5 topology ops, the
-Stats-sink facets, the r12-arrival datapipe tiers, the kmeans/PQ/IVF
-family, and the streaming surface. Rotation changes which rows get a
-DRIVER receipt,
-never which queries are checked — everything outside the window is
-swept value-exact at four SFs by tests/test_oracle_parity.py every CI
-run.
+order, so ``GATE_ORDER`` pins which 50 get a hard driver oracle row.
+Which rows sit in that window, and when they rotate, follows
+COVERAGE.md §gate-rotation. Rotation changes which rows get a DRIVER
+receipt, never which queries are checked: every query is swept
+value-exact at four SFs by tests/test_oracle_parity.py.
 """
 
 from __future__ import annotations
@@ -33,57 +23,10 @@ from baker_spark.queries import (
     streaming_queries,
 )
 
-# the driver's 50-query correctness window, in order.
-#
-# ROUND-9 ROTATION (VERDICT r8 "next round" #2): the freshness pass.
-# Rotated IN: dp_bigram_surprisal (the ONE catalog query with no driver
-# row ever — landed after the r8 window was pinned), dp_ann_search (new
-# this round), every §2.2/§2.5 op whose newest row is r07 — including
-# the four whose semantics round 8 touched (op_urlparam decode, op_hash
-# raw default, op_timestamprange ParseInt strictness, op_formattime
-# layout table) — the r07-gated q_* analytics/stats surface, and the
-# r07-gated dp tail (token_counts, dedup_clusters, kmeans, PQ family).
-# Rotated OUT: the 41 first-gated-in-r08 queries (1 round fresh) plus
-# eight r07 rows whose machinery a fresh r08 sibling row covers
-# (dp_dedup_fingerprint~dp_fingerprint, dp_minhash_capped~
-# dp_minhash_lsh_pairs, dp_multimodal_decode~dp_multimodal_features,
-# dp_decontaminate~dp_decontaminate_shuffle, dp_cosine_pairs_bucketed~
-# dp_cosine_pairs/dp_embedding_dedup, dp_lsh_verified_pairs~
-# dp_ann_lsh_buckets+dp_ngram_jaccard_pairs, dp_semdedup~
-# dp_embedding_dedup, dp_sequence_packing) — all still swept at four
-# SFs every CI run by tests/test_oracle_parity.py.
+# the driver's 50-query correctness window, in order; which rows are
+# in it and why is COVERAGE.md §gate-rotation.
 GATE_ORDER = [
-    # ROUND-14 ROTATION (VERDICT r13 "next round" #8; contract:
-    # COVERAGE.md §gate-rotation). Rotated IN (12): eleven of the
-    # fourteen plain §2.2 ops whose newest driver receipt was r11 —
-    # now at the 3-round freshness horizon — plus q_stats_timestamps
-    # (also r11). Four of them (op_notnull / op_concatenate / op_hash /
-    # op_timestamp) re-receipt the round-13 expr-string predicate
-    # rewrites, and op_regexmatch re-receipts THIS round's expr-string
-    # RegexMatch compiler. The remaining three plain ops
-    # (op_clearfields / op_partialclone / op_urlescape — trivial
-    # string-column transforms covered by the eleven siblings) DEFER
-    # to r15: the flagship-scale-path pin (tests/test_gate_window.py)
-    # keeps dp_dedup_clusters and the full streaming quartet in-gate,
-    # and the window holds exactly 50. Rotated OUT (12, every one
-    # >= 3 consecutive green driver rounds, machinery sibling-gated
-    # in-window): op_validation / op_sharding / op_explode /
-    # op_fieldselect (topology shapes; FileWriter/sharding e2e + CI
-    # four-SF sweep), q_stats_sizes / q_stats_report (stats facet
-    # stays gated via the rotated-in q_stats_timestamps),
-    # q_field_frequency (count+tag shape via the rotated-in
-    # op_countandtag), dp_gopher_quality / dp_c4_filters (quality-gate
-    # machinery via dp_gopher_repetition + dp_corpus_pipeline's
-    # quality stage), dp_image_phash_pairs / dp_audio_fp_pairs /
-    # dp_image_neardup_ingest (phash/audio-fp banding via
-    # dp_phash_band_saturation + dp_audio_band_saturation;
-    # ingest-ledger decision via dp_streaming_ingest_ledger).
-    # All rotated-out rows remain value-exact-swept at four SFs by
-    # test_oracle_parity.
-    #
-    # flagship + headline bench rows (q1..dp_corpus_pipeline are
-    # BENCH_r14 rows — a perf number needs a fresh correctness receipt;
-    # dp_bigram_surprisal was restructured this round)
+    # flagship + headline bench rows
     "q1_pricing_summary",
     "dp_ann_search",
     "dp_bigram_surprisal",
@@ -94,13 +37,12 @@ GATE_ORDER = [
     "dp_simhash_pairs",
     "dp_ann_topk",
     "dp_corpus_pipeline",
-    # ANN trainer/encoder family (2-round streak; expr-string builders
-    # landed this round — keep for a post-change receipt)
+    # ANN trainer/encoder family
     "dp_kmeans_train",
     "dp_pq_codes",
     "dp_pq_adc_topk",
     "dp_ivfpq_topk",
-    # r12/r13 additions still inside their 3-round freshness horizon
+    # recent additions inside their freshness horizon
     "dp_phash_band_saturation",
     "dp_audio_band_saturation",
     "dp_gopher_repetition",
@@ -108,8 +50,7 @@ GATE_ORDER = [
     "dp_token_frequency",
     "dp_url_dedup",
     "dp_kn_perplexity",
-    # §2.2 filters with reference-quirk semantics — kept gated
-    # (op_clausefilter's s-expression compiler was expr-ized this round)
+    # §2.2 filters with reference-quirk semantics
     "op_clausefilter",
     "op_crypt",
     "op_dedup",
@@ -119,7 +60,7 @@ GATE_ORDER = [
     "op_metadata",            # graceful missing-metadata
     "op_timestamprange",      # ParseInt strictness
     "op_urlparam",            # URL-decoded values
-    # ROUND-14 IN-ROTATION: the plain §2.2 set, newest receipts r11
+    # the plain §2.2 set
     "op_concatenate",
     "op_countandtag",
     "op_expandlist",

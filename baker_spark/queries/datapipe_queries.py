@@ -288,8 +288,8 @@ def dp_ann_recall(spark, sf_dir):
     )
     # cosine_c4, not raw floor(cosine*1e4): the zero-norm pin keeps a
     # padding/dead vector from NULL-vs-NaN ranking divergence (and the
-    # oracle's BIGINT cast crash) — see vectors.cosine_c4
-    score = vectors.cosine_c4(F.col("v"), F.col("qv"))
+    # oracle's BIGINT cast crash) — see vectors.spark_cosine_c4_sql
+    score = F.expr(vectors.spark_cosine_c4_sql("v", "qv"))
     rn = F.row_number().over(
         Window.partitionBy("qid").orderBy(F.desc("_s"), F.col("id"))
     )

@@ -6,13 +6,7 @@ from __future__ import annotations
 
 from pyspark.sql import Window, functions as F
 
-from baker_spark.datapipe.vectors import (
-    as_double,
-    cosine,
-    cosine_c4,
-    duck_cosine,
-    duck_cosine_c4,
-)
+from baker_spark.datapipe.vectors import as_double, duck_cosine_c4, spark_cosine_c4_sql
 from baker_spark.sources.tables import load_table
 
 from baker_spark.queries.registry import make_registry
@@ -186,7 +180,7 @@ def dp_ivf_assign(spark, sf_dir):
     scored = e.crossJoin(F.broadcast(c)).select(
         "vec_id",
         "cid",
-        cosine_c4(F.col("v"), F.col("cv")).alias("sim_c4"),
+        F.expr(spark_cosine_c4_sql("v", "cv")).alias("sim_c4"),
     )
     w = Window.partitionBy("vec_id").orderBy(F.desc("sim_c4"), F.col("cid"))
     return (
@@ -281,7 +275,7 @@ def dp_ivf_topk(spark, sf_dir):
 
     scored = e.crossJoin(F.broadcast(c)).select(
         "vec_id", "cid",
-        cosine_c4(F.col("v"), F.col("cv")).alias("sim_c4"),
+        F.expr(spark_cosine_c4_sql("v", "cv")).alias("sim_c4"),
     )
     w = Window.partitionBy("vec_id").orderBy(F.desc("sim_c4"), F.col("cid"))
     assign = (
@@ -296,7 +290,7 @@ def dp_ivf_topk(spark, sf_dir):
     # centroid-query similarity desc, cid asc)
     probes = (
         c.crossJoin(F.broadcast(q))
-        .orderBy(F.desc(cosine_c4(F.col("cv"), F.col("qv"))), F.col("cid"))
+        .orderBy(F.expr(spark_cosine_c4_sql("cv", "qv")).desc(), F.col("cid"))
         .limit(_IVF_NPROBE)
         .select("cid")
     )
@@ -306,7 +300,7 @@ def dp_ivf_topk(spark, sf_dir):
         cands.crossJoin(F.broadcast(q))
         .select(
             "vec_id",
-            cosine_c4(F.col("v"), F.col("qv")).alias("cosine_c4"),
+            F.expr(spark_cosine_c4_sql("v", "qv")).alias("cosine_c4"),
         )
         .orderBy(F.desc("cosine_c4"), "vec_id")
         .limit(_IVF_K)

@@ -31,6 +31,8 @@ from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, functions as F
 
+from baker_spark.functions import sql_ident, sql_str
+
 _PLACEHOLDER_RX = re.compile(r"\{\{\s*\.(\w+)\s*\}\}")
 
 #: Hadoop ZlibCompressor.CompressionLevel enum name per deflate level —
@@ -140,14 +142,8 @@ def serialize_line(columns: list[str], separator: str) -> F.Column:
     # one expr string, not a per-column Column chain: identical
     # expression, ~5 py4j round trips instead of ~5 per column (the
     # bench chain serializes 16 columns per timed run — round 13).
-    # Column names are backtick-escaped like transforms._q (round 14,
-    # ADVICE r13): a name containing ` must not break the expr parse.
-    sep = separator.replace("\\", "\\\\").replace("'", "\\'")
-    cols = ", ".join(
-        "coalesce(cast(`" + c.replace("`", "``") + "` as string), '')"
-        for c in columns
-    )
-    return F.expr(f"concat_ws('{sep}', {cols})")
+    cols = ", ".join(f"coalesce(cast({sql_ident(c)} as string), '')" for c in columns)
+    return F.expr(f"concat_ws({sql_str(separator)}, {cols})")
 
 
 def parse_path_template(template: str) -> tuple[str, list[str], bool]:

@@ -13,6 +13,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from baker_spark.functions import sql_ident
 from baker_spark.session import configure, release_caches
 
 TABLE_NAMES = [
@@ -116,7 +117,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             # DOUBLE, whose 2^53 exact range ns epochs (~1.8e18) exceed
             df = df.withColumn(
                 col,
-                F.timestamp_micros(F.expr(f"`{col}` div 1000")).cast(
+                F.timestamp_micros(F.expr(f"{sql_ident(col)} div 1000")).cast(
                     "timestamp_ntz"
                 ),
             )

@@ -48,3 +48,61 @@ def test_exact_substring_dedup_surgical_removal(spark):
     dk = sorted(tuple(r) for r in con.execute(D.duck_exact_substring_dedup(k=5)).fetchall())
     sp = sorted(tuple(r) for r in D.exact_substring_dedup(df, k=5).collect())
     assert sp == dk
+
+
+
+def test_exact_substring_hash_swap_results_pinned(spark, sf_dir):
+    """The xxhash64 internal swap must keep the rewrite byte-identical
+    to the md5-hash formulation (equality-only use of the hash)."""
+    from baker_spark.datapipe import dedup
+    from baker_spark.functions.hashing import md5_long
+    from baker_spark.sources.tables import load_table
+    from pyspark.sql import Window, functions as F
+
+    df = load_table(spark, sf_dir, "documents")
+    new = sorted(tuple(r) for r in dedup.exact_substring_dedup(df, k=12).collect())
+
+    # md5 reference formulation (the earlier internal hash)
+    k = 12
+    w = F.split(F.col("text"), " ", -1)
+    m = F.size(w) - (k - 1)
+    grams = F.transform(
+        F.sequence(F.lit(1), m),
+        lambda i: md5_long(F.concat_ws(" ", F.slice(w, i, k))),
+    )
+    hashed = (
+        df.filter(m >= 1)
+        .select(F.col("doc_id"), F.posexplode(grams).alias("_p0", "h"))
+        .select("doc_id", (F.col("_p0") + 1).cast("long").alias("pos"), "h")
+    )
+    dup_pos = sorted(
+        tuple(r)
+        for r in hashed.withColumn(
+            "_c", F.count(F.lit(1)).over(Window.partitionBy("h"))
+        )
+        .filter(F.col("_c") >= 2)
+        .select("doc_id", "pos")
+        .collect()
+    )
+    # same duplicated-position set through the current (xxhash64) path
+    w_sql = "split(`text`, ' ', -1)"
+    hashed2 = (
+        df.where(f"size({w_sql}) - {k - 1} >= 1")
+        .selectExpr(
+            "`doc_id`",
+            f"posexplode(transform(sequence(1, size({w_sql}) - {k - 1}), "
+            f"i -> xxhash64(concat_ws(' ', slice({w_sql}, i, {k}))))) AS (_p0, h)",
+        )
+        .selectExpr("`doc_id`", "cast(_p0 + 1 as bigint) AS pos", "h")
+    )
+    dup_pos2 = sorted(
+        tuple(r)
+        for r in hashed2.withColumn(
+            "_c", F.count(F.lit(1)).over(Window.partitionBy("h"))
+        )
+        .filter(F.col("_c") >= 2)
+        .select("doc_id", "pos")
+        .collect()
+    )
+    assert dup_pos == dup_pos2
+    assert len(new) == df.count()

@@ -45,6 +45,61 @@ def test_clausefilter_atoms(spark, generic):
     assert ops.ClauseFilter("(and (f1 abc) (f2 def) (f3 ghi))").apply(generic).count() == 1
 
 
+
+def test_clausefilter_expr_matches_column_form(spark):
+    """The expr-string clause compiler must keep every reference edge:
+    empty clause, (and)/(or), single-arg collapse, empty-value atom,
+    null fields, quotes/backslashes in values."""
+    from functools import reduce
+    from baker_spark.operators.clausefilter import (
+        ClauseFilter,
+        parse_sexpr,
+    )
+
+    df = spark.createDataFrame(
+        [("N", "O", None), ("A", "", "x'y"), (None, "F", "a\\b"), ("N", "F", "z")],
+        "f1 string, f2 string, f3 string",
+    )
+
+    def old_compile(node):
+        if node is None:
+            return F.lit(True)
+        head, args = node[0], node[1:]
+        if head == "and":
+            return (
+                reduce(lambda a, b: a & b, (old_compile(a) for a in args))
+                if args
+                else F.lit(False)
+            )
+        if head == "or":
+            return (
+                reduce(lambda a, b: a | b, (old_compile(a) for a in args))
+                if args
+                else F.lit(True)
+            )
+        if head == "not":
+            return ~old_compile(args[0])
+        f, v = head, node[1]
+        col = F.col(f).cast("string")
+        if v == "":
+            return col.isNull() | (col == F.lit(""))
+        return F.coalesce(col, F.lit("")) == F.lit(v)
+
+    for clause in [
+        "(and (f1 N) (or (f2 O) (not (f3 x'y))))",
+        "(or (and) (f3 a\\b))",
+        "(not (f2 F))",
+        "(f1 N)",
+        "(and (f1 N))",
+    ]:
+        ast = parse_sexpr(clause)
+        old = sorted(map(tuple, df.filter(old_compile(ast)).collect()), key=repr)
+        new = sorted(map(tuple, ClauseFilter(clause).apply(df).collect()), key=repr)
+        assert old == new, clause
+    # empty clause keeps everything
+    assert ClauseFilter("").apply(df).count() == 4
+
+
 def test_clear_and_replace(spark, generic):
     out = ops.ClearFields(["f2"]).apply(generic)
     assert [r.f2 for r in out.collect()] == ["", "", ""]
@@ -99,6 +154,68 @@ def test_regex_match(spark, generic):
     assert kept.count() == 1
     inv = ops.RegexMatch(fields=["f1"], regexs=["^a"], invert_match=True).apply(generic)
     assert inv.count() == 1
+
+
+
+def test_regexmatch_expr_matches_column_form(spark):
+    from functools import reduce
+    from baker_spark.operators.transforms import RegexMatch
+
+    df = spark.createDataFrame(
+        [("abc", "x1"), ("a'b", None), (None, "d\\e"), ("", "zz")],
+        "f1 string, f2 string",
+    )
+    pairs = [("f1", r"^a.*"), ("f2", r"[xz\d]|d\\e")]
+
+    def old_pred(pairs, invert):
+        m = reduce(
+            lambda a, b: a & b,
+            (
+                F.coalesce(F.col(f).cast("string"), F.lit("")).rlike(rx)
+                for f, rx in pairs
+            ),
+            F.lit(True),
+        )
+        return ~m if invert else m
+
+    for invert in (False, True):
+        old = sorted(map(tuple, df.filter(old_pred(pairs, invert)).collect()), key=repr)
+        op = RegexMatch([p[0] for p in pairs], [p[1] for p in pairs], invert_match=invert)
+        new = sorted(map(tuple, op.apply(df).collect()), key=repr)
+        assert old == new, invert
+    # Fields=[] keeps everything; inverted drops everything
+    assert RegexMatch([], []).apply(df).count() == 4
+    assert RegexMatch([], [], invert_match=True).apply(df).count() == 0
+
+
+def test_chain_operator_expr_rewrites_match_column_shapes(spark):
+    from baker_spark.operators.transforms import Concatenate, Hash, NotNull, TimestampRange
+
+    df = spark.createDataFrame(
+        [("1", "a", "170000"), (None, "", "17.5"), ("", "b", "-3"),
+         ("x", "c", " 17 ")],
+        "f1 string, f2 string, ts string",
+    )
+    # NotNull: empty-and-null drop, Fields=[] keeps everything
+    kept = df.filter(NotNull(["f1", "f2"]).keep_predicate())
+    assert kept.count() == 2  # ("1","a"), ("x","c")
+    assert df.filter(NotNull([]).keep_predicate()).count() == 4
+    # Concatenate with and without separator; empty fields -> ''
+    out = Concatenate(["f1", "f2"], target="t", separator="-").apply(df)
+    vals = {r["t"] for r in out.collect()}
+    assert "1-a" in vals and "-" in vals  # null/'' slots keep their separator
+    out2 = Concatenate([], target="t").apply(df)
+    assert {r["t"] for r in out2.collect()} == {""}
+    # Hash: hex and raw agree with the reference md5 of the cast string
+    h = Hash("f1", "d", function="md5", encoding="hex").apply(df.filter(F.col("f1") == "1"))
+    import hashlib
+    assert h.collect()[0]["d"] == hashlib.md5(b"1").hexdigest()
+    # TimestampRange ParseInt strictness: floats and padded ints drop
+    pred = TimestampRange("ts", None, None).keep_predicate()
+    kept_ts = {r["ts"] for r in df.filter(pred).collect()}
+    assert kept_ts == {"170000", "-3"}
+    bounded = TimestampRange("ts", "1970-01-02 00:00:00", None).keep_predicate()
+    assert {r["ts"] for r in df.filter(bounded).collect()} == {"170000"}
 
 
 def test_hash_and_slice(spark, generic):
@@ -1163,6 +1280,49 @@ def test_ann_search_rejects_typoed_kwargs_for_lsh(spark):
         vectors.ann_search(df, method="lsh", nprobe=3)
     # max_rows is tolerated (auto-resolved calls carry it for brute)
     assert vectors.ann_search(df, k=2, method="lsh", max_rows=10).count() <= 2
+
+
+
+@pytest.mark.parametrize("kernel", ["quantize", "dot", "dot_long", "cosine_c4", "d2"])
+def test_vector_kernel_parity(spark, sf_dir, kernel):
+    """Each Spark vector kernel (``vectors.spark_*_sql``) equals its
+    DuckDB oracle twin (``duck_*``) value for value: every sf embedding
+    paired with vector 0, plus one all-zero vector, whose cosine_c4 is
+    pinned to 0 in both engines. Inputs are Python doubles (float32 ->
+    float64 is exact), so both engines read identical values."""
+    import duckdb
+    import pandas as pd
+    import pyarrow.parquet as pq
+
+    from baker_spark.datapipe import vectors as V
+
+    t = pq.read_table(os.path.join(sf_dir, "embeddings.parquet")).to_pydict()
+    vecs = {int(i): [float(x) for x in v] for i, v in zip(t["vec_id"], t["embedding"])}
+    b = vecs[0]
+    rows = [(i, v, b) for i, v in sorted(vecs.items())] + [(-1, [0.0] * len(b), b)]
+
+    sq, dq = V.spark_quantize_sql, V.duck_quantize
+    spark_sql, duck_sql = {
+        "quantize": (sq("a"), dq("a")),
+        "dot": (V.spark_dot_sql("a", "b"), V.duck_dot("a", "b")),
+        "dot_long": (V.spark_dot_long_sql(sq("a"), sq("b")), V.duck_dot_int(dq("a"), dq("b"))),
+        "cosine_c4": (V.spark_cosine_c4_sql("a", "b"), f"CAST({V.duck_cosine_c4('a', 'b')} AS BIGINT)"),
+        "d2": (V.spark_d2_sql(sq("a"), sq("b")), V.duck_d2(dq("a"), dq("b"))),
+    }[kernel]
+
+    df = spark.createDataFrame(rows, "id long, a array<double>, b array<double>")
+    got = {r["id"]: r["k"] for r in df.selectExpr("id", f"{spark_sql} AS k").collect()}
+    con = duckdb.connect()
+    con.register("t", pd.DataFrame(rows, columns=["id", "a", "b"]))
+    want = dict(
+        con.execute(
+            f"SELECT id, {duck_sql} FROM (SELECT id, a::DOUBLE[] AS a, b::DOUBLE[] AS b FROM t)"
+        ).fetchall()
+    )
+    assert len(got) == len(rows) > 1
+    assert got == want
+    if kernel == "cosine_c4":
+        assert got[-1] == 0
 
 
 def test_jpeg_decode_crosses_idct_chunk_boundary(spark):

@@ -462,3 +462,20 @@ def test_filewriter_rejects_bad_zstd_config():
         FileWriter(path="/tmp/x.zst", zstd_level=25)
     with pytest.raises(ValueError, match="zstd_window_log"):
         FileWriter(path="/tmp/x.zst", zstd_window_log=5)
+
+
+def test_serialize_line_matches_column_shape(spark):
+    from pyspark.sql import functions as F
+
+    from baker_spark.sinks.filewriter import serialize_line
+
+    df = spark.createDataFrame(
+        [(1, None, "a,b"), (None, "", "c'd")], "x int, y string, z string"
+    )
+    expr_col = serialize_line(["x", "y", "z"], ",")
+    old_col = F.concat_ws(
+        ",", *[F.coalesce(F.col(c).cast("string"), F.lit("")) for c in ["x", "y", "z"]]
+    )
+    rows = df.select(expr_col.alias("new"), old_col.alias("old")).collect()
+    for r in rows:
+        assert r["new"] == r["old"]

@@ -431,6 +431,10 @@ def test_qualified_ledger_table_name_accepted(spark, tmp_path):
     from baker_spark.datapipe.ingest import _ledger_ddl_parts
 
     assert _ledger_ddl_parts("db1.ledger", "/x")[0] == "`db1`.`ledger`"
+    # a path holding a quote and a backslash survives as one literal
+    odd = "/x/it's\\b"
+    loc = _ledger_ddl_parts("t", odd)[1]
+    assert spark.sql(f"SELECT {loc} AS v").first()["v"] == odd
     for bad in ("a-b", "a.b-c", "a..b", "x'y", "a.b.c.d'"):
         with pytest.raises(ValueError):
             _ledger_ddl_parts(bad, "/x")

@@ -301,3 +301,40 @@ def test_quality_ok_scrubs_each_document_once(spark):
     assert spark_ok == [(0, True), (1, False), (2, False), (3, None)]
     duck_ok = _duck_rows(docs, {"quality_ok": text.duck_quality_sql("text")["quality_ok"]})
     assert spark_ok == [(i, v) for i, v in duck_ok]
+
+
+def test_sql_str_escapes_survive_the_parser(spark):
+    """Regex patterns with backslashes/quotes come back byte-identical
+    through ``sql_str``'s string literal — the property every expr-string
+    builder leans on."""
+    from baker_spark.functions import sql_str
+
+    for s in [r"[A-Za-z0-9._%+-]+@x\.[A-Za-z]{2,}", r"(?= |\z)", "it's",
+              "back\\slash", r"\d+\.\d+", "mixed '\\' quote"]:
+        got = spark.sql(f"SELECT {sql_str(s)} AS v").collect()[0]["v"]
+        assert got == s, f"{s!r} round-tripped as {got!r}"
+
+
+def test_builders_accept_backtick_column_name(spark):
+    """A column whose name holds a backtick goes through ``sql_ident``:
+    langid, scrub, quality_flags, minhash_signature and simhash give the
+    same values over ``te`xt`` as over ``text`` (unescaped, the name
+    ended the identifier early and the expr failed to parse)."""
+    from baker_spark.datapipe import dedup
+
+    odd = "te`xt"
+    rows = [(i, t) for i, t, _ in GOPHER_DOCS[:4]]
+    rows.append((9, "mail a@b.com or see http://x.y 12345678"))
+    plain = spark.createDataFrame(rows, "doc_id long, text string")
+    quoted = plain.withColumnRenamed("text", odd)
+
+    def cols(df, name):
+        built = {"lang": text.langid(name), **text.scrub(name), **text.quality_flags(name)}
+        out = df.select("doc_id", *[c.alias(k) for k, c in built.items()])
+        return sorted(tuple(r) for r in out.collect())
+
+    assert cols(quoted, odd) == cols(plain, "text")
+    for build in (dedup.minhash_signature, dedup.simhash):
+        got = sorted(tuple(r) for r in build(quoted, text_col=odd).collect())
+        want = sorted(tuple(r) for r in build(plain, text_col="text").collect())
+        assert got == want and len(got) > 0, build.__name__

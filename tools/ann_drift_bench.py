@@ -52,7 +52,12 @@ sys.path.insert(0, REPO)
 from pyspark.sql import DataFrame, functions as F  # noqa: E402
 
 from baker_spark.datapipe import ann_index  # noqa: E402
-from baker_spark.datapipe.vectors import EMBED_DIM, as_double, cosine_c4  # noqa: E402
+from baker_spark.datapipe.vectors import (  # noqa: E402
+    EMBED_DIM,
+    as_double,
+    spark_cosine_c4_sql,
+    spark_dot_sql,
+)
 from baker_spark.sources.tables import load_table  # noqa: E402
 
 KC, NPROBE = 8, 2
@@ -70,7 +75,7 @@ def brute_truth(corpus: DataFrame, queries: DataFrame, k: int) -> dict[int, set]
     scored = corpus.crossJoin(F.broadcast(queries.select("qid", "qv"))).select(
         "qid",
         "vec_id",
-        cosine_c4(as_double("embedding"), F.col("qv")).alias("c"),
+        F.expr(spark_cosine_c4_sql("cast(embedding as array<double>)", "qv")).alias("c"),
     )
     w = Window.partitionBy("qid").orderBy(F.desc("c"), F.col("vec_id"))
     top = (
@@ -123,12 +128,10 @@ def main() -> int:
         arrival gains a shared 'topic' component; residual variety is
         preserved, norms return to 1 (metric consistency)."""
         u = 1.0 / math.sqrt(EMBED_DIM)
-        shifted = F.transform(as_double("embedding"), lambda x: x + F.lit(strength * u))
-        norm = F.sqrt(F.aggregate(shifted, F.lit(0.0), lambda acc, x: acc + x * x))
-        return df.select(
-            "vec_id",
-            F.transform(shifted, lambda x: x / norm).alias("embedding"),
-            "label",
+        shifted = f"transform(cast(embedding as array<double>), x -> x + {strength * u!r}D)"
+        norm = f"sqrt({spark_dot_sql(shifted, shifted)})"
+        return df.selectExpr(
+            "vec_id", f"transform({shifted}, x -> x / {norm}) AS embedding", "label"
         )
 
     results = {}

@@ -145,8 +145,6 @@ _RETIRED_KEYS["kcl"] = _RETIRED_KEYS["kinesis"]
 
 
 def _build_streaming_input(section: dict, fields: list[str], separator: str):
-    from baker_spark.streaming.connectors import SocketSource
-
     name = section.get("name", "").lower()
     cfg = _snake_keys(section.get("config", {}))
     for key, why in _RETIRED_KEYS.get(name, {}).items():
@@ -229,24 +227,21 @@ def _build_streaming_input(section: dict, fields: list[str], separator: str):
     # tcp — input/tcp.go:20-28 (":6000" listener; ref config key Listener)
     addr = cfg.get("listener") or cfg.get("listen_address", ":6000")
     host, _, port = addr.rpartition(":")
-    if cfg.get("spool_dir"):
-        # the reference's actual wire format: one gzip stream per
-        # connection (tcp.go:146-210) — driver-side TCPGzipListener
-        # decodes into the spool, the file stream ingests it
-        from baker_spark.streaming.tcp import TCPFileSource
+    # the reference's actual wire format: one gzip stream per
+    # connection (tcp.go:146-210) — driver-side TCPGzipListener
+    # decodes into the spool, the file stream ingests it
+    from baker_spark.streaming.tcp import TCPFileSource
 
-        return TCPFileSource(
-            path=cfg["spool_dir"],
-            fields=fields,
-            separator=separator,
-            listen_host=host or "127.0.0.1",
-            listen_port=int(port),
-            # Decode="executor": raw-gz spool, inflate on executors —
-            # the scale path (see streaming/tcp.py module docstring)
-            decode=cfg.get("decode", "driver"),
-        )
-    # no SpoolDir: plaintext dev stand-in (spark's socket source)
-    return SocketSource(host=host or "localhost", port=int(port))
+    return TCPFileSource(
+        path=cfg["spool_dir"],
+        fields=fields,
+        separator=separator,
+        listen_host=host or "127.0.0.1",
+        listen_port=int(port),
+        # Decode="executor": raw-gz spool, inflate on executors —
+        # the scale path (see streaming/tcp.py module docstring)
+        decode=cfg.get("decode", "driver"),
+    )
 
 
 def _build_sink(section: dict, separator: str):
@@ -466,13 +461,17 @@ def compile_toml(
 
     names = fields or doc.get("fields", {}).get("names", [])
     input_name = doc.get("input", {}).get("name", "").lower()
-    # parquet is self-describing; kinesis sources carry their own (data)
-    # schema until a parse step applies the field mapping; TCP is exempt
-    # only on the schema-less dev socket path — with SpoolDir it is a
-    # CSV file stream that would silently read ZERO columns
+    # a TCP section without SpoolDir fails on that before [fields]: a
+    # topology written for the retired socket source has no fields either
     input_cfg = _snake_keys(doc.get("input", {}).get("config", {}))
-    tcp_socket_only = input_name == "tcp" and not input_cfg.get("spool_dir")
-    if not names and input_name not in ("parquet", "kinesis", "kcl") and not tcp_socket_only:
+    if input_name == "tcp" and not input_cfg.get("spool_dir"):
+        raise ValueError(
+            "TCP input: SpoolDir is required: the listener decodes the gzip wire "
+            "format into it; the plaintext socket source that ran without it is retired"
+        )
+    # parquet is self-describing; kinesis sources carry their own (data)
+    # schema until a parse step applies the field mapping
+    if not names and input_name not in ("parquet", "kinesis", "kcl"):
         raise ValueError("[fields] names=[...] (or fields=) is required")
     if len(set(names)) != len(names):
         raise ValueError("duplicate field names")  # config.go:453-459

@@ -3,7 +3,6 @@ from baker_spark.streaming.connectors import (
     KinesisPythonSource,
     KinesisRecordsSource,
     KinesisStandinSource,
-    SocketSource,
     kinesis_records,
 )
 from baker_spark.streaming.daemon import FileStreamSource, RateSource, StreamingPipeline
@@ -23,7 +22,6 @@ __all__ = [
     "SQSConfig",
     "SQSPoller",
     "SQSSource",
-    "SocketSource",
     "StreamingPipeline",
     "TCPFileSource",
     "TCPGzipListener",

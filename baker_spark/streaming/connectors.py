@@ -1,11 +1,10 @@
-"""Queue connectors for the reference's Kinesis, KCL and TCP daemon
-inputs (SURVEY.md §2.1).
+"""Queue connectors for the reference's Kinesis and KCL daemon inputs
+(SURVEY.md §2.1).
 
 Kinesis and KCL read through the jar-free ``bakerkinesis`` Python data
 source (streaming/kinesis_datasource.py), which emits the
 ``aws-kinesis`` connector's column layout; :func:`kinesis_records`
-parses that layout into record columns. The TCP input without a
-``SpoolDir`` is Spark's plaintext socket source.
+parses that layout into record columns.
 """
 
 from __future__ import annotations
@@ -198,21 +197,3 @@ class KinesisStandinSource:
 
     __call__ = dataframe
 
-
-@dataclass
-class SocketSource:
-    """TCP line source (dev-only, like the reference's :6000 listener,
-    input/tcp.go:20-28 — minus the nonstandard gzip framing)."""
-
-    host: str = "localhost"
-    port: int = 6000
-
-    def dataframe(self, spark: SparkSession) -> DataFrame:
-        return (
-            spark.readStream.format("socket")
-            .option("host", self.host)
-            .option("port", self.port)
-            .load()
-        )
-
-    __call__ = dataframe

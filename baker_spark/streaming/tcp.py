@@ -43,9 +43,6 @@ Two decode placements (``decode=``, TOML key ``Decode``):
   ``ignoreCorruptFiles`` on the reader in this mode so executors keep
   the decodable prefix and the query survives, which is exactly the
   reference's torn-connection behavior.
-
-The plaintext ``socket`` connector (connectors.SocketSource) remains the
-no-spool dev path; this module speaks the reference's actual format.
 """
 
 from __future__ import annotations

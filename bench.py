@@ -16,22 +16,23 @@ The suite covers the engine's three workload families:
 Each query is forced with a noop write (full materialization, no driver
 collect). A warmup action absorbs JVM/codegen startup.
 
-MEASUREMENT INTEGRITY (round 12): the headline artifact must defend
-itself against host contention — round 11's official capture read 2.11x
-vs baseline while a same-commit idle re-run measured 1.29x, and the old
-single-pass harness had no way to notice beyond one pre-run canary. The
-default entry point is now an ORCHESTRATOR: it runs the whole suite in
-K fresh JVMs (exactly the fresh-JVM shape the per-round driver measures
-and tools/bench_variance.py already used), stamps the CPU canary BEFORE
-AND AFTER every suite pass (a spike that starts mid-suite can no longer
-hide behind a clean pre-canary), classifies each pass clean/contended on
-a SELF-CALIBRATING gate (relative to the run's own canary floor, capped
-by an absolute chronic ceiling — round 13; see CANARY_RELATIVE_FACTOR),
-retries the WHOLE SUITE while clean passes are short of quota, and
-reports the MEDIAN clean pass — with
-every pass's canaries and totals kept in the artifact so a reader can
-re-derive the verdict. `python bench.py --single` runs one in-process
-pass (local iteration; also the worker the orchestrator spawns).
+The default entry point runs the whole suite in N_JVMS fresh JVMs and
+headlines the median clean pass; every pass's totals, per-query times,
+canary stamps and host steal share stay in ``suite_passes``. A pass is
+clean when the CPU canary stamped before and after it got at least
+CANARY_MIN_SHARE of the cores it asked for: ``canary_share`` is the
+user+system CPU of $SPARK_GRAFT_CPUS md5 child processes over
+width x wall, so a slower or throttled host stretches both sides and
+the gate needs no calibration against the run's own stamps. Its
+bandwidth stamps must also sit within CANARY_BW_RELATIVE_FACTOR of the
+run's bandwidth floor, because memory-bus stalls do not show as lost
+CPU share. Whole passes are retried while clean passes are short of
+MIN_CLEAN, up to MAX_JVMS; a run with no clean pass headlines its
+least-contended pass and says ``"contended": true``.
+
+    python bench.py                  # the orchestrated run
+    python bench.py --single         # one in-process suite pass
+    python bench.py --compare A B    # suite and per-query deltas of two artifacts
 """
 
 from __future__ import annotations
@@ -45,6 +46,8 @@ import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+
+from perfbench.run import cpu_times, steal_share  # noqa: E402
 
 BENCH_QUERIES = [
     "q1_pricing_summary",
@@ -82,7 +85,7 @@ BENCH_RUN_OVERRIDES = {"dp_exact_substring_dedup": 3}
 N_RUNS = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "4"))
 
 #: orchestrator shape: K fresh-JVM suite passes, require MIN_CLEAN of
-#: them uncontended (before+after canary under gate), retry whole passes
+#: them uncontended (before+after canary clear the gate), retry whole passes
 #: up to MAX_JVMS total. 3/2/6 keeps the per-round wall under ~3 min
 #: while making a single contended capture non-fatal AND non-headline.
 N_JVMS = int(os.environ.get("SPARK_GRAFT_BENCH_JVMS", "3"))
@@ -149,24 +152,28 @@ def force(df):
     df.write.format("noop").mode("overwrite").save()
 
 
-def cpu_canary() -> dict[str, float]:
-    """Machine-state stamp for cross-run comparability: the same fixed
-    md5 loop single-process and 32-processes-wide, plus a MEMORY
-    BANDWIDTH sweep. On an idle 32-core box the wide wall ~= the
-    single wall; under host-level contention it stretches
-    proportionally — so a slow suite with a stretched canary is
-    machine drift, not an engine regression (and vice versa).
+def cpu_canary() -> dict:
+    """Machine-state stamp taken before and after every suite pass.
 
-    The bandwidth stamp (round 13) closes the md5 canaries' observed
-    blind spot: a co-tenant saturating the socket's memory bus lifted
-    Spark walls 30-40% while the pure-register md5 loop moved ~4%
-    (PERFORMANCE.md round-13 closing envelope). Sixteen single-thread
-    sums over a 256 MB buffer — far past any LLC, so every pass
-    streams from DRAM and the wall is 1/(this process's bandwidth
-    share). ~1s total for all three stamps."""
+    - ``canary_share``: $SPARK_GRAFT_CPUS (``canary_width``) child
+      processes each run a fixed md5 loop; their user+system CPU over
+      width x wall is the share of the requested cores they actually
+      got. A slower or throttled core stretches CPU time and wall
+      alike, so the share reads the same on any idle host.
+    - ``canary_32p_s`` holds that wide wall (the name predates the
+      width) and ``canary_1p_s`` the same loop in this process.
+    - ``canary_bw_s``: sixteen single-thread sums over a 256 MB buffer,
+      far past any LLC, so the wall is 1/(this process's memory
+      bandwidth share). It closes the md5 loop's blind spot: a
+      co-tenant saturating the memory bus lifted Spark walls 30-40%
+      while the register-bound loop moved ~4% (PERFORMANCE.md round 13).
+    """
     import hashlib
+    import resource
 
     import numpy as np
+
+    from baker_spark.session import default_parallelism
 
     def one() -> float:
         t0 = time.perf_counter()
@@ -176,120 +183,95 @@ def cpu_canary() -> dict[str, float]:
         return round(time.perf_counter() - t0, 3)
 
     single = one()
+    width = default_parallelism()
     code = "import hashlib\nh=hashlib.md5()\nfor i in range(2_000_000): h.update(b'x'*32)"
     t0 = time.perf_counter()
-    procs = [subprocess.Popen([sys.executable, "-c", code]) for _ in range(32)]
+    procs = [subprocess.Popen([sys.executable, "-c", code]) for _ in range(width)]
+    # read after the starts: Popen reaps stray finished children, whose
+    # CPU must not count as the canary's
+    r0 = resource.getrusage(resource.RUSAGE_CHILDREN)
     for p in procs:
         p.wait()
-    wide = round(time.perf_counter() - t0, 3)
+    wide = time.perf_counter() - t0
+    r1 = resource.getrusage(resource.RUSAGE_CHILDREN)
+    cpu = (r1.ru_utime - r0.ru_utime) + (r1.ru_stime - r0.ru_stime)
     arr = np.zeros(32 * 1024 * 1024)  # 256 MB of float64
     arr.sum()  # fault the pages in; allocation cost is not bandwidth
     t0 = time.perf_counter()
     for _ in range(16):
         arr.sum()
     bw = round(time.perf_counter() - t0, 3)
-    return {"canary_1p_s": single, "canary_32p_s": wide, "canary_bw_s": bw}
+    return {
+        "canary_1p_s": single,
+        "canary_32p_s": round(wide, 3),
+        "canary_width": width,
+        "canary_share": round(cpu / (width * wide), 3),
+        "canary_bw_s": bw,
+    }
 
 
-#: SELF-CALIBRATING contention gate (round 13). History: round 10
-#: calibrated an absolute gate from "idle = 0.31-0.34" and round 12
-#: tightened it to 0.40 — then this container's idle floor drifted to
-#: ~0.40-0.43 (kernel / co-tenant baseline shift), so BENCH_r12.json
-#: carried `n_clean: 0` on passes that two independent idle re-runs
-#: confirmed were the best ever measured: an absolute constant goes
-#: stale, and a gate that is always red is no gate. The round-13 gate is
-#: RELATIVE to the run's own measured floor: the minimum canary_32p
-#: stamp across every pass of THIS orchestrate run estimates the host's
-#: current idle wall, and a pass is clean iff its worst stamp is within
-#: CANARY_RELATIVE_FACTOR of that floor. Two properties survive from
-#: the absolute design:
-#: - a hard CHRONIC ceiling (round 9's measured hot capture stamped
-#:   0.553; anything at/above 0.55 can NEVER read clean even if the
-#:   whole run is equally hot) keeps a steadily-loaded host from
-#:   self-calibrating its load away entirely;
-#: - every absolute stamp is still recorded per pass, so cross-round
-#:   artifact comparisons (and a future recalibration) stay possible.
-#: Residual blind window, stated honestly: steady load that lifts the
-#: floor above true-idle but below the chronic ceiling reads clean —
-#: indistinguishable from a host whose idle baseline drifted, which is
-#: exactly the r12 failure this fixes. Bursty contention (the case that
-#: actually corrupted r9/r11 artifacts) is caught relative to the
-#: quiet passes around it.
-CANARY_RELATIVE_FACTOR = 1.25
-CANARY_CHRONIC_32P_S = 0.55
-#: bandwidth stamps gate the same way — relative to the run's own
-#: floor — but looser: single-thread DRAM-sweep walls are noisier than
-#: the md5 loop (page placement, prefetcher state), and there is no
-#: absolute-history calibration yet (first round carrying the stamp).
-#: No chronic ceiling either, for the same no-history reason; the
-#: stamps accumulate in artifacts so a future round can add one.
+#: a canary stamp is clean when its children got at least this share of
+#: the cores they asked for. Measured at width 4 on a 4-core host, 26
+#: idle stamps read 0.767-0.952 (median 0.88); with k busy-loop
+#: co-processes, k=1 read 0.67-0.75, k=2 0.57-0.63 and k=8 0.30-0.33.
+#: 0.65 sits under every idle stamp and over every k=2 one: a pass is
+#: contended once a co-tenant holds about half the requested cores.
+CANARY_MIN_SHARE = 0.65
+#: bandwidth stamps gate relative to the run's own floor: single-thread
+#: DRAM-sweep walls vary with page placement and prefetcher state, and
+#: no absolute calibration exists for them yet.
 CANARY_BW_RELATIVE_FACTOR = 1.35
 
 
-def _run_floor(passes: list[dict], key: str) -> float | None:
+def run_floor_bw(passes: list[dict]) -> float | None:
+    """Min canary_bw_s across every before/after stamp of every pass
+    (None when no pass carries one)."""
     stamps = [
-        d.get(side, {}).get(key)
+        d.get(side, {}).get("canary_bw_s")
         for d in passes
         for side in ("canary_before", "canary_after")
     ]
-    stamps = [s for s in stamps if s is not None]
-    return min(stamps) if stamps else None
+    return min((s for s in stamps if s is not None), default=None)
 
 
-def run_floor_32p(passes: list[dict]) -> float | None:
-    """The run's own idle estimate: min canary_32p across every before/
-    after stamp of every pass so far (None until a stamped pass lands)."""
-    return _run_floor(passes, "canary_32p_s")
-
-
-def run_floor_bw(passes: list[dict]) -> float | None:
-    return _run_floor(passes, "canary_bw_s")
-
-
-def effective_bw_gate(passes: list[dict],
-                      relative_factor: float = CANARY_BW_RELATIVE_FACTOR) -> float | None:
+def effective_bw_gate(passes: list[dict]) -> float | None:
     """Bandwidth gate for THIS run: floor * factor; None when no pass
     carries bandwidth stamps (legacy artifacts, synthetic test docs)."""
     floor = run_floor_bw(passes)
-    return None if floor is None else round(floor * relative_factor, 4)
+    return None if floor is None else round(floor * CANARY_BW_RELATIVE_FACTOR, 4)
 
 
-def effective_gate(passes: list[dict],
-                   relative_factor: float = CANARY_RELATIVE_FACTOR,
-                   chronic: float = CANARY_CHRONIC_32P_S) -> float:
-    """Gate for THIS run: floor * factor, capped at the chronic ceiling."""
-    floor = run_floor_32p(passes)
-    if floor is None:
-        return chronic
-    return min(round(floor * relative_factor, 4), chronic)
+def share_ok(stamp: dict) -> bool:
+    """The CPU half of the gate, for one canary stamp."""
+    share = stamp.get("canary_share")
+    return share is not None and share >= CANARY_MIN_SHARE
 
 
-def pass_is_clean(doc: dict, gate: float, bw_gate: float | None = None) -> bool:
+def _worst_share(doc: dict) -> float:
+    shares = [doc.get(side, {}).get("canary_share") for side in ("canary_before", "canary_after")]
+    return min(0.0 if s is None else s for s in shares)
+
+
+def pass_is_clean(doc: dict, bw_gate: float | None = None) -> bool:
     """A suite pass is uncontended iff BOTH canary stamps (before and
-    after the Spark work) are under the gate — a co-tenant burst
+    after the Spark work) clear the share gate — a co-tenant burst
     starting mid-suite trips the after-stamp. When a bandwidth gate is
     in force and the pass carries bandwidth stamps, BOTH of those must
-    clear it too (the memory-bus contention the md5 loop under-detects
-    by ~10x — measured, PERFORMANCE.md round 13). Passes without
-    bandwidth stamps (legacy artifacts) are judged on the CPU stamps
-    alone rather than failed outright — the cross-round forensic
-    re-reads must keep working."""
-    before = doc.get("canary_before", {}).get("canary_32p_s")
-    after = doc.get("canary_after", {}).get("canary_32p_s")
-    if before is None or after is None:
-        return False
-    if max(before, after) > gate:
+    clear it too. A pass without bandwidth stamps is judged on its CPU
+    stamps alone; one without share stamps (artifacts older than the
+    share) is never clean."""
+    before, after = doc.get("canary_before", {}), doc.get("canary_after", {})
+    if not (share_ok(before) and share_ok(after)):
         return False
     if bw_gate is not None:
-        bw_b = doc.get("canary_before", {}).get("canary_bw_s")
-        bw_a = doc.get("canary_after", {}).get("canary_bw_s")
+        bw_b, bw_a = before.get("canary_bw_s"), after.get("canary_bw_s")
         if bw_b is not None and bw_a is not None and max(bw_b, bw_a) > bw_gate:
             return False
     return True
 
 
 def orchestrate(run_pass, n_jvms: int = N_JVMS, min_clean: int = MIN_CLEAN,
-                max_jvms: int = MAX_JVMS, gate: float | None = None) -> dict:
+                max_jvms: int = MAX_JVMS) -> dict:
     """Contention-proof envelope over ``run_pass() -> suite doc``.
 
     Runs ``n_jvms`` passes, classifies each clean/contended on its
@@ -301,54 +283,32 @@ def orchestrate(run_pass, n_jvms: int = N_JVMS, min_clean: int = MIN_CLEAN,
     headlines and the artifact carries ``"contended": true`` — the
     artifact can be captured hot, but never silently.
 
-    ``gate=None`` (the default) self-calibrates: after every pass the
-    gate is re-derived from the run's own canary floor (see
-    ``effective_gate``), and EVERY pass is re-classified under the
-    final gate — an early pass stamped before a quieter floor was
-    observed gets honestly re-flagged. Pass a number to pin an absolute
-    gate (tests; forensic re-reads of old artifacts).
-
     Pure orchestration (no Spark, no clock beyond what run_pass does) so
-    tests can drive it with synthetic passes — including the pinned
-    busy-loop contention-spike test."""
-    fixed_gate = gate
+    tests can drive it with synthetic passes."""
     passes: list[dict] = []
     while len(passes) < max_jvms:
         passes.append(run_pass())
-        gate = fixed_gate if fixed_gate is not None else effective_gate(passes)
         bw_gate = effective_bw_gate(passes)
-        clean = [d for d in passes if pass_is_clean(d, gate, bw_gate)]
+        clean = [d for d in passes if pass_is_clean(d, bw_gate)]
         if len(passes) >= n_jvms and len(clean) >= min_clean:
             break
         # chronic-load short-circuit: when the quota pass count is done
         # and NOT ONE pass was clean, the contention is steady, not
         # bursty — one extra probe pass is allowed, then retrying is
-        # wasted wall (measured: a steadily-loaded host reads canary
-        # 0.41-0.66 on all six passes; the extra three bought nothing
-        # but ~4.5 min). Bursty contention (some passes clean) still
-        # retries to max_jvms chasing the min_clean quota.
+        # wasted wall (measured: a steadily-loaded host read hot on all
+        # six passes; the extra three bought nothing but ~4.5 min).
+        # Bursty contention (some passes clean) still retries to
+        # max_jvms chasing the min_clean quota.
         if len(passes) >= n_jvms + 1 and not clean:
             break
-    gate = fixed_gate if fixed_gate is not None else effective_gate(passes)
-    bw_gate = effective_bw_gate(passes)
-    clean = [d for d in passes if pass_is_clean(d, gate, bw_gate)]
     contended = not clean
     if clean:
         ranked = sorted(clean, key=lambda d: d["value"])
         headline = ranked[(len(ranked) - 1) // 2]  # lower median
     else:
-        # least-contended pass: smallest worst-case canary stamp,
-        # fastest suite as the tie-break
-        headline = min(
-            passes,
-            key=lambda d: (
-                max(
-                    d.get("canary_before", {}).get("canary_32p_s", float("inf")),
-                    d.get("canary_after", {}).get("canary_32p_s", float("inf")),
-                ),
-                d["value"],
-            ),
-        )
+        # least-contended pass: largest worst-case share, fastest suite
+        # as the tie-break
+        headline = max(passes, key=lambda d: (_worst_share(d), -d["value"]))
     totals = sorted(d["value"] for d in (clean or passes))
     out = dict(headline)
     out.update(
@@ -357,9 +317,12 @@ def orchestrate(run_pass, n_jvms: int = N_JVMS, min_clean: int = MIN_CLEAN,
                 {
                     "value": d["value"],
                     "records_per_sec": d.get("records_per_sec"),
+                    "queries": d.get("queries"),
+                    "chain_retried": d.get("chain_retried"),
+                    "steal_share": d.get("steal_share"),
                     "canary_before": d.get("canary_before"),
                     "canary_after": d.get("canary_after"),
-                    "clean": pass_is_clean(d, gate, bw_gate),
+                    "clean": pass_is_clean(d, bw_gate),
                 }
                 for d in passes
             ],
@@ -373,11 +336,14 @@ def orchestrate(run_pass, n_jvms: int = N_JVMS, min_clean: int = MIN_CLEAN,
             "n_clean": len(clean),
             "suite_retried": len(passes) > n_jvms,
             "contended": contended,
-            "canary_gate_32p_s": gate,
-            "canary_gate_mode": "fixed" if fixed_gate is not None else "self-calibrated",
-            "canary_floor_32p_s": run_floor_32p(passes),
-            "canary_relative_factor": CANARY_RELATIVE_FACTOR,
-            "canary_chronic_32p_s": CANARY_CHRONIC_32P_S,
+            "canary_gate_mode": "share",
+            "canary_min_share": CANARY_MIN_SHARE,
+            # keys of the wall-relative CPU gate the share replaced,
+            # kept so every artifact carries one key set
+            "canary_gate_32p_s": None,
+            "canary_floor_32p_s": None,
+            "canary_relative_factor": None,
+            "canary_chronic_32p_s": None,
             "canary_bw_gate_s": bw_gate,
             "canary_bw_floor_s": run_floor_bw(passes),
             "canary_bw_relative_factor": CANARY_BW_RELATIVE_FACTOR,
@@ -442,10 +408,11 @@ def run_suite() -> dict:
     canary. The orchestrator spawns this via `bench.py --single`; local
     iteration calls it directly."""
     from baker_spark.queries import all_queries
-    from baker_spark.session import get_spark
+    from baker_spark.session import default_parallelism, get_spark
     from baker_spark.sources.tables import load_table
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    host_before = cpu_times()
     canary_before = cpu_canary()
     spark = get_spark("baker_spark_bench")
     try:
@@ -462,15 +429,12 @@ def run_suite() -> dict:
 
     n_lineitem = load_table(spark, sf_dir, "lineitem").count()
     runs = _chain_runs(spark, sf_dir)
-    chain_retried = False
-    if canary_before["canary_32p_s"] > CANARY_CHRONIC_32P_S:
-        # clearly-hot capture: give the host one chance to quiet down,
-        # keep the honest union of both passes (min() picks the best
-        # either way). First-line defense only — the orchestrator's
-        # whole-pass relative gate is the real one; this triggers on the
-        # absolute chronic ceiling (a per-pass trigger can't know the
-        # run floor yet) and just salvages a transiently-hot pass.
-        chain_retried = True
+    chain_retried = not share_ok(canary_before)
+    if chain_retried:
+        # a pass that starts on a busy host gives it one chance to quiet
+        # down: a fresh before stamp and a second set of chain runs,
+        # keeping the union (min() picks the best either way). The
+        # orchestrator still judges the whole pass on its stamps.
         canary_before = cpu_canary()
         runs = runs + _chain_runs(spark, sf_dir)
     all_runs["baker_filter_chain"] = runs
@@ -488,6 +452,7 @@ def run_suite() -> dict:
 
     spark.stop()
     canary_after = cpu_canary()
+    steal = steal_share(host_before, cpu_times())
     total = round(sum(timings.values()), 3)
     return {
         "metric": "headline_suite_wall_seconds",
@@ -497,8 +462,9 @@ def run_suite() -> dict:
         "runs": all_runs,
         "sf": sf,
         "records_per_sec": records_per_sec,
-        "cpus": int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4)),
+        "cpus": default_parallelism(),
         "chain_retried": chain_retried,
+        "steal_share": None if steal is None else round(steal, 4),
         "canary_before": canary_before,
         "canary_after": canary_after,
         # back-compat stamps (rounds 7-11 artifacts carried exactly one
@@ -508,8 +474,7 @@ def run_suite() -> dict:
 
 
 def _spawn_pass() -> dict:
-    """One fresh-JVM suite pass via subprocess — the same isolation the
-    per-round driver and tools/bench_variance.py measure."""
+    """One fresh-JVM suite pass via subprocess."""
     proc = subprocess.run(
         [sys.executable, os.path.abspath(__file__), "--single"],
         capture_output=True,
@@ -523,17 +488,59 @@ def _spawn_pass() -> dict:
     doc = json.loads(proc.stdout.strip().splitlines()[-1])
     sys.stderr.write(
         f"bench pass: total={doc['value']}s rec/s={doc['records_per_sec']}"
-        f" canary32p={doc['canary_before']['canary_32p_s']}"
-        f"->{doc['canary_after']['canary_32p_s']}\n"
+        f" share={doc['canary_before']['canary_share']}"
+        f"->{doc['canary_after']['canary_share']} steal={doc['steal_share']}\n"
     )
     return doc
 
 
+def _clean_range(doc: dict, name: str) -> str:
+    """min-max of one query over an artifact's clean passes."""
+    vals = [p["queries"][name] for p in doc.get("suite_passes", [])
+            if p.get("clean") and name in (p.get("queries") or {})]
+    return f"{min(vals):.3f}-{max(vals):.3f}" if vals else "?"
+
+
+def compare(path_a: str, path_b: str) -> None:
+    """`bench.py --compare A.json B.json`: suite and per-query deltas
+    between two bench artifacts, each headline next to its worst
+    canary_share and each query next to its range over the artifact's clean passes."""
+    docs = []
+    for path in (path_a, path_b):
+        with open(path) as fh:
+            doc = json.load(fh)
+        docs.append(doc.get("parsed", doc))  # BENCH_r*.json wrap the line in "parsed"
+    print("| artifact | suite | worst canary_share | envelope min/median/max | clean |")
+    print("|---|---|---|---|---|")
+    for path, d in zip((path_a, path_b), docs):
+        env = d.get("envelope")
+        env = f"{env['min']}/{env['median']}/{env['max']}" if env else "?"
+        # artifacts older than the share carry none
+        share = f"{_worst_share(d):.2f}" if "canary_share" in d.get("canary_before", {}) else "?"
+        print(f"| {os.path.basename(path)} | {d['value']:.3f}s | {share} "
+              f"| {env} | {d.get('n_clean', '?')}/{d.get('n_passes', '?')} |")
+    a, b = docs
+    print()
+    print("| query | A | A clean range | B | B clean range | delta |")
+    print("|---|---|---|---|---|---|")
+    for name, va in a.get("queries", {}).items():
+        vb = b.get("queries", {}).get(name)
+        if vb is None:
+            continue
+        print(f"| {name} | {va:.3f} | {_clean_range(a, name)} | {vb:.3f} "
+              f"| {_clean_range(b, name)} | {(vb / va - 1) * 100:+.0f}% |")
+
+
 def main() -> None:
-    if "--single" in sys.argv[1:]:
+    args = sys.argv[1:]
+    if args == ["--single"]:
         print(json.dumps(run_suite()))
-        return
-    print(json.dumps(orchestrate(_spawn_pass)))
+    elif len(args) == 3 and args[0] == "--compare":
+        compare(args[1], args[2])
+    elif not args:
+        print(json.dumps(orchestrate(_spawn_pass)))
+    else:
+        sys.exit("usage: bench.py [--single | --compare A.json B.json]")
 
 
 if __name__ == "__main__":

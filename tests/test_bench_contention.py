@@ -1,12 +1,12 @@
 """Measurement-integrity tests for the bench orchestrator (VERDICT r11
 next-round #1): the official BENCH_r{N}.json artifact must not be
 capturable under host contention without flagging and retrying itself.
-Round 11's artifact carried canary_32p 0.418s with `chain_retried:
-false` and headlined a 2.11x-vs-baseline suite while a same-commit idle
-re-run measured 1.29x — these tests pin the orchestrator shape that
-makes that impossible: before+after canaries per suite pass, whole-suite
-retry while clean passes are short of quota, median-of-clean headline,
-and an explicit `contended` flag when the budget exhausts hot."""
+Round 11's artifact headlined a 2.11x-vs-baseline suite while a
+same-commit idle re-run measured 1.29x — these tests pin the
+orchestrator shape that makes that impossible: before+after canaries per
+suite pass, a per-stamp CPU-share gate, whole-suite retry while clean
+passes are short of quota, median-of-clean headline, and an explicit
+`contended` flag when the budget exhausts hot."""
 
 from __future__ import annotations
 
@@ -14,22 +14,28 @@ import subprocess
 import sys
 
 import bench
+from baker_spark.session import default_parallelism
 
 
-def _pass(total: float, c_before: float, c_after: float, rps: int = 400_000) -> dict:
+def _stamp(share: float, wall: float = 0.56) -> dict:
+    return {"canary_1p_s": 0.3, "canary_32p_s": wall, "canary_width": 4, "canary_share": share}
+
+
+def _pass(total: float, s_before: float, s_after: float, wall: float = 0.56) -> dict:
     return {
         "metric": "headline_suite_wall_seconds",
         "value": total,
         "unit": "sec",
         "queries": {"q": total},
-        "records_per_sec": rps,
-        "canary_before": {"canary_1p_s": 0.13, "canary_32p_s": c_before},
-        "canary_after": {"canary_1p_s": 0.13, "canary_32p_s": c_after},
+        "records_per_sec": 400_000,
+        "steal_share": 0.02,
+        "canary_before": _stamp(s_before, wall),
+        "canary_after": _stamp(s_after, wall),
     }
 
 
-CLEAN = 0.31  # idle calibration (bench.py gate comment)
-HOT = 0.60
+CLEAN = 0.88  # idle median (bench.CANARY_MIN_SHARE comment)
+HOT = 0.45  # four busy-loop co-processes on four cores
 
 
 def test_all_clean_headlines_median_no_retry():
@@ -41,74 +47,26 @@ def test_all_clean_headlines_median_no_retry():
     assert out["envelope"] == {"min": 9.0, "median": 9.3, "max": 9.6, "n": 3}
     # headline pass is reported verbatim: value == sum(queries)
     assert sum(out["queries"].values()) == out["value"]
-    # round-13 gate provenance keys
-    assert out["canary_gate_mode"] == "self-calibrated"
-    assert out["canary_floor_32p_s"] == CLEAN
-    assert out["canary_gate_32p_s"] == round(CLEAN * bench.CANARY_RELATIVE_FACTOR, 4)
+    # every pass keeps its per-query times and steal share
+    assert [p["queries"] for p in out["suite_passes"]] == [{"q": 9.3}, {"q": 9.0}, {"q": 9.6}]
+    assert all(p["steal_share"] == 0.02 for p in out["suite_passes"])
+    # gate provenance: the share gate, and the retired wall-gate keys
+    # present but null
+    assert out["canary_gate_mode"] == "share"
+    assert out["canary_min_share"] == bench.CANARY_MIN_SHARE
+    for key in ("canary_gate_32p_s", "canary_floor_32p_s", "canary_relative_factor",
+                "canary_chronic_32p_s"):
+        assert key in out and out[key] is None
 
 
-def test_drifted_idle_floor_reads_clean():
-    """The r12 failure mode this round fixes: the container's idle floor
-    drifted to ~0.40-0.43, above the hard-coded 0.40 gate, so an idle
-    host's best-ever passes carried n_clean=0 and the median-of-clean
-    headline never engaged. Under the relative gate the run's own floor
-    calibrates it: stamps clustered within 1.25x of their min are
-    clean."""
-    seq = iter(
-        [_pass(9.5, 0.401, 0.431), _pass(9.6, 0.413, 0.429), _pass(9.5, 0.412, 0.432)]
-    )
+def test_slow_idle_host_reads_clean():
+    """The failure the share gate fixes: a 4-core host's wide canary wall
+    (4.0-4.3 s at 32 processes) sat far above every absolute wall
+    ceiling, so idle passes read contended. The share divides the wall
+    out: long walls at an idle share are clean."""
+    seq = iter([_pass(60.0 + i, CLEAN, CLEAN, wall=4.3) for i in range(3)])
     out = bench.orchestrate(lambda: next(seq), n_jvms=3, min_clean=2, max_jvms=6)
     assert out["n_clean"] == 3 and not out["contended"] and not out["suite_retried"]
-    assert out["canary_floor_32p_s"] == 0.401
-    assert out["canary_gate_32p_s"] == round(0.401 * bench.CANARY_RELATIVE_FACTOR, 4)
-    # and the OLD absolute gate, pinned explicitly, reproduces the r12
-    # artifact's n_clean=0 — the fixed-gate mode stays available for
-    # forensic re-reads of old artifacts
-    seq = iter(
-        [_pass(9.5, 0.401, 0.431), _pass(9.6, 0.413, 0.429), _pass(9.5, 0.412, 0.432),
-         _pass(9.6, 0.41, 0.42)]
-    )
-    old = bench.orchestrate(lambda: next(seq), n_jvms=3, min_clean=2, max_jvms=6, gate=0.40)
-    assert old["n_clean"] == 0 and old["contended"]
-    assert old["canary_gate_mode"] == "fixed" and old["canary_gate_32p_s"] == 0.40
-
-
-def test_spike_relative_to_drifted_floor_is_caught():
-    # a burst that would have hidden UNDER the old chronic ceiling
-    # (0.53 < 0.55) is contended relative to the run's 0.41 floor
-    # (gate = 0.41 * 1.25 = 0.5125)
-    seq = iter(
-        [_pass(12.0, 0.41, 0.53), _pass(9.4, 0.41, 0.42), _pass(9.5, 0.42, 0.43),
-         _pass(9.45, 0.41, 0.42)]
-    )
-    out = bench.orchestrate(lambda: next(seq), n_jvms=3, min_clean=3, max_jvms=6)
-    assert not out["suite_passes"][0]["clean"]
-    assert out["suite_retried"] and out["n_clean"] == 3 and not out["contended"]
-    assert out["value"] in (9.4, 9.45, 9.5)
-
-
-def test_chronic_ceiling_cannot_self_calibrate_away():
-    # a host that is EQUALLY hot on every pass lifts its own floor, but
-    # the absolute chronic ceiling (round-9's measured hot capture)
-    # still reads it contended — steady heavy load must not launder
-    # itself into a clean artifact
-    seq = iter([_pass(12.0 + i / 10, 0.58, 0.60) for i in range(6)])
-    out = bench.orchestrate(lambda: next(seq), n_jvms=3, min_clean=2, max_jvms=6)
-    assert out["contended"] and out["n_clean"] == 0
-    assert out["canary_gate_32p_s"] == bench.CANARY_CHRONIC_32P_S
-
-
-def test_early_pass_reclassified_under_final_floor():
-    # pass 1 lands at 0.52 before any quieter pass exists (momentary
-    # gate = chronic 0.55 -> reads clean); once 0.40 passes establish
-    # the real floor, the final classification re-flags it contended
-    seq = iter(
-        [_pass(11.0, 0.52, 0.52), _pass(9.2, 0.40, 0.40), _pass(9.0, 0.40, 0.41)]
-    )
-    out = bench.orchestrate(lambda: next(seq), n_jvms=3, min_clean=2, max_jvms=6)
-    flags = [p["clean"] for p in out["suite_passes"]]
-    assert flags == [False, True, True]
-    assert out["value"] in (9.0, 9.2) and not out["contended"]
 
 
 def test_contended_passes_trigger_whole_suite_retry():
@@ -117,7 +75,7 @@ def test_contended_passes_trigger_whole_suite_retry():
     # clean quota is met, and the hot passes must not headline.
     seq = iter(
         [
-            _pass(12.8, 0.418, 0.44),  # r11's exact hot shape: slow suite, hot canary
+            _pass(12.8, 0.60, 0.62),  # just under the gate: slow suite, lost cores
             _pass(12.5, HOT, HOT),
             _pass(9.1, CLEAN, CLEAN),
             _pass(9.3, CLEAN, CLEAN),
@@ -142,14 +100,13 @@ def test_mid_suite_spike_caught_by_after_stamp():
 
 
 def test_chronic_load_short_circuits_flags_contended_least_hot_headlines():
-    # steady contention ABOVE the chronic ceiling: zero clean passes
-    # after the quota count + one probe pass -> stop (retries can't find
-    # a window that isn't there), flag contended, headline the least-hot
-    # pass
-    seq = iter([_pass(12.0 + i / 10, 0.56 + i / 100, 0.56) for i in range(6)])
+    # steady contention: zero clean passes after the quota count + one
+    # probe pass -> stop (retries can't find a window that isn't
+    # there), flag contended, headline the least-hot pass
+    seq = iter([_pass(12.0 + i / 10, HOT - i / 100, HOT) for i in range(6)])
     out = bench.orchestrate(lambda: next(seq), n_jvms=3, min_clean=2, max_jvms=6)
     assert out["contended"] and out["n_clean"] == 0 and out["n_passes"] == 4
-    assert out["value"] == 12.0  # least-contended pass (smallest worst canary)
+    assert out["value"] == 12.0  # least-contended pass (largest worst share)
 
 
 def test_bursty_load_still_retries_to_quota():
@@ -170,21 +127,42 @@ def test_bursty_load_still_retries_to_quota():
 
 
 def test_legacy_single_stamp_doc_is_never_clean():
-    # rounds 7-11 artifacts carry one pre-run canary only; they must not
-    # pass the clean classifier even with a low stamp and a lax gate
-    assert not bench.pass_is_clean({"value": 9.0, "canary_32p_s": 0.30}, gate=1.0)
+    # rounds 7-11 artifacts carry one pre-run canary only, and rounds
+    # 12-14 wall stamps without a share; neither passes the classifier
+    assert not bench.pass_is_clean({"value": 9.0, "canary_32p_s": 0.30})
+    walls_only = {"canary_1p_s": 0.13, "canary_32p_s": 0.30}
+    assert not bench.pass_is_clean(
+        {"value": 9.0, "canary_before": walls_only, "canary_after": walls_only}
+    )
+
+
+def test_cpu_canary_starts_one_child_per_cpu(monkeypatch):
+    """The wide stamp is $SPARK_GRAFT_CPUS wide, not a fixed 32."""
+    started = []
+
+    class FakePopen:
+        def __init__(self, args, **kwargs):
+            started.append(args)
+
+        def wait(self):
+            return 0
+
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    monkeypatch.setattr(bench.subprocess, "Popen", FakePopen)
+    stamp = bench.cpu_canary()
+    assert len(started) == 3 and stamp["canary_width"] == 3
+    assert all(a[0] == sys.executable for a in started)
 
 
 def test_busy_loop_contention_spike_trips_gate_and_retry():
-    """The physical leg: a synthetic contention spike (busy-loop
-    co-processes oversubscribing all cores) must stretch the REAL
-    cpu_canary past even the absolute CHRONIC ceiling (the laxest gate
-    the relative classifier can ever apply), and a suite pass stamped
-    under the spike must trigger the orchestrator's retry path."""
+    """The physical leg: busy-loop co-processes oversubscribing the
+    requested cores twice over must pull the REAL canary_share under
+    CANARY_MIN_SHARE, and a suite pass stamped under the spike must
+    trigger the orchestrator's retry path."""
     code = "while True:\n pass"
     spin = [
         subprocess.Popen([sys.executable, "-c", code])
-        for _ in range(2 * (len(__import__("os").sched_getaffinity(0)) or 32))
+        for _ in range(2 * default_parallelism())
     ]
     try:
         hot = bench.cpu_canary()
@@ -193,12 +171,13 @@ def test_busy_loop_contention_spike_trips_gate_and_retry():
             p.kill()
         for p in spin:
             p.wait()
-    assert hot["canary_32p_s"] > bench.CANARY_CHRONIC_32P_S, hot
+    assert hot["canary_share"] < bench.CANARY_MIN_SHARE, hot
+    assert not bench.share_ok(hot)
     # a pass stamped with the measured hot canary is contended and the
     # orchestrator runs a replacement pass beyond the n_jvms quota
     seq = iter(
         [
-            _pass(12.0, hot["canary_32p_s"], hot["canary_32p_s"]),
+            _pass(12.0, hot["canary_share"], hot["canary_share"]),
             _pass(9.1, CLEAN, CLEAN),
             _pass(9.2, CLEAN, CLEAN),
         ]
@@ -208,8 +187,8 @@ def test_busy_loop_contention_spike_trips_gate_and_retry():
     assert out["n_passes"] == 3 and out["value"] in (9.1, 9.2)
 
 
-def _bw_pass(total: float, c: float, bw_before: float, bw_after: float) -> dict:
-    doc = _pass(total, c, c)
+def _bw_pass(total: float, share: float, bw_before: float, bw_after: float) -> dict:
+    doc = _pass(total, share, share)
     doc["canary_before"]["canary_bw_s"] = bw_before
     doc["canary_after"]["canary_bw_s"] = bw_after
     return doc
@@ -236,13 +215,11 @@ def test_bandwidth_spike_with_clean_cpu_stamps_is_caught():
 
 
 def test_steady_bandwidth_load_lifts_bw_floor_and_reads_clean():
-    """Same residual blind window as the CPU gate, stated honestly:
-    bandwidth load that is EQUALLY heavy on every stamp lifts the
-    run's own bandwidth floor and self-calibrates clean. No absolute
-    bandwidth ceiling exists yet (first round carrying the stamp);
-    the absolute values are retained per pass for the cross-round
-    comparison that catches this, and for a future calibrated
-    ceiling."""
+    """The bandwidth gate's residual blind window, stated honestly:
+    bandwidth load that is EQUALLY heavy on every stamp lifts the run's
+    own bandwidth floor and self-calibrates clean. No absolute
+    bandwidth ceiling exists yet; the absolute values are retained per
+    pass for the cross-round comparison that catches this."""
     seq = iter([_bw_pass(12.0 + i / 10, CLEAN, 0.55, 0.56) for i in range(3)])
     out = bench.orchestrate(lambda: next(seq), n_jvms=3, min_clean=2, max_jvms=6)
     assert not out["contended"] and out["n_clean"] == 3
@@ -250,9 +227,9 @@ def test_steady_bandwidth_load_lifts_bw_floor_and_reads_clean():
 
 
 def test_passes_without_bw_stamps_judged_on_cpu_alone():
-    """Legacy/synthetic docs carry no bandwidth stamp: the bw criterion
-    must not fail them (forensic re-reads of r07-r12 artifacts), and a
-    mixed run takes its bw floor from the stamped passes only."""
+    """Synthetic docs carry no bandwidth stamp: the bw criterion must
+    not fail them, and a mixed run takes its bw floor from the stamped
+    passes only."""
     seq = iter([_pass(9.3, CLEAN, CLEAN), _bw_pass(9.0, CLEAN, 0.2, 0.2),
                 _pass(9.6, CLEAN, CLEAN)])
     out = bench.orchestrate(lambda: next(seq), n_jvms=3, min_clean=2, max_jvms=6)

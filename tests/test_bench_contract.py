@@ -7,6 +7,7 @@ import sys
 
 
 def test_bench_emits_contract_json():
+    root = os.path.join(os.path.dirname(__file__), "..")
     env = dict(
         os.environ,
         SPARK_GRAFT_SF_DIR="/root/testdata/sf0.001",
@@ -23,7 +24,7 @@ def test_bench_emits_contract_json():
     )
     proc = subprocess.run(
         [sys.executable, "bench.py"],
-        cwd=os.path.join(os.path.dirname(__file__), ".."),
+        cwd=root,
         capture_output=True,
         text=True,
         timeout=300,
@@ -37,11 +38,23 @@ def test_bench_emits_contract_json():
     assert doc["records_per_sec"] > 0
     assert set(doc["queries"]) >= {"baker_filter_chain", "q1_pricing_summary", "dp_corpus_pipeline"}
     assert all(v >= 0 for v in doc["queries"].values())
-    # canary stamps + the contention gate's retry flag (bench.py
-    # CANARY_GATE): the recorded headline must say whether the chain was
-    # re-run after a hot first capture
+    # canary stamps + the contention gate's retry flag: the recorded
+    # headline must say whether the chain was re-run after a hot first
+    # capture
     assert doc["canary_1p_s"] > 0 and doc["canary_32p_s"] > 0
+    assert doc["canary_width"] == 4 and 0 < doc["canary_share"]
+    assert doc["canary_gate_mode"] == "share"
     assert isinstance(doc["chain_retried"], bool)
+    for p in doc["suite_passes"]:
+        assert "steal_share" in p and p["queries"]
+        for side in ("canary_before", "canary_after"):
+            assert p[side]["canary_width"] == 4 and "canary_share" in p[side]
+    # every key of the last 32-core artifact survives; the quota note is
+    # written only when the clean-pass quota is unmet
+    with open(os.path.join(root, "BENCH_r14.json")) as fh:
+        r14 = json.load(fh)["parsed"]
+    assert set(r14) - set(doc) <= {"clean_quota_note"}
+    assert ("clean_quota_note" in doc) == (doc["n_clean"] < 1)
     # chain passes run N_RUNS+2 each (headline stability); a retried
     # chain carries both passes' runs
     n_chain = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "4")) + 2

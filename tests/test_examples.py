@@ -169,7 +169,7 @@ def test_cli_toml_surface_matches_compiler_dispatch():
         "SQS": {"FakeDir": "/tmp/queue"},
         "Kinesis": {"Stream": "s"},
         "KCL": {"Stream": "s", "AppName": "app"},
-        "TCP": {},
+        "TCP": {"SpoolDir": "/tmp/spool"},
     }
     for n in STREAMING_INPUT_NAMES:
         _build_streaming_input({"name": n, "config": stream_cfg[n]}, ["a"], ",")

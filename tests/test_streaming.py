@@ -6,6 +6,7 @@ import gzip
 import json
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from baker_spark import operators as ops
@@ -215,10 +216,10 @@ fields=["id","etype"]
 
 
 def test_toml_daemon_kinesis_compiles(spark):
-    """Kinesis/KCL/TCP daemon TOMLs compile. Kinesis and KCL compile to
-    the jar-free ``bakerkinesis`` Python data source."""
+    """Kinesis/KCL daemon TOMLs compile to the jar-free ``bakerkinesis``
+    Python data source; a TCP daemon TOML without SpoolDir fails."""
     from baker_spark.plans import compile_toml
-    from baker_spark.streaming.connectors import KinesisPythonSource, SocketSource
+    from baker_spark.streaming.connectors import KinesisPythonSource
     from baker_spark.streaming.daemon import StreamingPipeline
 
     kcl_toml = """
@@ -235,9 +236,11 @@ InitialPosition="TRIM_HORIZON"
     assert isinstance(pipe.source, KinesisPythonSource)
     assert pipe.source.initial_position == "TRIM_HORIZON"
 
-    tcp = compile_toml('[input]\nname="TCP"\n[input.config]\nListenAddress=":7100"\n')
-    assert isinstance(tcp.source, SocketSource)
-    assert tcp.source.port == 7100
+    # TCP needs its SpoolDir, with or without [fields]: the plaintext
+    # socket source it once fell back to is retired
+    for fields in ("", '[fields]\nnames=["a"]\n'):
+        with pytest.raises(ValueError, match="SpoolDir is required"):
+            compile_toml(fields + '[input]\nname="TCP"\n[input.config]\nListenAddress=":7100"\n')
 
 
 def test_checkpoint_resume_no_reprocessing(spark, tmp_path):

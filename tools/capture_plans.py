@@ -5,8 +5,14 @@ Usage: python tools/capture_plans.py <tag> <suffix> [query ...]
   e.g. python tools/capture_plans.py r13 before
        python tools/capture_plans.py r13 after dp_exact_substring_dedup
 
-Driver-side only (no query execution): builds each DataFrame and prints
-the formatted physical plan, so it is safe to run alongside other work.
+Builds each DataFrame and writes its formatted physical plan; the
+queries themselves are not executed. Some builders do run Spark jobs
+while building (index builds write parquet, k-means training collects
+centroids, clustering checkpoints, the streaming rows run their streams
+to completion): dp_ann_search_indexed, dp_ann_search_indexed_lsh,
+dp_dedup_clusters, dp_embedding_dedup, dp_ivfpq_topk, dp_kmeans_train,
+dp_lsh_verified_pairs, dp_pq_adc_topk and the dp_streaming_* rows.
+Capturing those costs Spark work and disturbs a timed run beside it.
 """
 
 from __future__ import annotations

@@ -9,6 +9,8 @@ from baker_spark.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("BAKER_SPARK_TEST_SF_DIR", "/root/testdata/sf0.001")
 SF_DIR_ORACLE = os.environ.get("BAKER_SPARK_ORACLE_SF_DIR", "/root/testdata/sf0.01")
+# the e2e fixtures, goldens and topologies (tests/fixtures/make_fixtures.py)
+FIXTURES = os.path.join(os.path.dirname(os.path.abspath(__file__)), "fixtures")
 
 # Dummy AWS creds for the moto wire-level tests (test_moto_aws.py):
 # boto3 clients sign every request, including ones aimed at a local

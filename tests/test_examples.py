@@ -1,5 +1,7 @@
 """Every example topology compiles and runs (FileWriter paths are
-redirected into tmp)."""
+redirected into tmp; the repo-relative tests/fixtures/ inputs are
+anchored at the repo root, so the run does not depend on the working
+directory)."""
 
 import glob
 import os
@@ -7,14 +9,20 @@ import os
 import pytest
 
 from baker_spark.plans import compile_toml
+from tests.conftest import FIXTURES
 
-EXAMPLES = sorted(glob.glob(os.path.join(os.path.dirname(__file__), "..", "examples", "*.toml")))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+EXAMPLES = sorted(glob.glob(os.path.join(REPO, "examples", "*.toml")))
+
+
+def _load_example(path, tmp_path):
+    text = open(path).read().replace("_out/", f"{tmp_path}/")
+    return text.replace('"tests/fixtures/', f'"{REPO}/tests/fixtures/')
 
 
 @pytest.mark.parametrize("path", EXAMPLES, ids=[os.path.basename(p) for p in EXAMPLES])
 def test_example_runs(spark, tmp_path, path):
-    text = open(path).read().replace("_out/", f"{tmp_path}/")
-    pipeline = compile_toml(text)
+    pipeline = compile_toml(_load_example(path, tmp_path))
     result = pipeline.run(spark)
     if isinstance(result, str):  # FileWriter output dir
         parts = [f for f in os.listdir(result) if f.endswith(".csv.gz")]
@@ -27,8 +35,7 @@ def test_sharding_colocates_keys(spark, tmp_path):
     """Same city -> same output file (topology.go:341-347 guarantee)."""
     import gzip
 
-    text = open(os.path.join(os.path.dirname(__file__), "..", "examples", "sharding.toml")).read()
-    pipeline = compile_toml(text.replace("_out/", f"{tmp_path}/"))
+    pipeline = compile_toml(_load_example(os.path.join(REPO, "examples", "sharding.toml"), tmp_path))
     out_dir = pipeline.run(spark)
     city_to_files: dict[str, set] = {}
     for name in os.listdir(out_dir):
@@ -56,7 +63,7 @@ names=["timestamp","source","target"]
 [input]
 name="List"
 [input.config]
-files=["/root/reference/testdata/input.csv.zst"]
+files=["{FIXTURES}/input.csv.zst"]
 [[filter]]
 name="NotNull"
 [filter.config]
@@ -69,7 +76,7 @@ PathString="{tmp_path}/out/o.csv.gz"
     env = dict(os.environ, SPARK_GRAFT_CPUS="2")
     proc = subprocess.run(
         [_sys.executable, "-m", "baker_spark", "run", str(toml), "--cpus", "2"],
-        cwd=os.path.join(os.path.dirname(__file__), ".."),
+        cwd=REPO,
         capture_output=True,
         text=True,
         timeout=180,

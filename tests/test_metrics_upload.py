@@ -7,6 +7,7 @@ from pyspark.sql import Row
 from baker_spark import operators as ops
 from baker_spark.metrics import LogMetrics, StatsDumper, StatsdMetrics, collect_observations
 from baker_spark.sinks.upload import S3Upload
+from tests.conftest import FIXTURES
 
 
 def test_count_and_tag_observation(spark):
@@ -165,7 +166,7 @@ names=["a","b","c"]
 name="List"
 
     [input.config]
-    files=["/root/reference/testdata/input.csv.zst"]
+    files=["%s/input.csv.zst"]
 
 [metrics]
 name="datadog"
@@ -180,7 +181,7 @@ name="FileWriter"
 
     [output.config]
     PathString="%s/out.csv.gz"
-""" % (sock.getsockname()[1], tmp_path)
+""" % (FIXTURES, sock.getsockname()[1], tmp_path)
     p = compile_toml(toml_text)
     assert isinstance(p.metrics, DatadogMetrics)
     assert p.metrics.prefix == "custom."

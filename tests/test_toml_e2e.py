@@ -1,17 +1,18 @@
 """End-to-end TOML topology tests, mirroring the reference's golden e2e
-suite (/root/reference/e2e_test.go:20-86): run a TOML topology over the
-reference's own checked-in fixture and compare produced records.
-Comparison is order-insensitive (the reference doesn't guarantee global
-order with procs>1 either, /root/reference/config.go:47-53)."""
+suite (e2e_test.go:20-86): run a TOML topology over the 4-row ``logs3``
+zstd fixture in tests/fixtures/ (written by make_fixtures.py, FIXTURES.md
+§1) and compare produced records. Comparison is order-insensitive (the
+reference doesn't guarantee global order with procs>1 either,
+config.go:47-53)."""
 
 import gzip
 import json
 import os
 
 from baker_spark.plans import compile_toml
+from tests.conftest import FIXTURES
 
-# same topology as /root/reference/testdata/advanced_csv_example.toml,
-# reading the reference's own zstd fixture
+# same topology as the reference's testdata/advanced_csv_example.toml
 ADVANCED_TOML = """
 [fields]
 names=["timestamp","source","target"]
@@ -20,7 +21,7 @@ names=["timestamp","source","target"]
 name="List"
 
     [input.config]
-    files=["/root/reference/testdata/input.csv.zst"]
+    files=["{fixtures}/input.csv.zst"]
 
 [[filter]]
 name="ClauseFilter"
@@ -47,7 +48,7 @@ def _read_gz_dir(path):
 
 
 def test_advanced_csv_topology(spark, tmp_path):
-    pipeline = compile_toml(ADVANCED_TOML.format(out=tmp_path))
+    pipeline = compile_toml(ADVANCED_TOML.format(out=tmp_path, fixtures=FIXTURES))
     out_dir = pipeline.run(spark)
     # reference golden (advanced_csv.golden): the two rows matching the clause
     assert _read_gz_dir(out_dir) == [
@@ -69,14 +70,14 @@ target="^value3$"
 name="List"
 
     [input.config]
-    files=["/root/reference/testdata/input.csv.zst"]
+    files=["{fixtures}/input.csv.zst"]
 
 [output]
 name="FileWriter"
 
     [output.config]
     PathString="{out}/validated.csv.gz"
-""".format(out=tmp_path)
+""".format(out=tmp_path, fixtures=FIXTURES)
     pipeline = compile_toml(toml_text)
     out_dir = pipeline.run(spark)
     assert _read_gz_dir(out_dir) == [
@@ -95,7 +96,7 @@ names=["timestamp","source","target"]
 name="List"
 
     [input.config]
-    files=["/root/reference/testdata/input.csv.zst"]
+    files=["{fixtures}/input.csv.zst"]
 
 [output]
 name="FileWriter"
@@ -105,7 +106,7 @@ procs=2
 
     [output.config]
     PathString="{out}/sharded.csv.gz"
-""".format(out=tmp_path)
+""".format(out=tmp_path, fixtures=FIXTURES)
     out_dir = compile_toml(toml_text).run(spark)
     assert _read_gz_dir(out_dir) == sorted(
         ["value3,value2", "value3,value2", "value6,value2", "value3,value2"]
@@ -113,7 +114,7 @@ procs=2
 
 
 def test_separator_0x1e(spark, tmp_path):
-    # /root/reference/testdata/advanced_csv_example_0x1e.toml
+    # the reference's testdata/advanced_csv_example_0x1e.toml
     toml_text = """
 [csv]
 field_separator="\\u001e"
@@ -125,7 +126,7 @@ names=["timestamp","source","target"]
 name="List"
 
     [input.config]
-    files=["/root/reference/testdata/input.csv.0x1e.zst"]
+    files=["{fixtures}/input.csv.0x1e.zst"]
 
 [[filter]]
 name="ClauseFilter"
@@ -138,7 +139,7 @@ name="FileWriter"
 
     [output.config]
     PathString="{out}/0x1e.csv.gz"
-""".format(out=tmp_path)
+""".format(out=tmp_path, fixtures=FIXTURES)
     out_dir = compile_toml(toml_text).run(spark)
     sep = "\x1e"
     assert _read_gz_dir(out_dir) == sorted(
@@ -147,7 +148,7 @@ name="FileWriter"
 
 
 def test_env_var_expansion(spark, tmp_path):
-    os.environ["BAKER_TEST_INPUT"] = "/root/reference/testdata/input.csv.zst"
+    os.environ["BAKER_TEST_INPUT"] = f"{FIXTURES}/input.csv.zst"
     toml_text = """
 [fields]
 names=["timestamp","source","target"]
@@ -209,7 +210,7 @@ names=["source","value","target"]
 [input]
 name="List"
 [input.config]
-files=["/root/reference/testdata/input.csv.zst"]
+files=["{FIXTURES}/input.csv.zst"]
 [output]
 name="FileWriter"
 [output.config]
@@ -447,7 +448,7 @@ names=["a","b","c"]
 name="List"
 
     [input.config]
-    files=["/root/reference/testdata/input.csv.zst"]
+    files=["{fixtures}/input.csv.zst"]
 
 [output]
 name="FileWriter"
@@ -455,7 +456,7 @@ name="FileWriter"
     [output.config]
     PathString="{out}/rotated.csv.gz"
     RotateSize="1"
-""".format(out=tmp_path)
+""".format(out=tmp_path, fixtures=FIXTURES)
     out_dir = compile_toml(toml_text).run(spark)
     parts = [
         os.path.join(r, f)
@@ -483,7 +484,7 @@ names=["a","b","c"]
 name="List"
 
     [input.config]
-    files=["/root/reference/testdata/input.csv.zst"]
+    files=["{fixtures}/input.csv.zst"]
 
 [filterchain]
 procs=8
@@ -498,7 +499,7 @@ name="StringMatch"
 
 [output]
 name="Recorder"
-"""
+""".format(fixtures=FIXTURES)
     p = compile_toml(toml_text)
     assert p.chain_procs == 8
     df = p.dataframe(spark)
@@ -519,7 +520,7 @@ names=["a","b","c"]
 name="List"
 
     [input.config]
-    files=["/root/reference/testdata/input.csv.zst"]
+    files=["{fixtures}/input.csv.zst"]
 
 [[filter]]
 name="StringMatch"
@@ -535,7 +536,7 @@ name="FileWriter"
     [output.config]
     PathString="{out}/maybe_empty.csv.gz"
     DiscardEmptyFiles=true
-""".format(out=tmp_path)
+""".format(out=tmp_path, fixtures=FIXTURES)
     out_dir = compile_toml(toml_text).run(spark)
     parts = [
         f for r, _, fs in os.walk(out_dir) for f in fs if f.startswith("part-")
@@ -558,7 +559,7 @@ names=["a","b","c"]
 name="List"
 
     [input.config]
-    files=["/root/reference/testdata/input.csv.zst"]
+    files=["%s/input.csv.zst"]
 
 [output]
 name="SQLiteRaw"
@@ -570,7 +571,7 @@ name="SQLiteRaw"
     PostRun=["CREATE INDEX IF NOT EXISTS idx_a ON recs(a)"]
     Clear=true
     PageSize=8192
-""" % db
+""" % (FIXTURES, db)
     p = compile_toml(toml_text)
     p.run(spark)
     p.run(spark)  # Clear=true -> second run truncates, no duplication
@@ -600,14 +601,14 @@ names=["a","b","c"]
 name="List"
 
     [input.config]
-    files=["/root/reference/testdata/input.csv.zst"]
+    files=["{fixtures}/input.csv.zst"]
 
 [output]
 name="FileWriter"
 
     [output.config]
     PathString="{out}/out.csv.zst"
-""".format(out=tmp_path)
+""".format(out=tmp_path, fixtures=FIXTURES)
     out_dir = compile_toml(toml_text).run(spark)
     parts = [
         os.path.join(r, f)
@@ -640,7 +641,7 @@ names=["a","b","c"]
 name="List"
 
     [input.config]
-    files=["/root/reference/testdata/input.csv.zst"]
+    files=["{fixtures}/input.csv.zst"]
 
 [[filter]]
 name="StringMatch"
@@ -658,7 +659,7 @@ name="FileWriter"
     RotateSize="1"
     DiscardEmptyFiles=true
     ZstdCompressionLevel=1
-""".format(out=tmp_path)
+""".format(out=tmp_path, fixtures=FIXTURES)
     out_dir = compile_toml(toml_text).run(spark)
     parts = [
         f for r, _, fs in os.walk(out_dir) for f in fs if f.startswith("part-")
@@ -680,14 +681,14 @@ names=["a","b","c"]
 name="List"
 
     [input.config]
-    files=["/root/reference/testdata/input.csv.zst"]
+    files=["{fixtures}/input.csv.zst"]
 
 [output]
 name="FileWriter"
 
     [output.config]
     PathString="{out}/stage1.csv.zst"
-""".format(out=tmp_path)
+""".format(out=tmp_path, fixtures=FIXTURES)
     out_dir = compile_toml(write_toml).run(spark)
     parts = sorted(
         os.path.join(r, f)
@@ -848,7 +849,7 @@ names=["a","b","c"]
 name="List"
 
     [input.config]
-    files=["/root/reference/testdata/input.csv.zst"]
+    files=["{fixtures}/input.csv.zst"]
 
 [output]
 name="FileWriter"
@@ -856,7 +857,7 @@ name="FileWriter"
     [output.config]
     PathString="{out}/out.csv.zst"
     ZstdWindowLog=27
-""".format(out=tmp_path)
+""".format(out=tmp_path, fixtures=FIXTURES)
     plan = compile_toml(toml_text)
     assert plan.sink.zstd_window_log == 27
     out_dir = plan.run(spark)

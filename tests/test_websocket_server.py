@@ -14,6 +14,7 @@ from baker_spark.sinks.websocket_server import (
     accept_key,
     decode_frames,
 )
+from tests.conftest import FIXTURES
 
 
 class _Client:
@@ -136,7 +137,7 @@ def test_websocket_toml_topology(spark):
     :8080)."""
     from baker_spark.plans import compile_toml
 
-    toml_text = """
+    toml_text = f"""
 [fields]
 names=["a","b","c"]
 
@@ -144,7 +145,7 @@ names=["a","b","c"]
 name="List"
 
     [input.config]
-    files=["/root/reference/testdata/input.csv.zst"]
+    files=["{FIXTURES}/input.csv.zst"]
 
 [output]
 name="WebSocket"
@@ -177,7 +178,7 @@ def test_websocket_toml_compile_binds_no_port():
     plan-compile time, and sink.close() releases it."""
     from baker_spark.plans import compile_toml
 
-    toml_text = """
+    toml_text = f"""
 [fields]
 names=["a"]
 
@@ -185,7 +186,7 @@ names=["a"]
 name="List"
 
     [input.config]
-    files=["/root/reference/testdata/input.csv.zst"]
+    files=["{FIXTURES}/input.csv.zst"]
 
 [output]
 name="WebSocket"

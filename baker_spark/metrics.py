@@ -212,12 +212,20 @@ class StatsDumper:
         self.stop()
 
 
+#: trigger phases (keys of a progress's ``durationMs``) forwarded as
+#: ``batch_phase_ms`` histograms tagged ``phase:<name>``: the source's
+#: offset listing, the sink's write and the two checkpoint log writes,
+#: so an operator sees where a trigger's fixed cost goes
+BATCH_PHASES = ("latestOffset", "addBatch", "walCommit", "commitOffsets")
+
+
 class StreamingMetrics:
     """Daemon-mode per-batch stats export (the reference dumps stats
     every second in daemon topologies too, stats.go:197-218): a
     StreamingQueryListener forwarding each micro-batch's progress to a
-    MetricsClient — input rows, processing rate, batch duration — the
-    numbers the reference's one-line stats dump carries. Attach with
+    MetricsClient — input rows, processing rate, batch duration and its
+    ``BATCH_PHASES`` — the numbers the reference's one-line stats dump
+    carries, plus where a trigger's time went. Attach with
     ``spark.streams.addListener(StreamingMetrics(client).listener)``;
     detach with ``remove(spark)``."""
 
@@ -238,9 +246,16 @@ class StreamingMetrics:
                 outer.client.gauge(
                     "records_per_sec", float(p.processedRowsPerSecond or 0.0), tags
                 )
-                dur = (p.durationMs or {}).get("triggerExecution")
+                durations = p.durationMs or {}
+                dur = durations.get("triggerExecution")
                 if dur is not None:
                     outer.client.histogram("batch_duration_ms", float(dur), tags)
+                for phase in BATCH_PHASES:
+                    ms = durations.get(phase)
+                    if ms is not None:
+                        outer.client.histogram(
+                            "batch_phase_ms", float(ms), (tags or []) + [f"phase:{phase}"]
+                        )
 
             def onQueryIdle(self, event):
                 pass

@@ -415,22 +415,29 @@ class FileWriter:
         if partition_cols:
             writer = writer.partitionBy(*partition_cols)
         writer.text(self.path)
-        new_parts = self._rename_txt_parts(df.sparkSession, len(partition_cols))
+        jvm, fs, HPath = self._fs(df.sparkSession)
+        new_parts = self._rename_txt_parts(fs, HPath, len(partition_cols))
         if self.discard_empty_files:
-            self._discard_empty(df.sparkSession, new_parts)
+            self._discard_empty(jvm, fs, new_parts)
         return self.path
 
-    def _fs(self, spark, path_str: str):
-        """Hadoop FileSystem for this sink's path — the writer targets
-        whatever filesystem the URI names (local, s3a://, hdfs://), so
-        the post-write rename/discard steps must speak the same API, not
-        the driver's local os module (which silently no-ops on a remote
-        URI)."""
-        jvm = spark._jvm
-        jpath = jvm.org.apache.hadoop.fs.Path(path_str)
-        return jvm, jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    def _fs(self, spark):
+        """Hadoop FileSystem for this sink's path, with the JVM view and
+        the ``Path`` class — the writer targets whatever filesystem the
+        URI names (local, s3a://, hdfs://), so the post-write
+        rename/discard steps must speak the same API, not the driver's
+        local os module (which silently no-ops on a remote URI).
 
-    def _rename_txt_parts(self, spark, depth: int):
+        Resolved once per write and handed to both steps: each py4j
+        class lookup is several reflection round trips. Not cached
+        across writes, where a stopped session would leave a dead
+        handle."""
+        jvm = spark._jvm
+        HPath = jvm.org.apache.hadoop.fs.Path
+        fs = HPath(self.path).getFileSystem(spark._jsc.hadoopConfiguration())
+        return jvm, fs, HPath
+
+    def _rename_txt_parts(self, fs, HPath, depth: int):
         """Rename this write's ``part-*.txt[.gz]`` files to the sink's
         ``.csv[.gz]`` contract (the reference's PathString extension).
 
@@ -441,8 +448,6 @@ class FileWriter:
         In append mode the glob still enumerates every partition dir
         ever written (O(dirs), not O(files)); Hadoop's ChecksumFileSystem
         rename moves local ``.crc`` siblings along with the data file."""
-        jvm, fs = self._fs(spark, self.path)
-        HPath = jvm.org.apache.hadoop.fs.Path
         pattern = self.path.rstrip("/") + "/*" * depth + "/part-*.txt*"
         statuses = fs.globStatus(HPath(pattern))
         renamed = []
@@ -453,13 +458,12 @@ class FileWriter:
                 renamed.append(dst)
         return renamed
 
-    def _discard_empty(self, spark, jpaths) -> None:
+    def _discard_empty(self, jvm, fs, jpaths) -> None:
         """Remove zero-record parts (DiscardEmptyFiles,
         filewriter.go:97,273). A gzip/zstd part is never 0 bytes (frame
         header + trailer), so emptiness is one decompressed read of the
         first byte — streamed through the same Hadoop FileSystem the
         write used, so this works on remote URIs too."""
-        jvm, fs = self._fs(spark, self.path)
         for p in jpaths:
             try:
                 if self.compression == "gzip":

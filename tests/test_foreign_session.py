@@ -21,6 +21,11 @@ assert E.entry(spark).count() > 0
 for name in ["q_session_windows", "op_timestamprange", "dp_token_counts",
              "dp_pq_codes", "dp_semdedup", "dp_minhash_capped"]:
     assert qs[name](spark, sf).count() >= 0, name
+# the queries self-configured the bare session: its streaming
+# checkpoints now go through the pinned manager too
+from baker_spark.session import RUNTIME_CONFS
+key = "spark.sql.streaming.checkpointFileManagerClass"
+assert spark.conf.get(key) == RUNTIME_CONFS[key], spark.conf.get(key, None)
 print("FOREIGN_SESSION_OK")
 """
 

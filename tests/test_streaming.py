@@ -129,6 +129,52 @@ def test_foreach_batch_reuses_batch_sink(spark, tmp_path):
     assert isinstance(Nop(), object)  # batch sinks importable for streaming reuse
 
 
+def test_checkpoint_manager_keeps_the_overwrite_guard(spark, tmp_path):
+    """Streaming checkpoints go through Spark's FileSystem-based manager
+    (session.RUNTIME_CONFS), and it keeps what HDFSMetadataLog.add relies
+    on: an atomic create of an existing batch file raises Hadoop's
+    FileAlreadyExistsException and leaves the committed bytes, and the
+    log files keep their .crc siblings."""
+    from py4j.protocol import Py4JJavaError
+
+    from baker_spark.sinks.simple import Nop
+
+    src_dir = tmp_path / "ck_in"
+    src_dir.mkdir()
+    _write_csv(src_dir / "a.csv", ["1,x"])
+    ckpt = tmp_path / "ckpt"
+
+    pipe = StreamingPipeline(source=FileStreamSource(str(src_dir), fields=["id", "v"]))
+    q = pipe.start_foreach_batch(spark, Nop(), checkpoint_dir=str(ckpt))
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+
+    jvm = spark._jvm
+    HPath = jvm.org.apache.hadoop.fs.Path
+    conf = spark._jsparkSession.sessionState().newHadoopConf()
+    checkpointing = jvm.org.apache.spark.sql.execution.streaming.checkpointing
+    mgr = checkpointing.CheckpointFileManager.create(HPath(str(ckpt)), conf)
+    assert mgr.getClass().getName() == (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager"
+    )
+
+    batch = ckpt / "offsets" / "0"
+    committed = batch.read_bytes()
+    out = mgr.createAtomic(HPath(str(batch)), False)
+    out.write(bytearray(b"overwritten"))
+    with pytest.raises(Py4JJavaError) as err:
+        out.close()
+    already_exists = jvm.java.lang.Class.forName("org.apache.hadoop.fs.FileAlreadyExistsException")
+    assert already_exists.isInstance(err.value.java_exception)
+    assert batch.read_bytes() == committed
+
+    for log in ("offsets", "commits"):
+        assert (ckpt / log / ".0.crc").exists(), sorted(os.listdir(ckpt / log))
+
+
 def test_interval_join(spark, tmp_path):
     """Stream-stream interval join: purchase matches click within 60 s."""
     from pyspark.sql import functions as F
@@ -281,8 +327,9 @@ def test_checkpoint_resume_no_reprocessing(spark, tmp_path):
 def test_streaming_metrics_listener(spark, tmp_path):
     """Daemon topologies export per-batch stats like the reference's
     per-second dump (stats.go:197-218): a [metrics]-built client
-    receives records_read / records_per_sec / batch_duration_ms from the
-    StreamingQueryListener bridge."""
+    receives records_read / records_per_sec / batch_duration_ms and one
+    batch_phase_ms per trigger phase from the StreamingQueryListener
+    bridge."""
     from baker_spark.metrics import LogMetrics
 
     src_dir = tmp_path / "sm_in"
@@ -320,13 +367,19 @@ def test_streaming_metrics_listener(spark, tmp_path):
             # batch, so asserting right after the first records_read line
             # races the remaining appends (and a second batch's counts)
             if sum(read_counts()) == 3 and any(
-                "batch_duration_ms" in ln for ln in client.lines
+                "phase:commitOffsets" in ln for ln in client.lines
             ):
                 break
             _time.sleep(0.2)  # listener events deliver asynchronously
         assert sum(read_counts()) == 3, client.lines
         assert any(ln.startswith("gauge records_per_sec=") for ln in client.lines)
         assert any(ln.startswith("histogram batch_duration_ms=") for ln in client.lines)
+        # the trigger's phases, one tagged histogram each
+        for phase in ("latestOffset", "addBatch", "walCommit", "commitOffsets"):
+            assert any(
+                ln.startswith("histogram batch_phase_ms=") and f"'phase:{phase}'" in ln
+                for ln in client.lines
+            ), (phase, client.lines)
     finally:
         q.stop()
 

@@ -25,61 +25,24 @@ def _io_registry() -> dict[str, dict[str, type]]:
     """Inputs and outputs by TOML name — the `-help Input/Output`
     surface the reference builds from its component Descs.
 
-    The TOML sections list exactly the names the compiler's dispatch
-    accepts (toml_compiler.BATCH_INPUT_NAMES / STREAMING_INPUT_NAMES /
-    SINK_NAMES — a test keeps the mapping total both ways); components
-    usable only through the Python API are listed separately so `list`
-    never advertises a name `run` would reject."""
+    The TOML sections are the compiler's own component tables
+    (toml_compiler.BATCH_INPUTS / STREAMING_INPUTS / SINKS), so `list`
+    advertises exactly the names `run` accepts; components usable only
+    through the Python API are listed separately."""
     from baker_spark.datapipe.ingest import CorpusIngest
-    from baker_spark.plans.toml_compiler import (
-        BATCH_INPUT_NAMES,
-        SINK_NAMES,
-        STREAMING_INPUT_NAMES,
-    )
-    from baker_spark.sinks.dynamodb import DynamoDBWriter
-    from baker_spark.sinks.filewriter import FileWriter
-    from baker_spark.sinks.simple import Nop, OpLog, Recorder, WebSocketSink
-    from baker_spark.sinks.websocket_server import WebSocketBroadcastServer
-    from baker_spark.sinks.sqlite import SQLiteWriter
-    from baker_spark.sinks.stats import Stats
+    from baker_spark.plans.toml_compiler import BATCH_INPUTS, SINKS, STREAMING_INPUTS
     from baker_spark.sinks.upload import S3Upload
-    from baker_spark.sources.list_source import ListSource
-    from baker_spark.sources.structured import JsonLinesSource, ParquetSource
-    from baker_spark.streaming.connectors import KinesisPythonSource, KinesisStandinSource
-    from baker_spark.streaming.daemon import FileStreamSource, RateSource
-    from baker_spark.streaming.sqs_datasource import SQSSource
-    from baker_spark.streaming.tcp import TCPFileSource
+    from baker_spark.sinks.websocket_server import WebSocketBroadcastServer
+    from baker_spark.streaming.connectors import KinesisStandinSource
+    from baker_spark.streaming.daemon import FileStreamSource
 
-    input_cls = {
-        "List": ListSource,
-        "JsonLines": JsonLinesSource,
-        "Parquet": ParquetSource,
-        "SQS": SQSSource,
-        "Kinesis": KinesisPythonSource,
-        "KCL": KinesisPythonSource,
-        "TCP": TCPFileSource,
-    }
-    sink_cls = {
-        "FileWriter": FileWriter,
-        "DynamoDB": DynamoDBWriter,
-        "SQLite": SQLiteWriter,
-        "SQLiteRaw": SQLiteWriter,
-        "Stats": Stats,
-        "Nop": Nop,
-        "OpLog": OpLog,
-        "Recorder": Recorder,
-        "WebSocket": WebSocketSink,
-    }
     return {
-        "Inputs (TOML)": {
-            n: input_cls[n] for n in (*BATCH_INPUT_NAMES, *STREAMING_INPUT_NAMES)
-        },
-        "Outputs (TOML)": {n: sink_cls[n] for n in SINK_NAMES},
+        "Inputs (TOML)": {**BATCH_INPUTS, **STREAMING_INPUTS},
+        "Outputs (TOML)": SINKS,
         "Python API only": {
             "WebSocketServer": WebSocketBroadcastServer,
             "CorpusIngest": CorpusIngest,
             "FileStream": FileStreamSource,
-            "Rate": RateSource,
             "KinesisStandin": KinesisStandinSource,
         },
         "Upload": {"S3": S3Upload},
@@ -318,7 +281,7 @@ def cmd_run(
         # reference's output Run calls ListenAndServe up front) so
         # clients get the whole run to connect, not just the instant
         # between first write and process exit
-        server = getattr(getattr(pipeline, "sink", None), "server", None)
+        server = getattr(pipeline.sink, "server", None)
         if server is not None and not server.running:
             server.start()
         result = pipeline.run(spark)
@@ -329,9 +292,7 @@ def cmd_run(
     finally:
         # stop any sink-held resources (the reference's topology Stop()
         # closes outputs) — without this the CLI leaks the ws server
-        close = getattr(pipeline, "close", None)
-        if callable(close):
-            close()
+        pipeline.close()
         spark.stop()
     return 0
 

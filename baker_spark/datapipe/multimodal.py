@@ -307,17 +307,6 @@ def with_media_payload(
     return df.withColumn(out_col, build(F.col(id_col), F.col(text_col)))
 
 
-def resize_stub(df: DataFrame, payload_col: str = "payload", max_bytes: int = 1024) -> DataFrame:
-    """'Resize' = truncate payload (stands in for image resize / audio
-    frame-sample: a binary -> binary pandas UDF over Arrow batches)."""
-
-    @F.pandas_udf("binary")
-    def truncate(s: pd.Series) -> pd.Series:
-        return s.map(lambda b: None if b is None else b[:max_bytes])
-
-    return df.withColumn(payload_col, truncate(F.col(payload_col)))
-
-
 FRAME_SCHEMA = "doc_id long, frame_idx int, frame binary"
 
 

@@ -67,11 +67,6 @@ def minhash_params(k: int) -> list[tuple[int, int]]:
     return params
 
 
-def affine_hash(h: Column, a: int, b: int) -> Column:
-    """Spark: (a*h + b) mod P over a 32-bit base hash column."""
-    return (F.lit(a) * h + F.lit(b)) % F.lit(MINHASH_P)
-
-
 def duck_affine_hash(h_expr: str, a: int, b: int) -> str:
     return f"(({a} * {h_expr} + {b}) % {MINHASH_P})"
 

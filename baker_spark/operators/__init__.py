@@ -10,9 +10,7 @@ from baker_spark.operators.base import (  # noqa: F401
     REGISTRY,
     chain,
     create,
-    hoist_predicates,
     is_empty,
-    prefilter,
     register,
     split_chain,
 )

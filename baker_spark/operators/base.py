@@ -24,7 +24,7 @@ class Operator:
     component name, matched case-insensitively like the reference,
     /root/reference/config.go:300-351) and implement ``apply``.
 
-    Hoisting metadata (used by :func:`prefilter` to push pure predicates
+    Hoisting metadata (used by :func:`split_chain` to push pure predicates
     above an engine-inserted shuffle barrier such as ``fan_out``):
 
     - ``keep_predicate()`` — for side-effect-free predicate operators,
@@ -109,42 +109,23 @@ def chain(df: DataFrame, ops: list[Operator]) -> DataFrame:
     return df
 
 
-def hoist_predicates(ops: list[Operator]) -> list[Column]:
-    """Keep-predicates that may legally run BEFORE the chain.
+def split_chain(ops: list[Operator]) -> tuple[list[Column], list[Operator]]:
+    """Split a chain into the keep-predicates that may legally run
+    BEFORE it and the chain left to run after them.
 
     Walk the chain in order, tracking which fields earlier operators
     write. A pure predicate hoists iff it reads none of them (predicates
-    commute with each other; re-evaluating one later is idempotent, so
-    the unchanged chain can still run afterwards). An operator with
-    unknown writes is a barrier — nothing after it hoists. This mirrors
-    what Catalyst's PushDownPredicates does, but across the engine's own
+    commute with each other). An operator with unknown writes is a
+    barrier — nothing after it hoists. This mirrors what Catalyst's
+    PushDownPredicates does, but across the engine's own
     fan-out/repartition barrier, which Catalyst must not cross.
 
-    Delegates to :func:`split_chain` — the five-clause hoist-legality
-    condition lives in exactly one place, so the two entry points can
-    never drift on which predicates run below the barrier."""
-    return split_chain(ops)[0]
-
-
-def prefilter(df: DataFrame, ops: list[Operator]) -> DataFrame:
-    """Apply the chain's hoistable predicates to ``df`` (typically the
-    natively-typed scan) so a following ``fan_out``/``repartition``
-    shuffles only surviving rows. The full chain still runs after the
-    barrier — its predicates then drop nothing, cheaply."""
-    for p in hoist_predicates(ops):
-        df = df.filter(p)
-    return df
-
-
-def split_chain(ops: list[Operator]) -> tuple[list[Column], list[Operator]]:
-    """Like :func:`hoist_predicates`, but also returns the chain with the
-    fully-hoisted predicates ELIDED. An op may be dropped from the
-    post-barrier chain iff its keep-predicate hoisted AND it writes
-    nothing (``writes == []``): then ``apply()`` is exactly
-    ``filter(keep_predicate)``, which already ran below the barrier, and
-    a second evaluation would drop nothing — each filter runs once, like
-    the reference's single-pass chain (topology.go:204-218). Transforms
-    and barriers keep their place and order."""
+    An op is dropped from the remaining chain iff its keep-predicate
+    hoisted AND it writes nothing (``writes == []``): then ``apply()`` is
+    exactly ``filter(keep_predicate)``, which already ran below the
+    barrier — each filter runs once, like the reference's single-pass
+    chain (topology.go:204-218). Transforms and barriers keep their
+    place and order."""
     preds: list[Column] = []
     remaining: list[Operator] = []
     written: set[str] = set()

@@ -11,7 +11,10 @@ NewTopologyFromConfig -> Start/Wait) as a declarative object:
 Thread/channel boundaries of the reference (input -> filter chain ->
 sharded outputs, /root/reference/topology.go:230-289) map to Spark's
 stage boundaries: read tasks -> narrow transform stage -> optional
-repartition (iff sharding) -> write tasks.
+repartition (iff sharding) -> write tasks. A daemon topology is the
+subclass :class:`baker_spark.streaming.daemon.StreamingPipeline`, whose
+source is a stream; it builds its DataFrame through the same
+:meth:`Pipeline.dataframe`.
 """
 
 from __future__ import annotations
@@ -64,7 +67,12 @@ class Pipeline:
         df = self._source_df(spark)
         ops = self.ops
         try:
-            n_parts = df.rdd.getNumPartitions() if self.chain_procs else None
+            # a stream has no fixed split count: chain_procs is a no-op
+            n_parts = (
+                df.rdd.getNumPartitions()
+                if self.chain_procs and not df.isStreaming
+                else None
+            )
         except Exception:
             # Spark Connect exposes no df.rdd; degrade chain_procs to a
             # no-op like session.fan_out does rather than crash the build

@@ -33,12 +33,16 @@ from baker_spark.operators.topology import Validation
 from baker_spark.pipeline import Pipeline
 from baker_spark.sinks.dynamodb import DynamoDBWriter
 from baker_spark.sinks.filewriter import FileWriter, parse_go_duration, parse_size_bytes
-from baker_spark.sinks.simple import Nop, OpLog, Recorder
+from baker_spark.sinks.simple import Nop, OpLog, Recorder, WebSocketSink
 from baker_spark.sinks.sqlite import SQLiteWriter
 from baker_spark.sinks.stats import Stats
 from baker_spark.sinks.upload import S3Upload
 from baker_spark.sources.list_source import ListSource
 from baker_spark.sources.structured import JsonLinesSource, ParquetSource
+from baker_spark.streaming.connectors import KinesisPythonSource, KinesisRecordsSource
+from baker_spark.streaming.daemon import StreamingPipeline
+from baker_spark.streaming.sqs_datasource import SQSSource
+from baker_spark.streaming.tcp import TCPFileSource
 
 DEFAULT_SEPARATOR = ","  # DefaultLogLineFieldSeparator (logline.go)
 
@@ -61,8 +65,45 @@ def _snake_keys(cfg: dict) -> dict:
     return {_snake(k): v for k, v in cfg.items()}
 
 
+#: the component table, one dict per TOML section: canonical name ->
+#: class. The builders below accept exactly these names and the CLI's
+#: `list`/`help` render these dicts, so the advertised names and the
+#: accepted ones cannot drift
+BATCH_INPUTS = {"List": ListSource, "JsonLines": JsonLinesSource, "Parquet": ParquetSource}
+#: the reference's daemon inputs (never exit; SURVEY.md §2.1) — these
+#: compile to a StreamingPipeline instead of a batch Pipeline
+STREAMING_INPUTS = {
+    "SQS": SQSSource,
+    "Kinesis": KinesisPythonSource,
+    "KCL": KinesisPythonSource,
+    "TCP": TCPFileSource,
+}
+SINKS = {
+    "FileWriter": FileWriter,
+    "DynamoDB": DynamoDBWriter,
+    "SQLite": SQLiteWriter,
+    "SQLiteRaw": SQLiteWriter,
+    "Stats": Stats,
+    "Nop": Nop,
+    "OpLog": OpLog,
+    "Recorder": Recorder,
+    "WebSocket": WebSocketSink,
+}
+
+
+def _canonical(table: dict, name: str) -> str | None:
+    """The table's spelling of a case-insensitive component name
+    (config.go:300-351), or None when the table has no such name."""
+    return next((n for n in table if n.lower() == name.lower()), None)
+
+
 def _build_input(section: dict, fields: list[str], separator: str):
-    name = section.get("name", "").lower()
+    name = _canonical(BATCH_INPUTS, section.get("name", ""))
+    if name is None:
+        raise ValueError(
+            f"unknown input {section.get('name')!r} (batch inputs: "
+            f"{', '.join(BATCH_INPUTS)}; daemon inputs: {', '.join(STREAMING_INPUTS)})"
+        )
     cfg = _snake_keys(section.get("config", {}))
     region = cfg.get("region") or "us-west-2"  # reference default, input/list.go:60
     # s3:// DIRECTORY expansion lists via boto3 (ListObjectsV2), which
@@ -72,91 +113,50 @@ def _build_input(section: dict, fields: list[str], separator: str):
     # boto3-native alternative). Concrete s3:// object paths never
     # touch boto3 and need no extra config.
     endpoint = cfg.get("s3_endpoint_url") or os.environ.get("AWS_ENDPOINT_URL_S3", "")
-    if name == "list":
-        return ListSource(
-            files=cfg.get("files", []),
-            fields=fields,
-            separator=separator,
-            match_path=cfg.get("match_path"),
-            region=region,
-            s3_endpoint_url=endpoint,
-        )
-    if name == "jsonlines":
-        return JsonLinesSource(
-            files=cfg.get("files", []),
-            fields=fields,
-            match_path=cfg.get("match_path"),
-            region=region,
-            s3_endpoint_url=endpoint,
-        )
-    if name == "parquet":
-        return ParquetSource(
-            files=cfg.get("files", []),
-            fields=fields or None,
-            match_path=cfg.get("match_path"),
-            region=region,
-            s3_endpoint_url=endpoint,
-        )
-    raise ValueError(
-        f"unknown input {section.get('name')!r} (batch inputs: List, "
-        "JsonLines, Parquet; daemon inputs: SQS, Kinesis, KCL, TCP)"
+    kw = dict(
+        files=cfg.get("files", []),
+        fields=fields,
+        match_path=cfg.get("match_path"),
+        region=region,
+        s3_endpoint_url=endpoint,
     )
-
-
-#: canonical component names this compiler accepts — the CLI derives its
-#: `list`/`help` TOML surface from these three tuples (tests assert both
-#: directions), so the advertised names and the dispatch can't drift
-BATCH_INPUT_NAMES = ("List", "JsonLines", "Parquet")
-STREAMING_INPUT_NAMES = ("SQS", "Kinesis", "KCL", "TCP")
-SINK_NAMES = (
-    "FileWriter",
-    "DynamoDB",
-    "SQLite",
-    "SQLiteRaw",
-    "Stats",
-    "Nop",
-    "OpLog",
-    "Recorder",
-    "WebSocket",
-)
-
-#: the reference's daemon inputs (never exit; SURVEY.md §2.1) — these
-#: compile to a StreamingPipeline instead of a batch Pipeline.
-STREAMING_INPUTS = {n.lower() for n in STREAMING_INPUT_NAMES}
+    if name == "List":
+        kw["separator"] = separator
+    elif name == "Parquet":
+        kw["fields"] = fields or None  # self-describing: no [fields] reads all
+    return BATCH_INPUTS[name](**kw)
 
 
 #: [input.config] keys a streaming input no longer reads, with what
 #: replaced them — rejected so an old topology fails loudly instead of
 #: silently running without its setting
 _RETIRED_KEYS = {
-    "sqs": {
+    "SQS": {
         "path": "Path was the watched directory of a file source that "
         "never read the queue; set QueueNames or QueuePrefixes "
         "(FakeDir for a local directory queue)",
         "max_files_per_trigger": "MaxFilesPerTrigger has no replacement: "
         "a micro-batch takes what one receive per queue returns",
     },
-    "kinesis": {
+    "Kinesis": {
         "connector": "Connector has no replacement: the bakerkinesis "
         "source is the only Kinesis reader",
     },
 }
-_RETIRED_KEYS["kcl"] = _RETIRED_KEYS["kinesis"]
+_RETIRED_KEYS["KCL"] = _RETIRED_KEYS["Kinesis"]
 
 
 def _build_streaming_input(section: dict, fields: list[str], separator: str):
-    name = section.get("name", "").lower()
+    name = _canonical(STREAMING_INPUTS, section.get("name", ""))
     cfg = _snake_keys(section.get("config", {}))
     for key, why in _RETIRED_KEYS.get(name, {}).items():
         if key in cfg:
             raise ValueError(f"{section.get('name')} input: {why}")
-    if name == "sqs":
+    if name == "SQS":
         # input/sqs.go:25-39 polls queues for S3-path notifications and
         # streams those files: the bakersqs streaming source, which
         # journals each batch's file list in the offset WAL before it
         # deletes the messages
-        from baker_spark.streaming.sqs_datasource import SQSSource
-
         src = SQSSource(
             queue_names=cfg.get("queue_names", []),
             queue_prefixes=cfg.get("queue_prefixes", []),
@@ -181,22 +181,17 @@ def _build_streaming_input(section: dict, fields: list[str], separator: str):
             except re.error as exc:
                 raise ValueError(f"SQS: invalid FilePathFilter: {exc}") from exc
         return src
-    if name in ("kinesis", "kcl"):
+    if name in ("Kinesis", "KCL"):
         # input/kinesis.go:20-26 / input/kcl.go:27-49: StreamName +
         # AWSRegion; the jar-free bakerkinesis source (boto3 in prod,
         # FakeDir in tests); KCL's DynamoDB lease/checkpoint table maps
         # to the query checkpoint dir
-        from baker_spark.streaming.connectors import (
-            KinesisPythonSource,
-            KinesisRecordsSource,
-        )
-
         stream = cfg.get("stream") or cfg.get("stream_name")  # ref key: Stream
         if not stream:
             raise ValueError("Kinesis input needs config Stream (kinesis.go:30)")
         position = cfg.get("initial_position", "LATEST")
         app_name = cfg.get("app_name")
-        if name == "kcl":
+        if name == "KCL":
             # kcl.go:54-62 validate(): AppName [A-Za-z0-9_]+ required,
             # InitialPosition LATEST|TRIM_HORIZON only
             if not app_name or not re.fullmatch(r"[A-Za-z_0-9]+", app_name):
@@ -230,8 +225,6 @@ def _build_streaming_input(section: dict, fields: list[str], separator: str):
     # the reference's actual wire format: one gzip stream per
     # connection (tcp.go:146-210) — driver-side TCPGzipListener
     # decodes into the spool, the file stream ingests it
-    from baker_spark.streaming.tcp import TCPFileSource
-
     return TCPFileSource(
         path=cfg["spool_dir"],
         fields=fields,
@@ -245,9 +238,13 @@ def _build_streaming_input(section: dict, fields: list[str], separator: str):
 
 
 def _build_sink(section: dict, separator: str):
-    name = section.get("name", "").lower()
+    name = _canonical(SINKS, section.get("name", ""))
+    if name is None:
+        raise ValueError(
+            f"unknown output {section.get('name')!r} (outputs: {', '.join(SINKS)})"
+        )
     cfg = _snake_keys(section.get("config", {}))
-    if name == "filewriter":
+    if name == "FileWriter":
         path = cfg.get("path_string", cfg.get("pathstring", "_out"))
         # reference semantics (filewriter.go:257): gzip unless the path
         # says .zst/.zstd. Detected from the FULL PathString here, not
@@ -302,19 +299,14 @@ def _build_sink(section: dict, separator: str):
             zstd_level=zstd_level,
             zstd_window_log=zstd_window_log,
         )
-    if name == "nop":
-        return Nop()
-    if name == "oplog":
-        return OpLog()
-    if name == "recorder":
-        return Recorder()
-    if name == "websocket":
+    if name in ("Nop", "OpLog", "Recorder"):
+        return SINKS[name]()
+    if name == "WebSocket":
         # output/websocket.go:12-77: a registered output that runs a
         # broadcast server in-process (the reference hardcodes :8080 via
         # http.ListenAndServe; Port here is an extension so tests can
         # bind ephemeral) and pushes each record's selected fields to
         # every connected client
-        from baker_spark.sinks.simple import WebSocketSink
         from baker_spark.sinks.websocket_server import WebSocketBroadcastServer
 
         # NOT started here: compiling a config must not bind a port
@@ -327,7 +319,7 @@ def _build_sink(section: dict, separator: str):
             fields=section.get("fields") or None,
             server=server,
         )
-    if name == "stats":
+    if name == "Stats":
         return Stats(
             # the frequency-tracked fields are the TOPOLOGY-level
             # [output] fields list (stats.go:258 iterates cfg.Fields of
@@ -341,13 +333,13 @@ def _build_sink(section: dict, separator: str):
             # honored by write() — the reference always writes the report
             csv_path=cfg.get("csv_path", "stats.csv"),
         )
-    if name in ("sqlite", "sqliteraw"):
+    if name in ("SQLite", "SQLiteRaw"):
         # output/sqlite.go:36-43 config keys; SQLiteRaw adds the
         # serialized-record BLOB column
         return SQLiteWriter(
             path=cfg.get("path_string", "out.sqlite3"),
             table=cfg.get("table_name", "records"),
-            raw_column=name == "sqliteraw",
+            raw_column=name == "SQLiteRaw",
             separator=separator,
             pre_run=cfg.get("pre_run", []),
             post_run=cfg.get("post_run", []),
@@ -355,20 +347,18 @@ def _build_sink(section: dict, separator: str):
             vacuum=bool(cfg.get("vacuum", False)),
             page_size=int(cfg.get("page_size", 0)),
         )
-    if name == "dynamodb":
-        # output/dyndb.go:20-31 config keys: Regions, Table, Columns
-        return DynamoDBWriter(
-            table=cfg["table"],
-            columns=cfg["columns"],
-            regions=cfg.get("regions", ["us-west-2"]),
-            max_writes_per_sec=int(cfg.get("max_writes_per_sec", 0)),
-            max_backoff=parse_go_duration(cfg.get("max_backoff", "2m")),
-            # engine extension (not in dyndb.go): first-writer-wins
-            # conditional puts for replay/race safety — see the sink's
-            # module docstring for when to pay the per-item cost
-            strict_once=bool(cfg.get("strict_once", False)),
-        )
-    raise ValueError(f"unknown output {section.get('name')!r}")
+    # DynamoDB — output/dyndb.go:20-31 config keys: Regions, Table, Columns
+    return DynamoDBWriter(
+        table=cfg["table"],
+        columns=cfg["columns"],
+        regions=cfg.get("regions", ["us-west-2"]),
+        max_writes_per_sec=int(cfg.get("max_writes_per_sec", 0)),
+        max_backoff=parse_go_duration(cfg.get("max_backoff", "2m")),
+        # engine extension (not in dyndb.go): first-writer-wins
+        # conditional puts for replay/race safety — see the sink's
+        # module docstring for when to pay the per-item cost
+        strict_once=bool(cfg.get("strict_once", False)),
+    )
 
 
 def _build_metrics(section: dict):
@@ -451,8 +441,9 @@ def compile_toml(
     user: list[UserDesc] | None = None,
 ):
     """Compile a reference-shaped TOML topology. Batch inputs yield a
-    :class:`Pipeline`; daemon inputs (SQS/Kinesis/KCL/TCP) yield a
-    :class:`baker_spark.streaming.daemon.StreamingPipeline`.
+    :class:`Pipeline`; daemon inputs (SQS/Kinesis/KCL/TCP) yield its
+    subclass :class:`baker_spark.streaming.daemon.StreamingPipeline`,
+    built from the same topology arguments.
     ``user`` registers :class:`UserDesc` targets for ``[[user]]``
     blocks, decoded in place like the reference (config.go:387-399)."""
     text = _expand_env(text)  # ${ENV} expansion (config.go:221-231)
@@ -480,11 +471,9 @@ def compile_toml(
     if separator.startswith("\\u"):
         separator = chr(int(separator[2:], 16))
 
-    streaming = input_name in STREAMING_INPUTS
-    if streaming:
-        source = _build_streaming_input(doc.get("input", {}), names, separator)
-    else:
-        source = _build_input(doc.get("input", {}), names, separator)
+    streaming = _canonical(STREAMING_INPUTS, input_name) is not None
+    build_input = _build_streaming_input if streaming else _build_input
+    source = build_input(doc.get("input", {}), names, separator)
 
     ops = []
     validation = doc.get("validation", {})
@@ -499,44 +488,7 @@ def compile_toml(
     out = doc.get("output", {})
     sink = _build_sink(out, separator) if out else None
     upload = doc.get("upload", {})
-
-    if streaming:
-        from baker_spark.operators.topology import Shard
-        from baker_spark.streaming.daemon import StreamingPipeline
-
-        if out.get("sharding"):
-            # same-key -> same-worker holds per micro-batch via the
-            # repartition (topology.go:341-347); operators run on the
-            # repartitioned stream exactly like the batch path
-            ops.append(Shard(out["sharding"], procs=int(out.get("procs", 32))))
-        # RotateInterval (filewriter.go:95): in daemon mode the time
-        # rotation cadence IS the micro-batch trigger; "-1" (disabled)
-        # means as-fast-as-possible micro-batches. Kept as float seconds
-        # — int() truncation would turn "500ms" into no-trigger
-        rot = _snake_keys(out.get("config", {})).get("rotate_interval")
-        trigger = None
-        if rot is not None:
-            secs = parse_go_duration(rot)
-            trigger = secs if secs > 0 else None
-        if isinstance(sink, FileWriter):
-            # every micro-batch is a separate write call: the batch
-            # default mode="overwrite" would clobber all previous
-            # batches' files (see start_foreach_batch docstring)
-            sink.mode = "append"
-        return StreamingPipeline(
-            source=source,
-            ops=ops,
-            fields=out.get("fields") or None,
-            sink=sink,
-            trigger_seconds=trigger,
-            metrics=_build_metrics(doc["metrics"]) if doc.get("metrics") else None,
-            # the reference's canonical daemon deployment uploads
-            # rotated files continuously; dropping a configured
-            # [upload] silently would lose that stage
-            upload=_build_upload(upload) if upload else None,
-        )
-
-    return Pipeline(
+    kw = dict(
         source=source,
         ops=ops,
         fields=out.get("fields") or None,
@@ -547,6 +499,23 @@ def compile_toml(
         metrics=_build_metrics(doc["metrics"]) if doc.get("metrics") else None,
         chain_procs=int(doc.get("filterchain", {}).get("procs", 0)) or None,
     )
+    if not streaming:
+        return Pipeline(**kw)
+    # RotateInterval (filewriter.go:95): in daemon mode the time
+    # rotation cadence IS the micro-batch trigger; "-1" (disabled)
+    # means as-fast-as-possible micro-batches. Kept as float seconds
+    # — int() truncation would turn "500ms" into no-trigger
+    rot = _snake_keys(out.get("config", {})).get("rotate_interval")
+    trigger = None
+    if rot is not None:
+        secs = parse_go_duration(rot)
+        trigger = secs if secs > 0 else None
+    if isinstance(sink, FileWriter):
+        # every micro-batch is a separate write call: the batch
+        # default mode="overwrite" would clobber all previous
+        # batches' files (see start_foreach_batch docstring)
+        sink.mode = "append"
+    return StreamingPipeline(**kw, trigger_seconds=trigger)
 
 
 def compile_toml_file(

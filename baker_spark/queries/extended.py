@@ -143,10 +143,6 @@ def q_range_join(spark, sf_dir):
     )
 
 
-def _centroid_ids(k: int = 8) -> list[int]:
-    return list(range(k))
-
-
 @query(
     "dp_ivf_assign",
     f"""

@@ -33,10 +33,6 @@ TABLE_NAMES = [
 _NANOS_TS_COLS: dict[str, list[str]] = {"events": ["ts"]}
 
 
-def default_sf_dir() -> str:
-    return os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-
 #: parquet SCHEMA cache (metadata only — StructType per table file).
 #: `spark.read.parquet` runs a 1-task footer-inference job on EVERY call
 #: (measured 0.18-0.24s per table at sf0.1); with the schema passed

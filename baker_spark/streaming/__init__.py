@@ -5,7 +5,7 @@ from baker_spark.streaming.connectors import (
     KinesisStandinSource,
     kinesis_records,
 )
-from baker_spark.streaming.daemon import FileStreamSource, RateSource, StreamingPipeline
+from baker_spark.streaming.daemon import FileStreamSource, StreamingPipeline
 from baker_spark.streaming.tcp import TCPFileSource, TCPGzipListener, send_gzip_records
 from baker_spark.streaming.sqs import SQSConfig, SQSPoller
 from baker_spark.streaming.sqs_datasource import DirQueueClient, SQSSource
@@ -18,7 +18,6 @@ __all__ = [
     "KinesisRecordsSource",
     "KinesisStandinSource",
     "kinesis_records",
-    "RateSource",
     "SQSConfig",
     "SQSPoller",
     "SQSSource",

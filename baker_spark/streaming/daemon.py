@@ -18,19 +18,24 @@ Structured Streaming replaces all of that machinery:
 - graceful SIGINT drain (topology.go:282-314) == ``query.stop()`` +
   checkpoint recovery
 
-The batch operator chain is reused verbatim: operators are Column
-expressions, which run identically over micro-batches; sinks plug in
-through ``foreachBatch``.
+A daemon topology is a :class:`~baker_spark.pipeline.Pipeline` whose
+source is a stream (:class:`StreamingPipeline`): the batch operator
+chain, ``[output]`` sharding, field selection and ``_bk_*`` drop are
+built by the same ``Pipeline.dataframe``, because operators are Column
+expressions that run identically over micro-batches; sinks plug in
+through ``foreachBatch``. A synthetic stream for development is
+``spark.readStream.format("rate")`` directly, or
+``connectors.KinesisStandinSource`` for the Kinesis record layout.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
-from typing import Callable
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from baker_spark.operators.base import Operator, chain
+from baker_spark.operators.base import Operator
+from baker_spark.pipeline import Pipeline
 from baker_spark.sources.list_source import string_schema
 
 
@@ -59,22 +64,6 @@ class FileStreamSource:
         for k, v in (self.reader_options or {}).items():
             reader = reader.option(k, v)
         return reader.csv(self.path)
-
-    __call__ = dataframe
-
-
-@dataclass
-class RateSource:
-    """Synthetic infinite source (dev/test stand-in for Kinesis)."""
-
-    rows_per_second: int = 1000
-
-    def dataframe(self, spark: SparkSession) -> DataFrame:
-        return (
-            spark.readStream.format("rate")
-            .option("rowsPerSecond", self.rows_per_second)
-            .load()
-        )
 
     __call__ = dataframe
 
@@ -128,18 +117,21 @@ def windowed_counts(
 
 
 @dataclass
-class StreamingPipeline:
-    """Daemon topology: streaming source -> operator chain -> sink.
+class StreamingPipeline(Pipeline):
+    """Daemon topology: a :class:`Pipeline` whose source is a stream.
 
-    ``sink`` (optional) is a *batch* sink object (FileWriter, SQLite,
-    DynamoDB, Recorder) applied per micro-batch by :meth:`start` — one
-    sink implementation serves one-shot and daemon topologies, like the
-    reference's shared output components."""
+    The DataFrame is :meth:`Pipeline.dataframe`'s — the same chain,
+    ``sharding``/``procs`` repartition, ``fields`` projection and
+    ``_bk_*`` drop as a batch topology (``chain_procs`` is a no-op on a
+    stream). ``sink`` (optional) is a *batch* sink object (FileWriter,
+    SQLite, DynamoDB, Recorder) applied per micro-batch by :meth:`start`
+    — one sink implementation serves one-shot and daemon topologies,
+    like the reference's shared output components. ``metrics`` get a
+    StreamingQueryListener forwarding each batch's progress
+    (stats.go:197-218); ``upload`` runs after each micro-batch's sink
+    write (the reference's periodic staging-dir scan,
+    upload/s3.go:126-187)."""
 
-    source: Callable[[SparkSession], DataFrame]
-    ops: list[Operator] = field(default_factory=list)
-    fields: list[str] | None = None
-    sink: object | None = None
     #: FileWriter RotateInterval (filewriter.go:95) — in daemon mode a
     #: time rotation IS the micro-batch cadence, so the TOML value
     #: becomes the default processing-time trigger (float seconds;
@@ -150,14 +142,6 @@ class StreamingPipeline:
     #: for the reference cadence. Explicit start(..., trigger_seconds=)
     #: still wins.
     trigger_seconds: float | None = None
-    #: [metrics] client — daemon topologies dump per-second stats in the
-    #: reference too (stats.go:197-218); start() attaches a
-    #: StreamingQueryListener forwarding each batch's progress to it
-    metrics: object | None = None
-    #: [upload] stage — the reference's daemon uploads rotated files
-    #: continuously (upload/s3.go:126-187 periodic scan); here the
-    #: staging-dir scan runs after each micro-batch's sink write
-    upload: object | None = None
 
     def start(
         self,
@@ -174,12 +158,6 @@ class StreamingPipeline:
             checkpoint_dir,
             trigger_seconds if trigger_seconds is not None else self.trigger_seconds,
         )
-
-    def dataframe(self, spark: SparkSession) -> DataFrame:
-        df = chain(self.source(spark), self.ops)
-        if self.fields:
-            df = df.select(*self.fields)
-        return df
 
     def start_memory(self, spark: SparkSession, name: str, output_mode: str = "append"):
         """Dev/test sink: results land in the in-memory table ``name``."""

@@ -87,6 +87,46 @@ PathString="{tmp_path}/out/o.csv.gz"
     assert out_files
 
 
+@pytest.mark.parametrize("topology", ["sharding", "tcp_daemon"])
+def test_cli_explain_subprocess(tmp_path, topology):
+    """`explain` prints the physical plan of a batch and of a daemon
+    topology; both shard through one hash exchange. A fresh interpreter
+    because cmd_explain stops its session."""
+    import subprocess
+    import sys as _sys
+
+    if topology == "sharding":
+        toml = os.path.join(REPO, "examples", "sharding.toml")
+    else:
+        spool = tmp_path / "spool"
+        spool.mkdir()
+        toml = tmp_path / "tcp.toml"
+        toml.write_text(f"""
+[fields]
+names=["id","v"]
+[input]
+name="TCP"
+[input.config]
+Listener="127.0.0.1:0"
+SpoolDir="{spool}"
+[output]
+name="Recorder"
+sharding="id"
+procs=3
+""")
+    proc = subprocess.run(
+        [_sys.executable, "-m", "baker_spark", "explain", str(toml)],
+        cwd=REPO,
+        capture_output=True,
+        text=True,
+        timeout=180,
+        env=dict(os.environ, SPARK_GRAFT_CPUS="2"),
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    assert "== Physical Plan ==" in proc.stdout
+    assert "Exchange" in proc.stdout and "hashpartitioning(" in proc.stdout
+
+
 def test_cli_help_covers_inputs_and_outputs(capsys):
     """The reference's -help documents inputs/outputs, not just filters
     (baker_cli.go); ours must resolve every TOML component name."""
@@ -147,30 +187,23 @@ def test_cli_help_config_key_table_fidelity(capsys):
 
 
 def test_cli_toml_surface_matches_compiler_dispatch():
-    """Every name `list` advertises under a TOML section must compile,
-    and every name the compiler accepts must be advertised — the two
-    tables live in different files and previously drifted (WebSocket
-    listed but not compilable; SQLiteRaw compilable but not listed)."""
-    from baker_spark import cli
+    """Every name in the compiler's component tables — the dicts `list`
+    and `help` render — compiles with a minimal config, and an unknown
+    name's error lists the table's names."""
     from baker_spark.plans.toml_compiler import (
-        BATCH_INPUT_NAMES,
-        SINK_NAMES,
-        STREAMING_INPUT_NAMES,
+        BATCH_INPUTS,
+        SINKS,
+        STREAMING_INPUTS,
         _build_input,
         _build_sink,
         _build_streaming_input,
     )
 
-    reg = cli._io_registry()
-    assert set(reg["Inputs (TOML)"]) == set(BATCH_INPUT_NAMES) | set(STREAMING_INPUT_NAMES)
-    assert set(reg["Outputs (TOML)"]) == set(SINK_NAMES)
-
-    # advertised names are really accepted by the dispatch (minimal
-    # configs satisfy each component's required keys)
+    # minimal configs satisfy each component's required keys
     sink_cfg = {"DynamoDB": {"Table": "t", "Columns": ["s:c"]}}
-    for n in SINK_NAMES:
+    for n in SINKS:
         _build_sink({"name": n, "config": sink_cfg.get(n, {})}, ",")
-    for n in BATCH_INPUT_NAMES:
+    for n in BATCH_INPUTS:
         _build_input({"name": n, "config": {}}, ["a"], ",")
     stream_cfg = {
         "SQS": {"FakeDir": "/tmp/queue"},
@@ -178,5 +211,12 @@ def test_cli_toml_surface_matches_compiler_dispatch():
         "KCL": {"Stream": "s", "AppName": "app"},
         "TCP": {"SpoolDir": "/tmp/spool"},
     }
-    for n in STREAMING_INPUT_NAMES:
+    for n in STREAMING_INPUTS:
         _build_streaming_input({"name": n, "config": stream_cfg[n]}, ["a"], ",")
+
+    with pytest.raises(ValueError, match="unknown output 'NoSuchOutput'") as exc:
+        _build_sink({"name": "NoSuchOutput"}, ",")
+    assert all(n in str(exc.value) for n in SINKS)
+    with pytest.raises(ValueError, match="unknown input 'NoSuchInput'") as exc:
+        _build_input({"name": "NoSuchInput"}, ["a"], ",")
+    assert all(n in str(exc.value) for n in (*BATCH_INPUTS, *STREAMING_INPUTS))

@@ -583,9 +583,10 @@ def test_kmv_sketch_merge(spark):
 
 
 def test_predicate_hoisting(spark):
-    """prefilter + unchanged chain == chain alone, on a natively-typed
-    frame (the fan_out pushdown path); predicates reading a field a
-    transform writes must NOT hoist; unknown ops are barriers."""
+    """split_chain's hoisted predicates filtering a natively-typed frame
+    (the fan_out pushdown path), then the remaining chain == the chain
+    alone; predicates reading a field a transform writes must NOT hoist;
+    unknown ops are barriers."""
     native = spark.createDataFrame(
         [(1, "A", 10), (2, "N", 0), (3, "R", 7), (4, "A", None)],
         "id int, flag string, qty int",
@@ -597,61 +598,36 @@ def test_predicate_hoisting(spark):
         ops.NotNull(["qty"]),
     ]
     # tag is written by Concatenate -> StringMatch must not hoist;
-    # ClauseFilter and NotNull do
-    hoisted = ops.hoist_predicates(chain)
-    assert len(hoisted) == 2
+    # ClauseFilter and NotNull do, and are elided from the remaining
+    # chain; transforms and the non-hoistable StringMatch keep their order
+    preds, rest = ops.split_chain(chain)
+    assert len(preds) == 2
+    assert [type(o).__name__ for o in rest] == ["Concatenate", "StringMatch"]
 
-    def run(df):
+    def run(df, chain_ops):
         return sorted(
-            r.id for r in ops.chain(
+            r.id
+            for r in ops.chain(
                 df.select(*[F.col(c).cast("string").alias(c) for c in df.columns]),
-                chain,
+                chain_ops,
             ).collect()
         )
 
-    plain = run(native)
-    pre = sorted(
-        r.id
-        for r in ops.chain(
-            ops.prefilter(native, chain).select(
-                *[F.col(c).cast("string").alias(c) for c in native.columns]
-            ),
-            chain,
-        ).collect()
-    )
-    assert plain == pre == ["2"]
+    filtered = native
+    for p in preds:
+        filtered = filtered.filter(p)
+    # re-running the whole chain after the hoisted filters drops nothing more
+    assert run(native, chain) == run(filtered, rest) == run(filtered, chain) == ["2"]
 
-    # a stateful op (Dedup) is a barrier: nothing after it hoists
+    # a stateful op (Dedup) is a barrier: nothing after it hoists, and
+    # the post-barrier NotNull stays in the remaining chain
     barrier_chain = [
         ops.Dedup(fields=["flag"]),
         ops.NotNull(["qty"]),
     ]
-    assert len(ops.hoist_predicates(barrier_chain)) == 0
-
-    # split_chain: hoisted pure predicates are elided from the remaining
-    # chain (ClauseFilter, NotNull); transforms and the non-hoistable
-    # StringMatch keep their order. Result unchanged.
-    preds, rest = ops.split_chain(chain)
-    assert len(preds) == 2
-    assert [type(o).__name__ for o in rest] == ["Concatenate", "StringMatch"]
-    filtered = native
-    for p in preds:
-        filtered = filtered.filter(p)
-    split = sorted(
-        r.id
-        for r in ops.chain(
-            filtered.select(
-                *[F.col(c).cast("string").alias(c) for c in native.columns]
-            ),
-            rest,
-        ).collect()
-    )
-    assert split == ["2"]
-    # barriers also stop elision: the post-barrier NotNull must remain
-    assert [type(o).__name__ for o in ops.split_chain(barrier_chain)[1]] == [
-        "Dedup",
-        "NotNull",
-    ]
+    preds, rest = ops.split_chain(barrier_chain)
+    assert preds == []
+    assert [type(o).__name__ for o in rest] == ["Dedup", "NotNull"]
 
 
 def test_managed_cache_release(spark):

@@ -129,6 +129,68 @@ def test_foreach_batch_reuses_batch_sink(spark, tmp_path):
     assert isinstance(Nop(), object)  # batch sinks importable for streaming reuse
 
 
+def test_streaming_pipeline_builds_through_pipeline_dataframe(spark, tmp_path):
+    """A daemon topology is a Pipeline: ``sharding``/``procs`` repartition
+    the stream and engine-internal ``_bk_*`` columns never reach the sink
+    when ``fields`` is unset, exactly as in a batch topology."""
+    from baker_spark.pipeline import Pipeline
+
+    src_dir = tmp_path / "bk_in"
+    src_dir.mkdir()
+    _write_csv(src_dir / "a.csv", ["1,x", "2,y"])
+    files = FileStreamSource(str(src_dir), fields=["id", "v"])
+
+    pipe = StreamingPipeline(
+        source=lambda s: files(s).withColumn("_bk_tag", F.lit("meta")),
+        sharding="id",
+        procs=2,
+    )
+    assert isinstance(pipe, Pipeline)
+    q = pipe.start_memory(spark, "bk_drop_out")
+    try:
+        q.processAllAvailable()
+        out = spark.table("bk_drop_out")
+        assert out.columns == ["id", "v"]
+        assert sorted(tuple(r) for r in out.collect()) == [("1", "x"), ("2", "y")]
+    finally:
+        q.stop()
+
+
+def test_compiled_daemon_topology_shards_like_batch(spark, tmp_path, capsys):
+    """A compiled TCP topology carries [output] sharding/procs and
+    [filterchain] procs as Pipeline fields, not as a Shard op appended to
+    the chain; its plan holds exactly one hash exchange (chain_procs
+    adds none on a stream)."""
+    from baker_spark.operators.topology import Shard
+    from baker_spark.plans import compile_toml
+
+    spool = tmp_path / "spool"
+    spool.mkdir()
+    pipe = compile_toml(f"""
+[fields]
+names=["id","v"]
+[input]
+name="TCP"
+[input.config]
+Listener="127.0.0.1:0"
+SpoolDir="{spool}"
+[filterchain]
+procs=5
+[output]
+name="Recorder"
+sharding="id"
+procs=3
+""")
+    assert isinstance(pipe, StreamingPipeline)
+    assert (pipe.sharding, pipe.procs, pipe.chain_procs) == ("id", 3, 5)
+    assert not any(isinstance(op, Shard) for op in pipe.ops)
+    capsys.readouterr()
+    pipe.dataframe(spark).explain("formatted")
+    plan = capsys.readouterr().out
+    assert plan.count("hashpartitioning(") == 1, plan
+    assert "StreamingRelation" in plan
+
+
 def test_checkpoint_manager_keeps_the_overwrite_guard(spark, tmp_path):
     """Streaming checkpoints go through Spark's FileSystem-based manager
     (session.RUNTIME_CONFS), and it keeps what HDFSMetadataLog.add relies

@@ -257,6 +257,7 @@ def cmd_run(
             # reference's SIGINT drain (topology.go:282-288); the
             # checkpoint dir makes a restart resume, not reprocess
             import tempfile
+            import time
 
             ckpt = checkpoint or tempfile.mkdtemp(prefix="baker_spark_ckpt_")
             # KCL semantics: each AppName keeps independent positions
@@ -271,11 +272,28 @@ def cmd_run(
                 pretty,
                 checkpoint=ckpt,
             )
-            query = pipeline.start(spark, ckpt)
+            # a TCP input's listener feeds the spool the query tails
+            tcp = None
+            if hasattr(pipeline.source, "listener"):
+                tcp = pipeline.source.listener()
+                host, port = tcp.start()
+                _log("tcp listener started", pretty, addr=f"{host}:{port}")
             try:
-                query.awaitTermination()
-            except KeyboardInterrupt:
-                query.stop()
+                query = pipeline.start(spark, ckpt)
+                # poll instead of awaitTermination(): a SIGINT during that
+                # py4j call makes SparkContext's handler re-enter the busy
+                # connection (cancelAllJobs), and the Py4JError skips the
+                # drain below
+                try:
+                    while query.isActive:
+                        time.sleep(0.5)
+                except KeyboardInterrupt:
+                    query.stop()
+                else:
+                    query.awaitTermination()  # re-raises a failed query's error
+            finally:
+                if tcp is not None:
+                    tcp.stop()
             return 0
         # a WebSocket sink's server binds at topology-run start (the
         # reference's output Run calls ListenAndServe up front) so

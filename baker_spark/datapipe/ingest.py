@@ -225,11 +225,6 @@ class MediaIngest:
     max_hamming: int = 3
     ledger_buckets: int = 16
     ledger_table: str = "media_ingest_ledger"
-    #: image pixel backend for the phash decode — None resolves via
-    #: $BAKER_SPARK_IMAGE_DECODER then 'pure'; a production daemon sets
-    #: 'pil' (or a register_image_decoder name) to clear the
-    #: pure-python ceiling without touching the ingest semantics
-    decoder: str | None = None
     ingested: int = 0
     dropped_dup: int = 0
     skipped_undecodable: int = 0
@@ -247,50 +242,6 @@ class MediaIngest:
             f"INTO {int(self.ledger_buckets)} BUCKETS "
             f"LOCATION {loc}"
         )
-        self._check_decoder_stamp(spark)
-
-    def _check_decoder_stamp(self, spark) -> None:
-        """Stamp the EFFECTIVE pixel backend beside the ledger
-        (``<ledger_dir>/_DECODER``; the underscore keeps parquet readers
-        off it) and WARN when a later run resolves a different one: GIF
-        palette handling and JPEG IDCT rounding are per-backend, so a
-        ledger of 'pure' phashes probed with 'pil' hashes silently stops
-        matching near-dups — the mismatch must be loud. Hadoop FS (not
-        os.path) so s3a/hdfs ledgers stamp the same way."""
-        from baker_spark.datapipe.multimodal import resolved_image_decoder_name
-
-        name = resolved_image_decoder_name(self.decoder)
-        jvm = spark._jvm
-        p = jvm.org.apache.hadoop.fs.Path(
-            self.ledger_dir.rstrip("/") + "/_DECODER"
-        )
-        fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-        if fs.exists(p):
-            stream = fs.open(p)
-            try:
-                existing = jvm.org.apache.commons.io.IOUtils.toString(
-                    stream, "UTF-8"
-                ).strip()
-            finally:
-                stream.close()
-            if existing and existing != name:
-                import warnings
-
-                warnings.warn(
-                    f"MediaIngest ledger {self.ledger_dir} was built with "
-                    f"image decoder {existing!r} but this run resolves "
-                    f"{name!r}; per-backend pixel differences (GIF palette, "
-                    "JPEG IDCT) can stop ledger hashes from matching — "
-                    "rebuild the ledger or pin the original backend",
-                    RuntimeWarning,
-                    stacklevel=3,
-                )
-            return
-        out = fs.create(p, True)
-        try:
-            out.write(bytearray(name.encode("utf-8")))
-        finally:
-            out.close()
 
     def write(self, batch_df: DataFrame) -> int:
         """One batch through the loop; returns images admitted."""
@@ -325,9 +276,9 @@ class MediaIngest:
             return df
 
         sigs = _persist(
-            media_phash(
-                batch_df, self.payload_col, self.id_col, decoder=self.decoder
-            ).select(self.id_col, "phash")
+            media_phash(batch_df, self.payload_col, self.id_col).select(
+                self.id_col, "phash"
+            )
         )
         try:
             n_decoded = sigs.count()

@@ -26,7 +26,6 @@ cost scales per partition and never pulls bytes to the driver.
 
 from __future__ import annotations
 
-import os
 import struct
 import zlib
 from typing import Iterator
@@ -832,26 +831,11 @@ def decode_wav_samples(payload: bytes):
     return int(channels), int(rate), list(struct.unpack(f"<{n}h", data[: 2 * n]))
 
 
-# ------------------------------------------------- pluggable decoders ----
-#
-# The pure-python codecs are the oracle-exact reference implementation
-# with a measured ~13 MP/s/core ceiling (PERFORMANCE.md, media codecs).
-# A production deployment swaps in a native library (Pillow-SIMD,
-# libvips via pyvips, OpenCV) WITHOUT touching the Spark plumbing: the
-# mapInPandas batch shape, schemas, honest-skip contract and banding
-# arithmetic are identical — only the bytes->pixels kernel changes.
-# This registry is that seam (VERDICT r11 next-round #4): a decoder is
-# ``fn(payload: bytes) -> (fmt, width, height, channels, px) | None``
-# returning per-channel integer samples row-major (the exact contract
-# of decode_png_pixels et al.), resolved ON THE DRIVER at plan-build
-# time and shipped to executors inside the closure.
-
-IMAGE_DECODER_ENV = "BAKER_SPARK_IMAGE_DECODER"
-
-
 def _pure_pixel_decode(payload: bytes):
-    """The built-in backend: pure-python PNG (zlib) / GIF (LZW) /
-    baseline-JPEG (jpegcodec) decoders, in sniff order."""
+    """bytes -> (fmt, width, height, channels, px) | None: the
+    pure-python PNG (zlib) / GIF (LZW) / baseline-JPEG (jpegcodec)
+    decoders, in sniff order; px is per-channel integer samples,
+    row-major."""
     for fmt, dec in (
         ("png", decode_png_pixels),
         ("gif", decode_gif_pixels),
@@ -862,97 +846,6 @@ def _pure_pixel_decode(payload: bytes):
             w, h, ch, px = out
             return fmt, w, h, ch, px
     return None
-
-
-def _pil_pixel_decode(payload: bytes):
-    """Pillow backend, import-deferred to first batch on the executor.
-    Output mapped onto the pure contract: per-channel integer samples,
-    palette images converted to L. Parity caveats, stated precisely:
-    PNG is lossless and bit-identical to the pure codec. GIF is
-    bit-identical ONLY for identity (i,i,i) palettes (our gray
-    fixtures): the pure decoder maps palette indices through the
-    palette's RED channel while PIL's P->L conversion takes luminance,
-    so a colored palette yields different pixels — and a different
-    phash. JPEG IDCT rounding is implementation-defined, so a
-    borderline phash bit MAY differ. The parity test runs on the
-    envelope fixtures and pins where the backends agree; MediaIngest
-    stamps the decoder name beside its ledger so a backend swap WARNS
-    instead of silently un-matching the ledger's hashes."""
-    from io import BytesIO
-
-    from PIL import Image
-
-    try:
-        im = Image.open(BytesIO(payload))
-        im.load()
-    except Exception:
-        return None
-    fmt = (im.format or "").lower()
-    if fmt not in ("png", "gif", "jpeg"):
-        return None
-    if im.width * im.height > MAX_DECODE_PIXELS:
-        return None  # same bomb guard as the pure codecs
-    if im.mode == "P":
-        im = im.convert("L")
-    ch = len(im.getbands())
-    data = list(im.getdata())
-    px = [v for t in data for v in t] if ch > 1 else list(data)
-    return fmt, im.width, im.height, ch, px
-
-
-IMAGE_DECODERS = {"pure": _pure_pixel_decode, "pil": _pil_pixel_decode}
-
-
-def register_image_decoder(name: str, fn) -> None:
-    """Register a custom pixel-decode backend (e.g. a pyvips or OpenCV
-    kernel). ``fn(payload) -> (fmt, w, h, channels, px) | None`` with
-    per-channel integer samples row-major; return None for undecodable
-    payloads (the honest-skip contract). The callable must be
-    cloudpickle-able — it ships to executors in the task closure."""
-    IMAGE_DECODERS[name.lower()] = fn
-
-
-def resolve_image_decoder(decoder: str | None):
-    """Resolve the backend by explicit name, else $BAKER_SPARK_IMAGE_
-    DECODER, else 'pure'. The 'pil' backend degrades to 'pure' with a
-    RuntimeWarning when Pillow is not importable ON THE DRIVER (same
-    container ships to executors in local/uniform-image deployments),
-    so a topology configured for production decode still runs — slower,
-    never wrong — on a box without the native lib."""
-    name = (decoder or os.environ.get(IMAGE_DECODER_ENV) or "pure").lower()
-    fn = IMAGE_DECODERS.get(name)
-    if fn is None:
-        raise ValueError(
-            f"unknown image decoder {name!r}; known: {sorted(IMAGE_DECODERS)} "
-            "(register_image_decoder adds custom backends)"
-        )
-    if fn is _pil_pixel_decode:
-        try:
-            import PIL  # noqa: F401
-        except ImportError:
-            import warnings
-
-            warnings.warn(
-                "image decoder 'pil' requested but Pillow is not importable; "
-                "falling back to the pure-python codecs",
-                RuntimeWarning,
-                stacklevel=2,
-            )
-            return _pure_pixel_decode
-    return fn
-
-
-def resolved_image_decoder_name(decoder: str | None = None) -> str:
-    """The EFFECTIVE backend name after env resolution and the
-    pil->pure fallback — what MediaIngest stamps beside its ledger so a
-    later run under a different backend warns instead of silently
-    producing phashes the ledger's hashes no longer match (GIF palette
-    and JPEG IDCT differences are per-backend; see _pil_pixel_decode)."""
-    fn = resolve_image_decoder(decoder)
-    for name, f in IMAGE_DECODERS.items():
-        if f is fn:
-            return name
-    return "custom"
 
 
 FEATURES_SCHEMA = (
@@ -966,7 +859,6 @@ def media_features(
     payload_col: str = "payload",
     id_col: str = "doc_id",
     max_decode_bytes: int | None = MAX_DECODE_BYTES,
-    decoder: str | None = None,
 ) -> DataFrame:
     """REAL sample-level features for the decodable formats: per-payload
     unit count (pixels x channels for images, samples for WAV), exact
@@ -977,12 +869,7 @@ def media_features(
     grayscale JPEG via the jpegcodec entropy decoder, WAV PCM);
     anything else — including payloads over ``max_decode_bytes``, the
     CPU-bomb guard on the pure-python codecs — is skipped, keeping the
-    output contract honest rather than silently fake.
-
-    ``decoder`` picks the image pixel backend (see
-    :func:`resolve_image_decoder`); WAV always decodes with the stdlib
-    PCM parser — the swap seam is for image libraries."""
-    decode = resolve_image_decoder(decoder)
+    output contract honest rather than silently fake."""
 
     def feat_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -997,7 +884,7 @@ def media_features(
                 if max_decode_bytes is not None and len(b) > max_decode_bytes:
                     continue  # same honest skip as an undecodable format
                 b = bytes(b)
-                img = decode(b)
+                img = _pure_pixel_decode(b)
                 if img is not None:
                     fmt, w, h, ch, px = img
                     units = len(px)
@@ -1083,7 +970,6 @@ def media_phash(
     payload_col: str = "payload",
     id_col: str = "doc_id",
     max_decode_bytes: int | None = MAX_DECODE_BYTES,
-    decoder: str | None = None,
 ) -> DataFrame:
     """(id, format, width, height, phash) for every payload that
     pixel-decodes as PNG/GIF/JPEG — the image half of near-dup dedup:
@@ -1091,12 +977,7 @@ def media_phash(
     image pairs exactly like text simhash. Same honest-skip contract as
     media_features (undecodable or over-budget payloads emit nothing).
     Scale shape: one mapInPandas over (id, payload) — embarrassingly
-    parallel, no shuffle. ``decoder`` swaps the bytes->pixels kernel
-    (:func:`resolve_image_decoder`: 'pure' default, 'pil', or a
-    registered native backend) — the production escape hatch from the
-    pure codecs' ~13 MP/s/core ceiling, with the Spark plumbing and
-    banding arithmetic unchanged (PERFORMANCE.md, media codecs)."""
-    decode = resolve_image_decoder(decoder)
+    parallel, no shuffle."""
 
     def hash_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -1111,7 +992,7 @@ def media_phash(
                 if max_decode_bytes is not None and len(b) > max_decode_bytes:
                     continue
                 b = bytes(b)
-                out = decode(b)
+                out = _pure_pixel_decode(b)
                 if out is not None:
                     fmt, w, h, ch, px = out
                     ph = phash60(w, h, ch, px)

@@ -142,6 +142,10 @@ _RETIRED_KEYS = {
         "connector": "Connector has no replacement: the bakerkinesis "
         "source is the only Kinesis reader",
     },
+    "TCP": {
+        "decode": "Decode has no replacement: the listener always "
+        "gzip-decodes on the driver",
+    },
 }
 _RETIRED_KEYS["KCL"] = _RETIRED_KEYS["Kinesis"]
 
@@ -231,9 +235,6 @@ def _build_streaming_input(section: dict, fields: list[str], separator: str):
         separator=separator,
         listen_host=host or "127.0.0.1",
         listen_port=int(port),
-        # Decode="executor": raw-gz spool, inflate on executors —
-        # the scale path (see streaming/tcp.py module docstring)
-        decode=cfg.get("decode", "driver"),
     )
 
 

@@ -49,8 +49,6 @@ class FileStreamSource:
     fields: list[str]
     separator: str = ","
     max_files_per_trigger: int | None = None
-    #: extra reader options (e.g. ignoreCorruptFiles for raw-gz spools)
-    reader_options: dict | None = None
 
     def dataframe(self, spark: SparkSession) -> DataFrame:
         reader = (
@@ -61,8 +59,6 @@ class FileStreamSource:
         )
         if self.max_files_per_trigger:
             reader = reader.option("maxFilesPerTrigger", self.max_files_per_trigger)
-        for k, v in (self.reader_options or {}).items():
-            reader = reader.option(k, v)
         return reader.csv(self.path)
 
     __call__ = dataframe

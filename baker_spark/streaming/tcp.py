@@ -21,28 +21,13 @@ the ``bakersqs`` source journals their paths and reads them directly.)
   ``[input] name="TCP"`` section with a ``SpoolDir``: the file stream
   plus a ``listener()`` factory bound to the same spool
 
-Two decode placements (``decode=``, TOML key ``Decode``):
-
-- ``"driver"`` (default — the reference's exact semantics,
-  tcp.go:146-210): the listener gzip-decodes on the driver and spools
-  complete-line chunks, so data is VISIBLE INCREMENTALLY while a
-  long-lived connection streams, and a torn stream keeps its decoded
-  prefix. The ceiling is the driver's single-process inflate rate
-  (~200 MB/s of compressed input per accept thread, measured in
-  PERFORMANCE.md "TCP ingest envelope") — fine for the dev-tool/relay
-  role this input plays in the reference, wrong for a firehose.
-- ``"executor"`` (the scale path): the listener copies RAW compressed
-  bytes to ``tcp-*.csv.gz`` (one file per connection, renamed at
-  close) and never inflates — the driver does kernel-speed socket->
-  disk copy, and Spark's file source decompresses BY EXTENSION on the
-  executors, in parallel across connections. Trade-offs, documented
-  rather than hidden: visibility is at connection close (gzip streams
-  are not splittable mid-flight), per-connection line counts move from
-  the listener to the streaming metrics, and a truncated stream is
-  spooled as-is — :class:`TCPFileSource` therefore sets
-  ``ignoreCorruptFiles`` on the reader in this mode so executors keep
-  the decodable prefix and the query survives, which is exactly the
-  reference's torn-connection behavior.
+The listener gzip-decodes on the driver and spools complete-line
+chunks (the reference's semantics, tcp.go:146-210), so data is visible
+incrementally while a long-lived connection streams, and a torn stream
+keeps the chunks decoded before the tear. The ceiling is the driver's
+single-process inflate rate (~270 MB/s of decompressed output per
+accept thread, PERFORMANCE.md "TCP ingest envelope") — fine for the
+dev-tool/relay role this input plays in the reference.
 """
 
 from __future__ import annotations
@@ -73,17 +58,12 @@ class TCPGzipListener:
         host: str = "127.0.0.1",
         port: int = 6000,
         chunk_bytes: int = TCP_CHUNK_BUFFER,
-        decode: str = "driver",
     ):
-        if decode not in ("driver", "executor"):
-            raise ValueError(f"decode must be 'driver' or 'executor', got {decode!r}")
         self.spool_dir = spool_dir
         self.host, self.port = host, port
         self.chunk_bytes = chunk_bytes
-        self.decode = decode
         self.connections = 0
-        self.num_lines = 0  # InputStats analog (tcp.go:126-131); driver mode only
-        self.num_bytes = 0  # compressed bytes spooled (executor mode's stat)
+        self.num_lines = 0  # InputStats analog (tcp.go:126-131)
         self.errors: list[str] = []  # per-connection failures (log-and-continue)
         # resume the spool counter past any files a PREVIOUS run left:
         # restarting at 1 would os.rename() onto tcp-00000001.csv — if
@@ -106,7 +86,8 @@ class TCPGzipListener:
                 # {8,}, not {8}: f"{seq:08d}" widens past 99,999,999,
                 # and a resume that can't SEE 9-digit spools would
                 # restart the counter and rename onto published names —
-                # the exact loss this scan exists to prevent
+                # the exact loss this scan exists to prevent. (\.gz)?:
+                # spools of the removed raw-gzip mode still count
                 m = re.fullmatch(r"tcp-(\d{8,})\.csv(\.gz)?", name)
                 if m:
                     top = max(top, int(m.group(1)))
@@ -133,52 +114,9 @@ class TCPGzipListener:
             fh.write(chunk)
         os.rename(tmp, final)
 
-    def _handle_stream_raw(self, rfile) -> None:
-        """Executor-decode path: copy the connection's compressed bytes
-        straight to one ``.csv.gz`` spool file (tmp + rename at close) —
-        no inflate on the driver. A stream that doesn't even start with
-        the gzip magic is rejected whole (the reference's bad-framing
-        log-and-continue); truncation deeper in can't be detected
-        without inflating, so the file ships as-is and the reader's
-        ``ignoreCorruptFiles`` keeps the decodable prefix."""
-        head = rfile.read(2)
-        if not head:
-            return  # empty connection: nothing to spool
-        if head != b"\x1f\x8b":
-            self.errors.append("not a gzip stream (bad magic)")
-            return
-        with self._lock:
-            self._seq += 1
-            seq = self._seq
-        final = os.path.join(self.spool_dir, f"tcp-{seq:08d}.csv.gz")
-        tmp = os.path.join(self.spool_dir, f".tcp-{seq:08d}.csv.gz.tmp")
-        copied = 0
-        try:
-            with open(tmp, "wb") as fh:
-                fh.write(head)
-                copied = 2
-                while True:
-                    data = rfile.read(self.chunk_bytes)
-                    if not data:
-                        break
-                    fh.write(data)
-                    copied += len(data)
-        except OSError as exc:
-            # torn socket / failed open: keep what arrived (reference
-            # keeps the decoded prefix; ignoreCorruptFiles gives the
-            # same here) — but only publish a tmp that exists
-            self.errors.append(str(exc))
-            if not os.path.exists(tmp):
-                return
-        with self._lock:
-            self.num_bytes += copied
-        os.rename(tmp, final)
-
     def _handle_stream(self, rfile) -> None:
         """tcp.go:146-210: gzip-decode, chunk, and never split a line —
         a chunk is cut at its last newline, the tail carries over."""
-        if self.decode == "executor":
-            return self._handle_stream_raw(rfile)
         gz = gzip.GzipFile(fileobj=rfile)
         pending = b""
         while True:
@@ -259,33 +197,18 @@ class TCPFileSource(FileStreamSource):
 
     listen_host: str = "127.0.0.1"
     listen_port: int = 6000
-    chunk_bytes: int = TCP_CHUNK_BUFFER
-    decode: str = "driver"
 
-    def __post_init__(self):
-        # fail at CONFIG time, not when listener() is eventually called
-        # (a typo'd TOML Decode= would otherwise run driver-mode readers
-        # over a raw-gz spool without complaint)
-        if self.decode not in ("driver", "executor"):
-            raise ValueError(
-                f"decode must be 'driver' or 'executor', got {self.decode!r}"
-            )
-        if self.decode == "executor":
-            # raw-gz spool: a truncated stream ships as-is, so the
-            # executor read must keep the decodable prefix and carry on
-            # (the reference's torn-connection behavior) instead of
-            # failing the query on the first torn connection. setdefault:
-            # user-supplied reader options must not silently drop this
-            self.reader_options = {
-                "ignoreCorruptFiles": "true",
-                **(self.reader_options or {}),
-            }
+    def dataframe(self, spark):
+        # the listener makes the spool too; making it here lets a
+        # topology build (explain, start) before the first connection
+        os.makedirs(self.path, exist_ok=True)
+        return super().dataframe(spark)
+
+    __call__ = dataframe
 
     def listener(self) -> TCPGzipListener:
         return TCPGzipListener(
             self.path,
             host=self.listen_host,
             port=self.listen_port,
-            chunk_bytes=self.chunk_bytes,
-            decode=self.decode,
         )

@@ -98,8 +98,7 @@ def test_cli_explain_subprocess(tmp_path, topology):
     if topology == "sharding":
         toml = os.path.join(REPO, "examples", "sharding.toml")
     else:
-        spool = tmp_path / "spool"
-        spool.mkdir()
+        spool = tmp_path / "spool"  # not created: the build must make it
         toml = tmp_path / "tcp.toml"
         toml.write_text(f"""
 [fields]
@@ -125,6 +124,81 @@ procs=3
     assert proc.returncode == 0, proc.stderr[-2000:]
     assert "== Physical Plan ==" in proc.stdout
     assert "Exchange" in proc.stdout and "hashpartitioning(" in proc.stdout
+
+
+def test_cli_run_tcp_daemon_receives_and_drains_on_sigint(tmp_path):
+    """`run` on a TCP topology starts the listener, a gzip connection's
+    rows land in the FileWriter output, and SIGINT drains the query and
+    exits 0 (the reference's Ctrl-C drain, topology.go:282-288)."""
+    import gzip
+    import json
+    import signal
+    import subprocess
+    import sys as _sys
+    import threading
+    import time
+
+    from baker_spark.streaming.tcp import send_gzip_records
+
+    toml = tmp_path / "tcp.toml"
+    toml.write_text(f"""
+[fields]
+names=["id","v"]
+[input]
+name="TCP"
+[input.config]
+Listener="127.0.0.1:0"
+SpoolDir="{tmp_path}/spool"
+[output]
+name="FileWriter"
+[output.config]
+PathString="{tmp_path}/out/o.csv.gz"
+""")
+    proc = subprocess.Popen(
+        [_sys.executable, "-m", "baker_spark", "run", str(toml), "--cpus", "2",
+         "--checkpoint", str(tmp_path / "ckpt")],
+        cwd=REPO,
+        stdout=subprocess.DEVNULL,
+        stderr=subprocess.PIPE,
+        text=True,
+        env=dict(os.environ, SPARK_GRAFT_CPUS="2"),
+    )
+    lines: list[str] = []
+    addr = threading.Event()
+    addrs: list[str] = []
+
+    def _drain():  # keep reading so Spark's log4j lines never block the pipe
+        for line in proc.stderr:
+            lines.append(line)
+            if line.startswith("{") and '"tcp listener started"' in line:
+                addrs.append(json.loads(line)["addr"])
+                addr.set()
+
+    reader = threading.Thread(target=_drain, daemon=True)
+    reader.start()
+    try:
+        assert addr.wait(180), "".join(lines)[-2000:]
+        host, _, port = addrs[0].rpartition(":")
+        send_gzip_records(host, int(port), b"1,a\n2,b\n")
+        out_dir = tmp_path / "out" / "o.csv.gz.d"
+        deadline = time.time() + 120
+        rows: list[bytes] = []
+        while time.time() < deadline and len(rows) < 2:
+            rows = [
+                line
+                for f in glob.glob(f"{out_dir}/*.csv.gz")
+                for line in gzip.open(f).read().splitlines()
+            ]
+            time.sleep(0.5)
+        assert sorted(rows) == [b"1,a", b"2,b"], "".join(lines)[-2000:]
+        proc.send_signal(signal.SIGINT)
+        assert proc.wait(timeout=120) == 0, "".join(lines)[-2000:]
+    finally:
+        if proc.poll() is None:
+            proc.kill()
+            proc.wait()
+    reader.join(timeout=10)
+    assert not any("Traceback" in line for line in lines), "".join(lines)[-2000:]
 
 
 def test_cli_help_covers_inputs_and_outputs(capsys):

@@ -458,21 +458,15 @@ def test_qualified_ledger_table_name_accepted(spark, tmp_path):
         spark.sql("DROP DATABASE IF EXISTS ingest_ns_test")
 
 
-def test_media_ingest_decoder_stamp_warns_on_backend_swap(spark, tmp_path):
-    """ADVICE r12: a band ledger built under one pixel backend silently
-    stops matching near-dups after a backend swap (GIF palette / JPEG
-    IDCT differ per backend). MediaIngest stamps the EFFECTIVE decoder
-    name beside the ledger on first write; a later instance resolving a
-    different backend warns loudly, same backend stays silent."""
+def test_media_ingest_ignores_legacy_decoder_stamp(spark, tmp_path):
+    """Ledgers written while the pixel decoder was selectable carry a
+    ``_DECODER`` file. There is one decoder now: the file is neither
+    read nor written, warns about nothing, and the ledger's parquet
+    reader skips it, so near-dups still match across the upgrade."""
     import warnings
 
-    from baker_spark.datapipe import multimodal as M
     from baker_spark.datapipe.ingest import MediaIngest
 
-    def _swap_decode(payload):  # distinct callable (same behavior)
-        return M._pure_pixel_decode(payload)
-
-    M.register_image_decoder("stampswap_test", _swap_decode)
     kw = dict(
         corpus_dir=str(tmp_path / "mcorpus"),
         ledger_dir=str(tmp_path / "mledger"),
@@ -480,27 +474,20 @@ def test_media_ingest_decoder_stamp_warns_on_backend_swap(spark, tmp_path):
         ledger_buckets=4,
     )
     try:
-        sink = MediaIngest(**kw)
-        with warnings.catch_warnings():
-            warnings.simplefilter("error")  # first write must not warn
-            sink.write(
-                spark.createDataFrame([(1, _png("A"))], "doc_id long, payload binary")
-            )
-        assert (tmp_path / "mledger" / "_DECODER").read_text() == "pure"
-        # restart under the same backend: silent
         with warnings.catch_warnings():
             warnings.simplefilter("error")
-            MediaIngest(**kw).write(
-                spark.createDataFrame([(2, _png("B"))], "doc_id long, payload binary")
+            assert MediaIngest(**kw).write(
+                spark.createDataFrame([(1, _png("A"))], "doc_id long, payload binary")
+            ) == 1
+            assert not (tmp_path / "mledger" / "_DECODER").exists()
+            (tmp_path / "mledger" / "_DECODER").write_text("pil")
+            sink = MediaIngest(**kw)
+            admitted = sink.write(
+                spark.createDataFrame(
+                    [(2, _png("A")), (3, _png("B"))], "doc_id long, payload binary"
+                )
             )
-        # restart under a DIFFERENT backend: loud
-        swapped = MediaIngest(decoder="stampswap_test", **kw)
-        with pytest.warns(RuntimeWarning, match="built with image decoder 'pure'"):
-            swapped.write(
-                spark.createDataFrame([(3, _png("C"))], "doc_id long, payload binary")
-            )
-        # the stamp records the ORIGINAL backend, not the intruder
-        assert (tmp_path / "mledger" / "_DECODER").read_text() == "pure"
+        assert admitted == 1 and sink.dropped_dup == 1
+        assert (tmp_path / "mledger" / "_DECODER").read_text() == "pil"
     finally:
-        M.IMAGE_DECODERS.pop("stampswap_test", None)
         spark.sql("DROP TABLE IF EXISTS media_ledger_stamp")

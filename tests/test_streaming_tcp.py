@@ -198,58 +198,37 @@ def test_truncated_gzip_recorded_not_fatal(tmp_path):
     assert any(b"2,view,u2" in open(f, "rb").read() for f in files)
 
 
-def _wait_for_gz_spool(spool_dir, n_files, timeout=10.0):
-    deadline = time.time() + timeout
-    while time.time() < deadline:
-        files = sorted(glob.glob(os.path.join(spool_dir, "tcp-*.csv.gz")))
-        if len(files) >= n_files:
-            return files
-        time.sleep(0.05)
-    raise AssertionError(f"gz spool never reached {n_files} files")
+def test_spool_counter_resumes_past_existing_files(tmp_path):
+    """A restarted listener continues the spool numbering: restarting at
+    1 would rename onto tcp-00000001.csv, which the file source has
+    already seen (never re-read) or not yet read (overwritten)."""
+    spool = str(tmp_path / "spool")
+    with TCPGzipListener(spool, port=0) as listener:
+        send_gzip_records(listener.host, listener.port, b"1,click,u1\n")
+        _wait_for_spool(spool, 1)
+        send_gzip_records(listener.host, listener.port, b"2,view,u2\n")
+        _wait_for_spool(spool, 2)
+    restarted = TCPGzipListener(spool, port=0)
+    assert restarted._seq == 2
+    with restarted:
+        send_gzip_records(restarted.host, restarted.port, b"3,click,u3\n")
+        files = _wait_for_spool(spool, 3)
+    assert [os.path.basename(f) for f in files] == [
+        "tcp-00000001.csv", "tcp-00000002.csv", "tcp-00000003.csv",
+    ]
+    assert open(files[2], "rb").read() == b"3,click,u3\n"
 
 
-def test_executor_decode_spools_raw_gzip(tmp_path):
-    """decode='executor': the driver copies compressed bytes verbatim —
-    one valid .csv.gz per connection, zero inflate on the driver — and
-    still rejects non-gzip framing by magic."""
+def test_tcp_micro_batch_survives_torn_connection(spark, tmp_path):
+    """A connection torn mid-gzip-stream is logged by the listener and
+    the streaming query stays up: rows of the connections before and
+    after it land (the reference logs a stream error per connection and
+    keeps serving, tcp.go:104-113)."""
     import gzip as _gzip
     import socket as _socket
 
     spool = str(tmp_path / "spool")
-    payload = b"1,click,u1\n2,view,u2\n3,click,u3\n"
-    with TCPGzipListener(spool, port=0, decode="executor") as listener:
-        send_gzip_records(listener.host, listener.port, payload)
-        files = _wait_for_gz_spool(spool, 1)
-        raw = open(files[0], "rb").read()
-        assert raw[:2] == b"\x1f\x8b" and _gzip.decompress(raw) == payload
-        assert listener.num_bytes == len(raw) and listener.num_lines == 0
-
-        # bad framing: rejected whole, listener keeps serving
-        with _socket.create_connection((listener.host, listener.port)) as conn:
-            conn.sendall(b"plainly not gzip")
-            conn.shutdown(_socket.SHUT_WR)
-        send_gzip_records(listener.host, listener.port, b"4,view,u4\n")
-        files = _wait_for_gz_spool(spool, 2)
-    assert any("bad magic" in e for e in listener.errors)
-    assert _gzip.decompress(open(files[1], "rb").read()) == b"4,view,u4\n"
-    # counter resume also sees .gz spool names (restart safety)
-    assert TCPGzipListener(spool, port=0, decode="executor")._seq == 2
-
-
-def test_executor_decode_end_to_end_and_truncation_survives(spark, tmp_path):
-    """The raw-gz spool drives a micro-batch with the inflate on the
-    EXECUTORS; a connection torn mid-gzip-stream ships as-is and the
-    reader's ignoreCorruptFiles keeps the decodable prefix instead of
-    failing the query (the reference's torn-connection semantics)."""
-    import gzip as _gzip
-    import io
-    import socket as _socket
-
-    spool = str(tmp_path / "spool")
-    src = TCPFileSource(
-        spool, fields=["id", "etype", "user"], listen_port=0, decode="executor"
-    )
-    assert src.reader_options == {"ignoreCorruptFiles": "true"}
+    src = TCPFileSource(spool, fields=["id", "etype", "user"], listen_port=0)
     listener = src.listener()
     listener.start()
     pipe = StreamingPipeline(
@@ -257,46 +236,42 @@ def test_executor_decode_end_to_end_and_truncation_survives(spark, tmp_path):
         ops=[ops.ClauseFilter("(etype click)")],
         fields=["id", "etype"],
     )
-    q = pipe.start_memory(spark, "tcp_exec_out")
+    q = pipe.start_memory(spark, "tcp_torn_out")
     try:
         send_gzip_records(listener.host, listener.port, b"1,click,u1\n2,view,u2\n")
-        _wait_for_gz_spool(spool, 1)
+        _wait_for_spool(spool, 1)
         q.processAllAvailable()
-        assert {r.id for r in spark.sql("SELECT id FROM tcp_exec_out").collect()} == {"1"}
+        assert {r.id for r in spark.sql("SELECT id FROM tcp_torn_out").collect()} == {"1"}
 
-        # torn stream: several full deflate flushes, cut mid-stream —
-        # the prefix rows that inflate cleanly must land, query alive
-        buf = io.BytesIO()
-        gz = _gzip.GzipFile(fileobj=buf, mode="wb")
-        gz.write(b"3,click,u3\n")
-        gz.flush()  # full flush: prefix independently decodable
-        keep = buf.tell()
-        gz.write(b"4,click,u4\n" * 100)
-        gz.close()
-        torn = buf.getvalue()[: keep + 20]
+        whole = _gzip.compress(b"4,click,u4\n" * 100)
         with _socket.create_connection((listener.host, listener.port)) as conn:
-            conn.sendall(torn)
+            conn.sendall(whole[: len(whole) // 2])
             conn.shutdown(_socket.SHUT_WR)
-        _wait_for_gz_spool(spool, 2)
-        q.processAllAvailable()
-        got = {r.id for r in spark.sql("SELECT id FROM tcp_exec_out").collect()}
-        assert "3" in got and q.isActive
-
-        # and a healthy connection after the torn one still flows
         send_gzip_records(listener.host, listener.port, b"5,click,u5\n")
-        _wait_for_gz_spool(spool, 3)
+        _wait_for_spool(spool, 2)
         q.processAllAvailable()
-        assert {r.id for r in spark.sql("SELECT id FROM tcp_exec_out").collect()} >= {"1", "3", "5"}
+        got = {r.id for r in spark.sql("SELECT id FROM tcp_torn_out").collect()}
+        assert got == {"1", "5"} and q.isActive
     finally:
         q.stop()
-        listener.stop()
+        listener.stop()  # joins the handler threads
+    assert any("end-of-stream" in e for e in listener.errors), listener.errors
 
 
-def test_toml_decode_key_selects_executor_mode(tmp_path):
+def test_toml_decode_key_is_rejected(tmp_path):
+    """The executor-side decode was removed; a topology that still sets
+    Decode fails at compile time instead of silently ignoring it."""
+    import pytest
+
     from baker_spark.plans import compile_toml
 
-    plan = compile_toml(
-        f"""
+    with pytest.raises(
+        ValueError,
+        match="TCP input: Decode has no replacement: the listener always "
+        "gzip-decodes on the driver",
+    ):
+        compile_toml(
+            f"""
 [fields]
 names = ["id", "etype", "user"]
 
@@ -305,11 +280,9 @@ name = "TCP"
   [input.config]
   Listener = ":7202"
   SpoolDir = "{tmp_path}/spool"
-  Decode = "executor"
+  Decode = "driver"
 
 [output]
 name = "Nop"
 """
-    )
-    assert plan.source.decode == "executor"
-    assert plan.source.listener().decode == "executor"
+        )

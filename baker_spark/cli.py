@@ -21,19 +21,24 @@ def _registry():
     return REGISTRY
 
 
-def _io_registry() -> dict[str, dict[str, type]]:
-    """Inputs and outputs by TOML name — the `-help Input/Output`
-    surface the reference builds from its component Descs.
+def _io_registry() -> dict[str, dict]:
+    """Inputs, outputs, uploads and metrics clients by TOML name — the
+    `-help Input/Output` surface the reference builds from its component
+    Descs.
 
-    The TOML sections are the compiler's own component tables
-    (toml_compiler.BATCH_INPUTS / STREAMING_INPUTS / SINKS), so `list`
-    advertises exactly the names `run` accepts; components usable only
-    through the Python API are listed separately."""
+    The TOML sections are the compiler's own component tables, so `list`
+    advertises exactly the names `run` accepts and `help` exactly the
+    keys it decodes; components usable only through the Python API are
+    listed separately."""
     from baker_spark.datapipe.ingest import CorpusIngest
-    from baker_spark.plans.toml_compiler import BATCH_INPUTS, SINKS, STREAMING_INPUTS
-    from baker_spark.sinks.upload import S3Upload
+    from baker_spark.plans.toml_compiler import (
+        BATCH_INPUTS,
+        METRICS,
+        SINKS,
+        STREAMING_INPUTS,
+        UPLOADS,
+    )
     from baker_spark.sinks.websocket_server import WebSocketBroadcastServer
-    from baker_spark.streaming.connectors import KinesisStandinSource
     from baker_spark.streaming.daemon import FileStreamSource
 
     return {
@@ -43,13 +48,20 @@ def _io_registry() -> dict[str, dict[str, type]]:
             "WebSocketServer": WebSocketBroadcastServer,
             "CorpusIngest": CorpusIngest,
             "FileStream": FileStreamSource,
-            "KinesisStandin": KinesisStandinSource,
         },
-        "Upload": {"S3": S3Upload},
+        "Upload": UPLOADS,
+        "Metrics": METRICS,
     }
 
 
-def _first_doc_line(cls: type) -> str:
+def _owner(fn) -> type:
+    """The class behind a table entry: the class itself, or the class
+    of a ``from_config`` classmethod."""
+    return getattr(fn, "__self__", fn)
+
+
+def _first_doc_line(fn) -> str:
+    cls = _owner(fn)
     doc = inspect.getdoc(cls) or ""
     if not doc or doc.startswith(cls.__name__ + "("):
         return ""  # dataclass auto-signature, not help text
@@ -62,21 +74,16 @@ def cmd_list() -> int:
         print(f"  {cls.name:24s} {_first_doc_line(cls)}")
     for section, components in _io_registry().items():
         print(f"\n{section}:")
-        for name, cls in components.items():
-            print(f"  {name:24s} {_first_doc_line(cls)}")
+        for name, fn in components.items():
+            print(f"  {name:24s} {_first_doc_line(fn)}")
     return 0
 
 
-def _camel(snake: str) -> str:
-    """snake_case -> CamelCase: the TOML spelling of an operator config
-    key (the compiler snake-cases on the way in, base.py:_snake)."""
-    return "".join("AWS" if w == "aws" else w.capitalize() for w in snake.split("_"))
-
-
 def _field_comments(cls: type) -> dict[str, str]:
-    """Per-field descriptions harvested from ``#:`` comments directly
-    above class-level field assignments (the dataclass sinks document
-    every key that way). Source parse — no runtime cost elsewhere."""
+    """Per-key descriptions harvested from ``#:`` comments directly above
+    class-level field assignments and above ``from_config`` parameters
+    (the components document every key that way). Source parse — no
+    runtime cost elsewhere."""
     import ast
     import textwrap
 
@@ -87,7 +94,11 @@ def _field_comments(cls: type) -> dict[str, str]:
     lines = inspect.getsource(cls).splitlines()
     out: dict[str, str] = {}
     for node in ast.walk(tree):
-        if not isinstance(node, ast.AnnAssign) or not isinstance(node.target, ast.Name):
+        if isinstance(node, ast.AnnAssign) and isinstance(node.target, ast.Name):
+            name = node.target.id
+        elif isinstance(node, ast.arg):
+            name = node.arg
+        else:
             continue
         doc: list[str] = []
         i = node.lineno - 2  # line above the assignment, 0-based
@@ -95,7 +106,7 @@ def _field_comments(cls: type) -> dict[str, str]:
             doc.insert(0, lines[i].strip()[2:].strip())
             i -= 1
         if doc:
-            out[node.target.id] = " ".join(doc)
+            out[name] = " ".join(doc)
     return out
 
 
@@ -106,50 +117,51 @@ def _type_name(annotation) -> str:
     return str(annotation).replace("typing.", "").replace(" | ", r" \| ")
 
 
-def _config_rows(cls: type) -> list[tuple[str, str, str, bool, str]]:
+def _config_rows(fn, context=()) -> list[tuple[str, str, str, bool, str]]:
     """(Name, Type, Default, Required, Description) per config key —
     the reference's helpConfigKey shape (help.go / help_markdown.go:
-    genConfigKeysMarkdown renders exactly these five columns)."""
+    genConfigKeysMarkdown renders exactly these five columns). The keys
+    are the ones operators.base.decode accepts."""
     import dataclasses
 
+    from baker_spark.operators.base import config_params, toml_key
+
+    cls = _owner(fn)
     docs: dict[str, str] = {}
     for klass in reversed(cls.__mro__):  # inherited keys keep their docs
         docs.update(_field_comments(klass))
+    # a dataclass default_factory shows in the signature as a sentinel
+    factories = {
+        f.name: f.default_factory
+        for f in (dataclasses.fields(fn) if dataclasses.is_dataclass(fn) else ())
+        if f.default_factory is not dataclasses.MISSING
+    }
     rows = []
-    if dataclasses.is_dataclass(cls):
-        for f in dataclasses.fields(cls):
-            required = (
-                f.default is dataclasses.MISSING
-                and f.default_factory is dataclasses.MISSING
-            )
-            default = "" if required else (
-                repr(f.default) if f.default is not dataclasses.MISSING else repr(f.default_factory())
-            )
-            rows.append((_camel(f.name), _type_name(f.type), default, required, docs.get(f.name, "")))
-        return rows
-    sig = inspect.signature(cls.__init__)
-    for p in list(sig.parameters.values())[1:]:
-        if p.kind in (p.VAR_POSITIONAL, p.VAR_KEYWORD):
-            continue
+    for p in config_params(fn, context):
         required = p.default is inspect.Parameter.empty
-        default = "" if required else repr(p.default)
-        rows.append((_camel(p.name), _type_name(p.annotation), default, required, docs.get(p.name, "")))
+        if required:
+            default = ""
+        elif p.name in factories:
+            default = repr(factories[p.name]())
+        else:
+            default = repr(p.default)
+        rows.append((toml_key(p.name), _type_name(p.annotation), default, required, docs.get(p.name, "")))
     return rows
 
 
-def _print_component(title: str, cls: type, kind: str = "Filter", section: str = "filter") -> None:
+def _print_component(title: str, fn, kind: str = "Filter", section: str = "filter") -> None:
     """Markdown help in the reference's RenderHelpMarkdown shape
     (/root/reference/help_markdown.go: genFilterMarkdown +
     genConfigKeysMarkdown): Overview from the docstring, then a
     |Name|Type|Default|Required|Description| table of config keys."""
+    from baker_spark.plans.toml_compiler import INPUT_CONTEXT, OUTPUT_CONTEXT
+
     print(f"## {kind} *{title}*\n")
     print("### Overview")
-    print(inspect.getdoc(cls) or "(no help)")
+    print(inspect.getdoc(_owner(fn)) or "(no help)")
     print("\n### Configuration")
-    rows = _config_rows(cls)
-    if section == "input":
-        # an input's fields and separator come from [fields] and [csv]
-        rows = [r for r in rows if r[0] not in ("Fields", "Separator")]
+    context = {"Input": INPUT_CONTEXT, "Output": OUTPUT_CONTEXT}.get(kind, ())
+    rows = _config_rows(fn, context)
     if not rows:
         print("No configuration available")
         return
@@ -166,6 +178,7 @@ _SECTION_KIND = {
     "Outputs (TOML)": ("Output", "output"),
     "Python API only": ("Component", "output"),
     "Upload": ("Upload", "upload"),
+    "Metrics": ("Metrics", "metrics"),
 }
 
 
@@ -175,18 +188,18 @@ def cmd_help(component: str) -> int:
             _print_component(cls.name, cls)
         for sec, components in _io_registry().items():
             kind, section = _SECTION_KIND[sec]
-            for name, io_cls in components.items():
-                _print_component(name, io_cls, kind, section)
+            for name, fn in components.items():
+                _print_component(name, fn, kind, section)
         return 0
     cls = _registry().get(component.lower())
     if cls is not None:
         _print_component(cls.name, cls)
         return 0
     for sec, components in _io_registry().items():
-        for name, io_cls in components.items():
+        for name, fn in components.items():
             if name.lower() == component.lower():
                 kind, section = _SECTION_KIND[sec]
-                _print_component(name, io_cls, kind, section)
+                _print_component(name, fn, kind, section)
                 return 0
     print(f"unknown component {component!r}", file=sys.stderr)
     return 1
@@ -264,9 +277,8 @@ def cmd_run(
             # (the per-app lease table, kcl.go:27-49) — scope the base
             # dir by app so two apps sharing --checkpoint don't resume
             # from each other's offsets
-            src = getattr(pipeline.source, "inner", pipeline.source)
-            if hasattr(src, "checkpoint_dir"):
-                ckpt = src.checkpoint_dir(ckpt)
+            if hasattr(pipeline.source, "checkpoint_dir"):
+                ckpt = pipeline.source.checkpoint_dir(ckpt)
             _log(
                 "daemon topology started; Ctrl-C to stop",
                 pretty,

@@ -5,8 +5,9 @@ every second (read/written/error counts, per-filter drops,
 
 Spark equivalents wired here:
 
-- ``observe()`` named metrics on DataFrames (CountAndTag uses this) are
-  collected by a ``QueryExecutionListener`` for free during real actions
+- ``observe()`` named metrics on DataFrames (CountAndTag uses this) ride
+  the real actions for free; :func:`collect_observations` reads them back
+  from each operator's ``Observation`` afterwards
 - ``StatsDumper`` samples the status tracker once per second and emits a
   one-line progress string — the analog of the reference's console dump
   (testdata/TestStatsDumper.stdout.golden shape)

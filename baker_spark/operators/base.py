@@ -14,7 +14,7 @@ fields write ''.
 
 from __future__ import annotations
 
-import re
+import inspect
 
 from pyspark.sql import Column, DataFrame, functions as F
 
@@ -71,30 +71,61 @@ def register(cls: type[Operator]) -> type[Operator]:
     return cls
 
 
-_CAMEL_RE = re.compile(r"(?<=[a-z0-9])(?=[A-Z])|(?<=[A-Z])(?=[A-Z][a-z])")
+def fold_key(key: str) -> str:
+    """The form config keys are matched in: no underscores, lower case."""
+    return key.replace("_", "").lower()
 
 
-def _snake(key: str) -> str:
-    return _CAMEL_RE.sub("_", key).lower()
+def toml_key(param: str) -> str:
+    """A parameter name's TOML spelling, as help prints it: snake_case ->
+    CamelCase (``aws_region`` -> ``AWSRegion``, ``csv_path`` -> ``CSVPath``)."""
+    return "".join(w.upper() if w in ("aws", "csv") else w.capitalize() for w in param.split("_"))
+
+
+def config_params(fn, context=()) -> list[inspect.Parameter]:
+    """The ``[*.config]`` keys of ``fn`` (a class or a ``from_config``
+    classmethod): its keyword parameters, less those named in
+    ``context``, which the topology fills."""
+    return [
+        p
+        for p in inspect.signature(fn).parameters.values()
+        if p.kind in (p.POSITIONAL_OR_KEYWORD, p.KEYWORD_ONLY) and p.name not in context
+    ]
+
+
+def decode(fn, config: dict, context: dict | None = None, what: str = ""):
+    """Call ``fn`` with a ``[*.config]`` table, the way the reference
+    decodes every component's config (config.go:233-277,353-384): keys
+    match parameter names case-insensitively, ignoring underscores
+    (``PathString``, ``pathstring`` and ``path_string`` are one key); an
+    unknown key is rejected naming the valid ones (config.go:404-406),
+    then a missing required one. ``context`` (the ``[fields]`` names, the
+    ``[csv]`` separator, the ``[output]`` fields) goes only to the
+    parameters named like its entries."""
+    context = context or {}
+    params = config_params(fn, context)
+    by_key = {fold_key(p.name): p.name for p in params}
+    names = {p.name for p in inspect.signature(fn).parameters.values()}
+    kwargs = {k: v for k, v in context.items() if k in names}
+    for key, value in config.items():
+        name = by_key.get(fold_key(key))
+        if name is None:
+            valid = ", ".join(toml_key(p.name) for p in params) or "none"
+            raise ValueError(f"{what}: unknown config key {key!r}; valid keys: {valid}")
+        kwargs[name] = value
+    for p in params:
+        if p.default is p.empty and p.name not in kwargs:
+            raise ValueError(f"{what}: {toml_key(p.name)} is required")
+    return fn(**kwargs)
 
 
 def create(name: str, **config) -> Operator:
-    """Instantiate an operator by (case-insensitive) name with TOML-style
-    CamelCase or snake_case config keys. Unknown keys are rejected like
-    the reference's config decode (config.go:404-406)."""
+    """Instantiate an operator by (case-insensitive) name from its
+    ``[filter.config]`` keys, through :func:`decode`."""
     cls = REGISTRY.get(name.lower())
     if cls is None:
         raise KeyError(f"unknown operator {name!r}; known: {sorted(REGISTRY)}")
-    kwargs = {_snake(k): v for k, v in config.items()}
-    try:
-        return cls(**kwargs)
-    except TypeError as e:
-        import inspect
-
-        valid = [p for p in inspect.signature(cls.__init__).parameters if p != "self"]
-        raise ValueError(
-            f"bad config for {cls.name}: {e}; valid keys: {valid}"
-        ) from e
+    return decode(cls, config, what=f"{cls.name} filter")
 
 
 def is_empty(col: Column | str) -> Column:

@@ -237,6 +237,35 @@ class DynamoDBWriter:
     #: replays and racing jobs can never clobber a landed item
     strict_once: bool = False
 
+    @classmethod
+    def from_config(
+        cls,
+        #: the table to write
+        table: str,
+        #: "s:name" / "n:name" per column; the first is the partition key
+        columns: list[str],
+        #: a write goes to every region's table (output/dyndb.go:20-31)
+        regions: list[str] = ("us-west-2",),
+        #: per-task write-rate cap; 0 = none
+        max_writes_per_sec: int = 0,
+        #: Go duration capping the UnprocessedItems retry backoff
+        max_backoff: str = "2m",
+        #: engine extension (not in dyndb.go): first-writer-wins
+        #: conditional puts for replay/race safety — see the module
+        #: docstring for when to pay the per-item cost
+        strict_once: bool = False,
+    ) -> "DynamoDBWriter":
+        from baker_spark.sinks.filewriter import parse_go_duration
+
+        return cls(
+            table=table,
+            columns=columns,
+            regions=list(regions),
+            max_writes_per_sec=int(max_writes_per_sec),
+            max_backoff=parse_go_duration(max_backoff),
+            strict_once=bool(strict_once),
+        )
+
     def __post_init__(self):
         # validate BEFORE splitting: a column missing its ':' prefix must
         # produce the clear error, not an IndexError from split()[1]

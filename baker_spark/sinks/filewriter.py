@@ -25,6 +25,7 @@ Reference capabilities -> Spark disposition:
 
 from __future__ import annotations
 
+import os
 import re
 from dataclasses import dataclass, field
 from datetime import datetime, timezone
@@ -39,32 +40,13 @@ _PLACEHOLDER_RX = re.compile(r"\{\{\s*\.(\w+)\s*\}\}")
 #: the value the per-job ``zlib.compress.level`` option carries into the
 #: write job's Hadoop conf (file-source options overlay it via
 #: SessionState.newHadoopConfWithOptions, same ride as the zstd level).
-#: BuiltInGzipCompressor honors it since Hadoop 3.3, native zlib or not.
-#: The intermediate names TWO..EIGHT only exist since Hadoop 3.3.2
-#: (HADOOP-17825) — on an older classpath Configuration.getEnum throws,
-#: so _gzip_level_name snaps 2-8 to the nearest always-present endpoint
-#: there instead of failing the write job.
+#: BuiltInGzipCompressor honors it since Hadoop 3.3, native zlib or not;
+#: the names TWO..EIGHT exist since Hadoop 3.3.2, and Spark 4 ships 3.4.
 _GZIP_LEVELS = {
     -1: "DEFAULT_COMPRESSION", 0: "NO_COMPRESSION", 1: "BEST_SPEED",
     2: "TWO", 3: "THREE", 4: "FOUR", 5: "FIVE", 6: "SIX",
     7: "SEVEN", 8: "EIGHT", 9: "BEST_COMPRESSION",
 }
-
-
-def _gzip_level_name(spark, level: int) -> str:
-    name = _GZIP_LEVELS[level]
-    if level in (-1, 0, 1, 9):
-        return name  # present in every Hadoop with CompressionLevel
-    try:
-        ver = spark.sparkContext._jvm.org.apache.hadoop.util.VersionInfo.getVersion()
-        major, minor, patch = (int(x) for x in ver.split("-")[0].split(".")[:3])
-        if (major, minor, patch) >= (3, 3, 2):
-            return name
-    except Exception:  # noqa: BLE001 — unparseable vendor version: be safe
-        pass
-    return "BEST_SPEED" if level <= 4 else (
-        "DEFAULT_COMPRESSION" if level <= 7 else "BEST_COMPRESSION"
-    )
 
 _SIZE_RX = re.compile(r"^\s*([0-9]*\.?[0-9]+)\s*([a-zA-Z]*)\s*$")
 #: go-humanize unit table (size_bytes.go:30-36 delegates to
@@ -164,6 +146,12 @@ def parse_path_template(template: str) -> tuple[str, list[str], bool]:
     return base, time_parts, "Field0" in names
 
 
+def _codec_for(path: str) -> str:
+    """The reference's extension rule (filewriter.go:257): zstd for a
+    .zst/.zstd path, gzip otherwise."""
+    return "zstd" if path.rstrip("/").endswith((".zst", ".zstd")) else "gzip"
+
+
 @dataclass
 class FileWriter:
     """Serialized records to compressed CSV files: time-templated
@@ -213,6 +201,70 @@ class FileWriter:
     timestamp_field: str | None = None
     #: injectable clock for the no-field mode (tests freeze it)
     batch_time: datetime | None = None
+    #: RotateInterval in seconds (filewriter.go:95): a daemon topology's
+    #: micro-batch trigger; None = as fast as possible
+    rotate_interval: float | None = None
+
+    @classmethod
+    def from_config(
+        cls,
+        separator: str,
+        output_fields: list[str] | None,
+        #: output location; may template {{.Year}}..{{.Second}},
+        #: {{.Field0}}, {{.Index}}, {{.UUID}} and {{.Rotation}}
+        #: (filewriter.go:34-43). A .zst/.zstd name writes zstd, else gzip
+        path_string: str = "_out",
+        #: humanized size ("128MB") at which a compressed file rotates;
+        #: 0 = never
+        rotate_size: int | str = 0,
+        #: Go duration ("60s"): a daemon topology's micro-batch trigger,
+        #: "-1" = as fast as possible. A batch run rotates by the finest
+        #: time placeholder instead
+        rotate_interval: str = "-1",
+        #: drop zero-record part files after each write
+        discard_empty_files: bool = False,
+        #: 1 = fastest .. 19 = smallest (filewriter.go:98,116-117)
+        zstd_compression_level: int = 3,
+        #: long-distance-matching window log, 10..31; 0 = off
+        zstd_window_log: int = 0,
+        #: record field driving a time template's layout (event time);
+        #: unset = the batch's wall clock
+        timestamp_field: str | None = None,
+    ) -> "FileWriter":
+        secs = parse_go_duration(rotate_interval)
+        kw = dict(
+            # from the FULL PathString: a time template's FileWriter only
+            # sees the pre-placeholder base directory ("/out" from
+            # "/out/{{.Year}}/log.zst"), which never carries the extension
+            compression=_codec_for(path_string),
+            separator=separator,
+            rotate_size_bytes=parse_size_bytes(rotate_size) or None,
+            discard_empty_files=bool(discard_empty_files),
+            zstd_level=int(zstd_compression_level) or 3,
+            zstd_window_log=int(zstd_window_log),
+            rotate_interval=secs if secs > 0 else None,
+        )
+        if "{{" not in path_string:
+            # templateless path: its directory is the output dir; task
+            # files replace the {{.Index}}/{{.UUID}} parts of the
+            # reference template
+            ext = os.path.splitext(path_string)[1]
+            return cls(path=path_string + ".d" if ext else path_string, **kw)
+        # {{.Year}}/{{.Month}}/{{.Day}} etc. become a partitioned
+        # year=/month=/day= tree under the literal prefix; {{.Field0}}
+        # becomes partitionBy on the first output field
+        base, time_parts, wants_field0 = parse_path_template(path_string)
+        if wants_field0 and not output_fields:
+            raise ValueError(
+                "FileWriter PathString uses {{.Field0}} but [output] has no fields"
+            )
+        return cls(
+            path=base,
+            partition_by=output_fields[0] if wants_field0 else None,
+            time_partitions=time_parts,
+            timestamp_field=timestamp_field,
+            **kw,
+        )
 
     def __post_init__(self):
         if self.gzip_level not in _GZIP_LEVELS:
@@ -231,12 +283,8 @@ class FileWriter:
         if self.compression is None:
             base = self.path.rstrip("/")
             # .d output dirs keep the configured file extension visible
-            # ("out.csv.zst.d" — see toml_compiler's templateless branch)
-            if base.endswith(".d"):
-                base = base[:-2]
-            self.compression = (
-                "zstd" if base.endswith((".zst", ".zstd")) else "gzip"
-            )
+            # ("out.csv.zst.d" — see from_config's templateless branch)
+            self.compression = _codec_for(base[:-2] if base.endswith(".d") else base)
 
     def _codec_option(self, spark) -> str:
         """The value for ``option("compression", ...)``: builtin names
@@ -407,8 +455,7 @@ class FileWriter:
             # same per-job overlay for the deflate level; default 1 is
             # the reference's hardcoded BestSpeed (filewriter.go:392-394)
             writer = writer.option(
-                "zlib.compress.level",
-                _gzip_level_name(df.sparkSession, self.gzip_level),
+                "zlib.compress.level", _GZIP_LEVELS[self.gzip_level]
             )
         if max_records:
             writer = writer.option("maxRecordsPerFile", max_records)

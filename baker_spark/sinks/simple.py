@@ -20,7 +20,7 @@ class Nop:
     #: ACCUMULATES across writes (daemon mode calls write per
     #: micro-batch; nop.go counts everything consumed — same convention
     #: as Recorder's records.extend)
-    count: int = 0
+    count: int = field(default=0, init=False)
 
     def write(self, df: DataFrame) -> int:
         obs = Observation()
@@ -35,10 +35,8 @@ class Nop:
 class OpLog:
     """Print each record to stdout (dev tool)."""
 
-    num_rows: int = 20
-
     def write(self, df: DataFrame) -> None:
-        df.show(self.num_rows, truncate=False)
+        df.show(20, truncate=False)
 
 
 @dataclass
@@ -47,7 +45,7 @@ class Recorder:
     every write like the reference's outputtest Recorder — under a
     streaming foreachBatch each micro-batch accumulates."""
 
-    records: list = field(default_factory=list)
+    records: list = field(default_factory=list, init=False)
 
     def write(self, df: DataFrame) -> list:
         batch = df.collect()
@@ -76,6 +74,24 @@ class WebSocketSink:
     #: write (NOT at plan-compile time — compiling a config must not
     #: bind a port) and stopped by close()
     server: object | None = None
+
+    @classmethod
+    def from_config(
+        cls,
+        output_fields: list[str] | None,
+        #: the broadcast server's port (an extension: the reference
+        #: hardcodes :8080; 0 binds a free one)
+        port: int = 8080,
+    ) -> "WebSocketSink":
+        """output/websocket.go:12-77: a broadcast server in-process,
+        pushing each record's ``[output]`` fields to every client. The
+        server is NOT started here: compiling a config must not bind a
+        port (compiling one plan twice at :8080 would EADDRINUSE); the
+        sink starts it on first write and ``close()`` stops it."""
+        from baker_spark.sinks.websocket_server import WebSocketBroadcastServer
+
+        server = WebSocketBroadcastServer(port=int(port))
+        return cls(send_fn=server.broadcast, fields=output_fields or None, server=server)
 
     def write(self, df: DataFrame) -> int:
         import json

@@ -41,6 +41,35 @@ class SQLiteWriter:
     separator: str = ","
     single_file: bool = True
 
+    @classmethod
+    def from_config(
+        cls,
+        separator: str,
+        #: the database file; {shard} becomes the Spark partition id
+        path_string: str = "out.sqlite3",
+        table_name: str = "records",
+        #: SQL run before the inserts, in order (sqlite.go:36-43)
+        pre_run: list[str] = (),
+        #: SQL run after the inserts, in order
+        post_run: list[str] = (),
+        #: empty the table before inserting
+        clear: bool = False,
+        #: VACUUM after the inserts
+        vacuum: bool = False,
+        #: PRAGMA page_size before any table exists; 0 = SQLite's default
+        page_size: int = 0,
+    ) -> "SQLiteWriter":
+        return cls(
+            path=path_string,
+            table=table_name,
+            separator=separator,
+            pre_run=list(pre_run),
+            post_run=list(post_run),
+            clear=bool(clear),
+            vacuum=bool(vacuum),
+            page_size=int(page_size),
+        )
+
     def write(self, df: DataFrame) -> None:
         if self.raw_column:
             from baker_spark.sinks.filewriter import serialize_line
@@ -125,3 +154,11 @@ class SQLiteWriter:
             _os.replace(tmp_path, final_path)  # atomic publish
 
         df.foreachPartition(write_partition)
+
+
+@dataclass
+class SQLiteRawWriter(SQLiteWriter):
+    """SQLiteRaw: the SQLite output plus a BLOB column holding each
+    serialized record (output/sqlite.go:15-44)."""
+
+    raw_column: bool = True

@@ -45,6 +45,27 @@ class Stats:
     #: (StatsConfig.CSVPath, output/stats.go:31 — default "stats.csv")
     csv_path: str | None = None
 
+    @classmethod
+    def from_config(
+        cls,
+        separator: str,
+        output_fields: list[str] | None,
+        #: frequency-tracked fields when [output] lists none; the
+        #: reference reads only the [output] list (stats.go:258)
+        fields: list[str] = (),
+        #: record field whose values are parsed as event timestamps
+        timestamp_field: str | None = None,
+        #: where ``write`` puts the CSV report (StatsConfig.CSVPath,
+        #: output/stats.go:31)
+        csv_path: str = "stats.csv",
+    ) -> "Stats":
+        return cls(
+            fields=list(output_fields or fields),
+            timestamp_field=timestamp_field,
+            separator=separator,
+            csv_path=csv_path,
+        )
+
     def _quants(self, col):
         fn = F.percentile if self.exact else F.percentile_approx
         return fn(col, F.array(*[F.lit(q) for q in self.quantiles]))

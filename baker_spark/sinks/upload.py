@@ -51,6 +51,29 @@ class S3Upload:
     #: when upload_fn is injected)
     endpoint_url: str = ""
 
+    @classmethod
+    def from_config(
+        cls,
+        #: destination bucket
+        bucket: str,
+        #: staging directory whose files are uploaded, then removed
+        source_base_path: str = "_out",
+        #: key prefix inside the bucket
+        prefix: str = "",
+        #: attempts per file after the first, with doubling backoff
+        retries: int = 3,
+        #: raise on a file that fails every retry instead of logging it
+        #: and draining on (upload/s3.go ExitOnError)
+        exit_on_error: bool = False,
+    ) -> "S3Upload":
+        return cls(
+            source_base_path=source_base_path,
+            bucket=bucket,
+            prefix=prefix,
+            retries=int(retries),
+            exit_on_error=bool(exit_on_error),
+        )
+
     def _default_upload(self):
         try:
             import boto3  # type: ignore

@@ -59,13 +59,16 @@ class ListSource:
     dirs + MatchPath regex, @listfile indirection, stdin, gz/zstd
     (input/list.go:30-54)."""
 
+    #: attach the url/last_modified metadata columns; set False on an
+    #: instance for the bare record columns
+    attach_metadata = True
+
     def __init__(
         self,
         files: list[str],
         fields: list[str],
         separator: str = ",",
         match_path: str | None = None,
-        attach_metadata: bool = True,
         region: str = "us-west-2",
         s3_endpoint_url: str = "",
     ):
@@ -75,11 +78,14 @@ class ListSource:
         self.fields = list(fields)
         self.separator = separator
         self.match_path = re.compile(match_path) if match_path else None
-        self.attach_metadata = attach_metadata
         #: AWS region for ListObjectsV2 prefix walks (the reference's
         #: ``Region`` option, input/list.go:60 default us-west-2)
         self.region = region
-        #: LocalStack/moto endpoint for tests; "" = real AWS
+        #: S3 endpoint for s3:// DIRECTORY listings, which go through
+        #: boto3 and not the Hadoop fs.s3a.* conf the data read uses — a
+        #: MinIO/LocalStack/VPC deployment that sets fs.s3a.endpoint sets
+        #: this too. "" leaves it to boto3, which reads
+        #: $AWS_ENDPOINT_URL_S3 and otherwise targets AWS.
         self.s3_endpoint_url = s3_endpoint_url
         self._spool = tempfile.mkdtemp(prefix="baker_spark_stdin_")
         #: set once by the first _spool_stdin (stdin can't be re-read)

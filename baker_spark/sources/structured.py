@@ -42,24 +42,8 @@ class _NoHttpMixin:
 
 
 class JsonLinesSource(_NoHttpMixin, ListSource):
-    def __init__(
-        self,
-        files,
-        fields,
-        match_path=None,
-        attach_metadata=True,
-        region="us-west-2",
-        s3_endpoint_url="",
-    ):
-        super().__init__(
-            files,
-            fields,
-            separator=",",
-            match_path=match_path,
-            attach_metadata=attach_metadata,
-            region=region,
-            s3_endpoint_url=s3_endpoint_url,
-        )
+    """The JsonLines input: JSON-lines files resolved like the List
+    input; the ``[fields]`` names pick the top-level keys, as strings."""
 
     def dataframe(self, spark: SparkSession) -> DataFrame:
         paths = self._resolve_no_http()
@@ -77,21 +61,21 @@ class JsonLinesSource(_NoHttpMixin, ListSource):
 
 
 class ParquetSource(_NoHttpMixin, ListSource):
+    """The Parquet input: parquet files resolved like the List input,
+    native types kept; ``[fields]`` is optional and selects columns."""
+
     def __init__(
         self,
         files,
         fields=None,
         match_path=None,
-        attach_metadata=True,
         region="us-west-2",
         s3_endpoint_url="",
     ):
         super().__init__(
             files,
             fields or [],
-            separator=",",
             match_path=match_path,
-            attach_metadata=attach_metadata,
             region=region,
             s3_endpoint_url=s3_endpoint_url,
         )

@@ -1,8 +1,7 @@
 from baker_spark.streaming.connectors import (
     KINESIS_RECORD_SCHEMA,
+    KCLSource,
     KinesisPythonSource,
-    KinesisRecordsSource,
-    KinesisStandinSource,
     kinesis_records,
 )
 from baker_spark.streaming.daemon import FileStreamSource, StreamingPipeline
@@ -14,9 +13,8 @@ __all__ = [
     "KINESIS_RECORD_SCHEMA",
     "DirQueueClient",
     "FileStreamSource",
+    "KCLSource",
     "KinesisPythonSource",
-    "KinesisRecordsSource",
-    "KinesisStandinSource",
     "kinesis_records",
     "SQSConfig",
     "SQSPoller",

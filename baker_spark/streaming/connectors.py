@@ -9,6 +9,7 @@ parses that layout into record columns.
 
 from __future__ import annotations
 
+import re
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -72,43 +73,30 @@ def kinesis_records(
 
 
 @dataclass
-class KinesisRecordsSource:
-    """A connector-layout source (:class:`KinesisPythonSource` or
-    :class:`KinesisStandinSource`) composed with :func:`kinesis_records`
-    — what a TOML ``[input] name="Kinesis"`` with ``[fields]`` compiles
-    to, so the operator chain sees record columns, not raw blobs."""
-
-    inner: object  # anything with .dataframe(spark) -> KINESIS_RECORD_SCHEMA
-    fields: list[str]
-    separator: str = ","
-    arrival_ts: str | None = None
-
-    def dataframe(self, spark: SparkSession) -> DataFrame:
-        return kinesis_records(
-            self.inner(spark), self.fields, self.separator, self.arrival_ts
-        )
-
-    __call__ = dataframe
-
-
-@dataclass
 class KinesisPythonSource:
-    """The jar-free Kinesis reader: ``readStream.format("bakerkinesis")``
+    """The Kinesis input: ``readStream.format("bakerkinesis")``
     (streaming/kinesis_datasource.py — shard -> partition, sequence
-    numbers in the checkpoint WAL, boto3 on executors,
-    :data:`KINESIS_RECORD_SCHEMA` out). This is what a TOML Kinesis or
-    KCL section compiles to: real AWS via boto3, or the observable
-    ``fake_dir`` spool in tests.
+    numbers in the checkpoint WAL, boto3 on executors; the observable
+    ``fake_dir`` spool in tests). With ``[fields]`` the records are
+    parsed by :func:`kinesis_records` (input/kinesis.go:145-150
+    newline-split) into record columns; without, the raw
+    :data:`KINESIS_RECORD_SCHEMA` layout is handed through.
 
     Structured Streaming's checkpointing replaces KCL's DynamoDB lease
     table (input/kcl.go:27-49): resume position comes from the query's
     checkpoint dir, scoped by AppName with :meth:`checkpoint_dir`."""
 
-    stream_name: str
-    region: str = "us-west-2"
+    #: the stream to read (input/kinesis.go:20-26)
+    stream: str
+    #: region of the stream
+    aws_region: str = "us-west-2"
+    #: LATEST or TRIM_HORIZON
     initial_position: str = "LATEST"
+    #: scopes the checkpoint dir (KCL's application name)
     app_name: str | None = None
-    fake_dir: str | None = None  # test backdoor: directory-spool client
+    #: test backdoor: a directory-spool stream client, no AWS
+    fake_dir: str | None = None
+    #: cap on the records one micro-batch admits; None = no cap
     max_records_per_trigger: int | None = None
     #: KCL-lease-table analog (kcl.go:27-49): a directory where commit()
     #: journals committed per-shard positions, making restart resume
@@ -123,12 +111,19 @@ class KinesisPythonSource:
     #: deterministic ownership and separate checkpoints — the
     #: Spark-native replacement for KCL's lease rebalancing.
     shard_filter: str | None = None
+    #: the ``[fields]`` names and ``[csv]`` separator records split into
+    fields: list[str] = field(default_factory=list)
+    separator: str = ","
+
+    def __post_init__(self):
+        if not self.stream:
+            raise ValueError("Kinesis input needs config Stream (kinesis.go:30)")
 
     def checkpoint_dir(self, base: str) -> str:
         """AppName-scoped checkpoint location (kcl.go:43 isolation).
         MaxShards/ShardSync/LeaseDuration (kcl.go:44-46) have no knob
         here: Spark's own task scheduling replaces lease balancing."""
-        return f"{base.rstrip('/')}/{self.app_name or self.stream_name}"
+        return f"{base.rstrip('/')}/{self.app_name or self.stream}"
 
     def dataframe(self, spark: SparkSession) -> DataFrame:
         from baker_spark.streaming.kinesis_datasource import register
@@ -136,8 +131,8 @@ class KinesisPythonSource:
         register(spark)
         reader = (
             spark.readStream.format("bakerkinesis")
-            .option("stream", self.stream_name)
-            .option("aws_region", self.region)
+            .option("stream", self.stream)
+            .option("aws_region", self.aws_region)
             .option("initial_position", self.initial_position)
         )
         if self.fake_dir:
@@ -150,50 +145,27 @@ class KinesisPythonSource:
             reader = reader.option("lease_dir", self.lease_dir)
         if self.shard_filter:
             reader = reader.option("shard_filter", self.shard_filter)
-        return reader.load()
+        if not self.fields:
+            return reader.load()
+        return kinesis_records(reader.load(), self.fields, self.separator)
 
     __call__ = dataframe
-
-    def records(
-        self, spark: SparkSession, fields: list[str], separator: str = ","
-    ) -> DataFrame:
-        return kinesis_records(self.dataframe(spark), fields, separator)
 
 
 @dataclass
-class KinesisStandinSource:
-    """Dev/test stand-in emitting the EXACT ``aws-kinesis`` connector
-    layout (:data:`KINESIS_RECORD_SCHEMA`) from the built-in rate
-    source, so the :func:`kinesis_records` parse path is exercised
-    against the real column contract without the connector jar.
+class KCLSource(KinesisPythonSource):
+    """The KCL input: the Kinesis input with the KCL config checks
+    (input/kcl.go:54-62) — AppName ``[A-Za-z0-9_]+`` is required, and
+    InitialPosition is LATEST or TRIM_HORIZON."""
 
-    Each rate row becomes one Kinesis record: ``data`` cycles through
-    ``sample_lines`` (a sample may contain embedded newlines — the
-    many-log-lines-per-record case the reference handles), partitionKey
-    is ``value % shards``, approximateArrivalTimestamp is the rate
-    timestamp."""
-
-    sample_lines: list[str] = field(default_factory=lambda: ["0,synthetic,u0"])
-    rows_per_second: int = 1000
-    shards: int = 4
-
-    def dataframe(self, spark: SparkSession) -> DataFrame:
-        rate = (
-            spark.readStream.format("rate")
-            .option("rowsPerSecond", self.rows_per_second)
-            .load()
-        )
-        samples = F.array(*[F.lit(s) for s in self.sample_lines])
-        return rate.select(
-            F.encode(
-                F.element_at(samples, (F.col("value") % len(self.sample_lines) + 1).cast("int")),
-                "UTF-8",
-            ).alias("data"),
-            F.lit("standin-stream").alias("streamName"),
-            (F.col("value") % self.shards).cast("string").alias("partitionKey"),
-            F.format_string("%021d", F.col("value")).alias("sequenceNumber"),
-            F.col("timestamp").alias("approximateArrivalTimestamp"),
-        )
-
-    __call__ = dataframe
-
+    def __post_init__(self):
+        super().__post_init__()
+        if not self.app_name or not re.fullmatch(r"[A-Za-z_0-9]+", self.app_name):
+            raise ValueError(
+                f"invalid 'AppName' {self.app_name!r}, accepts only [A-Za-z0-9_]+"
+            )
+        if self.initial_position not in ("LATEST", "TRIM_HORIZON"):
+            raise ValueError(
+                f"invalid 'InitialPosition' {self.initial_position!r}, accepts only "
+                "'LATEST' or 'TRIM_HORIZON'"
+            )

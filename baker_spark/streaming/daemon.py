@@ -24,8 +24,14 @@ chain, ``[output]`` sharding, field selection and ``_bk_*`` drop are
 built by the same ``Pipeline.dataframe``, because operators are Column
 expressions that run identically over micro-batches; sinks plug in
 through ``foreachBatch``. A synthetic stream for development is
-``spark.readStream.format("rate")`` directly, or
-``connectors.KinesisStandinSource`` for the Kinesis record layout.
+``spark.readStream.format("rate")`` directly, or the Kinesis input over
+a ``FakeDir`` spool (``kinesis_datasource.DirStreamClient``) for the
+Kinesis record layout.
+
+Each daemon input is one TOML component: ``compile_toml`` decodes its
+``[input.config]`` keys into the class (SQS, Kinesis, KCL) or its
+``from_config`` (TCP) through the same decode as ``[[filter]]`` keys, so
+an unknown or misspelled key fails at compile time.
 """
 
 from __future__ import annotations

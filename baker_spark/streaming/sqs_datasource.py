@@ -35,6 +35,7 @@ named queue is the sub-directory of that name).
 from __future__ import annotations
 
 import os
+import re
 import uuid
 from dataclasses import dataclass, field
 from datetime import datetime, timezone
@@ -364,6 +365,19 @@ class SQSSource(SQSConfig):
     #: the ``[fields]`` names and ``[csv]`` separator lines split into
     fields: list[str] = field(default_factory=list)
     separator: str = ","
+
+    def __post_init__(self):
+        # fail at construction, i.e. at TOML compile time, like the
+        # reference's config load (sqs.go:105-131): no queue, a bad
+        # MessageFormat or MessageExpression, an invalid FilePathFilter
+        if not (self.queue_names or self.queue_prefixes or self.fake_dir):
+            raise ValueError("SQS: QueuePrefixes or QueueNames must be set")
+        self.parse_function()
+        if self.file_path_filter:
+            try:
+                re.compile(self.file_path_filter)
+            except re.error as exc:
+                raise ValueError(f"SQS: invalid FilePathFilter: {exc}") from exc
 
     def dataframe(self, spark: SparkSession) -> DataFrame:
         register(spark)

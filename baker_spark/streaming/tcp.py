@@ -198,6 +198,26 @@ class TCPFileSource(FileStreamSource):
     listen_host: str = "127.0.0.1"
     listen_port: int = 6000
 
+    @classmethod
+    def from_config(
+        cls,
+        #: directory the listener spools each connection into
+        spool_dir: str,
+        fields: list[str],
+        separator: str,
+        #: host:port to accept gzip connections on (input/tcp.go:20-28);
+        #: an empty host binds 127.0.0.1, port 0 a free port
+        listener: str = ":6000",
+    ) -> "TCPFileSource":
+        host, _, port = listener.rpartition(":")
+        return cls(
+            path=spool_dir,
+            fields=fields,
+            separator=separator,
+            listen_host=host or "127.0.0.1",
+            listen_port=int(port),
+        )
+
     def dataframe(self, spark):
         # the listener makes the spool too; making it here lets a
         # topology build (explain, start) before the first connection

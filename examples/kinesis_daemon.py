@@ -39,7 +39,7 @@ names = ["id", "etype", "user"]
 name = "KCL"
 
 [input.config]
-StreamName = "events"
+Stream = "events"
 AppName = "exampleapp"
 AWSRegion = "us-east-1"
 InitialPosition = "TRIM_HORIZON"

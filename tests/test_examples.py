@@ -4,6 +4,7 @@ anchored at the repo root, so the run does not depend on the working
 directory)."""
 
 import glob
+import json
 import os
 
 import pytest
@@ -224,10 +225,11 @@ def test_cli_help_config_key_table_fidelity(capsys):
 
     assert cli.cmd_help("FileWriter") == 0
     out = capsys.readouterr().out
-    assert "| Path| str| | true| |" in out                     # required, no default
-    assert "| ZstdLevel| int| 3| false|" in out                # default + description
-    assert "ZstdCompressionLevel" in out
+    assert "| PathString| str| '_out'| false| output location;" in out
+    assert "| ZstdCompressionLevel| int| 3| false| 1 = fastest" in out
     assert "| DiscardEmptyFiles| bool| False| false|" in out
+    assert cli.cmd_help("DynamoDB") == 0
+    assert "| Table| str| | true| the table to write|" in capsys.readouterr().out
 
     # help SQS lists exactly the [input.config] keys the compiler reads
     assert cli.cmd_help("SQS") == 0
@@ -256,41 +258,137 @@ def test_cli_help_config_key_table_fidelity(capsys):
 
     assert cli.cmd_list() == 0
     listing = capsys.readouterr().out
-    for section in ("Operators", "Inputs (TOML):", "Outputs (TOML):", "Upload:"):
+    for section in ("Operators", "Inputs (TOML):", "Outputs (TOML):", "Upload:", "Metrics:"):
         assert section in listing
+
+
+#: the least config each TOML component compiles with
+_MINIMAL = {
+    "List": {"files": []},
+    "JsonLines": {"files": []},
+    "Parquet": {"files": []},
+    "SQS": {"FakeDir": "/tmp/queue"},
+    "Kinesis": {"Stream": "s"},
+    "KCL": {"Stream": "s", "AppName": "app"},
+    "TCP": {"SpoolDir": "/tmp/spool"},
+    "DynamoDB": {"Table": "t", "Columns": ["s:c"]},
+    "S3": {"Bucket": "b"},
+}
+
+
+def _toml_for(section: str, name: str, cfg: dict) -> str:
+    """A topology whose ``section`` is component ``name`` with ``cfg`` as
+    its config table (JSON scalars and string lists are TOML values)."""
+    body = "".join(f"{k} = {json.dumps(v)}\n" for k, v in cfg.items())
+    text = '[fields]\nnames = ["a"]\n'
+    if section != "input":
+        text += '[input]\nname = "List"\n[input.config]\nfiles = []\n'
+    if section == "filter":
+        return text + f'[[filter]]\nname = "{name}"\n[filter.config]\n{body}'
+    fields = 'fields = ["a"]\n' if section == "output" else ""
+    return text + f'[{section}]\nname = "{name}"\n{fields}[{section}.config]\n{body}'
+
+
+def _components():
+    from baker_spark.operators import REGISTRY
+    from baker_spark.plans.toml_compiler import (
+        BATCH_INPUTS,
+        METRICS,
+        SINKS,
+        STREAMING_INPUTS,
+        UPLOADS,
+    )
+
+    tables = {
+        "input": {**BATCH_INPUTS, **STREAMING_INPUTS},
+        "output": SINKS,
+        "upload": UPLOADS,
+        "metrics": METRICS,
+        "filter": {cls.name: cls for cls in REGISTRY.values()},
+    }
+    return [(section, name) for section, table in tables.items() for name in table]
+
+
+COMPONENTS = _components()
 
 
 def test_cli_toml_surface_matches_compiler_dispatch():
     """Every name in the compiler's component tables — the dicts `list`
     and `help` render — compiles with a minimal config, and an unknown
     name's error lists the table's names."""
-    from baker_spark.plans.toml_compiler import (
-        BATCH_INPUTS,
-        SINKS,
-        STREAMING_INPUTS,
-        _build_input,
-        _build_sink,
-        _build_streaming_input,
-    )
+    from baker_spark.plans.toml_compiler import BATCH_INPUTS, SINKS, STREAMING_INPUTS
 
-    # minimal configs satisfy each component's required keys
-    sink_cfg = {"DynamoDB": {"Table": "t", "Columns": ["s:c"]}}
-    for n in SINKS:
-        _build_sink({"name": n, "config": sink_cfg.get(n, {})}, ",")
-    for n in BATCH_INPUTS:
-        _build_input({"name": n, "config": {}}, ["a"], ",")
-    stream_cfg = {
-        "SQS": {"FakeDir": "/tmp/queue"},
-        "Kinesis": {"Stream": "s"},
-        "KCL": {"Stream": "s", "AppName": "app"},
-        "TCP": {"SpoolDir": "/tmp/spool"},
-    }
-    for n in STREAMING_INPUTS:
-        _build_streaming_input({"name": n, "config": stream_cfg[n]}, ["a"], ",")
+    for section, name in COMPONENTS:
+        if section != "filter":
+            compile_toml(_toml_for(section, name, _MINIMAL.get(name, {})))
 
     with pytest.raises(ValueError, match="unknown output 'NoSuchOutput'") as exc:
-        _build_sink({"name": "NoSuchOutput"}, ",")
+        compile_toml(_toml_for("output", "NoSuchOutput", {}))
     assert all(n in str(exc.value) for n in SINKS)
     with pytest.raises(ValueError, match="unknown input 'NoSuchInput'") as exc:
-        _build_input({"name": "NoSuchInput"}, ["a"], ",")
+        compile_toml(_toml_for("input", "NoSuchInput", {}))
     assert all(n in str(exc.value) for n in (*BATCH_INPUTS, *STREAMING_INPUTS))
+
+
+@pytest.mark.parametrize("section,name", COMPONENTS, ids=[f"{s}:{n}" for s, n in COMPONENTS])
+def test_help_keys_are_the_keys_compile_accepts(capsys, section, name):
+    """`help <Name>` prints exactly the keys compile decodes: an unknown
+    key fails naming the valid keys, which are the printed ones, and
+    every printed key is accepted (the reference's one decode per
+    component, config.go:233-277,404-406)."""
+    import ast
+    import re
+
+    from baker_spark import cli
+
+    assert cli.cmd_help(name) == 0
+    rows = [
+        [c.strip() for c in re.split(r"(?<!\\)\|", ln)[1:-1]]
+        for ln in capsys.readouterr().out.splitlines()
+        if ln.startswith("| ")
+    ]
+    printed = [r[0] for r in rows]
+
+    with pytest.raises(ValueError, match="unknown config key 'NoSuchKey'; valid keys: ") as exc:
+        compile_toml(_toml_for(section, name, {"NoSuchKey": 1}))
+    valid = str(exc.value).split("valid keys: ", 1)[1]
+    assert printed == ([] if valid == "none" else valid.split(", "))
+
+    minimal = _MINIMAL.get(name, {})
+    for key, _type, default, _required, _desc in rows:
+        value = minimal.get(key)
+        if value is None and default:
+            value = ast.literal_eval(default)
+        value = list(value) if isinstance(value, tuple) else value
+        try:
+            compile_toml(_toml_for(section, name, {**minimal, key: "x" if value is None else value}))
+        except Exception as e:  # a bad value may fail, an unknown key may not
+            assert "unknown config key" not in str(e), (key, e)
+
+
+def test_config_keys_match_case_and_underscore_insensitively(tmp_path):
+    """PathString, pathstring and path_string are one key, as baker's
+    TOML decode matches keys."""
+    paths = {
+        compile_toml(_toml_for("output", "FileWriter", {key: f"{tmp_path}/o"})).sink.path
+        for key in ("PathString", "pathstring", "path_string")
+    }
+    assert paths == {f"{tmp_path}/o"}
+
+
+@pytest.mark.parametrize(
+    "section,name,cfg",
+    [
+        ("input", "TCP", {"SpoolDir": "/tmp/spool", "ListenPort": 7000}),
+        ("input", "Kinesis", {"Stream": "s", "Region": "eu-west-1"}),
+        ("upload", "S3", {"Bucket": "b", "RemoveAfter": False}),
+        ("output", "FileWriter", {"PathString": "/tmp/o", "RotateSzie": "1MB"}),
+    ],
+    ids=["TCP-ListenPort", "Kinesis-Region", "S3-RemoveAfter", "FileWriter-RotateSzie"],
+)
+def test_undecoded_config_keys_fail_at_compile(section, name, cfg):
+    """Keys the compiler once dropped without a word — a help-listed
+    Python field it never read, or a typo — fail at compile time."""
+    bad = list(cfg)[-1]
+    with pytest.raises(ValueError, match=f"{name} .*unknown config key '{bad}'"):
+        compile_toml(_toml_for(section, name, cfg))

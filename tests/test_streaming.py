@@ -334,7 +334,7 @@ def test_toml_daemon_kinesis_compiles(spark):
 [input]
 name="KCL"
 [input.config]
-StreamName="events"
+Stream="events"
 AppName="bakerapp"
 AWSRegion="us-east-1"
 InitialPosition="TRIM_HORIZON"
@@ -348,7 +348,7 @@ InitialPosition="TRIM_HORIZON"
     # socket source it once fell back to is retired
     for fields in ("", '[fields]\nnames=["a"]\n'):
         with pytest.raises(ValueError, match="SpoolDir is required"):
-            compile_toml(fields + '[input]\nname="TCP"\n[input.config]\nListenAddress=":7100"\n')
+            compile_toml(fields + '[input]\nname="TCP"\n[input.config]\nListener=":7100"\n')
 
 
 def test_checkpoint_resume_no_reprocessing(spark, tmp_path):

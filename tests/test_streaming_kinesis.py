@@ -8,8 +8,7 @@ from datetime import datetime
 
 from baker_spark.streaming.connectors import (
     KINESIS_RECORD_SCHEMA,
-    KinesisRecordsSource,
-    KinesisStandinSource,
+    KinesisPythonSource,
     kinesis_records,
 )
 
@@ -67,22 +66,10 @@ def test_kinesis_records_short_line_gives_null_fields_under_ansi(spark):
     ]
 
 
-def test_standin_emits_exact_connector_schema(spark):
-    """The stand-in's contract IS the connector layout — if this schema
-    drifts from KINESIS_RECORD_SCHEMA, topology code tested against the
-    stand-in would break on the real connector."""
-    standin = KinesisStandinSource(sample_lines=["1,click,u1\n2,view,u2"])
-    got = standin.dataframe(spark).schema
-    # literals make some stand-in columns non-nullable — strictly tighter
-    # than the connector's; names and types must match exactly
-    assert [(f.name, f.dataType) for f in got] == [
-        (f.name, f.dataType) for f in KINESIS_RECORD_SCHEMA
-    ]
-
-
 def test_streaming_parse_off_connector_layout(spark, tmp_path):
-    """A streaming query over the exact connector layout (file-backed
-    stand-in) through kinesis_records — the end-to-end parse contract."""
+    """A streaming query over the exact connector layout (a parquet
+    file stream) through kinesis_records — the end-to-end parse
+    contract."""
     src_dir = tmp_path / "kin"
     src_dir.mkdir()
     spark.createDataFrame(
@@ -121,10 +108,10 @@ name = "Nop"
 """
     )
     src = plan.source
-    assert isinstance(src, KinesisRecordsSource)
+    assert isinstance(src, KinesisPythonSource)
     assert src.fields == ["id", "etype", "user"]
-    assert src.inner.stream_name == "events-stream"
-    assert src.inner.region == "us-east-1"
+    assert src.stream == "events-stream"
+    assert src.aws_region == "us-east-1"
 
 
 def test_toml_kcl_validates_like_the_reference():
@@ -150,7 +137,7 @@ name = "KCL"
 name = "Nop"
 """
     plan = compile_toml(base.format(app="my_app_1", pos="TRIM_HORIZON"))
-    src = plan.source.inner
+    src = plan.source
     assert src.app_name == "my_app_1"
     assert src.initial_position == "TRIM_HORIZON"
     assert src.checkpoint_dir("/ckpt") == "/ckpt/my_app_1"
@@ -206,14 +193,19 @@ def kstream(spark, tmp_path):
 def test_kinesis_source_microbatch_loop(spark, kstream):
     """Records put across two triggers arrive exactly once, with the
     aws-kinesis connector layout (data/streamName/partitionKey/
-    sequenceNumber/arrival ts) intact."""
+    sequenceNumber/arrival ts) intact: the reader's schema IS
+    KINESIS_RECORD_SCHEMA."""
     client, start = kstream
     client.put_record("events", b"a,1\nb,2\n", "pk0", Ts=42.0)
     q, name = start(initial_position="TRIM_HORIZON")
     q.processAllAvailable()
     client.put_record("events", b"c,3", "pk1")
     q.processAllAvailable()
-    rows = spark.sql(f"SELECT * FROM {name} ORDER BY sequenceNumber").collect()
+    df = spark.sql(f"SELECT * FROM {name} ORDER BY sequenceNumber")
+    assert [(f.name, f.dataType) for f in df.schema] == [
+        (f.name, f.dataType) for f in KINESIS_RECORD_SCHEMA
+    ]
+    rows = df.collect()
     assert [bytes(r.data) for r in rows] == [b"a,1\nb,2\n", b"c,3"]
     assert [r.partitionKey for r in rows] == ["pk0", "pk1"]
     assert [r.sequenceNumber for r in rows] == ["0", "1"]
@@ -318,7 +310,6 @@ def test_toml_kinesis_defaults_to_python_source_and_runs(spark, tmp_path):
     source — and actually RUNS a micro-batch end to end via the
     fake_dir spool. The retired Connector key fails at compile time."""
     from baker_spark.plans import compile_toml
-    from baker_spark.streaming.connectors import KinesisPythonSource
     from baker_spark.streaming.kinesis_datasource import DirStreamClient
 
     root = tmp_path / "kin"
@@ -343,8 +334,7 @@ name = "Nop"
 """
     )
     src = plan.source
-    assert isinstance(src, KinesisRecordsSource)
-    assert isinstance(src.inner, KinesisPythonSource)
+    assert isinstance(src, KinesisPythonSource)
     parsed = src.dataframe(spark)
     name = f"toml_kin_{id(plan)}"
     q = parsed.writeStream.format("memory").queryName(name).start()

@@ -928,8 +928,6 @@ files = ["/dev/null"]
 name = "Stats"
 procs = 1
 fields = ["a", "b"]
-[output.config]
-CountEmptyFields = true
 """
     pipe = compile_toml(toml)
     assert pipe.sink.fields == ["a", "b"]

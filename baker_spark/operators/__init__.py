@@ -12,7 +12,6 @@ from baker_spark.operators.base import (  # noqa: F401
     create,
     is_empty,
     register,
-    split_chain,
 )
 from baker_spark.operators.clausefilter import ClauseFilter  # noqa: F401
 from baker_spark.operators.transforms import (  # noqa: F401

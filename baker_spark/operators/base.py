@@ -23,38 +23,11 @@ class Operator:
     """A declarative row-operator. Subclasses set ``name`` (the TOML
     component name, matched case-insensitively like the reference,
     /root/reference/config.go:300-351) and implement ``apply``.
-
-    Hoisting metadata (used by :func:`split_chain` to push pure predicates
-    above an engine-inserted shuffle barrier such as ``fan_out``):
-
-    - ``keep_predicate()`` — for side-effect-free predicate operators,
-      the keep-condition as a Column over STRING views of the fields it
-      reads (so it evaluates identically on a natively-typed scan and on
-      the all-string record frame); ``None`` for everything else.
-    - ``reads`` — fields the predicate reads (None = unknown).
-    - ``writes`` — fields the operator writes; ``None`` means unknown
-      (treated as a hoisting barrier), ``[]`` means pure predicate.
-    """
+    A filter's ``apply`` is a plain ``df.filter``: Catalyst places the
+    predicate, pushing it through projections and repartitions down to
+    the scan (SURVEY.md §4.1)."""
 
     name: str = ""
-    #: fields written by this operator; None = unknown (barrier for hoisting)
-    writes: list[str] | None = None
-    #: fields read by the keep-predicate; None = not a hoistable predicate
-    reads: list[str] | None = None
-    #: True for predicates whose per-row evaluation is costly (regex,
-    #: parse-to-int). The barrier hoist skips these: when ``fan_out``
-    #: actually repartitions, the pre-exchange stage is the narrow
-    #: (often serial) scan, and an expensive predicate there costs more
-    #: wall time than its exchange savings unless it is very selective —
-    #: measured ~10% on the reference-topology bench. They still run
-    #: exactly once, in the parallel post-exchange chain. (On a real
-    #: multi-split input fan_out is a no-op and Catalyst pushes ALL
-    #: predicates into the scan as usual — this flag only shapes the
-    #: engine's own above-the-exchange hoist.)
-    expensive_predicate: bool = False
-
-    def keep_predicate(self) -> Column | None:
-        return None
 
     def apply(self, df: DataFrame) -> DataFrame:
         raise NotImplementedError
@@ -139,45 +112,3 @@ def chain(df: DataFrame, ops: list[Operator]) -> DataFrame:
         df = op.apply(df)
     return df
 
-
-def split_chain(ops: list[Operator]) -> tuple[list[Column], list[Operator]]:
-    """Split a chain into the keep-predicates that may legally run
-    BEFORE it and the chain left to run after them.
-
-    Walk the chain in order, tracking which fields earlier operators
-    write. A pure predicate hoists iff it reads none of them (predicates
-    commute with each other). An operator with unknown writes is a
-    barrier — nothing after it hoists. This mirrors what Catalyst's
-    PushDownPredicates does, but across the engine's own
-    fan-out/repartition barrier, which Catalyst must not cross.
-
-    An op is dropped from the remaining chain iff its keep-predicate
-    hoisted AND it writes nothing (``writes == []``): then ``apply()`` is
-    exactly ``filter(keep_predicate)``, which already ran below the
-    barrier — each filter runs once, like the reference's single-pass
-    chain (topology.go:204-218). Transforms and barriers keep their
-    place and order."""
-    preds: list[Column] = []
-    remaining: list[Operator] = []
-    written: set[str] = set()
-    barrier = False
-    for op in ops:
-        kp = op.keep_predicate()
-        hoisted = (
-            not barrier
-            and kp is not None
-            and not op.expensive_predicate
-            and op.reads is not None
-            and not (set(op.reads) & written)
-        )
-        if hoisted:
-            preds.append(kp)
-        if hoisted and op.writes == []:
-            pass  # pure predicate, fully represented by the hoisted filter
-        else:
-            remaining.append(op)
-        if op.writes is None:
-            barrier = True
-        else:
-            written |= set(op.writes)
-    return preds, remaining

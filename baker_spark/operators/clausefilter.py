@@ -17,7 +17,7 @@ optimizer instead of the reference's hand-rolled tree walk.
 from __future__ import annotations
 
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from baker_spark.functions import sql_ident, sql_str
 from baker_spark.operators.base import Operator, register
@@ -77,7 +77,7 @@ def compile_clause_sql(node, columns: list[str] | None = None) -> str:
         return f"(NOT {compile_clause_sql(args[0], columns)})"
     # atom: (field value) — byte equality; empty field == null (baker
     # fidelity). The string cast makes the atom evaluate identically on a
-    # natively-typed scan (predicate hoisting) and the all-string frame.
+    # natively-typed frame and the all-string record frame.
     if len(node) != 2 or isinstance(node[1], list) or isinstance(head, list):
         raise ValueError(f"cannot interpret clause {node!r}")
     field, value = head, node[1]
@@ -89,25 +89,6 @@ def compile_clause_sql(node, columns: list[str] | None = None) -> str:
     return f"(coalesce({col}, '') = {sql_str(value)})"
 
 
-def compile_clause(node, columns: list[str] | None = None) -> Column:
-    """Compile a parsed s-expression node to a Column predicate."""
-    return F.expr(compile_clause_sql(node, columns))
-
-
-def clause_fields(node) -> list[str]:
-    """Atom field names referenced by a parsed s-expression."""
-    if node is None:
-        return []
-    if isinstance(node, list) and node and node[0] in ("and", "or", "not"):
-        out: list[str] = []
-        for child in node[1:]:
-            out.extend(clause_fields(child))
-        return out
-    if isinstance(node, list) and len(node) == 2:
-        return [node[0]]
-    return []
-
-
 @register
 class ClauseFilter(Operator):
     """Keep rows matching a boolean s-expression over field equality
@@ -115,22 +96,12 @@ class ClauseFilter(Operator):
     everything (/root/reference/filter/clausefilter.go:14-77)."""
 
     name = "ClauseFilter"
-    writes: list[str] = []
 
     def __init__(self, clause: str = ""):
         self.clause = clause.strip()
         self._ast = parse_sexpr(self.clause) if self.clause else None
-        self.reads = sorted(set(clause_fields(self._ast)))
-
-    def predicate(self, columns: list[str] | None = None) -> Column:
-        return compile_clause(self._ast, columns)
-
-    def keep_predicate(self) -> Column | None:
-        if self._ast is None:
-            return None  # empty clause keeps everything — nothing to hoist
-        return self.predicate()
 
     def apply(self, df: DataFrame) -> DataFrame:
         if self._ast is None:
             return df
-        return df.filter(self.predicate(df.columns))
+        return df.filter(F.expr(compile_clause_sql(self._ast, df.columns)))

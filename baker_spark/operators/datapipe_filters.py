@@ -5,20 +5,17 @@ TOML compiler covered exactly the reference's §2 inventory — a topology
 user couldn't get `[[filter]] name="GopherQuality"` without writing
 Python. These wrappers put the datapipe kernels behind the same
 Operator contract the reference's filters use (desc.go:76-81 name-based
-construction; record model = string fields), with the hoisting metadata
-filled in so the topology engine treats them correctly:
+construction; record model = string fields):
 
 - GopherQuality / C4Filter are PURE PREDICATES built from Catalyst
-  column expressions (zero exchanges, scan-stage parallel) — they
-  expose keep_predicate() like ClauseFilter/RegexMatch, marked
-  expensive (regexp-heavy) so the barrier hoist leaves them in the
-  parallel post-exchange chain.
+  column expressions (zero exchanges, scan-stage parallel), applied
+  as one ``df.filter`` like ClauseFilter/RegexMatch; Catalyst places
+  them in the plan.
 - C4Clean REWRITES the text field to the line-filtered page (the
   actual C4 output artifact) and drops pages failing the document
-  rules — a transform + predicate, writes=[field].
+  rules — a transform + predicate.
 - NearDupDrop is the in-batch near-dup tier (simhash banding engine):
-  a WIDE operator (two keyed exchanges), declared writes=None so the
-  chain splitter treats it as a hoisting barrier. For the continuous
+  a WIDE operator (two keyed exchanges). For the continuous
   cross-batch form use datapipe.ingest.CorpusIngest/MediaIngest — this
   filter is the one-shot topology tier.
 """
@@ -44,15 +41,12 @@ class GopherQuality(Operator):
     topology: route dropped docs to a quarantine sink)."""
 
     name = "GopherQuality"
-    writes: list[str] = []
-    expensive_predicate = True  # regexp_count/split-heavy per row
 
     def __init__(self, field: str = "text", invert: bool = False):
         self.field = field
         self.invert = invert
-        self.reads = [field]
 
-    def keep_predicate(self) -> Column:
+    def apply(self, df: DataFrame) -> DataFrame:
         from baker_spark.datapipe.text import gopher_rules
 
         ok = gopher_rules(self.field)["gopher_ok"]
@@ -60,10 +54,7 @@ class GopherQuality(Operator):
         # is a failing doc, and under invert must be KEPT like any
         # other reject — coalesce before negating, not after
         ok = F.coalesce(ok, F.lit(False))
-        return ~ok if self.invert else ok
-
-    def apply(self, df: DataFrame) -> DataFrame:
-        return df.filter(self.keep_predicate())
+        return df.filter(~ok if self.invert else ok)
 
 
 @register
@@ -75,24 +66,18 @@ class C4Filter(Operator):
     bytes (e.g. when the sink re-serializes the raw record)."""
 
     name = "C4Filter"
-    writes: list[str] = []
-    expensive_predicate = True
 
     def __init__(self, field: str = "text", min_line_words: int = 5, invert: bool = False):
         self.field = field
         self.min_line_words = int(min_line_words)
         self.invert = invert
-        self.reads = [field]
 
-    def keep_predicate(self) -> Column:
+    def apply(self, df: DataFrame) -> DataFrame:
         from baker_spark.datapipe.text import c4_filters
 
         ok = c4_filters(self.field, self.min_line_words)["c4_keep"]
         ok = F.coalesce(ok, F.lit(False))
-        return ~ok if self.invert else ok
-
-    def apply(self, df: DataFrame) -> DataFrame:
-        return df.filter(self.keep_predicate())
+        return df.filter(~ok if self.invert else ok)
 
 
 @register
@@ -101,17 +86,14 @@ class C4Clean(Operator):
     line-filtered page (keep only lines ending in terminal punctuation
     with >= min_line_words words and no 'javascript' — the actual C4
     output artifact) and drop pages failing the document rules. A
-    transform + predicate, so it does NOT hoist (writes=[field]); put a
-    :class:`C4Filter` earlier in the chain when pre-exchange dropping
-    matters more than the rewrite."""
+    transform + predicate; :class:`C4Filter` is the predicate alone,
+    for topologies that must keep the original bytes."""
 
     name = "C4Clean"
 
     def __init__(self, field: str = "text", min_line_words: int = 5):
         self.field = field
         self.min_line_words = int(min_line_words)
-        self.reads = [field]
-        self.writes = [field]
 
     def apply(self, df: DataFrame) -> DataFrame:
         from baker_spark.datapipe.text import c4_filters
@@ -139,11 +121,9 @@ class NearDupDrop(Operator):
 
     Scale shape: two keyed exchanges (band group + anti-join ship only
     (id, simhash) pairs, never the text), hot bands truncated map-side
-    by ``band_cap``. A topology barrier (writes=None): downstream
-    predicates don't hoist across it."""
+    by ``band_cap``."""
 
     name = "NearDupDrop"
-    writes = None  # wide op — hoisting barrier
 
     def __init__(
         self,
@@ -158,7 +138,6 @@ class NearDupDrop(Operator):
         self.id_field = id_field
         self.max_hamming = int(max_hamming)
         self.band_cap = DEFAULT_BAND_CAP if band_cap is None else int(band_cap)
-        self.reads = [field, id_field]
 
     def apply(self, df: DataFrame) -> DataFrame:
         from baker_spark.datapipe.dedup import simhash_pairs
@@ -186,7 +165,7 @@ class GopherRepetition(Operator):
     :class:`GopherQuality`'s A1.1 rules. ``invert`` keeps the REJECTS
     (quarantine-audit topologies).
 
-    Cost note: as a hoistable predicate the thirteen signals inline
+    Cost note: as a column predicate the thirteen signals inline
     their shared ``split(text)`` per signal (Catalyst's subexpression
     elimination does not reach through HOF lambdas — measured 4.5x at
     sf0.1, PERFORMANCE.md). Correct at any scale, but a corpus-wide
@@ -196,25 +175,19 @@ class GopherRepetition(Operator):
     inline cost for one pass, which is the topology trade."""
 
     name = "GopherRepetition"
-    writes: list[str] = []
-    expensive_predicate = True  # 13 HOF-scan signals per row
 
     def __init__(self, field: str = "text", invert: bool = False):
         self.field = field
         self.invert = invert
-        self.reads = [field]
 
-    def keep_predicate(self) -> Column:
+    def apply(self, df: DataFrame) -> DataFrame:
         from baker_spark.datapipe.text import gopher_repetition
 
         ok = gopher_repetition(self.field)["repetition_ok"]
         # NULL verdict (NULL/empty doc) = failing doc; under invert it
         # must be KEPT like any other reject — coalesce before negating
         ok = F.coalesce(ok, F.lit(False))
-        return ~ok if self.invert else ok
-
-    def apply(self, df: DataFrame) -> DataFrame:
-        return df.filter(self.keep_predicate())
+        return df.filter(~ok if self.invert else ok)
 
 
 @register
@@ -232,14 +205,12 @@ class ExactSubstrClean(Operator):
     gram hash, sparse duplicated positions through an id exchange, one
     id-join back to the batch (~24 B/token on the wire). A WIDE
     operator and cross-row by definition (a span is duplicated only
-    relative to the whole batch), hence writes=None: a topology
-    BARRIER — downstream predicates must not hoist above the rewrite,
-    and the spans it finds are per-topology-batch, matching the
-    in-batch contract of :class:`NearDupDrop` (for continuous
-    cross-batch dedup use the datapipe ingest tiers)."""
+    relative to the whole batch): the spans it finds are
+    per-topology-batch, matching the in-batch contract of
+    :class:`NearDupDrop` (for continuous cross-batch dedup use the
+    datapipe ingest tiers)."""
 
     name = "ExactSubstrClean"
-    writes = None  # wide op — hoisting barrier
 
     def __init__(self, field: str = "text", id_field: str = "doc_id", k: int = 50):
         self.field = field
@@ -247,7 +218,6 @@ class ExactSubstrClean(Operator):
         self.k = int(k)
         if self.k < 2:
             raise ValueError(f"ExactSubstrClean k must be >= 2, got {k}")
-        self.reads = [field, id_field]
 
     def apply(self, df: DataFrame) -> DataFrame:
         from baker_spark.datapipe.dedup import exact_substring_dedup
@@ -289,11 +259,9 @@ class KnPerplexityDrop(Operator):
     explode per pass, vocabulary-keyed count tables — never broadcast —
     three probe joins) plus one id semi-join back to the batch. A WIDE
     operator and cross-row by definition (the LM is trained on the
-    batch itself), hence writes=None: a topology barrier, in-batch
-    semantics like NearDupDrop."""
+    batch itself), in-batch semantics like NearDupDrop."""
 
     name = "KnPerplexityDrop"
-    writes = None  # wide op — hoisting barrier
 
     def __init__(
         self,
@@ -316,7 +284,6 @@ class KnPerplexityDrop(Operator):
         # the probe side crosses zero further exchanges — the
         # 100 TB setting (measured 3.2x at sf100, SCALING.md r13)
         self.model_cap = None if model_cap is None else int(model_cap)
-        self.reads = [field, id_field, target_field]
 
     def apply(self, df: DataFrame) -> DataFrame:
         from baker_spark.datapipe.text import kn_bigram_surprisal
@@ -356,15 +323,13 @@ class UrlDedup(Operator):
     canonical URL (min-id per group, then a semi-join that reuses the
     same key). In-batch semantics like NearDupDrop; the continuous
     form keys a CorpusIngest ledger on url_normalize(url) instead.
-    A WIDE operator (writes=None, hoisting barrier)."""
+    A WIDE operator."""
 
     name = "UrlDedup"
-    writes = None  # wide op — hoisting barrier
 
     def __init__(self, url_field: str = "url", id_field: str = "doc_id"):
         self.url_field = url_field
         self.id_field = id_field
-        self.reads = [url_field, id_field]
 
     def apply(self, df: DataFrame) -> DataFrame:
         from baker_spark.datapipe.text import url_normalize

@@ -54,7 +54,6 @@ class MetadataUrl(Operator):
 
     def __init__(self, dst_field: str):
         self.dst = dst_field
-        self.writes = [dst_field]  # pure transform: not a hoist barrier
 
     def apply(self, df: DataFrame) -> DataFrame:
         return df.withColumn(self.dst, F.coalesce(_url(df), F.lit("")))
@@ -69,7 +68,6 @@ class MetadataLastModified(Operator):
 
     def __init__(self, dst_field: str):
         self.dst = dst_field
-        self.writes = [dst_field]  # pure transform: not a hoist barrier
 
     def apply(self, df: DataFrame) -> DataFrame:
         secs = F.unix_timestamp(_last_modified(df))

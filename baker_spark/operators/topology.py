@@ -18,20 +18,9 @@ class Validation(Operator):
     applied at /root/reference/topology.go:376-386)."""
 
     name = "Validation"
-    #: regex per field — same cost class as RegexMatch, so the barrier
-    #: hoist leaves it in the post-exchange chain; declaring the
-    #: metadata below still matters: without it Validation is writes=None
-    #: (a hoisting BARRIER) and every predicate behind it loses its
-    #: pre-exchange slot
-    expensive_predicate = True
 
     def __init__(self, fields: dict[str, str]):
         self.fields = dict(fields)  # field -> regex
-        self.reads = list(self.fields)
-        self.writes = []
-
-    def keep_predicate(self):
-        return self._pred()
 
     def _ok(self, field: str, rx: str):
         return F.coalesce(F.col(field).cast("string"), F.lit("")).rlike(rx)

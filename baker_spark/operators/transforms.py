@@ -36,7 +36,6 @@ class ClearFields(Operator):
 
     def __init__(self, fields: list[str]):
         self.fields = list(fields)
-        self.writes = list(fields)
 
     def apply(self, df: DataFrame) -> DataFrame:
         return df.withColumns({f: F.lit("") for f in self.fields})
@@ -54,7 +53,6 @@ class Concatenate(Operator):
         if len(separator) > 1:
             raise ValueError("separator must be empty or a single char")
         self.fields, self.target, self.separator = list(fields), target, separator
-        self.writes = [target]
 
     def apply(self, df: DataFrame) -> DataFrame:
         # expr string, not per-field Column chains (round 13): identical
@@ -82,7 +80,6 @@ class ExpandList(Operator):
         self.source = source
         self.fields = {int(i): dst for i, dst in fields.items()}
         self.separator = separator
-        self.writes = list(self.fields.values())
 
     def apply(self, df: DataFrame) -> DataFrame:
         import re
@@ -118,7 +115,6 @@ class ExpandJSON(Operator):
         self.source = source
         self.fields = dict(fields)  # JMESPath -> dst field
         self.tf = tuple(true_false_values)
-        self.writes = list(self.fields.values())
 
     @staticmethod
     def _is_simple(path: str) -> bool:
@@ -321,7 +317,6 @@ class FormatTime(Operator):
     ):
         self.src, self.dst = src_field, dst_field
         self.src_format, self.dst_format = src_format, dst_format
-        self.writes = [dst_field]
 
     def _parse(self, col: Column) -> Column:
         fmt = self.src_format
@@ -445,7 +440,6 @@ class Hash(Operator):
         # (a reference TOML omitting Encoding gets raw bytes, not hex);
         # raw lands in a BINARY column, which the line serializer and
         # binary->string cast carry byte-verbatim like Go's []byte.
-        self.writes = [dst_field]
         if function not in ("md5", "sha256"):
             raise ValueError(f"unsupported hash function {function!r}")
         if encoding not in ("hex", "raw", ""):
@@ -464,26 +458,18 @@ class NotNull(Operator):
     (/root/reference/filter/notnull.go:10-62)."""
 
     name = "NotNull"
-    writes: list[str] = []
 
     def __init__(self, fields: list[str]):
         self.fields = list(fields)
-        self.reads = list(fields)
 
-    def keep_predicate(self) -> Column:
+    def apply(self, df: DataFrame) -> DataFrame:
         # Fields=[] is legal in the reference (its loop simply passes
         # every record) — `true` keeps everything. One expr string: the
         # old per-field reduce cost ~0.1s of py4j per chain build.
-        if not self.fields:
-            return F.expr("true")
-        return F.expr(
-            " AND ".join(
-                f"NOT ({_sq(f)} IS NULL OR {_sq(f)} = '')" for f in self.fields
-            )
+        pred = " AND ".join(
+            f"NOT ({_sq(f)} IS NULL OR {_sq(f)} = '')" for f in self.fields
         )
-
-    def apply(self, df: DataFrame) -> DataFrame:
-        return df.filter(self.keep_predicate())
+        return df.filter(F.expr(pred or "true"))
 
 
 @register
@@ -492,9 +478,6 @@ class PartialClone(Operator):
     (/root/reference/filter/partial_clone.go:9-57)."""
 
     name = "PartialClone"
-    #: only drops columns; a later predicate reading a surviving field
-    #: sees it unchanged, so this is no hoisting barrier
-    writes: list[str] = []
 
     def __init__(self, fields: list[str]):
         self.fields = list(fields)
@@ -509,18 +492,14 @@ class RegexMatch(Operator):
     (/root/reference/filter/regex_match.go:93-100: drop iff match==invert)."""
 
     name = "RegexMatch"
-    writes: list[str] = []
-    expensive_predicate = True  # per-row regex: costs more on a narrow
-    # pre-exchange stage than its exchange savings (see Operator docs)
 
     def __init__(self, fields: list[str], regexs: list[str], invert_match: bool = False):
         if len(fields) != len(regexs):
             raise ValueError("Fields and Regexs must have the same length")
         self.pairs = list(zip(fields, regexs))
         self.invert = invert_match
-        self.reads = list(fields)
 
-    def keep_predicate(self) -> Column:
+    def apply(self, df: DataFrame) -> DataFrame:
         # initializer: Fields=[] is legal in the reference — zero checks
         # leave match vacuously true (keep; under invert, drop). One
         # expr string (round 14): the per-pair Column chain cost ~5 py4j
@@ -533,10 +512,7 @@ class RegexMatch(Operator):
                 f"(coalesce({_sq(f)}, '') rlike {sql_str(rx)})"
                 for f, rx in self.pairs
             ) + ")"
-        return F.expr(f"(NOT {match})" if self.invert else match)
-
-    def apply(self, df: DataFrame) -> DataFrame:
-        return df.filter(self.keep_predicate())
+        return df.filter(F.expr(f"(NOT {match})" if self.invert else match))
 
 
 @register
@@ -560,7 +536,6 @@ class ReplaceFields(Operator):
         for s, d in self.copies:
             if s == d:
                 raise ValueError(f"copying field {s} onto itself")
-        self.writes = dsts
 
     def apply(self, df: DataFrame) -> DataFrame:
         updates: dict[str, Column] = {}
@@ -589,7 +564,6 @@ class Slice(Operator):
     name = "Slice"
 
     def __init__(self, src: str, dst: str, start_idx: int = 0, end_idx: int | None = None):
-        self.writes = [dst]
         if start_idx < 0 or (end_idx is not None and end_idx < start_idx):
             raise ValueError("invalid slice bounds")
         self.src, self.dst, self.start, self.end = src, dst, start_idx, end_idx
@@ -608,20 +582,15 @@ class StringMatch(Operator):
     isMatchAny == !invert)."""
 
     name = "StringMatch"
-    writes: list[str] = []
 
     def __init__(self, field: str, strings: list[str], invert_match: bool = False):
         if not strings:
             raise ValueError("at least one string must be defined")
         self.field, self.strings, self.invert = field, list(strings), invert_match
-        self.reads = [field]
-
-    def keep_predicate(self) -> Column:
-        match = F.coalesce(F.col(self.field).cast("string"), F.lit("")).isin(self.strings)
-        return match if self.invert else ~match
 
     def apply(self, df: DataFrame) -> DataFrame:
-        return df.filter(self.keep_predicate())
+        match = F.coalesce(F.col(self.field).cast("string"), F.lit("")).isin(self.strings)
+        return df.filter(match if self.invert else ~match)
 
 
 @register
@@ -634,7 +603,6 @@ class Timestamp(Operator):
 
     def __init__(self, field: str, fixed_time: int | None = None):
         self.field, self.fixed_time = field, fixed_time
-        self.writes = [field]
 
     def apply(self, df: DataFrame) -> DataFrame:
         col = (
@@ -660,18 +628,15 @@ class TimestampRange(Operator):
     (/root/reference/filter/timestamp_range.go:12-105)."""
 
     name = "TimestampRange"
-    writes: list[str] = []
-    expensive_predicate = True  # ParseInt per row (see Operator docs)
 
     def __init__(self, field: str, start_datetime: str | None = None, end_datetime: str | None = None):
         self.field = field
         self.start = _parse_bound(start_datetime)
         self.end = _parse_bound(end_datetime)
-        self.reads = [field]
 
-    def keep_predicate(self) -> Column:
+    def apply(self, df: DataFrame) -> DataFrame:
         # via string so the predicate is identical on a natively-typed
-        # scan and on the all-string record frame. The rlike guard IS
+        # frame and on the all-string record frame. The rlike guard IS
         # the ParseInt strictness: Spark's non-ANSI cast would accept
         # '1700000000.9' (truncates) and ' 17 ' (trims) — rows the
         # reference's strconv.ParseInt rejects and drops
@@ -685,10 +650,7 @@ class TimestampRange(Operator):
             pred += f" AND {epoch} >= {int(self.start)}L"
         if self.end is not None:
             pred += f" AND {epoch} < {int(self.end)}L"
-        return F.expr(pred)
-
-    def apply(self, df: DataFrame) -> DataFrame:
-        return df.filter(self.keep_predicate())
+        return df.filter(F.expr(pred))
 
 
 @register
@@ -700,7 +662,6 @@ class URLEscape(Operator):
 
     def __init__(self, src_field: str, dst_field: str, unescape: bool = False):
         self.src, self.dst, self.unescape = src_field, dst_field, unescape
-        self.writes = [dst_field]
 
     def apply(self, df: DataFrame) -> DataFrame:
         col = F.col(self.src).cast("string")
@@ -716,7 +677,6 @@ class URLParam(Operator):
     name = "URLParam"
 
     def __init__(self, src_field: str, dst_field: str, param: str):
-        self.writes = [dst_field]
         self.src, self.dst, self.param = src_field, dst_field, param
 
     def apply(self, df: DataFrame) -> DataFrame:

@@ -49,11 +49,12 @@ class Pipeline:
     #: [filterchain] procs (config.go:46-52, default 16): the chain's
     #: parallelism. Spark's unit of parallelism is the partition, so when
     #: the scan yields fewer splits than procs the source is
-    #: repartitioned up to it — with the chain's pure predicates hoisted
-    #: ABOVE that exchange (split_chain) so only surviving rows shuffle,
-    #: mirroring the reference where validation/drops happen before
-    #: records fan out to the filter goroutines. On a multi-split 100 TB
-    #: input the condition is false and no shuffle is added.
+    #: repartitioned up to it, then the whole chain runs. Catalyst pushes
+    #: the chain's deterministic filters below that exchange, so only
+    #: surviving rows shuffle, as in the reference, where validation and
+    #: drops happen before records fan out to the filter goroutines. On
+    #: a multi-split 100 TB input the condition is false and no shuffle
+    #: is added.
     chain_procs: int | None = None
 
     def _source_df(self, spark: SparkSession) -> DataFrame:
@@ -65,7 +66,6 @@ class Pipeline:
 
     def dataframe(self, spark: SparkSession) -> DataFrame:
         df = self._source_df(spark)
-        ops = self.ops
         try:
             # a stream has no fixed split count: chain_procs is a no-op
             n_parts = (
@@ -78,13 +78,8 @@ class Pipeline:
             # no-op like session.fan_out does rather than crash the build
             n_parts = None
         if self.chain_procs and n_parts is not None and n_parts < self.chain_procs:
-            from baker_spark.operators.base import split_chain
-
-            preds, ops = split_chain(ops)
-            for p in preds:
-                df = df.filter(p)
             df = df.repartition(self.chain_procs)
-        df = chain(df, ops)
+        df = chain(df, self.ops)
         if self.sharding:
             df = Shard(self.sharding, procs=self.procs).apply(df)
         if self.fields:

@@ -284,22 +284,6 @@ def fan_out(df, multiple: int = 1, by: str | None = None):
 _SPLIT_COUNTS: dict = {}
 
 
-def carry_split_key(src, dst):
-    """Re-stamp ``dst`` with ``src``'s split-count cache key (round 14,
-    ADVICE r13). ONLY for narrow, partition-preserving derivations of
-    the stamped scan — filters and column projections. A derivation
-    that can change partitioning (limit, repartition, join, any
-    exchange) must NOT be re-stamped: the cache would serve the scan's
-    split count for a frame with a different one. Centralizing the
-    stamp keeps that invariant reviewable at one site instead of ad-hoc
-    attribute writes at call sites (bench.py's hoisted filter chain is
-    the canonical caller)."""
-    key = getattr(src, "_baker_split_key", None)
-    if key is not None:
-        dst._baker_split_key = key
-    return dst
-
-
 #: compiled Hadoop codec bridging zstd-jni (tools/build_zstd_codec.sh):
 #: gives the text/CSV writer the reference's default .zst output format.
 #: Classpath entries are launch-time-only, so the jar has to ride the

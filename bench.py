@@ -9,7 +9,8 @@ Prints ONE JSON line:
 The suite covers the engine's three workload families:
 - the reference's own shape: a record-at-a-time filter topology over the
   string-cast lineitem (compare against BASELINE.md's 178k rec/s per
-  8 vCPU published number — here it's parquet->chain->gzip csv)
+  8 vCPU published number — here it's parquet->chain->gzip csv), its
+  filters placed by Catalyst below the fan-out exchange
 - analytics: scan-agg (q1), broadcast joins (q3/q5), windows
 - document pipeline: exact + minhash-LSH dedup, simhash pairs, ANN top-k
 
@@ -26,9 +27,11 @@ width x wall, so a slower or throttled host stretches both sides and
 the gate needs no calibration against the run's own stamps. Its
 bandwidth stamps must also sit within CANARY_BW_RELATIVE_FACTOR of the
 run's bandwidth floor, because memory-bus stalls do not show as lost
-CPU share. Whole passes are retried while clean passes are short of
-MIN_CLEAN, up to MAX_JVMS; a run with no clean pass headlines its
-least-contended pass and says ``"contended": true``.
+CPU share, and its host steal share must not exceed STEAL_MAX_SHARE,
+because steal between the two stamps shows in neither. Whole passes
+are retried while clean passes are short of MIN_CLEAN, up to MAX_JVMS;
+a run with no clean pass headlines its least-contended pass and says
+``"contended": true``.
 
     python bench.py                  # the orchestrated run
     python bench.py --single         # one in-process suite pass
@@ -98,14 +101,12 @@ def baker_chain(spark, sf_dir):
     filter chain to compressed files (README.md:111-120). lineitem rows
     stand in for the ~4.5 KB log lines.
 
-    The scan is a single parquet row group (serial task), so the chain's
-    pure predicates are hoisted above the fan-out shuffle
-    (ops.split_chain): only surviving rows are exchanged, the filters
-    evaluate inside the scan stage where Catalyst wants them, and the
-    fully-hoisted pure predicates are elided from the post-shuffle chain
-    (each filter runs once, like the reference's single-pass chain)."""
-    from pyspark.sql import functions as F
-
+    The scan is a single parquet row group (serial task), so it is fanned
+    out first (≈ [filterchain] procs), then cast to string records, then
+    the whole chain runs. Catalyst pushes the chain's filters through the
+    cast and below the fan-out exchange into the scan stage, so only
+    surviving rows are exchanged and each filter runs once, like the
+    reference's single-pass chain."""
     from baker_spark import operators as ops
     from baker_spark.session import fan_out
     from baker_spark.sources.tables import load_table
@@ -124,17 +125,7 @@ def baker_chain(spark, sf_dir):
             field="l_partkey", start_datetime=None, end_datetime=None
         ),  # parse-to-long predicate
     ]
-    from baker_spark.session import carry_split_key
-
-    li = src = load_table(spark, sf_dir, "lineitem")
-    preds, rest = ops.split_chain(chain)
-    for p in preds:
-        li = li.filter(p)  # predicates run at the (native) scan
-    # filters don't change scan splits — carry the split-count stamp
-    # through so fan_out's cache applies (see session.carry_split_key
-    # for the narrow-derivations-only contract)
-    carry_split_key(src, li)
-    li = fan_out(li, by="l_orderkey")  # ≈ [filterchain] procs — shuffles only survivors
+    li = fan_out(load_table(spark, sf_dir, "lineitem"), by="l_orderkey")
     # one selectExpr call for the 16-column string cast: the Column
     # listcomp cost ~80 py4j round trips per build, paid on every one of
     # the 6 timed chain runs (round 13; same projection either way).
@@ -145,7 +136,7 @@ def baker_chain(spark, sf_dir):
             for c in li.columns
         ]
     )
-    return ops.chain(df, rest)
+    return ops.chain(df, chain)
 
 
 def force(df):
@@ -221,6 +212,11 @@ CANARY_MIN_SHARE = 0.65
 #: DRAM-sweep walls vary with page placement and prefetcher state, and
 #: no absolute calibration exists for them yet.
 CANARY_BW_RELATIVE_FACTOR = 1.35
+#: a pass is contended when the hypervisor gave more than this share of
+#: the host's CPU time to other guests during it: idle perfbench runs on
+#: a 4-core host read at most 0.34% steal, while BENCH_4cpu.json's passes
+#: at 4.8-8.6% steal cleared both share stamps and spread 15% in wall.
+STEAL_MAX_SHARE = 0.02
 
 
 def run_floor_bw(passes: list[dict]) -> float | None:
@@ -257,11 +253,16 @@ def pass_is_clean(doc: dict, bw_gate: float | None = None) -> bool:
     after the Spark work) clear the share gate — a co-tenant burst
     starting mid-suite trips the after-stamp. When a bandwidth gate is
     in force and the pass carries bandwidth stamps, BOTH of those must
-    clear it too. A pass without bandwidth stamps is judged on its CPU
-    stamps alone; one without share stamps (artifacts older than the
-    share) is never clean."""
+    clear it too. Steal that lands between the stamps is caught by the
+    pass's recorded ``steal_share``, which must not exceed
+    STEAL_MAX_SHARE. A pass without bandwidth stamps or a steal share is
+    judged on the rest; one without share stamps (artifacts older than
+    the share) is never clean."""
     before, after = doc.get("canary_before", {}), doc.get("canary_after", {})
     if not (share_ok(before) and share_ok(after)):
+        return False
+    steal = doc.get("steal_share")
+    if steal is not None and steal > STEAL_MAX_SHARE:
         return False
     if bw_gate is not None:
         bw_b, bw_a = before.get("canary_bw_s"), after.get("canary_bw_s")
@@ -338,6 +339,7 @@ def orchestrate(run_pass, n_jvms: int = N_JVMS, min_clean: int = MIN_CLEAN,
             "contended": contended,
             "canary_gate_mode": "share",
             "canary_min_share": CANARY_MIN_SHARE,
+            "steal_max_share": STEAL_MAX_SHARE,
             # keys of the wall-relative CPU gate the share replaced,
             # kept so every artifact carries one key set
             "canary_gate_32p_s": None,

@@ -136,6 +136,28 @@ def test_legacy_single_stamp_doc_is_never_clean():
     )
 
 
+def test_host_steal_above_gate_reads_contended():
+    """Steal that lands between the canary stamps: BENCH_4cpu.json's
+    first pass ran at 8.6% steal, 15% slower than its sibling, with both
+    share stamps clear of the share gate. An idle pass (0.34% steal, the
+    worst idle perfbench reading) stays clean, and a doc that records no
+    steal share is judged on its stamps as before."""
+    idle = _pass(14.8, 0.756, 0.942)
+    idle["steal_share"] = 0.0034
+    assert bench.pass_is_clean(idle)
+    stolen = _pass(17.0, 0.852, 0.662)
+    stolen["steal_share"] = 0.0858
+    assert not bench.pass_is_clean(stolen)
+    older = _pass(17.0, 0.852, 0.662)
+    del older["steal_share"]
+    assert bench.pass_is_clean(older)
+    seq = iter([stolen, idle, _pass(15.5, 0.918, 0.918)])
+    out = bench.orchestrate(lambda: next(seq), n_jvms=3, min_clean=2, max_jvms=6)
+    assert [p["clean"] for p in out["suite_passes"]] == [False, True, True]
+    assert out["steal_max_share"] == bench.STEAL_MAX_SHARE
+    assert out["value"] == 14.8 and not out["contended"]
+
+
 def test_cpu_canary_starts_one_child_per_cpu(monkeypatch):
     """The wide stamp is $SPARK_GRAFT_CPUS wide, not a fixed 32."""
     started = []

@@ -197,9 +197,9 @@ def test_chain_operator_expr_rewrites_match_column_shapes(spark):
         "f1 string, f2 string, ts string",
     )
     # NotNull: empty-and-null drop, Fields=[] keeps everything
-    kept = df.filter(NotNull(["f1", "f2"]).keep_predicate())
+    kept = NotNull(["f1", "f2"]).apply(df)
     assert kept.count() == 2  # ("1","a"), ("x","c")
-    assert df.filter(NotNull([]).keep_predicate()).count() == 4
+    assert NotNull([]).apply(df).count() == 4
     # Concatenate with and without separator; empty fields -> ''
     out = Concatenate(["f1", "f2"], target="t", separator="-").apply(df)
     vals = {r["t"] for r in out.collect()}
@@ -211,11 +211,10 @@ def test_chain_operator_expr_rewrites_match_column_shapes(spark):
     import hashlib
     assert h.collect()[0]["d"] == hashlib.md5(b"1").hexdigest()
     # TimestampRange ParseInt strictness: floats and padded ints drop
-    pred = TimestampRange("ts", None, None).keep_predicate()
-    kept_ts = {r["ts"] for r in df.filter(pred).collect()}
+    kept_ts = {r["ts"] for r in TimestampRange("ts", None, None).apply(df).collect()}
     assert kept_ts == {"170000", "-3"}
-    bounded = TimestampRange("ts", "1970-01-02 00:00:00", None).keep_predicate()
-    assert {r["ts"] for r in df.filter(bounded).collect()} == {"170000"}
+    bounded = TimestampRange("ts", "1970-01-02 00:00:00", None).apply(df)
+    assert {r["ts"] for r in bounded.collect()} == {"170000"}
 
 
 def test_hash_and_slice(spark, generic):
@@ -307,20 +306,6 @@ def test_expand_json_custom_tf_leaves_string_true_alone(spark):
     row = out.collect()[0]
     assert row.fa == "true"  # string stays verbatim
     assert row.fb == "yes"  # boolean maps
-
-
-def test_validation_is_not_a_hoisting_barrier(spark):
-    """Validation is a pure regex predicate: with it first in a chain,
-    later cheap predicates must still hoist above the fan-out exchange
-    (it previously had writes=None, a barrier that disabled the whole
-    pre-exchange filter optimization for any [validation] topology)."""
-    from baker_spark.operators.topology import Validation
-
-    chain = [Validation({"f": "^[0-9]+$"}), ops.NotNull(["g"])]
-    preds, rest = ops.split_chain(chain)
-    assert len(preds) == 1  # NotNull hoisted past Validation
-    # Validation itself stays in the chain (expensive_predicate)
-    assert any(isinstance(op, Validation) for op in rest)
 
 
 def test_timestamp_range(spark, generic):
@@ -580,54 +565,6 @@ def test_kmv_sketch_merge(spark):
     assert whole_kth == merged_kth
     est = spark.range(1).select(kmv_estimate_c0(F.lit(whole_kth)).alias("e")).collect()[0].e
     assert abs(est - 500) / 500 < 0.35  # within the ~1/sqrt(64) regime
-
-
-def test_predicate_hoisting(spark):
-    """split_chain's hoisted predicates filtering a natively-typed frame
-    (the fan_out pushdown path), then the remaining chain == the chain
-    alone; predicates reading a field a transform writes must NOT hoist;
-    unknown ops are barriers."""
-    native = spark.createDataFrame(
-        [(1, "A", 10), (2, "N", 0), (3, "R", 7), (4, "A", None)],
-        "id int, flag string, qty int",
-    )
-    chain = [
-        ops.ClauseFilter("(or (flag A) (flag N))"),
-        ops.Concatenate(["id", "flag"], target="tag", separator="-"),
-        ops.StringMatch(field="tag", strings=["1-A"], invert_match=False),
-        ops.NotNull(["qty"]),
-    ]
-    # tag is written by Concatenate -> StringMatch must not hoist;
-    # ClauseFilter and NotNull do, and are elided from the remaining
-    # chain; transforms and the non-hoistable StringMatch keep their order
-    preds, rest = ops.split_chain(chain)
-    assert len(preds) == 2
-    assert [type(o).__name__ for o in rest] == ["Concatenate", "StringMatch"]
-
-    def run(df, chain_ops):
-        return sorted(
-            r.id
-            for r in ops.chain(
-                df.select(*[F.col(c).cast("string").alias(c) for c in df.columns]),
-                chain_ops,
-            ).collect()
-        )
-
-    filtered = native
-    for p in preds:
-        filtered = filtered.filter(p)
-    # re-running the whole chain after the hoisted filters drops nothing more
-    assert run(native, chain) == run(filtered, rest) == run(filtered, chain) == ["2"]
-
-    # a stateful op (Dedup) is a barrier: nothing after it hoists, and
-    # the post-barrier NotNull stays in the remaining chain
-    barrier_chain = [
-        ops.Dedup(fields=["flag"]),
-        ops.NotNull(["qty"]),
-    ]
-    preds, rest = ops.split_chain(barrier_chain)
-    assert preds == []
-    assert [type(o).__name__ for o in rest] == ["Dedup", "NotNull"]
 
 
 def test_managed_cache_release(spark):
@@ -1480,29 +1417,3 @@ def test_media_audio_fp_matches_direct_decode(spark):
         ch, rate, samples = M.decode_wav_samples(pay)
         assert (r.sample_rate, r.n_samples) == (rate, len(samples))
         assert r.afp == M.audio_fp60(samples)
-
-
-def test_llm_filter_hoisting_metadata(spark):
-    """GopherQuality/C4Filter are expensive pure predicates (hoist-
-    eligible in shape, skipped by the cost rule, elidable never since
-    they stay in the chain); C4Clean writes its field; NearDupDrop is a
-    barrier — the chain splitter must not hoist a later predicate
-    across it."""
-    from baker_spark import operators as ops
-
-    chain = [
-        ops.GopherQuality(field="text"),
-        ops.C4Clean(field="text"),
-        ops.NearDupDrop(field="text", id_field="doc_id"),
-        ops.NotNull(["doc_id"]),  # after the barrier: must NOT hoist
-    ]
-    preds, rest = ops.split_chain(chain)
-    assert preds == []  # gopher is expensive_predicate; rest blocked
-    assert [type(o).__name__ for o in rest] == [
-        "GopherQuality", "C4Clean", "NearDupDrop", "NotNull",
-    ]
-    # a cheap predicate BEFORE the battery still hoists and elides
-    chain2 = [ops.NotNull(["doc_id"]), ops.GopherQuality(field="text")]
-    preds2, rest2 = ops.split_chain(chain2)
-    assert len(preds2) == 1
-    assert [type(o).__name__ for o in rest2] == ["GopherQuality"]

@@ -343,12 +343,12 @@ def test_sqs_sns_roundtrip_any_path(path):
     assert rel == path.lstrip("/")
 
 
-# ------------------------------------------- split_chain equivalence
+# ------------------------------------ [filterchain] procs equivalence
 
 
 @st.composite
 def op_chains(draw):
-    """Random mixes of hoistable predicates, transforms, and barriers."""
+    """Random mixes of predicates, transforms, joins and fan-outs."""
     pool = []
     have_t = False
     for _ in range(draw(st.integers(1, 5))):
@@ -377,33 +377,35 @@ def op_chains(draw):
             # order_by pins the survivor so both evaluation orders agree
             pool.append(ops.Dedup(fields=["f1"], order_by="f2"))
         elif kind == "external":
-            # join-based predicate: not hoistable (keep_predicate None),
-            # exercises the stay-in-chain path
+            # join-based predicate: stays a join in the chain
             pool.append(
                 ops.ExternalMatch(
                     field_name="f2", values=["a", "dd"], keep_on_match=draw(st.booleans())
                 )
             )
         else:
-            # fan-out: one row -> N rows; a barrier for later predicates
+            # fan-out: one row -> N rows; later predicates see its output
             pool.append(ops.Explode(source="f1", dst="f1", separator="c"))
     return pool
 
 
 @given(chain=op_chains(), rows=st.lists(st.tuples(token, token), min_size=1, max_size=6))
 @settings(**SETTINGS)
-def test_split_chain_equivalent_to_plain_chain(spark, chain, rows):
-    """For ANY chain mix, predicates-at-scan + elided remainder produces
-    exactly the plain left-fold's multiset of rows (the optimization
-    bench.py and [filterchain] procs rely on). Concatenate may write a
-    column reads depend on; Dedup is a barrier; ordering must hold."""
-    df = spark.createDataFrame([Row(f1=a, f2=b) for a, b in rows])
-    want = sorted(map(tuple, ops.chain(df, chain).collect()))
-    preds, rest = ops.split_chain(chain)
-    pre = df
-    for p in preds:
-        pre = pre.filter(p)
-    got = sorted(map(tuple, ops.chain(pre.repartition(3), rest).collect()))
+def test_chain_procs_equivalent_to_plain_chain(spark, chain, rows):
+    """For ANY chain mix, widening a one-partition source to
+    ``chain_procs`` (Catalyst then places the chain's filters around the
+    exchange) produces exactly the plain left-fold's multiset of rows.
+    Concatenate may write a field a later StringMatch reads; Dedup,
+    ExternalMatch and Explode must keep their place in the chain."""
+    from baker_spark.pipeline import Pipeline
+
+    df = spark.createDataFrame([Row(f1=a, f2=b) for a, b in rows]).coalesce(1)
+    plain = ops.chain(df, chain)
+    plain = plain.drop(*[c for c in plain.columns if c.startswith("_bk_")])
+    want = sorted(map(tuple, plain.collect()))
+    widened = Pipeline(source=df, ops=chain, chain_procs=3).dataframe(spark)
+    assert "Repartition 3, true" in widened._jdf.queryExecution().analyzed().toString()
+    got = sorted(map(tuple, widened.collect()))
     assert got == want
 
 

@@ -9,6 +9,8 @@ import gzip
 import json
 import os
 
+import pytest
+
 from baker_spark.plans import compile_toml
 from tests.conftest import FIXTURES
 
@@ -472,10 +474,106 @@ name="FileWriter"
     assert len(rows) == 4  # nothing lost across rotations
 
 
+FILTERCHAIN_TOML = """
+[fields]
+names=["a","b","ts"]
+
+[validation]
+a="^value[0-9]+$"
+
+[input]
+name="List"
+
+    [input.config]
+    files=["{path}"]
+
+[filterchain]
+procs=8
+{filters}
+[output]
+name="Recorder"
+"""
+
+STRING_MATCH = """
+[[filter]]
+name="StringMatch"
+
+    [filter.config]
+    Field="a"
+    Strings=["value4"]
+"""
+
+
+def _chain_input(tmp_path):
+    """One gzip CSV file: a single split, narrower than procs=8."""
+    path = tmp_path / "in.csv.gz"
+    with gzip.open(path, "wt") as fh:
+        fh.write(
+            "value1,v1,1500\n"
+            "value4,v2,1600\n"  # StringMatch drops
+            "value5,x3,1700\n"  # RegexMatch drops
+            "junk,v4,1800\n"  # Validation drops
+            "value6,v5,abc\n"  # TimestampRange drops: not an integer
+            "value7,v6,500\n"  # TimestampRange drops: before the start
+            "value8,v7,2000\n"
+        )
+    return path
+
+
 def test_filterchain_procs(spark, tmp_path):
     """[filterchain] procs=N (config.go:46-52) widens a narrow scan to N
-    partitions, with the chain's pure predicates evaluated at the scan
-    so the exchange carries survivors only; results are unchanged."""
+    partitions and runs the whole chain after it; Catalyst pushes every
+    predicate of the chain, [validation] included, below the exchange, so
+    the exchange carries survivors only; results are unchanged. A
+    CountAndTag still sees the rows that reach it in the chain."""
+    filters = STRING_MATCH + """
+[[filter]]
+name="RegexMatch"
+
+    [filter.config]
+    Fields=["b"]
+    Regexs=["^v"]
+
+[[filter]]
+name="TimestampRange"
+
+    [filter.config]
+    Field="ts"
+    StartDatetime="1970-01-01 00:16:40"
+"""
+    p = compile_toml(FILTERCHAIN_TOML.format(path=_chain_input(tmp_path), filters=filters))
+    assert p.chain_procs == 8
+    df = p.dataframe(spark)
+    assert df.rdd.getNumPartitions() == 8
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    above, exchange, below = plan.partition("Exchange RoundRobinPartitioning(8)")
+    assert exchange and "Filter" not in above
+    # Validation, StringMatch, RegexMatch and TimestampRange, in that order
+    for marker in ("^value[0-9]+$", "value4", "^v)", "1000"):
+        assert marker in below, marker
+    assert sorted(r["a"] for r in p.run(spark)) == ["value1", "value8"]
+
+    # a CountAndTag before a filter counts every row that reaches it (the
+    # six that pass validation), not the filter's survivors
+    filters = """
+[[filter]]
+name="CountAndTag"
+
+    [filter.config]
+    Metric="seen"
+    Field="a"
+""" + STRING_MATCH
+    p = compile_toml(FILTERCHAIN_TOML.format(path=_chain_input(tmp_path), filters=filters))
+    assert len(p.run(spark)) == 5
+    (tag,) = [op for op in p.ops if op.name == "CountAndTag"]
+    assert tag.metric_value()["count"] == 6
+
+
+@pytest.mark.parametrize("procs", [None, 8], ids=["no_filterchain", "procs_8"])
+def test_clausefilter_unknown_field_fails_alike(spark, procs):
+    """An unknown ClauseFilter field raises the same KeyError whether or
+    not [filterchain] widens the scan."""
+    filterchain = f"[filterchain]\nprocs={procs}\n" if procs else ""
     toml_text = """
 [fields]
 names=["a","b","c"]
@@ -486,27 +584,18 @@ name="List"
     [input.config]
     files=["{fixtures}/input.csv.zst"]
 
-[filterchain]
-procs=8
-
+{filterchain}
 [[filter]]
-name="StringMatch"
+name="ClauseFilter"
 
     [filter.config]
-    Field="a"
-    Strings=["value1"]
-    InvertMatch=true
+    Clause="(nosuch value1)"
 
 [output]
 name="Recorder"
-""".format(fixtures=FIXTURES)
-    p = compile_toml(toml_text)
-    assert p.chain_procs == 8
-    df = p.dataframe(spark)
-    assert df.rdd.getNumPartitions() == 8
-    rows = p.run(spark)
-    # keep-only semantics; the fixture has two a="value1" rows
-    assert sorted(r["a"] for r in rows) == ["value1", "value1"]
+""".format(fixtures=FIXTURES, filterchain=filterchain)
+    with pytest.raises(KeyError, match="no such field: nosuch"):
+        compile_toml(toml_text).dataframe(spark)
 
 
 def test_filewriter_discard_empty_files(spark, tmp_path):
